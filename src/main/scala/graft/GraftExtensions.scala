@@ -13,7 +13,7 @@ import graft.functions._
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // SQL spatial joins plan as the tiled SpatialJoinExec
+    // SQL spatial and kNN joins plan as SpatialJoinExec / KnnJoinExec
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.SpatialJoinStrategy)
     // lazy TVF leaves (dedup_by_components) plan as DeferredExec
     e.injectPlannerStrategy(_ => graft.plans.DeferredStrategy)

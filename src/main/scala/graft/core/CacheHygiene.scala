@@ -4,9 +4,10 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Cache-lifecycle hygiene for mid-pipeline persists (minhash signatures,
@@ -82,19 +83,31 @@ object CacheHygiene {
   def freeRdds(sc: SparkContext, ids: Seq[Int]): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
 
-  /** RDD-level variant for physical operators: runs `release` once the
-    * first Spark job whose stages computed `result` ends. */
+  /** RDD-level variant: runs `release` once the first consumer of `result`
+    * ends — the SQL execution of the first job that reads it (adaptive
+    * execution runs each exchange of a query as its own job), or that job
+    * alone outside any SQL execution. Register after the operator's own
+    * eager jobs (planning aggregates), or they count as the consumer. */
   def releaseAfterFirstJob[T](sc: SparkContext, result: RDD[T])(release: => Unit): RDD[T] = {
     val rddId = result.id
     val listener = new SparkListener {
-      private val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      // "sql:<execution id>" or "job:<job id>"; events arrive on one thread
+      private var consumer: String = null
+      private def ended(key: String): Unit = if (key == consumer) {
+        consumer = "released"
+        try release
+        finally sc.removeSparkListener(this)
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.stageInfos.exists(_.rddInfos.exists(_.id == rddId))) jobs.add(js.jobId)
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (jobs.remove(je.jobId)) {
-          try release
-          finally sc.removeSparkListener(this)
-        }
+        if (consumer == null && js.stageInfos.exists(_.rddInfos.exists(_.id == rddId)))
+          consumer = Option(js.properties)
+            .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+            .fold(s"job:${js.jobId}")(id => s"sql:$id")
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended(s"job:${je.jobId}")
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionEnd => ended(s"sql:${e.executionId}")
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     result

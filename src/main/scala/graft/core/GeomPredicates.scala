@@ -4,9 +4,8 @@ import org.locationtech.jts.geom.Geometry
 
 /** Exact pairwise spatial predicate evaluation with envelope-arithmetic fast
   * paths — the single refine kernel shared by the tiled join
-  * ([[graft.operators.SpatialJoin]]), the SQL physical operator
-  * (SpatialJoinExec) and the scalar `st_*` expressions, so every execution
-  * path refines identically.
+  * ([[graft.operators.SpatialJoin]], which SQL joins also run) and the
+  * scalar `st_*` expressions, so every execution path refines identically.
   *
   * Predicate set mirrors the reference's RESQUE join predicates
   * (/root/reference/src/resque/spjoin_2d.hpp:138-224). The fast paths matter

@@ -704,7 +704,7 @@ object Queries {
       require(plans.exists(_.collect {
         case e: KnnJoinExec if e.tileLocal => e }.nonEmpty),
         "q_knn_tile_sql must plan through a tile-local KnnJoinExec")
-      // the conf is read at doExecute, not analysis: materialize the kNN
+      // the conf is read whenever the join is (re)planned: materialize the kNN
       // relation NOW (localCheckpoint, eager) so restoring the conf below
       // cannot re-tile a lazily-executed plan
       q.localCheckpoint(true)

@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.operators.SpatialJoin
@@ -17,12 +16,9 @@ import graft.operators.SpatialJoin
   * [[graft.operators.SpatialJoin.knnJoinExact]] rather than the
   * reference's tile-local approximation.
   *
-  * Execution bridges the child plans' InternalRows into the DataFrame-level
-  * kNN engine (which owns the tiling, density-planned ring radii, the
-  * broadcast small-index fast path, and the WindowGroupLimit probe), then
-  * projects the joined relation back to `left.output ++ right.output`. The
-  * bridge is one narrow row-widening map per side — no extra shuffle or
-  * scan; every exchange in the resulting plan is the engine's own.
+  * Execution bridges the children into the DataFrame-level kNN engine
+  * ([[ExecFrames]]), which owns the tiling, ring radii, the broadcast
+  * small-index fast path and the WindowGroupLimit probe.
   *
   * Distance ties at the k-boundary are broken deterministically by the
   * right row's values: atomic orderable columns compare directly (in output
@@ -37,16 +33,16 @@ import graft.operators.SpatialJoin
   * match nothing (SQL null-predicate semantics); right rows with
   * null/invalid geometry are never neighbors.
   *
-  * Tuning via the same runtime confs as SpatialJoinExec:
-  * `graft.join.partitioner`, `graft.join.bucket`, `graft.join.sampleTarget`,
-  * plus `graft.knn.broadcastThreshold` (right-side row cap for the
-  * zero-shuffle broadcast fast path; 0 forces the tiled engine).
+  * Tuning comes from the `graft.*` confs read at planning into `cfg` (see
+  * [[SpatialJoinStrategy]]); `knnBroadcastThreshold` caps the right side
+  * for the zero-shuffle broadcast fast path (0 forces the tiled engine).
   */
 case class KnnJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftGeom: Expression, rightGeom: Expression,
     k: Int, maxDistance: Double,
     extraCond: Option[Expression],
+    cfg: SpatialJoin.Config,
     tileLocal: Boolean = false) extends BinaryExecNode {
   // tile-local (st_nearest2) is the reference's k-only surface: a distance
   // bound would silently change which tile-local neighbors survive
@@ -60,51 +56,15 @@ case class KnnJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val spark = session
-    val conf = SQLConf.get
-    val cfg = SpatialJoin.Config(
-      partitioner = conf.getConfString("graft.join.partitioner", "fg"),
-      bucket = conf.getConfString("graft.join.bucket", "0").toInt,
-      sampleTarget = conf.getConfString("graft.join.sampleTarget", "100000").toInt,
-      knnBroadcastThreshold =
-        conf.getConfString("graft.knn.broadcastThreshold", "10000").toInt)
+    val lNames = ExecFrames.names(left, "__l")
+    val rNames = ExecFrames.names(right, "__r")
+    // left: synthetic unique id (the probe key) + all columns + geometry
+    val (ldf, lg) = ExecFrames.of(left, "__l", leftGeom, id = true)
 
-    val lAttrs = left.output; val rAttrs = right.output
-
-    // ---- left: synthetic unique id + all columns + WKB geometry.
-    // (partitionIndex << 36 | localSeq) is deterministic and collision-free
-    // up to 2^36 rows per partition / 2^27 partitions — the semi/anti lane's
-    // id scheme (SpatialJoinExec.doExecuteSemiAnti).
-    val lNames = lAttrs.indices.map(i => s"__l$i")
-    val lSchema = StructType(
-      StructField("__lid", LongType, nullable = false) +:
-        lAttrs.zipWithIndex.map { case (a, i) =>
-          StructField(lNames(i), a.dataType, a.nullable) } :+
-        StructField("__lg", BinaryType, nullable = true))
-    val lgExpr = leftGeom
-    val lRdd: RDD[InternalRow] = left.execute().mapPartitionsWithIndex { (pi, iter) =>
-      val idAttr = AttributeReference("__lid", LongType, nullable = false)()
-      val proj = UnsafeProjection.create(
-        (idAttr +: lAttrs) :+ lgExpr, idAttr +: lAttrs)
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      var seq = 0L
-      iter.map { row =>
-        // fail loudly before seq bleeds into the partition-index bits and
-        // silently merges two probes' neighbor lists
-        require(seq < (1L << 36),
-          s"kNN probe partition $pi exceeds 2^36 rows; repartition the left side")
-        idRow.setLong(0, (pi.toLong << 36) | seq)
-        seq += 1
-        proj(joined(idRow, row)).copy()
-      }
-    }
-
-    // ---- right: all columns + WKB geometry + tie-break lanes. Binary
-    // columns get an order-preserving hex lane (unsigned-byte lexicographic
-    // == hex-string lexicographic); atomic orderable columns tie-break on
-    // themselves; complex-typed columns are skipped.
-    val rNames = rAttrs.indices.map(i => s"__r$i")
+    // right: all columns + geometry + tie-break lanes. Binary columns get an
+    // order-preserving hex lane (unsigned-byte lexicographic == hex-string
+    // lexicographic); atomic orderable columns tie-break on themselves;
+    // complex-typed columns are skipped.
     def atomicOrderable(dt: DataType): Boolean = dt match {
       case _: NumericType | StringType | BooleanType | DateType |
            TimestampType | TimestampNTZType => true
@@ -112,30 +72,17 @@ case class KnnJoinExec(
     }
     // tile-local mode ranks per owner tile with engine ties (the reference's
     // arbitrary order) — don't pay the per-row hex lanes it never reads
-    val tie =
-      if (tileLocal) Seq.empty[(String, Expression, DataType)]
-      else rAttrs.zipWithIndex.flatMap { case (a, i) =>
+    val tie: Seq[(String, Option[Expression])] =
+      if (tileLocal) Nil
+      else right.output.zip(rNames).zipWithIndex.flatMap { case ((a, n), i) =>
         a.dataType match {
-          case BinaryType => Some((s"__tb$i", Hex(a): Expression, StringType: DataType))
-          case dt if atomicOrderable(dt) => Some((s"__r$i", null: Expression, dt))
+          case BinaryType => Some((s"__tb$i", Some(Hex(a))))
+          case dt if atomicOrderable(dt) => Some((n, None))
           case _ => None
         }
       }
-    val tieExtra = tie.filter(_._2 != null)
-    val rSchema = StructType(
-      rAttrs.zipWithIndex.map { case (a, i) =>
-        StructField(rNames(i), a.dataType, a.nullable) } ++
-        (StructField("__rg", BinaryType, nullable = true) +:
-          tieExtra.map { case (n, _, dt) => StructField(n, dt, nullable = true) }))
-    val rgExpr = rightGeom
-    val tieExprs = tieExtra.map(_._2)
-    val rRdd: RDD[InternalRow] = right.execute().mapPartitions { iter =>
-      val proj = UnsafeProjection.create((rAttrs :+ rgExpr) ++ tieExprs, rAttrs)
-      iter.map(row => proj(row).copy())
-    }
-
-    val ldf = spark.internalCreateDataFrame(lRdd, lSchema)
-    val rdf = spark.internalCreateDataFrame(rRdd, rSchema)
+    val (rdf, rg) = ExecFrames.of(right, "__r", rightGeom,
+      extra = tie.collect { case (n, Some(e)) => n -> e })
     val tieBreak = tie.map(_._1)
 
     val joinedDf =
@@ -143,28 +90,15 @@ case class KnnJoinExec(
         // reference st_nearest2 semantics: owner-tile-local top-k, no
         // boundary re-join pass (and no tie-break lanes — the reference's
         // tie order is engine-arbitrary)
-        SpatialJoin.knnJoin(ldf, "__lg", rdf, "__rg", k, cfg = cfg)
+        SpatialJoin.knnJoin(ldf, lg, rdf, rg, k, cfg = cfg)
       else if (maxDistance.isPosInfinity)
-        SpatialJoin.knnJoinExact(ldf, "__lg", "__lid", rdf, "__rg", k,
+        SpatialJoin.knnJoinExact(ldf, lg, ExecFrames.Id, rdf, rg, k,
           tieBreak = tieBreak, cfg = cfg)
       else
-        SpatialJoin.knnJoinBounded(ldf, "__lg", "__lid", rdf, "__rg", k,
+        SpatialJoin.knnJoinBounded(ldf, lg, ExecFrames.Id, rdf, rg, k,
           maxDistance = maxDistance, tieBreak = tieBreak, cfg = cfg)
 
-    import org.apache.spark.sql.functions.col
-    val outRdd = joinedDf
-      .select((lNames ++ rNames).map(col): _*)
-      .queryExecution.toRdd
-
-    extraCond match {
-      case None => outRdd
-      case Some(c) =>
-        val attrs = output
-        outRdd.mapPartitionsWithIndex { (pi, iter) =>
-          val pred = Predicate.create(c, attrs)
-          pred.initialize(pi)
-          iter.filter(pred.eval)
-        }
-    }
+    ExecFrames.rows(ExecFrames.where(joinedDf, extraCond, output, lNames ++ rNames),
+      lNames ++ rNames)
   }
 }

@@ -1,31 +1,27 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.storage.StorageLevel
-import org.locationtech.jts.geom.Envelope
-import org.locationtech.jts.index.strtree.STRtree
 
-import graft.core.{GeometryCodec, Mbb, TileBoundary}
+import graft.core.CacheHygiene
 import graft.functions.{StDWithin, StPredicate}
-import graft.operators.{SpatialJoin, TileIndex}
-import graft.partition.SpatialPartitioner
+import graft.operators.SpatialJoin
 
 /** Planner integration: inner joins whose condition carries an ST predicate
-  * between the two sides are planned as [[SpatialJoinExec]] — the tiled
-  * filter-refine join — instead of Catalyst's fallback
-  * BroadcastNestedLoopJoin. This makes
+  * between the two sides are planned as [[SpatialJoinExec]], which runs the
+  * tiled filter-refine engine [[graft.operators.SpatialJoin.join]], instead
+  * of Catalyst's fallback BroadcastNestedLoopJoin. This makes
   * `SELECT ... FROM a JOIN b ON st_intersects(a.g, b.g)` scale the same as
-  * the programmatic `SpatialJoin.join` API (SURVEY §4 phase-2 rewrite).
+  * the programmatic API, because it is the same engine.
   *
-  * st_disjoint is deliberately NOT matched: the tiled exec only tests
+  * st_disjoint is deliberately NOT matched: the tiled engine only tests
   * envelope-overlapping candidates within shared tiles (the reference's
   * tile-local J8 semantics), which would silently change the result of a
   * previously-correct all-pairs SQL join. Catalyst keeps planning disjoint
@@ -35,14 +31,15 @@ import graft.partition.SpatialPartitioner
   * The GLOBAL-disjoint SQL form scales through LEFT SEMI/ANTI instead:
   * `WHERE [NOT] EXISTS (SELECT .. WHERE st_intersects(a.g, b.g))` arrives
   * here as a LeftSemi/LeftAnti join after RewritePredicateSubquery, and is
-  * planned as the same tiled engine with a synthetic-left-id match pass +
-  * id (anti-)join resolution — the q_disjoint_global programmatic plan,
-  * now reachable from plain SQL. Left rows with null/invalid geometry
-  * match nothing (SQL: the predicate is null), so they surface in ANTI
-  * and drop in SEMI — the id lane carries them without special-casing.
+  * planned as the same tiled engine over a synthetic left id, resolved by
+  * an id (anti-)join — the q_disjoint_global programmatic plan, reachable
+  * from plain SQL.
   *
-  * Tuning via runtime conf: `graft.join.partitioner` (fg|bsp|qt|str|hc|
-  * slc|bos), `graft.join.bucket`, `graft.join.sampleTarget`.
+  * Tuning is read here, once per planning, into the exec nodes'
+  * [[graft.operators.SpatialJoin.Config]]: `graft.join.partitioner`
+  * (fg|bsp|qt|str|hc|slc|bos), `graft.join.bucket`,
+  * `graft.join.sampleTarget` and `graft.knn.broadcastThreshold`. Earth
+  * mode is never set from SQL.
   */
 object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
 
@@ -57,8 +54,20 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
     case _ => None // crosses/disjoint/dwithin: keep original orientation only
   }
 
+  /** The session's `graft.*` tuning confs, with the engine's defaults. */
+  private def tuning(): SpatialJoin.Config = {
+    val conf = SQLConf.get
+    val d = SpatialJoin.Config()
+    def int(key: String, default: Int) = conf.getConfString(key, default.toString).toInt
+    d.copy(
+      partitioner = conf.getConfString("graft.join.partitioner", d.partitioner),
+      bucket = int("graft.join.bucket", d.bucket),
+      sampleTarget = int("graft.join.sampleTarget", d.sampleTarget),
+      knnBroadcastThreshold = int("graft.knn.broadcastThreshold", d.knnBroadcastThreshold))
+  }
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Join(l, r, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), _) =>
+    case j @ Join(l, r, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), _) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val hit = conjuncts.iterator.map {
         case e @ StPredicate(a, b, p) if p != "disjoint" => (e, a, b, p, 0.0)
@@ -73,11 +82,14 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
           (e, b, a, swap(p).get, d)
       }
       hit match {
-        case Some((matched, lg, rg, pred, dist)) =>
+        // joins with equi-join keys stay Catalyst's hash join, the ST predicate
+        // a residual: the engine's own st_equals plan must not plan back into it
+        case Some((matched, lg, rg, pred, dist)) if ExtractEquiJoinKeys.unapply(j).isEmpty =>
           val rest = conjuncts.filterNot(_ fastEquals matched).reduceOption(And)
-          SpatialJoinExec(planLater(l), planLater(r), lg, rg, pred, dist, rest, jt) :: Nil
+          val cfg = tuning().copy(predicate = pred, distance = dist)
+          SpatialJoinExec(planLater(l), planLater(r), lg, rg, cfg, rest, jt) :: Nil
         case None if jt == Inner => planKnn(l, r, conjuncts)
-        case None => Nil
+        case _ => Nil
       }
     case _ => Nil
   }
@@ -111,12 +123,13 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
     hit match {
       case Some((matched, lg, rg, k, d, swapped, tileLocal)) =>
         val rest = conjuncts.filterNot(_ fastEquals matched).reduceOption(And)
+        val cfg = tuning()
         if (!swapped)
-          KnnJoinExec(planLater(l), planLater(r), lg, rg, k, d, rest, tileLocal) :: Nil
+          KnnJoinExec(planLater(l), planLater(r), lg, rg, k, d, rest, cfg, tileLocal) :: Nil
         else {
           // probe side is the SQL-right child: run the exec with the sides
           // exchanged, then project back to the join's l ++ r output order
-          val exec = KnnJoinExec(planLater(r), planLater(l), lg, rg, k, d, rest, tileLocal)
+          val exec = KnnJoinExec(planLater(r), planLater(l), lg, rg, k, d, rest, cfg, tileLocal)
           org.apache.spark.sql.execution.ProjectExec(
             l.output ++ r.output, exec) :: Nil
         }
@@ -125,15 +138,21 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
   }
 }
 
-/** Physical tile-partitioned spatial join over InternalRows: envelope
-  * extraction -> driver sample partitioning -> broadcast tile index ->
-  * tile-tag + hash shuffle -> per-tile STRtree filter + exact refine with
-  * reference-point dedup -> residual condition filter. Mirrors
-  * [[graft.operators.SpatialJoin.join]] at the SparkPlan level. */
+/** Physical spatial join: a bridge into [[graft.operators.SpatialJoin.join]]
+  * (see [[ExecFrames]]), which owns tiling, hot-tile salting, refine and
+  * refpoint dedup. Inner joins apply the residual conjunct to the engine's
+  * pairs and project back to `left.output ++ right.output`.
+  *
+  * LEFT SEMI/ANTI: the left side, with a synthetic id, is persisted once so
+  * its ids are fixed; the engine joins it, the residual filters the pairs,
+  * and an id (anti-)join against the distinct matched ids resolves the
+  * verdict. Left rows whose geometry is null/invalid never enter the tiled
+  * pass, so they match nothing: ANTI emits them, SEMI drops them — SQL's
+  * null-predicate semantics. */
 case class SpatialJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftGeom: Expression, rightGeom: Expression,
-    predicate: String, distance: Double,
+    cfg: SpatialJoin.Config,
     extraCond: Option[Expression],
     joinType: JoinType = Inner) extends BinaryExecNode {
 
@@ -147,305 +166,27 @@ case class SpatialJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val conf = SQLConf.get
-    val partitionerName = conf.getConfString("graft.join.partitioner", "fg")
-    val bucketConf = conf.getConfString("graft.join.bucket", "0").toInt
-    val sampleTarget = conf.getConfString("graft.join.sampleTarget", "100000").toInt
-    val shufflePartitions = conf.numShufflePartitions
-    val expand = if (predicate == "dwithin") distance else 0.0
-    val pred = predicate
-
-    def envRDD(plan: SparkPlan, geomExpr: Expression, exp: Double): RDD[(Mbb, InternalRow)] = {
-      val attrs = plan.output
-      plan.execute().mapPartitions { iter =>
-        val proj = UnsafeProjection.create(Seq(geomExpr), attrs)
-        iter.flatMap { row =>
-          val projected = proj(row)
-          val g = if (projected.isNullAt(0)) null
-                  else GeometryCodec.fromWkb(projected.getBinary(0))
-          if (g == null) None
-          else {
-            val e = g.getEnvelopeInternal
-            Some((Mbb(e.getMinX - exp, e.getMinY - exp,
-                      e.getMaxX + exp, e.getMaxY + exp), row.copy()))
-          }
-        }
-      }
-    }
-
-    if (joinType == LeftSemi || joinType == LeftAnti)
-      return doExecuteSemiAnti(expand)
-
-    // child plans are re-traversed by the stats and sample jobs -> persist
-    val lrdd = envRDD(left, leftGeom, expand).persist(StorageLevel.MEMORY_AND_DISK)
-    val rrdd = envRDD(right, rightGeom, 0.0).persist(StorageLevel.MEMORY_AND_DISK)
-
-    val mbbs = lrdd.map(_._1).union(rrdd.map(_._1))
-    val (space, n) = mbbs
-      .aggregate((Mbb.empty, 0L))(
-        (acc, m) => (acc._1.union(m), acc._2 + 1),
-        (a, b) => (a._1.union(b._1), a._2 + b._2))
-    if (n == 0) return sparkContext.emptyRDD[InternalRow]
-
-    val bucket =
-      if (bucketConf > 0) bucketConf
-      else math.max(1000L, n / (sparkContext.defaultParallelism.toLong * 4)).toInt
-    val fraction = math.min(1.0, sampleTarget.toDouble / n)
-    val sample =
-      (if (fraction >= 1.0) mbbs.collect()
-       else mbbs.sample(withReplacement = false, fraction, 42L).collect())
-    val scaledBucket = math.max(1, math.floor(bucket * fraction).toInt)
-    val tiles = SpatialPartitioner(partitionerName).partition(sample, space, scaledBucket)
-    val index = new TileIndex(tiles, space)
-    val bc = sparkContext.broadcast(index)
-
-    def tag(rdd: RDD[(Mbb, InternalRow)]): RDD[(Int, (Mbb, InternalRow))] =
-      rdd.mapPartitions { iter =>
-        iter.flatMap { case (m, row) =>
-          bc.value.tilesFor(m.xmin, m.ymin, m.xmax, m.ymax)
-            .iterator.map(t => (t, (m, row)))
-        }
-      }
-
-    val lAttrs = left.output; val rAttrs = right.output
-    val lGeomExpr = leftGeom; val rGeomExpr = rightGeom
-    val extra = extraCond
-    val outAttrs = output
-    val earth = false
-
-    val result = tag(lrdd).cogroup(tag(rrdd), new HashPartitioner(shufflePartitions))
-      .mapPartitions { tilesIter =>
-        val lProj = UnsafeProjection.create(Seq(lGeomExpr), lAttrs)
-        val rProj = UnsafeProjection.create(Seq(rGeomExpr), rAttrs)
-        val residual = extra.map(Predicate.create(_, outAttrs))
-        val outProj = UnsafeProjection.create(outAttrs, outAttrs)
-        val joined = new JoinedRow
-        tilesIter.flatMap { case (tile, (ls, rs)) =>
-          val tree = new STRtree()
-          var rCount = 0
-          rs.foreach { case (m, row) =>
-            val g = GeometryCodec.fromWkb(rProj(row).getBinary(0))
-            if (g != null) {
-              tree.insert(new Envelope(m.xmin, m.xmax, m.ymin, m.ymax), (g, m, row))
-              rCount += 1
-            }
-          }
-          if (rCount == 0) Iterator.empty
-          else {
-            tree.build()
-            val idx = bc.value
-            ls.iterator.flatMap { case (lm, lrow) =>
-              val g1 = GeometryCodec.fromWkb(lProj(lrow).getBinary(0))
-              if (g1 == null) Iterator.empty
-              else {
-                val hits = tree.query(new Envelope(lm.xmin, lm.xmax, lm.ymin, lm.ymax))
-                val out = Vector.newBuilder[InternalRow]
-                var i = 0
-                while (i < hits.size()) {
-                  val (g2, rm, rrow) =
-                    hits.get(i).asInstanceOf[(org.locationtech.jts.geom.Geometry, Mbb, InternalRow)]
-                  if (SpatialJoin.evalPredicate(pred, g1, g2, expand, earth)) {
-                    val refx = math.max(lm.xmin, rm.xmin)
-                    val refy = math.max(lm.ymin, rm.ymin)
-                    if (idx.refTile(refx, refy) == tile) {
-                      joined(lrow, rrow)
-                      if (residual.forall(_.eval(joined)))
-                        out += outProj(joined).copy()
-                    }
-                  }
-                  i += 1
-                }
-                out.result().iterator
-              }
-            }
-          }
-        }
-      }
-    // free the envelope caches once the job that ran this join finishes —
-    // a long-lived SQL session must not accumulate blocks across queries
-    graft.core.CacheHygiene.releaseAfterFirstJob(sparkContext, result) {
-      lrdd.unpersist(blocking = false)
-      rrdd.unpersist(blocking = false)
-    }
-  }
-
-  /** LEFT SEMI/ANTI over the same tiled engine: a synthetic 64-bit id pins
-    * each left row (partition index ∙ local sequence — deterministic, no
-    * counting job), the tiled pass emits the ids with ≥1 (residual-passing)
-    * match — short-circuiting per tile, no refpoint dedup needed since ids
-    * dedup globally — and a hash (anti-)join on the id lane resolves the
-    * verdict. Left rows whose geometry is null/invalid never enter the
-    * tiled pass, so they match nothing: ANTI emits them, SEMI drops them —
-    * exactly SQL's null-predicate semantics. This is the
-    * q_disjoint_global programmatic plan (tiled semi + left_anti), planned
-    * from `[NOT] EXISTS` SQL. */
-  private def doExecuteSemiAnti(expand: Double): RDD[InternalRow] = {
-    val conf = SQLConf.get
-    val partitionerName = conf.getConfString("graft.join.partitioner", "fg")
-    val bucketConf = conf.getConfString("graft.join.bucket", "0").toInt
-    val sampleTarget = conf.getConfString("graft.join.sampleTarget", "100000").toInt
-    val shufflePartitions = conf.numShufflePartitions
-    val pred = predicate
-    val lAttrs = left.output; val rAttrs = right.output
-    val lGeomExpr = leftGeom; val rGeomExpr = rightGeom
-    val joinedAttrs = lAttrs ++ rAttrs
-    val extra = extraCond
-    val anti = joinType == LeftAnti
-
-    val lWithId: RDD[(Long, InternalRow)] = left.execute()
-      .mapPartitionsWithIndex { (pi, iter) =>
-        var seq = 0L
-        iter.map { row =>
-          // fail loudly before seq bleeds into the partition-index bits and
-          // two rows alias the same id (semi would dup, anti would drop)
-          require(seq < (1L << 36),
-            s"semi/anti partition $pi exceeds 2^36 rows; repartition the left side")
-          val id = (pi.toLong << 36) | seq
-          seq += 1
-          (id, row.copy())
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-
-    val lEnv: RDD[(Mbb, (Long, InternalRow))] = lWithId.mapPartitions { iter =>
-      val proj = UnsafeProjection.create(Seq(lGeomExpr), lAttrs)
-      iter.flatMap { case (id, row) =>
-        val p = proj(row)
-        val g = if (p.isNullAt(0)) null else GeometryCodec.fromWkb(p.getBinary(0))
-        if (g == null) None
-        else {
-          val e = g.getEnvelopeInternal
-          Some((Mbb(e.getMinX - expand, e.getMinY - expand,
-                    e.getMaxX + expand, e.getMaxY + expand), (id, row)))
-        }
-      }
-    }
-    val rrdd = envRDDOf(right, rightGeom).persist(StorageLevel.MEMORY_AND_DISK)
-
-    val mbbs = lEnv.map(_._1).union(rrdd.map(_._1))
-    val (space, n) = mbbs.aggregate((Mbb.empty, 0L))(
-      (acc, m) => (acc._1.union(m), acc._2 + 1),
-      (a, b) => (a._1.union(b._1), a._2 + b._2))
-    if (n == 0) {
-      // no geometry anywhere: every left row is matchless. The envelope
-      // cache is dead either way; the id cache feeds the anti result, so
-      // it releases after that result's first job (semi consumes nothing)
-      rrdd.unpersist(blocking = false)
-      return if (anti) {
-        val out = lWithId.map(_._2)
-        graft.core.CacheHygiene.releaseAfterFirstJob(sparkContext, out)(
-          lWithId.unpersist(blocking = false))
-      } else {
-        lWithId.unpersist(blocking = false)
-        sparkContext.emptyRDD[InternalRow]
-      }
-    }
-    val bucket =
-      if (bucketConf > 0) bucketConf
-      else math.max(1000L, n / (sparkContext.defaultParallelism.toLong * 4)).toInt
-    val fraction = math.min(1.0, sampleTarget.toDouble / n)
-    val sample =
-      (if (fraction >= 1.0) mbbs.collect()
-       else mbbs.sample(withReplacement = false, fraction, 42L).collect())
-    val scaledBucket = math.max(1, math.floor(bucket * fraction).toInt)
-    val tiles = SpatialPartitioner(partitionerName).partition(sample, space, scaledBucket)
-    val bc = sparkContext.broadcast(new TileIndex(tiles, space))
-
-    val lTagged = lEnv.mapPartitions { iter =>
-      iter.flatMap { case (m, payload) =>
-        bc.value.tilesFor(m.xmin, m.ymin, m.xmax, m.ymax)
-          .iterator.map(t => (t, (m, payload)))
-      }
-    }
-    val rTagged = rrdd.mapPartitions { iter =>
-      iter.flatMap { case (m, row) =>
-        bc.value.tilesFor(m.xmin, m.ymin, m.xmax, m.ymax)
-          .iterator.map(t => (t, (m, row)))
-      }
-    }
-
-    val matchedIds: RDD[(Long, Null)] = lTagged
-      .cogroup(rTagged, new HashPartitioner(shufflePartitions))
-      .mapPartitions { tilesIter =>
-        val lProj = UnsafeProjection.create(Seq(lGeomExpr), lAttrs)
-        val rProj = UnsafeProjection.create(Seq(rGeomExpr), rAttrs)
-        val residual = extra.map(Predicate.create(_, joinedAttrs))
-        val joined = new JoinedRow
-        // per-partition pre-dedup: a left row can match in many tiles of
-        // this partition; ship each id once. Bounded — beyond the cap ids
-        // ship duplicated and the downstream distinct/subtractByKey still
-        // dedups (correctness never depends on this set)
-        val SeenCap = 4 * 1000 * 1000
-        val seen = new java.util.HashSet[java.lang.Long]()
-        tilesIter.flatMap { case (_, (ls, rs)) =>
-          val tree = new STRtree()
-          var rCount = 0
-          rs.foreach { case (m, row) =>
-            val g = GeometryCodec.fromWkb(rProj(row).getBinary(0))
-            if (g != null) {
-              tree.insert(new Envelope(m.xmin, m.xmax, m.ymin, m.ymax), (g, row))
-              rCount += 1
-            }
-          }
-          if (rCount == 0) Iterator.empty
-          else {
-            tree.build()
-            ls.iterator.flatMap { case (lm, (id, lrow)) =>
-              if (seen.contains(id)) Iterator.empty
-              else {
-                val g1 = GeometryCodec.fromWkb(lProj(lrow).getBinary(0))
-                if (g1 == null) Iterator.empty
-                else {
-                  val hits = tree.query(new Envelope(lm.xmin, lm.xmax, lm.ymin, lm.ymax))
-                  var found = false
-                  var i = 0
-                  while (i < hits.size() && !found) { // semi short-circuit
-                    val (g2, rrow) = hits.get(i)
-                      .asInstanceOf[(org.locationtech.jts.geom.Geometry, InternalRow)]
-                    if (SpatialJoin.evalPredicate(pred, g1, g2, expand, earth = false)) {
-                      joined(lrow, rrow)
-                      if (residual.forall(_.eval(joined))) found = true
-                    }
-                    i += 1
-                  }
-                  if (found) {
-                    if (seen.size < SeenCap) seen.add(id)
-                    Iterator.single((id, null: Null))
-                  } else Iterator.empty
-                }
-              }
-            }
-          }
-        }
-      }
-      .partitionBy(new HashPartitioner(shufflePartitions))
-
-    val byId = lWithId.partitionBy(new HashPartitioner(shufflePartitions))
-    val result =
-      if (anti) byId.subtractByKey(matchedIds).map(_._2)
-      else byId.join(matchedIds.distinct(shufflePartitions)
-        .asInstanceOf[RDD[(Long, Null)]]).map(_._2._1)
-    graft.core.CacheHygiene.releaseAfterFirstJob(sparkContext, result) {
-      lWithId.unpersist(blocking = false)
-      rrdd.unpersist(blocking = false)
-    }
-  }
-
-  /** envelope extraction shared with the inner path (no expansion — the
-    * probe side carries it). */
-  private def envRDDOf(plan: SparkPlan, geomExpr: Expression): RDD[(Mbb, InternalRow)] = {
-    val attrs = plan.output
-    plan.execute().mapPartitions { iter =>
-      val proj = UnsafeProjection.create(Seq(geomExpr), attrs)
-      iter.flatMap { row =>
-        val projected = proj(row)
-        val g = if (projected.isNullAt(0)) null
-                else GeometryCodec.fromWkb(projected.getBinary(0))
-        if (g == null) None
-        else {
-          val e = g.getEnvelopeInternal
-          Some((Mbb(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY), row.copy()))
-        }
-      }
+    val lNames = ExecFrames.names(left, "__l")
+    val names = lNames ++ ExecFrames.names(right, "__r")
+    val attrs = left.output ++ right.output
+    val (l, lg) = ExecFrames.of(left, "__l", leftGeom, id = joinType != Inner)
+    val (r, rg) = ExecFrames.of(right, "__r", rightGeom)
+    if (joinType == Inner)
+      ExecFrames.rows(
+        ExecFrames.where(SpatialJoin.join(l, lg, r, rg, cfg), extraCond, attrs, names), names)
+    else {
+      val (lc, lCopy) = Bridge.persisted(l)
+      // the tiled pass reads only the id, the geometry and the residual's columns
+      val read = extraCond.fold(Set.empty[ExprId])(_.references.map(_.exprId).toSet)
+      val lCols = (ExecFrames.Id +: lg +: left.output.zip(lNames).collect {
+        case (a, n) if read(a.exprId) => n }).distinct
+      val pairs = SpatialJoin.join(lc.select(lCols.map(col): _*), lg, r, rg, cfg)
+      val matched = ExecFrames.where(pairs, extraCond, attrs, names)
+        .select(ExecFrames.Id).distinct()
+      val verdict = lc.join(matched, Seq(ExecFrames.Id),
+        if (joinType == LeftAnti) "left_anti" else "left_semi")
+      CacheHygiene.releaseAfterFirstJob(sparkContext, ExecFrames.rows(verdict, lNames))(
+        lCopy.unpersist(blocking = false))
     }
   }
 }

@@ -139,6 +139,158 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     assert(semiN.as[Long].collect().toSet == first5.intersect(matched))
   }
 
+  /** Integer-lattice boxes and points (so touches and boundary cases
+    * occur), plus one invalid-WKT and one null-WKT row. */
+  private def lattice(n: Int, seed: Long, nullIds: (Long, Long)) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val x = rnd.nextInt(30); val y = rnd.nextInt(15)
+      val w = 1 + rnd.nextInt(3); val h = 1 + rnd.nextInt(3)
+      (i.toLong,
+        if (i % 3 == 0) s"POINT ($x $y)"
+        else s"POLYGON(($x $y,${x + w} $y,${x + w} ${y + h},$x ${y + h},$x $y))")
+    } ++ Seq((nullIds._1, "not-a-wkt"), (nullIds._2, null: String))
+  }
+
+  private def geomFrame(rows: Seq[(Long, String)], id: String, g: String) =
+    rows.toDF(id, "w").withColumn(g, st_geomfromwkt(col("w"))).drop("w")
+
+  private def jts(w: String): Seq[org.locationtech.jts.geom.Geometry] =
+    Option(w).flatMap(s => scala.util.Try(GeometryCodec.fromWkt(s)).toOption)
+      .filter(_ != null).toSeq
+
+  private def bruteInner(la: Seq[(Long, String)], lb: Seq[(Long, String)],
+                         p: (org.locationtech.jts.geom.Geometry,
+                             org.locationtech.jts.geom.Geometry) => Boolean) =
+    (for {
+      (i, wa) <- la; ga <- jts(wa); (j, wb) <- lb; gb <- jts(wb) if p(ga, gb)
+    } yield (i, j)).toSet
+
+  private def execs(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collect { case e: SpatialJoinExec => e }
+
+  test("SQL == SpatialJoin.join == brute force: predicates, orientations, null geometry, empty side, hot spot") {
+    import graft.operators.SpatialJoin
+    import org.locationtech.jts.geom.Geometry
+    val la = lattice(180, 41, (900L, 901L)); val lb = lattice(160, 42, (950L, 951L))
+    val a = geomFrame(la, "ida", "ga"); val b = geomFrame(lb, "idb", "gb")
+    a.createOrReplaceTempView("da"); b.createOrReplaceTempView("db")
+    // an empty side the optimizer cannot fold away (not a LocalRelation)
+    b.where(col("idb") < 0).localCheckpoint().createOrReplaceTempView("de")
+
+    def check(sql: String, engine: => org.apache.spark.sql.DataFrame,
+              want: Set[(Long, Long)]): Unit = {
+      val q = spark.sql(sql)
+      assert(execs(q).nonEmpty, s"expected SpatialJoinExec for: $sql")
+      val got = q.as[(Long, Long)].collect()
+      assert(got.length == got.toSet.size, s"duplicate pairs for: $sql")
+      val eng = engine.select(col("ida"), col("idb")).as[(Long, Long)].collect().toSet
+      assert(eng == want, s"engine vs brute for $sql: missing=${(want -- eng).take(5)} extra=${(eng -- want).take(5)}")
+      assert(got.toSet == want, s"SQL vs brute for $sql: missing=${(want -- got.toSet).take(5)} extra=${(got.toSet -- want).take(5)}")
+    }
+
+    // (SQL condition over da ⋈ db, engine predicate for (ga, gb), distance, brute)
+    val cases: Seq[(String, String, Double, (Geometry, Geometry) => Boolean)] = Seq(
+      ("st_intersects(ga, gb)", "intersects", 0.0, _.intersects(_)),
+      ("st_contains(ga, gb)", "contains", 0.0, _.contains(_)),
+      ("st_contains(gb, ga)", "within", 0.0, (x, y) => y.contains(x)),
+      ("st_within(ga, gb)", "within", 0.0, _.within(_)),
+      ("st_within(gb, ga)", "contains", 0.0, (x, y) => y.within(x)),
+      ("st_touches(ga, gb)", "touches", 0.0, _.touches(_)),
+      ("st_equals(ga, gb)", "equals", 0.0, _.equalsTopo(_)),
+      ("st_dwithin(ga, gb, 1.5D)", "dwithin", 1.5, _.isWithinDistance(_, 1.5)))
+    cases.foreach { case (cond, pred, d, p) =>
+      val want = bruteInner(la, lb, p)
+      assert(want.nonEmpty, s"fixture exercises nothing for $cond")
+      check(s"SELECT ida, idb FROM da JOIN db ON $cond",
+        SpatialJoin.join(a, "ga", b, "gb", SpatialJoin.Config(predicate = pred, distance = d)),
+        want)
+    }
+    check("SELECT ida, idb FROM da JOIN de ON st_intersects(ga, gb)",
+      SpatialJoin.join(a, "ga", b.where(col("idb") < 0), "gb"), Set.empty[(Long, Long)])
+
+    // hot spot: more than hotTileFactor × bucket left rows at one point,
+    // which the tiled engine salts across shards
+    val bucket = 16
+    val hotRows = SpatialJoin.Config().hotTileFactor * bucket + 100
+    val lh = la ++ (0 until hotRows).map(i => (2000L + i, "POINT (10 7)"))
+    val h = geomFrame(lh, "ida", "ga")
+    h.createOrReplaceTempView("dh")
+    val wantHot = bruteInner(lh, lb, _.intersects(_))
+    assert(wantHot.count(_._1 >= 2000) >= hotRows, "the hot point must hit a B geometry")
+    try {
+      spark.conf.set("graft.join.bucket", bucket.toString)
+      check("SELECT ida, idb FROM dh JOIN db ON st_intersects(ga, gb)",
+        SpatialJoin.join(h, "ga", b, "gb", SpatialJoin.Config(bucket = bucket)), wantHot)
+    } finally spark.conf.unset("graft.join.bucket")
+  }
+
+  test("EXISTS / NOT EXISTS with a residual conjunct, null geometry and an empty side: SQL == engine == brute force") {
+    import graft.operators.SpatialJoin
+    val la = lattice(150, 43, (900L, 901L)); val lb = lattice(140, 44, (950L, 951L))
+    val a = geomFrame(la, "ida", "ga"); val b = geomFrame(lb, "idb", "gb")
+    a.createOrReplaceTempView("xa"); b.createOrReplaceTempView("xb")
+    b.where(col("idb") < 0).localCheckpoint().createOrReplaceTempView("xe")
+    val all = la.map(_._1).toSet
+
+    def verdicts(sub: String, matched: Set[Long]): Unit =
+      Seq("EXISTS" -> matched, "NOT EXISTS" -> (all -- matched)).foreach { case (op, want) =>
+        val q = spark.sql(s"SELECT ida FROM xa WHERE $op ($sub)")
+        assert(execs(q).nonEmpty, s"expected the tiled semi/anti for $op ($sub)")
+        val got = q.as[Long].collect()
+        assert(got.length == got.toSet.size, s"duplicate rows for $op ($sub)")
+        assert(got.toSet == want,
+          s"$op ($sub): missing=${(want -- got.toSet).take(5)} extra=${(got.toSet -- want).take(5)}")
+      }
+
+    // residual reads both sides; the engine's pairs + the residual agree
+    val residual = "(ida + idb) % 3 <> 0"
+    val matched = bruteInner(la, lb, _.intersects(_))
+      .collect { case (i, j) if (i + j) % 3 != 0 => i }
+    assert(matched.nonEmpty && matched != all.filter(_ < 900))
+    val engine = SpatialJoin.join(a, "ga", b, "gb")
+      .where(expr(residual)).select("ida").as[Long].collect().toSet
+    assert(engine == matched)
+    verdicts(s"SELECT 1 FROM xb WHERE st_intersects(ga, gb) AND $residual", matched)
+    // empty subquery side: nothing matches, every left row (null geometry
+    // included) is NOT EXISTS
+    verdicts("SELECT 1 FROM xe WHERE st_intersects(ga, gb)", Set.empty[Long])
+  }
+
+  test("a SQL spatial join validates the planning-time tuning conf") {
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    try {
+      spark.conf.set("graft.join.bucket", "-1")
+      val e = intercept[Exception] {
+        spark.sql("SELECT ida, idb FROM ta JOIN tb ON st_intersects(ga, gb)").collect()
+      }
+      assert(messages(e).exists(_.contains("bucket must be >= 0")), s"unexpected error: $e")
+    } finally spark.conf.unset("graft.join.bucket")
+  }
+
+  test("SQL spatial and tiled kNN joins leave no persisted RDD behind") {
+    points(120, 27).toDF("idc", "wc").withColumn("gc", st_geomfromwkt(col("wc")))
+      .createOrReplaceTempView("lk_c")
+    points(60, 28).toDF("ids", "ws").withColumn("gs", st_geomfromwkt(col("ws")))
+      .createOrReplaceTempView("lk_s")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try {
+      spark.conf.set("graft.knn.broadcastThreshold", "0")
+      spark.sql("SELECT idc, ids FROM lk_c JOIN lk_s ON st_nearest(gc, gs, 3)").collect()
+    } finally spark.conf.unset("graft.knn.broadcastThreshold")
+    spark.sql("SELECT ida, idb FROM ta JOIN tb ON st_intersects(ga, gb)").collect()
+    spark.sql("SELECT ida FROM sa WHERE NOT EXISTS (SELECT 1 FROM sb WHERE st_intersects(ga, gb))")
+      .collect()
+    // releases run on the asynchronous listener bus: poll briefly
+    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while ((sc.getPersistentRDDs.keySet -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.flatMap(sc.getPersistentRDDs.get)}")
+  }
+
   private def points(n: Int, seed: Long) = {
     val rnd = new scala.util.Random(seed)
     (0 until n).map { i =>
