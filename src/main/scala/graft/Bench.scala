@@ -263,9 +263,8 @@ object Bench {
                        onlyNames: Option[Set[String]] = None,
                        emit: Boolean = true): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared launcher recipe (incl. the AQE coalescing floor) — Sessions
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     // ERROR, not WARN: the driver's BENCH_rN.json keeps a tail of this
     // process's combined output, and at WARN the function-registry
     // re-registration chatter (one line per gate x function) is what

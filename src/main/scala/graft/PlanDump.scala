@@ -16,8 +16,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val gates = SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))

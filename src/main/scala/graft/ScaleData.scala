@@ -31,7 +31,7 @@ object ScaleData {
     require(copies >= 1 && copies <= 100,
       s"copies must be in [1, 100], got $copies")
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Sessions.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

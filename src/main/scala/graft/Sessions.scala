@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local session-builder recipe shared by every entry point
-  * (Bench, Verify, PlanProbe, StageProbe, PlanDump, PerfProbe): a tuning
-  * flag edited in one launcher but not another would silently de-sync the
-  * measured plans from the verified ones (round-16 advice). Flags:
+/** The ONE local session-builder recipe and core count shared by every
+  * entry point (Bench, Verify, Profile, PlanDump, ScaleData): a tuning flag
+  * or core count edited in one launcher but not another would silently
+  * de-sync the measured plans from the verified ones (round-16 advice).
+  * Flags:
   *
   *  - shuffle partitions = the core count (scale-adaptive: AQE coalescing
   *    stays on; the driver's low-core bench lane follows automatically);
@@ -20,6 +21,12 @@ import org.apache.spark.sql.SparkSession
   *    the floor is inert there.
   */
 object Sessions {
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def cpus: String = cpusFrom(sys.env)
+
+  private[graft] def cpusFrom(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
   /** Builder for a `local[cpus]` session with the shared flags; callers
     * append launcher-specific config before `getOrCreate()`. */

@@ -29,15 +29,25 @@ object Queries {
     * document the uncapped one would — only the duplication factor drops. */
   private val TrainIdCap = 40000000L
 
+  /** Where gates keep their side files (oracle aux relations, stream
+    * checkpoints, stores, shards): `target/` under the JVM's working
+    * directory, absolute so the DuckDB paths [[auxSql]] writes into
+    * oracle_sql.json resolve from any directory. */
+  private lazy val Work: String =
+    java.nio.file.Paths.get("target").toAbsolutePath.toString
+
+  /** `<Work>/<area>/<SF dir name>`: keyed by the SF directory name so a
+    * bench run at another SF never clobbers the sf0.01 verify artifacts. */
+  private def workDir(area: String, dir: String): String =
+    s"$Work/$area/${new java.io.File(dir).getName}"
+
   /** Checkpoint an engine-internal relation (hash-family signatures, LSH
     * buckets, IVF assignments) as parquet and read it back, so (a) the
     * downstream the gate ships is provably computed over exactly these bits
     * and (b) the SQL-expressible stage downstream — banding, pair join,
-    * threshold, ranking — can be oracled by DuckDB over the same file. Keyed
-    * by the SF directory name so a bench run at another SF never clobbers
-    * the sf0.01 verify artifact the oracle reads. */
+    * threshold, ranking — can be oracled by DuckDB over the same file. */
   def writeOracleAux(df: DataFrame, dir: String, name: String): DataFrame = {
-    val path = s"/root/repo/target/oracle_aux/${new java.io.File(dir).getName}/$name"
+    val path = s"${workDir("oracle_aux", dir)}/$name"
     // a handful of files, not coalesce(1): the oracle reads a glob, and a
     // single-file write FORCES the whole upstream pipeline into one task
     // (coalesce is narrow) — measured as the dominant stage of every
@@ -46,31 +56,43 @@ object Queries {
     df.sparkSession.read.parquet(path)
   }
 
-  /** Two INDEPENDENT [[writeOracleAux]] checkpoints run as concurrent
-    * driver-thread jobs (guide §2.6 — overlap independent jobs so one
-    * write's task tail back-fills with the other's tasks; job descriptions
-    * are thread-local so the UI stays readable). Only for aux relations
-    * with no data dependency on each other. */
   /** Two INDEPENDENT driver actions as concurrent jobs (guide §2.6 —
     * overlap independent jobs so one action's task tail back-fills with
-    * the other's tasks). Dedicated 2-thread pool, not the global pool;
-    * the pair is awaited JOINTLY (zip) so the FIRST failure propagates
-    * immediately instead of surfacing only after the other side
-    * completes, and a finite (but generous — these are bounded gate-side
+    * the other's tasks). Dedicated 2-thread pool, not the global pool. Each
+    * side runs under its own job group. The pair is awaited jointly (`zip`
+    * fails as soon as either side fails), and on a failure the sibling's
+    * running jobs are cancelled (task threads interrupted) before the
+    * error is rethrown, so they do not keep the cores busy after the gate
+    * has failed. A finite (but generous — these are bounded gate-side
     * actions) timeout turns a hung job into a loud error rather than a
     * silently stuck gate (round-16 advice). */
   def par2[A, B](fa0: => A, fb0: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
+    val sc = SparkSession.active.sparkContext
+    val groups = Seq("a", "b").map(s => s"graft-par2-${java.util.UUID.randomUUID}-$s")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    def side[T](group: String, body: => T): Future[T] = Future {
+      // pool threads inherit the caller's local properties; keep its
+      // job description, replace only the group
+      sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
+        interruptOnCancel = true)
+      body
+    }
     try {
-      val fa = Future(fa0)
-      val fb = Future(fb0)
-      Await.result(fa.zip(fb), 30.minutes)
+      val fa = side(groups(0), fa0)
+      val fb = side(groups(1), fb0)
+      try Await.result(fa.zip(fb), 30.minutes)
+      catch { case e: Throwable =>
+        groups.foreach(g => sc.cancelJobGroup(g))
+        throw e
+      }
     } finally pool.shutdown()
   }
 
+  /** Two [[writeOracleAux]] checkpoints through [[par2]]. Only for aux
+    * relations with no data dependency on each other. */
   def writeOracleAuxPar(dir: String,
                         a: (DataFrame, String),
                         b: (DataFrame, String)): (DataFrame, DataFrame) =
@@ -79,7 +101,7 @@ object Queries {
   /** DuckDB-side reference to a [[writeOracleAux]] artifact (the driver's
     * correctness gate always runs at sf0.01). */
   def auxSql(name: String): String =
-    s"read_parquet('/root/repo/target/oracle_aux/sf0.01/$name/*.parquet')"
+    s"read_parquet('$Work/oracle_aux/sf0.01/$name/*.parquet')"
 
   /** events with `ts` as a timestamp. The testdata generator has shipped
     * `ts` both as TIMESTAMP(NANOS) — which Spark surfaces as BIGINT nanos
@@ -1567,7 +1589,7 @@ object Queries {
   def qStreamIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SpatialStore
     import graft.streaming.SpatialIngest
-    val base = s"/root/repo/target/graft_stream_ingest/${new java.io.File(dir).getName}"
+    val base = workDir("graft_stream_ingest", dir)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
       f.delete()
@@ -1613,7 +1635,7 @@ object Queries {
     // made the timing write-dominated, and the old fixed java.io.tmpdir
     // path let concurrent runs (bench + verify) overwrite each other's
     // store mid-scan
-    val path = s"/root/repo/target/graft_store_multi/${new java.io.File(dir).getName}"
+    val path = workDir("graft_store_multi", dir)
     if (!new java.io.File(path, "_graft_meta.json").exists())
       SpatialStore.write(partBoxes(spark, dir), "geom", path,
         SpatialJoin.Config(partitioner = "fg", bucket = 300))
@@ -2523,7 +2545,7 @@ object Queries {
     import graft.streaming.CurateIngest
     import graft.text.QualityClassifier
     val b = 4096
-    val base = s"/root/repo/target/graft_stream_curate/${new java.io.File(dir).getName}"
+    val base = workDir("graft_stream_curate", dir)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
       f.delete()
@@ -2994,7 +3016,7 @@ object Queries {
     * spec-pinned in StreamingDedupSpec. */
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.DedupIngest
-    val base = s"/root/repo/target/graft_stream_dedup/${new java.io.File(dir).getName}"
+    val base = workDir("graft_stream_dedup", dir)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
       f.delete()
@@ -3891,7 +3913,7 @@ object Queries {
     * file-bytes == computed-contract == oracle re-derivation in one row. */
   def qShardFiles(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.ShardBuild
-    val path = s"/root/repo/target/graft_shards/${new java.io.File(dir).getName}"
+    val path = workDir("graft_shards", dir)
     val docs = table(spark, dir, "documents")
     ShardBuild.writeShards(docs, Seq("source"), "doc_id", "text", 3, path)
     val files = spark.read.format("binaryFile").load(path)
@@ -4170,7 +4192,7 @@ object Queries {
   def qJsonl(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.JsonlSource
     val base = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val path = s"/root/repo/target/graft_jsonl/${new java.io.File(dir).getName}"
+    val path = workDir("graft_jsonl", dir)
     base.select(to_json(struct(col("doc_id"), col("text"))).as("value"))
       .unionByName(base.where(col("doc_id") % 50 === 0)
         .select(concat(lit("{broken json line "), col("doc_id")).as("value")))
@@ -5336,7 +5358,7 @@ object Queries {
   def qCrawlCurate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.WarcSource
     import graft.text.{Boilerplate, QualityFilter, UrlCurate}
-    val path = s"/root/repo/target/graft_crawl2/${new java.io.File(dir).getName}"
+    val path = workDir("graft_crawl2", dir)
     val k = (col("doc_id") % 10).cast("string")
     val gid = concat(lit("gclid=g"), col("doc_id").cast("string"))
     val uri = when(col("doc_id") % 2 === 0,
@@ -5454,7 +5476,7 @@ object Queries {
     * body fidelity are all pinned (same contract as q_jsonl). */
   def qWarc(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.WarcSource
-    val path = s"/root/repo/target/graft_warc/${new java.io.File(dir).getName}"
+    val path = workDir("graft_warc", dir)
     val recs = table(spark, dir, "documents").select(
       concat(lit("https://"), col("source"), lit(".example.com/doc/"),
         col("doc_id").cast("string")).as("target_uri"),
@@ -5491,7 +5513,7 @@ object Queries {
   def qCrawlE2e(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.WarcSource
     import graft.text.UrlCurate
-    val path = s"/root/repo/target/graft_crawl/${new java.io.File(dir).getName}"
+    val path = workDir("graft_crawl", dir)
     val k = (col("doc_id") % 10).cast("string")
     val gid = concat(lit("gclid=g"), col("doc_id").cast("string"))
     val uri = when(col("doc_id") % 2 === 0,
@@ -5711,7 +5733,7 @@ object Queries {
                            cols: Seq[String], hilbertPair: Boolean): String = {
     import graft.sources.ZoneMap
     val path =
-      s"/root/repo/target/graft_zonemap/${new java.io.File(dir).getName}/$sub"
+      s"${workDir("graft_zonemap", dir)}/$sub"
     if (!new java.io.File(s"$path/_zonemap/_SUCCESS").exists())
       ZoneMap.writeClustered(eventsTable(spark, dir), path, cols,
         numFiles = 16, hilbertPair = hilbertPair)
@@ -5743,7 +5765,7 @@ object Queries {
   def qLayoutAppend(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.ZoneMap, ZoneMap.ZoneRange
     val path =
-      s"/root/repo/target/graft_zonemap/${new java.io.File(dir).getName}/append"
+      s"${workDir("graft_zonemap", dir)}/append"
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -5792,7 +5814,7 @@ object Queries {
     val queries = emb.where(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val model = graft.ann.IvfIndex.train(items, "ivec", nlist = 16)
-    val store = s"/root/repo/target/graft_ann_ingest/${new java.io.File(dir).getName}"
+    val store = workDir("graft_ann_ingest", dir)
     val p = new org.apache.hadoop.fs.Path(store)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)

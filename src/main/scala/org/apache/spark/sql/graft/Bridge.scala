@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,7 +11,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Expression <-> Column and RDD <-> DataFrame bridge. `ExpressionUtils`
-  * and `internalCreateDataFrame` are private[sql] in Spark 4, so this
+  * and `internalCreateDataFrame` are private[sql] in Spark 4 (and the
+  * listener bus private[spark]), so this
   * one-file shim lives inside the org.apache.spark.sql package hierarchy;
   * everything else in this project stays in `graft`. */
 object Bridge {
@@ -38,4 +40,7 @@ object Bridge {
     castToImpl(df.sparkSession).sharedState.cacheManager
       .lookupCachedData(castToImpl(df)).get
       .cachedRepresentation.cacheBuilder.cachedColumnBuffers
+
+  /** Blocks until the listener bus has delivered every posted event. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(10000L)
 }
