@@ -89,22 +89,12 @@ package object api {
     def dedupByUrl(urlCol: String, idCol: String): DataFrame =
       graft.text.UrlCurate.dedupByUrl(df, urlCol, idCol)
 
-    /** Write spatially partitioned (reference `partition` lifecycle).
-      * Since round 14 this lands the manifest-committed compact layout —
-      * reads ([[SpatialStore.containmentRead]] etc.) detect the layout, so
-      * existing stores keep working; use [[SpatialStore.writeDirs]]
-      * directly for Hive `tile_id=` dirs (external pruning interop). */
+    /** Write spatially partitioned (reference `partition` lifecycle):
+      * range-clustered files under `data/` plus a per-file tile-range
+      * manifest, read back with [[SpatialStore.containmentRead]] etc. */
     def spatialPartitionWrite(path: String, geomCol: String = "geom",
                               partitioner: String = "fg", bucket: Int = 0): Unit =
       SpatialStore.write(df, geomCol, path,
-        SpatialJoin.Config(partitioner = partitioner, bucket = bucket))
-
-    /** Alias of [[spatialPartitionWrite]] — the manifest-committed layout
-      * became the default in round 14. */
-    def spatialPartitionWriteCompact(path: String, geomCol: String = "geom",
-                                     partitioner: String = "fg",
-                                     bucket: Int = 0): Unit =
-      SpatialStore.writeCompact(df, geomCol, path,
         SpatialJoin.Config(partitioner = partitioner, bucket = bucket))
 
     /** Per-tile object counts + the reference's partition-quality stats

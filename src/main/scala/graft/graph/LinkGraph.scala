@@ -130,7 +130,6 @@ object LinkGraph {
     // production-sized rounds are unaffected either way.
     val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     val savedFloor = spark.conf.getOption(floorKey)
-    spark.conf.unset(floorKey) // back to Spark's byte-based default
     // Bounded-round AQE bypass: AQE runs each shuffle/broadcast stage as
     // its own JOB, so one checkpointed round costs ~6 scheduled jobs —
     // pure per-round overhead when the rank relation is dim-table sized
@@ -145,17 +144,20 @@ object LinkGraph {
     // (exact integer arithmetic; the bit-determinism specs pin it).
     val aqeKey = "spark.sql.adaptive.enabled"
     val savedAqe = spark.conf.getOption(aqeKey)
-    val aqeRowThreshold = spark.conf
-      .getOption("spark.graft.graph.aqeRowThreshold").map(_.toLong)
-      .getOrElse(4000000L)
-    if (n.count() <= aqeRowThreshold) spark.conf.set(aqeKey, "false")
     // round 0 is a literal column over the just-checkpointed `n` — narrow
     // on materialized blocks, so it needs no checkpoint job of its own
     // (rankIds Nil: freeing "round 0" must not free `n`, which every later
     // round still reads)
     var rank: DataFrame = n.withColumn("rank", lit(scale))
     var rankIds: Seq[Int] = Nil
+    // every conf change sits inside the try, so the finally restores the
+    // session even when the threshold parse or the count throws
     try {
+      spark.conf.unset(floorKey) // back to Spark's byte-based default
+      val aqeRowThreshold = spark.conf
+        .getOption("spark.graft.graph.aqeRowThreshold").map(_.toLong)
+        .getOrElse(4000000L)
+      if (n.count() <= aqeRowThreshold) spark.conf.set(aqeKey, "false")
       for (_ <- 1 to iterations) {
         val contrib = ew
           .join(rank.withColumnRenamed("host", "src"), "src")

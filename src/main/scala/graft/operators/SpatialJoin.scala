@@ -118,7 +118,8 @@ object SpatialJoin {
     * [[Geo.lonDegrees]]'s formula as per-row codegen'd columns: the
     * longitude window widens with the envelope's worst-case |latitude|,
     * degenerating to the full 360° near the poles, where candidate
-    * windows legitimately wrap). */
+    * windows legitimately wrap). A window that crosses ±180° covers
+    * every longitude, so pairs across the antimeridian stay candidates. */
   private def withEnvEarthMeters(df: DataFrame, geom: String,
                                  meters: Double): DataFrame = {
     val dLat = Geo.latDegrees(meters)
@@ -126,17 +127,22 @@ object SpatialJoin {
       .where(col("__env").isNotNull)
       .withColumn("__phimax",
         greatest(abs(col("__env.ymin")), abs(col("__env.ymax"))) + lit(dLat))
+      .withColumn("__s", sin(lit(meters / (2.0 * Geo.EarthRadiusMeters))) /
+        cos(radians(col("__phimax"))))
       .withColumn("__dlon",
-        when(col("__phimax") >= 89.9, lit(360.0))
+        when(col("__phimax") >= 89.9 || col("__s") >= 1.0, lit(360.0))
           .otherwise(least(lit(360.0),
-            degrees(asin(least(lit(1.0),
-              sin(lit(meters / (2.0 * Geo.EarthRadiusMeters))) /
-                cos(radians(col("__phimax")))))) * lit(2.0 * Geo.BoundSafety))))
+            degrees(asin(col("__s"))) * lit(2.0 * Geo.BoundSafety))))
       .withColumn(X1, col("__env.xmin") - col("__dlon"))
       .withColumn(Y1, col("__env.ymin") - lit(dLat))
       .withColumn(X2, col("__env.xmax") + col("__dlon"))
       .withColumn(Y2, col("__env.ymax") + lit(dLat))
-      .drop("__env", "__phimax", "__dlon")
+      // a window past ±180° wraps onto the other side of the antimeridian:
+      // widen it to every longitude
+      .withColumn("__wrap", col(X1) < -180.0 || col(X2) > 180.0)
+      .withColumn(X1, when(col("__wrap"), least(lit(-180.0), col(X1))).otherwise(col(X1)))
+      .withColumn(X2, when(col("__wrap"), greatest(lit(180.0), col(X2))).otherwise(col(X2)))
+      .drop("__env", "__phimax", "__s", "__dlon", "__wrap")
   }
 
   /** Shared entry-point argument validation: a malformed config must fail

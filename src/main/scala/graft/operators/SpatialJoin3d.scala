@@ -29,16 +29,6 @@ object SpatialJoin3d {
     * broadcast stays well under Spark's 8 GB relation cap at this bound. */
   val BroadcastRightMax = 200000L
 
-  /** RETIRED leaf-shrinking governor (kept for the record; no longer
-    * consulted). It bounded probes × leaf-occupancy by shrinking octree
-    * leaves after the r15 sf10 probe-shuffle disk-fill, but the per-cell
-    * probe cap ([[knnCore]]'s `probeCellCap`, max(k,64) hash-ranked rows
-    * per probed cell) bounds the probe relation by cells × cap without
-    * touching leaf geometry — and probe-count-scaled leaves proved
-    * actively harmful: leaves far smaller than the k-balls multiply the
-    * bound join's replication fan-out (r16 measurement). */
-  val CandidateBudget = 128000000L
-
   /** Column bundle naming the six MBB sides of a relation. */
   final case class Mbb3Cols(xmin: String, ymin: String, zmin: String,
                             xmax: String, ymax: String, zmax: String) {
@@ -839,19 +829,9 @@ object SpatialJoin3d {
     val diag = math.sqrt(spans.map(s => s * s).sum)
     val nR = if (row.isNullAt(6)) 0L else row.getLong(6)
     val nL = row.getLong(7) - nR // probe-side rows, from the same agg
-    // The caller's leafCap is honored as-is. An earlier candidate-volume
-    // governor (CandidateBudget) shrank leaves ∝ 1/probes after the r15
-    // sf10 probe-phase shuffle explosion — but the per-cell probe cap
-    // (max(k,64) hash-ranked rows per probed cell) now bounds the probe
-    // relation by cells × cap regardless of leaf occupancy, which is the
-    // correct fix: shrinking leaves instead made leaf boxes FAR SMALLER
-    // THAN THE k-BALLS (sub-10-unit leaves at the sf10 area density), so
-    // every probe's bound-join ball covered hundreds-to-thousands of
-    // cells and the replication fan-out dominated the join (r16
-    // measurement: ~3.5k CPU-s in the ball-explode stage). Leaf size
-    // should track data density (~leafCap rows per leaf), never probe
-    // count.
-    val effCap = leafCap
+    // The caller's leafCap is honored as-is: leaf size tracks data
+    // density (~leafCap rows per leaf), never probe count — the per-cell
+    // probe cap bounds the probe relation regardless of leaf occupancy.
     val fraction = if (nR == 0) 1.0 else math.min(1.0, sampleTarget.toDouble / nR)
     val pts = rBase.select(
         ((col(rc.xmin) + col(rc.xmax)) / 2).as("x"),
@@ -863,7 +843,7 @@ object SpatialJoin3d {
       .map(r => Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)))
     // scale the leaf capacity by the sample rate (the bucket-scaling rule
     // of the 2-D planners, queryprocessor_2d.cpp:280)
-    val scaledCap = math.max(1, math.floor(effCap * fraction).toInt)
+    val scaledCap = math.max(1, math.floor(leafCap * fraction).toInt)
     val tree = Octree3d.build(pts, Array(sp(0), sp(1), sp(2), sp(3), sp(4), sp(5)),
       scaledCap)
     val bc = spark.sparkContext.broadcast(tree)

@@ -1470,15 +1470,12 @@ object Queries {
   /** Full spatial-store lifecycle through the gate: write the boxes tile-
     * partitioned (with boundary replication), then a containment read that
     * prunes tiles, refines exactly, and collapses replicas. Oracle = the
-    * plain window filter. Pinned to the Hive DIR layout (writeDirs) since
-    * the compact layout became the write default (round 14) — this gate is
-    * what keeps the dir lifecycle exercised; q_store_containment_compact
-    * gates the default. */
+    * plain window filter. */
   def qStoreContainment(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SpatialStore
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_store_gate_" +
       new java.io.File(dir).getName
-    SpatialStore.writeDirs(partBoxes(spark, dir), "geom", path,
+    SpatialStore.write(partBoxes(spark, dir), "geom", path,
       SpatialJoin.Config(partitioner = "fg", bucket = 300))
     val window = graft.core.GeometryCodec.toWkb(
       graft.core.GeometryCodec.box(50, 40, 170, 180))
@@ -1491,31 +1488,11 @@ object Queries {
        |SELECT id, w * w AS area FROM b
        |WHERE x0 <= 170 AND x0 + w >= 50 AND y0 <= 180 AND y0 + w >= 40""".stripMargin
 
-  /** The 2-D store lifecycle over the MANIFEST-COMMITTED layout
-    * ([[graft.sources.SpatialStore.writeCompact]] — the 3-D compact lane's
-    * discipline mirrored down after its sf1b record measured flat at 10x
-    * leaves): same rows and window as q_store_containment, but data lands
-    * as range-clustered plain parquet committed with ONE per-file
-    * (min_tile, max_tile) manifest — renames ∝ write tasks instead of one
-    * dir+temp+rename per tile. Shares qStoreContainmentSql: the answer is
-    * layout-independent by construction. */
-  def qStoreContainmentCompact(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SpatialStore
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_storec_gate_" +
-      new java.io.File(dir).getName
-    SpatialStore.writeCompact(partBoxes(spark, dir), "geom", path,
-      SpatialJoin.Config(partitioner = "fg", bucket = 300))
-    val window = graft.core.GeometryCodec.toWkb(
-      graft.core.GeometryCodec.box(50, 40, 170, 180))
-    SpatialStore.containmentReadCompact(spark, path, window)
-      .select(col("id"), st_area(col("geom")).as("area"))
-  }
-
   /** 3-D spatial-store lifecycle ([[graft.sources.SpatialStore3d]], the
     * reference's queryproc3d partition+containment over octree-leaf
     * tiles): write the part cubes leaf-partitioned with boundary
     * replication, then a containment read that driver-prunes leaves,
-    * Catalyst-prunes partition dirs, refines with the six-comparison
+    * manifest-prunes files, refines with the six-comparison
     * closed intersect, and collapses replicas. Volume = product of three
     * small exact ints — FP-exact. Oracle = the plain 3-D window filter
     * (query_containment.hpp:112-139 semantics in 3-D). */
@@ -1533,10 +1510,8 @@ object Queries {
     // result is tiling-independent (oracle proves it: a pure window filter,
     // replicas collapse on row ids); deep-octree shapes are exercised by
     // SpatialStore3dSpec/knn3doc, not by over-fragmenting this lifecycle
-    // gate to 27-row leaves no 100 TB store would run with. Pinned to the
-    // dir layout (writeDirs) since compact became the default (round 14);
-    // the *_compact twin gates the default.
-    SpatialStore3d.writeDirs(cubes,
+    // gate to 27-row leaves no 100 TB store would run with.
+    SpatialStore3d.write(cubes,
       Mbb3Cols("x0", "y0", "z0", "x1", "y1", "z1"), path, leafCap = 300)
     SpatialStore3d.containmentRead(spark, path,
         Array(50.0, 40.0, 30.0, 170.0, 180.0, 160.0))
@@ -1552,40 +1527,15 @@ object Queries {
        |  AND y0 <= 180 AND y0 + w >= 40
        |  AND z0 <= 160 AND z0 + w >= 30""".stripMargin
 
-  /** The 3-D store lifecycle over the MANIFEST-COMMITTED layout
-    * ([[graft.sources.SpatialStore3d.writeCompact]], round-12 verdict #6):
-    * same rows and window as q_store_containment_3d, but data lands as
-    * range-clustered plain parquet committed with ONE per-file
-    * (min_tile, max_tile) manifest — renames ∝ write tasks instead of one
-    * dir+temp+rename per octree leaf (the sf1b rehearsal's whole
-    * super-linear term). Shares qStoreContainment3dSql: the answer is
-    * layout-independent by construction. */
-  def qStoreContainment3dCompact(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SpatialStore3d
-    import graft.operators.SpatialJoin3d.Mbb3Cols
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_store3dc_gate_" +
-      new java.io.File(dir).getName
-    val cubes = partCubes(spark, dir).select(col("id"),
-      col("x0"), col("y0"), col("z0"),
-      (col("x0") + col("w")).as("x1"), (col("y0") + col("w")).as("y1"),
-      (col("z0") + col("w")).as("z1"))
-    SpatialStore3d.writeCompact(cubes,
-      Mbb3Cols("x0", "y0", "z0", "x1", "y1", "z1"), path, leafCap = 300)
-    SpatialStore3d.containmentReadCompact(spark, path,
-        Array(50.0, 40.0, 30.0, 170.0, 180.0, 160.0))
-      .select(col("id"),
-        ((col("x1") - col("x0")) * (col("y1") - col("y0")) *
-          (col("z1") - col("z0"))).as("volume"))
-  }
-
   /** STREAMING spatial ingest gate (batch-twin oracle): the deterministic
     * part boxes are shipped as WKT through a real Structured Streaming
-    * query — file source → [[graft.streaming.SpatialIngest.start]] append
-    * sink (tile-partitioned parquet + meta against a tiling planned on the
-    * historical batch) — then the streamed store is containment-read like
-    * any batch-written store and oracled with the same plain-SQL window
-    * predicate as q_store_containment. All coordinates are integer-valued
-    * doubles, so the WKT text roundtrip is exact. */
+    * query — file source → [[graft.streaming.SpatialIngest.start]]
+    * (per-microbatch appends to the store's data files and manifest, meta
+    * against a tiling planned on the historical batch) — then the
+    * streamed store is containment-read like any batch-written store and
+    * oracled with the same plain-SQL window predicate as
+    * q_store_containment. All coordinates are integer-valued doubles, so
+    * the WKT text roundtrip is exact. */
   def qStreamIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SpatialStore
     import graft.streaming.SpatialIngest

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,27 +15,30 @@ import graft.operators.{SpatialJoin, TileIndex}
   * (/root/reference/src/framework/query_partition.hpp:77-293,
   * query_containment.hpp:62-163):
   *
-  *   per-tile .dat files        -> parquet `partitionBy("tile_id")`
+  *   per-tile .dat files        -> range-clustered parquet under `data/`
   *   partition.idx + info.cfg   -> _graft_meta.json (tiles + space + conf)
-  *   driver tile-pruning scan   -> tile_id IN-list -> DataSource partition
-  *                                 pruning (Catalyst skips non-matching dirs)
+  *   driver tile-pruning scan   -> tile set -> per-file (min_tile,
+  *                                 max_tile) manifest selects the files
   *   boundary-object replication -> explode to intersecting tiles at write;
   *                                 reads dedup on the stored __row_id
   *
-  * At scale this gives containment queries that touch only the files of
-  * window-intersecting tiles — the same I/O win as the reference's global
-  * index, but driven by Catalyst instead of hand-rolled path lists.
+  * One layout, written in bulk by [[write]] and appended to by
+  * [[graft.streaming.SpatialIngest]]. At scale this gives containment
+  * queries that touch only the files of window-intersecting tiles — the
+  * same I/O win as the reference's global index, with one manifest read
+  * instead of a listing per tile.
   */
 object SpatialStore {
 
-  private val MetaFile = "_graft_meta.json"
+  private[graft] val MetaFile = "_graft_meta.json"
   private[sources] val DataDir = "data"
   private val ManifestDir = "_graft_manifest"
+  private val LegacyManifest3d = "_graft_manifest3d"
 
   /** Store layout format version, stamped into `_graft_meta.json` (both
     * stores) since round 15. History: v1 = the unstamped rounds ≤14
     * (read compatibly — absent stamp parses as 1); v2 = current
-    * (compact-default layout, bare-name manifest entries). Readers REFUSE
+    * (manifest layout, bare-name manifest entries). Readers REFUSE
     * a version above this constant with a rebuild hint instead of
     * misreading a future layout (round-14 verdict #6 — the r13→r14
     * manifest format break cost a debugging session because nothing
@@ -117,42 +120,22 @@ object SpatialStore {
     * in with `preserveDuplicates` (rank-salted second lane, see
     * [[withRowIds]]).
     *
-    * DEFAULT LAYOUT (since round 14): the manifest-committed compact
-    * layout ([[writeCompact]]) — the sf1b rehearsal measured its commit
-    * cost flat at 10× the tile count (1.00×) where the Hive
-    * `partitionBy(tile_id)` dir layout paid one dir+temp+rename per tile
-    * (2.55×), and its read LIST cost is one manifest file vs one LIST per
-    * leaf. Callers that need the Hive-partitioned dirs — external readers
-    * relying on `tile_id=` partition pruning, or streaming APPEND
-    * ([[graft.streaming.SpatialIngest]]; the compact layout is a
-    * bulk-build overwrite) — opt in with [[writeDirs]]. The read side
-    * ([[read]]/[[containmentRead]]/[[multiWindowRead]]) detects the layout
-    * from the committed manifest, so stores written under either default
-    * keep reading identically. */
+    * Layout: rows land as PLAIN parquet under `data/`, range-partitioned
+    * on the tile id — one file per write task covering a contiguous tile
+    * range — committed with ONE per-file (min_tile, max_tile) manifest
+    * ([[writeRangeClustered]]). In-file ordering by tile id leaves parquet
+    * row-group stats to finish the pruning inside surviving files. The
+    * sf1b rehearsal measured this commit cost flat at 10× the tile count
+    * (1.00×) where the retired Hive `tile_id=N/` dir layout paid one
+    * dir+temp+rename per tile (2.55×); a read lists one manifest, not one
+    * leaf per tile. At 100 TB: file count tracks writer count, not tile
+    * count. */
   def write(df: DataFrame, geomCol: String, path: String,
             cfg: SpatialJoin.Config = SpatialJoin.Config(),
-            preserveDuplicates: Boolean = false): Unit =
-    writeCompact(df, geomCol, path, cfg, preserveDuplicates)
-
-  /** Hive-partitioned per-tile dir layout (`tile_id=N/` leaves — the
-    * reference's per-tile .dat files). Same planning, replication and
-    * row-id lanes as [[write]]; kept for external partition-pruning
-    * interop and as the layout streaming appends extend. Clusters by tile
-    * before writing: parallel writers, ONE file per tile instead of
-    * #tasks × #tiles fragments. Retry-safe: ids and tile keys are
-    * deterministic functions of the (deterministic) scan. */
-  def writeDirs(df: DataFrame, geomCol: String, path: String,
-                cfg: SpatialJoin.Config = SpatialJoin.Config(),
-                preserveDuplicates: Boolean = false): Unit = {
+            preserveDuplicates: Boolean = false): Unit = {
     val spark = df.sparkSession
-    refuseSelfOverwrite(df, path, "writeDirs")
     val (tagged, index) = tileTagged(df, geomCol, cfg, preserveDuplicates)
-    clearCompactArtifacts(spark, path)
-    tagged
-      // explicit partition count: a bare repartition(col) would be AQE-
-      // coalesced to one task on small inputs, serializing the write
-      .repartition(spark.sessionState.conf.numShufflePartitions, col(TileCol))
-      .write.partitionBy(TileCol).mode("overwrite").parquet(path)
+    writeRangeClustered(tagged, path)
     writeMeta(spark, path, Meta(geomCol, index.space, index.tiles))
   }
 
@@ -184,88 +167,15 @@ object SpatialStore {
     (tagged, index)
   }
 
-  /** Manifest-committed layout — [[graft.sources.SpatialStore3d.writeCompact]]'s
-    * discipline for the 2-D store (the sf1b rehearsal attributed BOTH
-    * stores' super-linear write term to Spark dynamic partitioning's
-    * per-leaf dir+temp+rename commit; the 3-D compact lane measured flat
-    * at 10x leaves). Identical planning, replication and row-id lanes to
-    * [[write]], but rows land as PLAIN parquet range-partitioned on the
-    * tile id — one file per write task covering a contiguous tile range,
-    * renames ∝ tasks — committed with ONE per-file (min_tile, max_tile)
-    * manifest built from a single column-pruned scan of the written files.
-    * In-file ordering by tile id leaves parquet row-group stats to finish
-    * the pruning inside surviving files. At 100 TB: LIST = one manifest
-    * read; file count tracks writer count, not tile count. */
-  def writeCompact(df: DataFrame, geomCol: String, path: String,
-                   cfg: SpatialJoin.Config = SpatialJoin.Config(),
-                   preserveDuplicates: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    val (tagged, index) = tileTagged(df, geomCol, cfg, preserveDuplicates)
-    writeRangeClustered(tagged, path)
-    writeMeta(spark, path, Meta(geomCol, index.space, index.tiles))
-  }
-
-  /** Containment read over the [[writeCompact]] layout — an alias of
-    * [[containmentRead]], which detects the layout itself. */
-  def containmentReadCompact(spark: SparkSession, path: String,
-                             window: Array[Byte]): DataFrame =
-    containmentRead(spark, path, window)
-
-  /** True iff the store at `path` uses the manifest-committed compact
-    * layout ([[writeCompact]]); dir-layout stores (including streamed
-    * ones) have neither a committed manifest nor a `data/` dir. The
-    * `data/` check matters for torn writes: a compact store that lost its
-    * manifest must NOT silently degrade to the dir-layout read path — it
-    * must reach [[manifestRead]]'s loud missing-manifest error. Two
-    * driver-side existence checks. */
-  private[graft] def isCompact(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path, ManifestDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) || fs.exists(new Path(path, DataDir))
-  }
-
-  /** [[writeDirs]]'s mirror of writeRangeClustered's stale-leaf cleanup:
-    * a dir-layout write over a COMPACT store would (under dynamic
-    * partition overwrite, which replaces only the written tile_id=*
-    * dirs) leave `data/` + the committed manifest intact — and layout
-    * detection prefers the manifest, silently serving the OLD rows
-    * against the new meta. Remove the compact artifacts first. */
-  private[sources] def clearCompactArtifacts(spark: SparkSession,
-                                             path: String): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(ManifestDir, "_graft_manifest3d", DataDir).foreach { d =>
-      val p = new Path(root, d)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
-
-  /** Layout-detecting selective scan: the files/dirs holding any wanted
-    * tile, via the manifest (compact layout) or a pruned dir listing (dir
-    * layout). Callers keep their `isin` filter as the exact belt. ONE
-    * layout probe: the manifest-existence answer rides into
-    * [[manifestRead]] instead of being re-asked there (each probe is a
-    * remote HEAD on an object store, on the read hot path). */
-  private[sources] def selectTiles(spark: SparkSession, path: String,
-                                   wanted: Seq[Int]): DataFrame = {
-    val manifestPath = new Path(path, ManifestDir)
-    val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasManifest = fs.exists(manifestPath)
-    if (hasManifest || fs.exists(new Path(path, DataDir)))
-      manifestRead(spark, path, wanted.toArray, Some(hasManifest))
-    else prunedRead(spark, path, wanted)
-  }
-
   /** Refuse a store write whose INPUT scans the write target (round-14
-    * advice: the natural-looking in-place layout migration
-    * `writeDirs(SpatialStore.read(spark, p), ..., p)` deletes the compact
-    * `data/` via [[clearCompactArtifacts]] BEFORE the lazy scan runs — the
-    * write then fails mid-job, or with `ignoreMissingFiles=true` silently
-    * produces an EMPTY store, in both cases destroying the old data). The
-    * analyzed plan names every file-scan root; any root equal to, under,
-    * or above the target is the bug. Migrate via a materialized copy:
-    * read → write to a FRESH path (or plain parquet staging), then write
-    * the store from that. */
+    * advice: the natural-looking in-place rebuild
+    * `write(SpatialStore.read(spark, p), ..., p)` overwrites `data/`
+    * BEFORE the lazy scan runs — the write then fails mid-job, or with
+    * `ignoreMissingFiles=true` silently produces an EMPTY store, in both
+    * cases destroying the old data). The analyzed plan names every
+    * file-scan root; any root equal to, under, or above the target is the
+    * bug. Rebuild via a materialized copy: read → write to a FRESH path
+    * (or plain parquet staging), then write the store from that. */
   private[sources] def refuseSelfOverwrite(df: DataFrame, path: String,
                                            op: String): Unit = {
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -290,82 +200,97 @@ object SpatialStore {
         "fresh path.")
   }
 
-  /** Compact-layout write half shared by the 2-D and 3-D stores: the
-    * tile-tagged rows land as range-clustered plain parquet under
-    * `path/data`, then ONE per-file (min_tile, max_tile) manifest is
-    * committed from a single column-pruned scan of the written files.
-    * Manifest entries are bare FILE NAMES (all data files sit directly
-    * under `data/`), so the store stays relocatable — an absolute URI
-    * manifest would silently read the OLD location after a copy/move. */
-  private[sources] def writeRangeClustered(tagged: DataFrame, path: String): Unit = {
+  /** Write half shared by the 2-D and 3-D stores and the streaming ingest:
+    * the tile-tagged rows land as range-clustered plain parquet under
+    * `path/data`, then manifest rows (file, min_tile, max_tile) for the
+    * written files come from a single column-pruned scan of them. A bulk
+    * write overwrites both halves; `append` (one microbatch of
+    * [[graft.streaming.SpatialIngest]]) adds files beside the existing
+    * ones and manifest rows for exactly the new files — the
+    * [[ZoneMap.appendClustered]] discipline: existing data and manifest
+    * rows are never rewritten. Manifest entries are bare FILE NAMES (all
+    * data files sit directly under `data/`), so the store stays
+    * relocatable — an absolute URI manifest would silently read the OLD
+    * location after a copy/move. */
+  private[graft] def writeRangeClustered(tagged: DataFrame, path: String,
+                                         append: Boolean = false): Unit = {
     val spark = tagged.sparkSession
-    refuseSelfOverwrite(tagged, path, "writeCompact")
-    val dataPath = s"$path/$DataDir"
-    // a compact write over a path holding a DIR-layout store would only
-    // replace `data/` + manifest while overwriting _graft_meta.json,
-    // leaving stale tile_id=* dirs that containmentRead would serve
-    // against the NEW meta — remove the other layout's leaves first
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.listStatus(root).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$TileCol="))
-      .foreach(s => fs.delete(s.getPath, true))
+    if (!append) refuseSelfOverwrite(tagged, path, "write")
+    val dataPath = new Path(path, DataDir)
+    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(): Set[String] =
+      if (!fs.exists(dataPath)) Set.empty
+      else fs.listStatus(dataPath).iterator.map(_.getPath.getName)
+        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
+    val before = if (append) dataFiles() else Set.empty[String]
+    val mode = if (append) "append" else "overwrite"
     tagged
       // row-id in the range key spreads a hot tile across file boundaries
       // instead of one giant task
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
         col(TileCol), col(RowIdCol))
       .sortWithinPartitions(col(TileCol), col(RowIdCol))
-      .write.mode("overwrite").parquet(dataPath)
-    val manifest = spark.read.parquet(dataPath)
-      .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
-      .agg(min(col(TileCol)).as("min_tile"), max(col(TileCol)).as("max_tile"))
-    manifest.coalesce(1).write.mode("overwrite").parquet(s"$path/$ManifestDir")
+      .write.mode(mode).parquet(dataPath.toString)
+    val written =
+      if (append) (dataFiles() -- before).toSeq.map(f => new Path(dataPath, f).toString)
+      else Seq(dataPath.toString)
+    if (written.nonEmpty)
+      spark.read.parquet(written: _*)
+        .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
+        .agg(min(col(TileCol)).as("min_tile"), max(col(TileCol)).as("max_tile"))
+        .coalesce(1).write.mode(mode).parquet(s"$path/$ManifestDir")
   }
 
-  /** Compact-layout read half shared by the 2-D and 3-D stores: collect
-    * the manifest (bounded: one row per data file), keep the files whose
+  /** The loud failure for a path that does not hold both committed
+    * halves, most specific first (one LIST of the root, on the failure
+    * path only): a manifest without `data/` (a kill inside the data
+    * overwrite's delete-then-write window, or a partial copy); the retired
+    * round-13 3-D manifest format (absolute-URI entries under
+    * `_graft_manifest3d` — not relocatable, superseded by bare-name
+    * entries under `_graft_manifest`); the retired Hive `tile_id=N/` dir
+    * layout; a torn write that committed data without a manifest. */
+  private def uncommitted(fs: FileSystem, path: String): IllegalStateException = {
+    val names =
+      try fs.listStatus(new Path(path)).iterator.map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    new IllegalStateException(
+      if (names(ManifestDir))
+        s"$path has a committed manifest but no $DataDir/ (torn write or " +
+          "partial copy) — re-run write to rebuild the store"
+      else if (names(LegacyManifest3d))
+        s"$path uses the retired _graft_manifest3d layout (absolute-URI " +
+          "manifest entries); rebuild the store with write"
+      else if (names.exists(_.startsWith(s"$TileCol=")))
+        s"$path holds the retired Hive $TileCol=N/ dir layout, which this " +
+          "build no longer reads; rebuild it with write — from a " +
+          "materialized copy, or to a fresh path"
+      else
+        s"$path/$ManifestDir missing: the store has no committed manifest " +
+          "(torn write?) — re-run write to heal it")
+  }
+
+  /** Selective scan shared by the 2-D and 3-D stores: collect the
+    * manifest (bounded: one row per data file), keep the files whose
     * [min_tile, max_tile] range contains any wanted tile, and read only
     * those (resolved against `path/data`, so the manifest survives a
-    * store move). Empty selection returns a schema-true empty relation. */
+    * store move). Callers keep their `isin` filter as the exact belt.
+    * Empty selection returns a schema-true empty relation. */
   private[sources] def manifestRead(spark: SparkSession, path: String,
-                                    wanted: Array[Int],
-                                    manifestKnown: Option[Boolean] = None)
-      : DataFrame = {
-    val wantedSorted = wanted.sorted
-    val manifestPath = new Path(path, ManifestDir)
-    val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!manifestKnown.getOrElse(fs.exists(manifestPath))) {
-      // fail loudly instead of an opaque path-not-found: distinguish the
-      // retired round-13 3-D manifest format (absolute-URI entries under
-      // _graft_manifest3d — not relocatable, superseded by bare-name
-      // entries under _graft_manifest) from a torn write that committed
-      // data without a manifest
-      val legacy = new Path(path, "_graft_manifest3d")
-      if (fs.exists(legacy)) throw new IllegalStateException(
-        s"$path uses the retired _graft_manifest3d layout (absolute-URI " +
-          "manifest entries); rebuild the store with writeCompact")
-      throw new IllegalStateException(
-        s"$path/$ManifestDir missing: the store has data but no committed " +
-          "manifest (torn write?) — re-run writeCompact to heal it")
-    }
+                                    wanted: Seq[Int]): DataFrame = {
+    val wantedSorted = wanted.toArray.sorted
+    val dataPath = new Path(path, DataDir)
+    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(path, ManifestDir))) throw uncommitted(fs, path)
     // torn-write guard: a kill between the data overwrite (which clears
     // data/ first) and the manifest commit leaves the PREVIOUS manifest
     // naming files that no longer exist — validate every manifest entry
-    // against ONE flat listStatus of data/ (O(1) LIST calls, unlike the
-    // per-leaf listing the manifest layout exists to avoid) and fail
-    // loudly; re-running writeCompact heals both halves atomically enough
-    // (data overwrite clears data/, manifest overwrite clears the names)
-    // the opposite torn half: manifest committed but data/ gone (a kill
-    // inside the data overwrite's delete-then-write window, or a partial
-    // copy). listStatus would throw an opaque FileNotFoundException —
-    // keep the failure in the same loud, heal-instructing voice
-    val dataPath = new Path(path, DataDir)
-    if (!fs.exists(dataPath)) throw new IllegalStateException(
-      s"$path has a committed manifest but no $DataDir/ (torn write or " +
-        "partial copy) — re-run writeCompact to rebuild the store")
-    val present = fs.listStatus(dataPath)
-      .iterator.map(_.getPath.getName).toSet
+    // against ONE flat listStatus of data/ (O(1) LIST calls, unlike a
+    // per-leaf listing) and fail loudly; re-running write heals both
+    // halves atomically enough (data overwrite clears data/, manifest
+    // overwrite clears the names)
+    val present =
+      try fs.listStatus(dataPath).iterator.map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => throw uncommitted(fs, path) }
     val entries = spark.read.parquet(s"$path/$ManifestDir")
       .collect() // bounded: one row per data file
     val missing = entries.iterator
@@ -373,7 +298,7 @@ object SpatialStore {
     if (missing.nonEmpty) throw new IllegalStateException(
       s"$path: manifest names ${missing.length} file(s) absent from data/ " +
         s"(e.g. ${missing.take(3).mkString(", ")}) — stale manifest from a " +
-        "torn write; re-run writeCompact to heal the store")
+        "torn write; re-run write to heal the store")
     val files = entries
       .filter { r =>
         val lo = r.getAs[Int]("min_tile"); val hi = r.getAs[Int]("max_tile")
@@ -390,39 +315,11 @@ object SpatialStore {
     else spark.read.parquet(files.toIndexedSeq: _*)
   }
 
-  /** Read ONLY the given tile partition dirs. `spark.read.parquet(path)`
-    * on a tile store lists EVERY leaf dir before Catalyst partition
-    * pruning can drop any — on a 736-leaf sf0.1 store that listing alone
-    * was a 736-task discovery job (1.05 s, the dominant stage of the
-    * store-read gates), and at 100 TB an object-store LIST per leaf dwarfs
-    * the pruned data read. The store's own meta already names every leaf,
-    * so: one driver listStatus of the root resolves which wanted dirs
-    * exist (a tile with no resident rows never got a dir), then an
-    * explicit-path read with basePath keeps the partition column while
-    * listing only the selected dirs — listing cost proportional to the
-    * window's selectivity, not the store's leaf count. Callers keep their
-    * `isin` filter as a defensive belt. */
-  private[sources] def prunedRead(spark: SparkSession, path: String,
-                                  wanted: Seq[Int]): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val want = wanted.map(t => s"$TileCol=$t").toSet
-    val dirs = fs.listStatus(root).iterator
-      .filter(s => s.isDirectory && want.contains(s.getPath.getName))
-      .map(_.getPath.toString).toSeq
-    if (dirs.isEmpty)
-      // schema-preserving empty relation (planning-only full listing;
-      // a window off the store's space is a degenerate query)
-      spark.read.parquet(path).where(lit(false))
-    else spark.read.option("basePath", path).parquet(dirs: _*)
-  }
-
   /** Containment/window read: driver prunes tiles against the window MBB
-    * (global-index scan, query_containment.hpp:112-139), the selective
-    * scan reads only matching files (manifest) or partition dirs
-    * (layout-detected, see [[selectTiles]]), the exact predicate refines,
-    * and replica rows collapse on __row_id. `window` is a WKB geometry
-    * literal. */
+    * (global-index scan, query_containment.hpp:112-139), the manifest
+    * selects the files holding those tiles ([[manifestRead]]), the exact
+    * predicate refines, and replica rows collapse on __row_id. `window` is
+    * a WKB geometry literal. */
   def containmentRead(spark: SparkSession, path: String,
                       window: Array[Byte]): DataFrame = {
     val meta = readMeta(spark, path)
@@ -432,7 +329,7 @@ object SpatialStore {
     val wanted = meta.tiles.iterator
       .filter(t => t.mbb.intersects(Mbb(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)))
       .map(_.tileId).toSeq
-    selectTiles(spark, path, wanted)
+    manifestRead(spark, path, wanted)
       .where(col(TileCol).isin(wanted: _*))
       .where(st_intersects(col(meta.geomCol), lit(window)))
       .dropDuplicates(RowIdCol, RowId2Col)
@@ -444,11 +341,11 @@ object SpatialStore {
     * be updated" at resque_2d.cpp:254-258, generalized). The window set is
     * a small side input — an STRtree over it broadcasts to every task, each
     * object probes the tree by envelope and refines exactly, and the scan
-    * reads only the union of window-intersecting tile dirs (driver
-    * global-index scan + Catalyst partition pruning). Per-window repeated
-    * [[containmentRead]] scans the store W times; this is one pass for any
-    * W. Output: store columns + `widCol` (LongType), one row per
-    * (window, object) hit, replicas collapsed per window.
+    * reads only the files holding the union of window-intersecting tiles
+    * (driver global-index scan + manifest file pruning). Per-window
+    * repeated [[containmentRead]] scans the store W times; this is one
+    * pass for any W. Output: store columns + `widCol` (LongType), one row
+    * per (window, object) hit, replicas collapsed per window.
     *
     * Bounded collect like [[graft.ann.Similarity.topKBrute]]: the window
     * relation must fit the driver/broadcast (`maxWindows` guard) — callers
@@ -489,31 +386,27 @@ object SpatialStore {
         .filter { case (_, wg) => wg.intersects(g) }
         .map(_._1).toArray.sorted
     }
-    selectTiles(spark, path, wanted)
+    manifestRead(spark, path, wanted)
       .where(col(TileCol).isin(wanted: _*))
       .withColumn(widCol, explode(hits(col(meta.geomCol))))
       .dropDuplicates(widCol, RowIdCol, RowId2Col)
       .drop(RowIdCol, RowId2Col, TileCol)
   }
 
-  /** Full-table compact-layout scan with the torn-write guard shared by
-    * both stores' [[read]]s: a committed manifest without `data/` must
-    * fail with [[manifestRead]]'s heal instruction, not an opaque
-    * path-not-found from the bare parquet read (round-14 advice #1). */
-  private[sources] def compactDataScan(spark: SparkSession,
-                                       path: String): DataFrame = {
+  /** Full-table scan of `data/` shared by both stores' [[read]]s: one
+    * existence probe on the hot path; a missing `data/` fails with
+    * [[uncommitted]]'s targeted message, not an opaque path-not-found
+    * from the bare parquet read (round-14 advice #1). */
+  private[sources] def dataScan(spark: SparkSession, path: String): DataFrame = {
     val dataPath = new Path(path, DataDir)
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dataPath)) throw new IllegalStateException(
-      s"$path has a committed manifest but no $DataDir/ (torn write or " +
-        "partial copy) — re-run writeCompact to rebuild the store")
-    spark.read.parquet(s"$path/$DataDir")
+    if (!fs.exists(dataPath)) throw uncommitted(fs, path)
+    spark.read.parquet(dataPath.toString)
   }
 
-  /** Full-table read with replicas collapsed (layout-detecting). */
+  /** Full-table read with replicas collapsed. */
   def read(spark: SparkSession, path: String): DataFrame =
-    (if (isCompact(spark, path)) compactDataScan(spark, path)
-     else spark.read.parquet(path))
+    dataScan(spark, path)
       .dropDuplicates(RowIdCol, RowId2Col)
       .drop(RowIdCol, RowId2Col, TileCol)
 
@@ -541,7 +434,7 @@ object SpatialStore {
     if (ver > FormatVersion) throw new IllegalStateException(
       s"$path: store format_version=$ver is newer than this build " +
         s"supports (<= $FormatVersion) — upgrade the library, or rebuild " +
-        "the store with THIS build's writeCompact/writeDirs")
+        "the store with THIS build's write")
   }
 
   def readMeta(spark: SparkSession, path: String): Meta = {

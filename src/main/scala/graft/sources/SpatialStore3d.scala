@@ -25,12 +25,14 @@ import graft.operators.SpatialJoin3d.Mbb3Cols
   * the same content-hash row-id lanes as the 2-D store, and collapse on
   * read.
   *
-  * Containment reads prune twice: the driver walks the broadcast-free
-  * leaf table against the window box (the reference's global-index scan)
-  * and hands Catalyst a `tile_id IN (...)` predicate that skips every
-  * non-matching partition directory; the six-comparison exact refine then
-  * runs only over surviving files. At 100 TB the read touches the files
-  * of window-intersecting leaves, nothing else.
+  * The layout is the 2-D store's: range-clustered parquet under `data/`
+  * plus a per-file (min_tile, max_tile) manifest
+  * ([[SpatialStore.writeRangeClustered]]). Containment reads prune twice:
+  * the driver walks the broadcast-free leaf table against the window box
+  * (the reference's global-index scan) and the manifest keeps only the
+  * files whose leaf range holds a wanted leaf; the six-comparison exact
+  * refine then runs only over surviving files. At 100 TB the read touches
+  * the files of window-intersecting leaves, nothing else.
   */
 object SpatialStore3d {
 
@@ -47,58 +49,24 @@ object SpatialStore3d {
     * Value-identical rows collapse on read unless `preserveDuplicates`
     * (see [[SpatialStore.withRowIds]]).
     *
-    * DEFAULT LAYOUT (since round 14): manifest-committed compact
-    * ([[writeCompact]] — commit renames ∝ writer tasks, measured 1.00× at
-    * 10× leaves where the dir layout was 7.4×). [[writeDirs]] keeps the
-    * Hive `tile_id=` dir layout for external partition-pruning interop;
-    * the read side detects the layout. */
+    * Rows land as PLAIN parquet range-partitioned on the leaf id — one
+    * file per TASK covering a contiguous leaf range, so commit renames ∝
+    * tasks, not leaves (the retired Hive `tile_id=` dir layout paid one
+    * dir + temp + rename per leaf: 7.4× at 10× leaves in the sf1b
+    * rehearsal, where this layout measured 1.00×) — then one per-file
+    * (min_tile, max_tile) manifest commits from a single column-pruned
+    * scan of what was just written (the ZoneMap discipline). Leaf ids are
+    * sorted within files, so parquet row-group stats finish the pruning
+    * inside each surviving file. At 100 TB: LIST = one manifest read;
+    * file count ∝ writer count, not leaf count. */
   def write(df: DataFrame, c: Mbb3Cols, path: String,
             leafCap: Int = 4096, sampleTarget: Int = 100000,
             maxDepth: Int = 12, seed: Long = 42L,
-            preserveDuplicates: Boolean = false): Unit =
-    writeCompact(df, c, path, leafCap, sampleTarget, maxDepth, seed,
-      preserveDuplicates)
-
-  /** Leaf count past which [[writeDirs]] warns: the dir layout's commit
-    * cost is one dir + temp + rename PER LEAF, measured 13.1× per 10×
-    * data at the sf10 lane (SCALE.md round-15) where the compact layout
-    * was 4.3× — above ~10k leaves the commit, not the data, is the
-    * write. */
-  val DirLayoutLeafWarn = 10000
-
-  /** The scale warning a dir-layout write of `nLeaves` leaves deserves,
-    * if any (separate from [[writeDirs]] so the threshold is testable
-    * without building a 10k-leaf store). */
-  def dirLayoutWarning(nLeaves: Int): Option[String] =
-    if (nLeaves <= DirLayoutLeafWarn) None
-    else Some(
-      s"[spatialstore3d] writeDirs: $nLeaves leaves > $DirLayoutLeafWarn — " +
-      "the Hive dir layout commits one rename per leaf (measured 13.1x " +
-      "per 10x data, SCALE.md); use write/writeCompact unless an " +
-      "external consumer needs tile_id= dirs")
-
-  /** Hive-partitioned per-leaf dir layout (see [[write]]'s layout note).
-    * LEGACY/INTEROP ONLY at scale: kept for external `tile_id=`
-    * partition-pruning consumers; warns past [[DirLayoutLeafWarn]] leaves
-    * (commit renames ∝ leaves — use [[writeCompact]], renames ∝ tasks). */
-  def writeDirs(df: DataFrame, c: Mbb3Cols, path: String,
-                leafCap: Int = 4096, sampleTarget: Int = 100000,
-                maxDepth: Int = 12, seed: Long = 42L,
-                preserveDuplicates: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    SpatialStore.refuseSelfOverwrite(df, path, "writeDirs")
+            preserveDuplicates: Boolean = false): Unit = {
     val (tagged, tree, names) =
       leafTagged(df, c, leafCap, sampleTarget, maxDepth, seed, preserveDuplicates)
-    dirLayoutWarning(tree.leafBoxes.length).foreach(System.err.println)
-    // see SpatialStore.clearCompactArtifacts: a dir write over a compact
-    // store must not leave a manifest that wins layout detection
-    SpatialStore.clearCompactArtifacts(spark, path)
-    tagged
-      // explicit partition count: a bare repartition(col) would be AQE-
-      // coalesced to one task on small inputs, serializing the write
-      .repartition(spark.sessionState.conf.numShufflePartitions, col(TileCol))
-      .write.partitionBy(TileCol).mode("overwrite").parquet(path)
-    writeMeta(spark, path, Meta(names, tree.leafBoxes))
+    SpatialStore.writeRangeClustered(tagged, path)
+    writeMeta(df.sparkSession, path, Meta(names, tree.leafBoxes))
   }
 
   /** Shared planning: row-id lanes, null-envelope drop, sampled octree,
@@ -149,48 +117,13 @@ object SpatialStore3d {
     (tagged, tree, names)
   }
 
-  /** Manifest-committed layout (round-12 verdict #6): [[write]]'s commit
-    * cost is one directory + temp file + rename PER LEAF (Spark dynamic
-    * partitioning) — measured as the store's entire super-linear term in
-    * the sf1b rehearsal (wall ∝ leaf count, cap∝N lanes near-flat). This
-    * variant writes the SAME rows (identical planning, replication and
-    * row-id lanes) as PLAIN parquet range-partitioned on the leaf id —
-    * one file per TASK covering a contiguous leaf range, so renames ∝
-    * tasks, not leaves — then commits one per-file (min_tile, max_tile)
-    * manifest built from a single column-pruned scan of what was just
-    * written (the ZoneMap discipline). Reads prune the manifest instead
-    * of partition dirs: leaf ids are range-clustered and sorted within
-    * files, so a window touches only the files whose tile range
-    * intersects its leaf set, with parquet row-group stats finishing the
-    * job inside each file. At 100 TB: LIST = one manifest read; file
-    * count ∝ writer count, not leaf count. */
-  def writeCompact(df: DataFrame, c: Mbb3Cols, path: String,
-                   leafCap: Int = 4096, sampleTarget: Int = 100000,
-                   maxDepth: Int = 12, seed: Long = 42L,
-                   preserveDuplicates: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    val (tagged, tree, names) =
-      leafTagged(df, c, leafCap, sampleTarget, maxDepth, seed, preserveDuplicates)
-    // contiguous leaf ranges per file + in-file ordering: manifest ranges
-    // stay tight and row-group stats on tile_id prune inside surviving
-    // files (shared write half, [[SpatialStore.writeRangeClustered]])
-    SpatialStore.writeRangeClustered(tagged, path)
-    writeMeta(spark, path, Meta(names, tree.leafBoxes))
-  }
-
-  /** Containment read over the [[writeCompact]] layout — an alias of
-    * [[containmentRead]], which detects the layout itself. */
-  def containmentReadCompact(spark: SparkSession, path: String,
-                             window: Array[Double]): DataFrame =
-    containmentRead(spark, path, window)
-
   /** Containment/window read: driver prunes octree leaves against the
     * window box (closed intersection — the replication test's twin, so a
     * replica on a shared face is never orphaned from its window), the
-    * layout-detected selective scan ([[SpatialStore.selectTiles]]) reads
-    * only matching files or partition dirs, the six-comparison exact
-    * refine applies, and replicas collapse on the row-id lanes. `window`
-    * is six doubles (x0, y0, z0, x1, y1, z1). */
+    * manifest scan ([[SpatialStore.manifestRead]]) reads only the files
+    * holding those leaves, the six-comparison exact refine applies, and
+    * replicas collapse on the row-id lanes. `window` is six doubles
+    * (x0, y0, z0, x1, y1, z1). */
   def containmentRead(spark: SparkSession, path: String,
                       window: Array[Double]): DataFrame = {
     require(window.length == 6, "window must be (x0, y0, z0, x1, y1, z1)")
@@ -202,7 +135,7 @@ object SpatialStore3d {
           b(2) <= z1 && z0 <= b(5) }
       .map(_._2).toSeq
     val Seq(cx0, cy0, cz0, cx1, cy1, cz1) = meta.cols.map(col)
-    SpatialStore.selectTiles(spark, path, wanted)
+    SpatialStore.manifestRead(spark, path, wanted)
       .where(col(TileCol).isin(wanted: _*))
       .where(cx0 <= lit(x1) && lit(x0) <= cx1 &&
              cy0 <= lit(y1) && lit(y0) <= cy1 &&
@@ -211,12 +144,10 @@ object SpatialStore3d {
       .drop(SpatialStore.RowIdCol, SpatialStore.RowId2Col, TileCol)
   }
 
-  /** Full-table read with replicas collapsed (layout-detecting; compact
-    * reads share [[SpatialStore.compactDataScan]]'s torn-write guard). */
+  /** Full-table read with replicas collapsed (shares
+    * [[SpatialStore.dataScan]]'s torn-write guard). */
   def read(spark: SparkSession, path: String): DataFrame =
-    (if (SpatialStore.isCompact(spark, path))
-       SpatialStore.compactDataScan(spark, path)
-     else spark.read.parquet(path))
+    SpatialStore.dataScan(spark, path)
       .dropDuplicates(SpatialStore.RowIdCol, SpatialStore.RowId2Col)
       .drop(SpatialStore.RowIdCol, SpatialStore.RowId2Col, TileCol)
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -12,17 +13,22 @@ import graft.sources.SpatialStore
 /** Streaming spatial ingest — the incremental form of the `partition`
   * lifecycle ([[graft.sources.SpatialStore.write]], reference
   * query_partition.hpp:77-293): a stream of WKT records is parsed once at
-  * the scan boundary, tile-tagged against a FIXED tile index, and appended
-  * `partitionBy(tile_id)`. The index is planned ahead of time (on a
-  * historical batch or a sample) and broadcast once — tiles MUST be stable
-  * across microbatches, or the physical layout would drift and the
-  * metadata/global index would lie about old files.
+  * the scan boundary, tile-tagged against a FIXED tile index, and each
+  * microbatch appends to the store's one layout — range-clustered files
+  * under `data/` plus manifest rows for exactly those files
+  * ([[SpatialStore.writeRangeClustered]] in append mode). The index is
+  * planned ahead of time (on a historical batch or a sample) and broadcast
+  * once — tiles MUST be stable across microbatches and restarts, or the
+  * meta/global index would lie about old files' tile ids.
   *
   * The tagged stream carries the same `__row_id` content hash as the batch
   * writer, so [[SpatialStore.read]]/[[SpatialStore.containmentRead]] work
   * identically on a streamed store: replicas collapse, tile pruning
-  * applies. `tileTag` itself is mode-agnostic — the SAME transform runs on
-  * a batch frame (tested equal) per Structured Streaming's contract.
+  * applies. The same lanes make replay safe: `foreachBatch` is
+  * at-least-once, and a batch re-run after a crash appends duplicates that
+  * every read collapses. `tileTag` itself is mode-agnostic — the SAME
+  * transform runs on a batch frame (tested equal) per Structured
+  * Streaming's contract.
   */
 object SpatialIngest {
 
@@ -68,48 +74,31 @@ object SpatialIngest {
       .drop("__env")
   }
 
-  /** Start the append sink: tile-partitioned parquet + the same
-    * `_graft_meta.json` the batch writer produces (written up front — the
-    * tiling is fixed), so batch readers can open the store while the
-    * stream runs. */
+  /** Start the ingest: writes the same `_graft_meta.json` the batch
+    * writer produces up front (the tiling is fixed), so batch readers can
+    * open the store while the stream runs, then appends every microbatch
+    * with [[SpatialStore.writeRangeClustered]]. Refuses a `path` whose
+    * existing meta was planned with a different tiling: its files' tile
+    * ids would be read against the new tiles. */
   def start(stream: DataFrame, wktCol: String, index: TileIndex,
             path: String, checkpoint: String): StreamingQuery = {
-    // streaming append is a DIR-layout operation (each microbatch adds
-    // tile_id=N/ files). Appending onto a COMPACT store (the batch
-    // writer's default since round 14) would be silent data loss: the
-    // committed manifest wins layout detection, so every read serves only
-    // data/ and the streamed rows are invisible. Refuse loudly — rebuild
-    // the store with writeDirs (the append-able layout) first.
-    // NOTE for the rebuild: writeDirs(SpatialStore.read(spark, path), ...,
-    // path) is NOT a valid migration — the dir write clears the compact
-    // data/ before its lazy scan runs (writeDirs itself refuses that
-    // self-overwrite). Materialize a copy (or write to a fresh path), then
-    // writeDirs from the copy.
-    require(!SpatialStore.isCompact(stream.sparkSession, path),
-      s"SpatialIngest.start: $path holds a manifest-committed compact " +
-        "store; streamed tile_id= appends would be invisible to its " +
-        "readers. Rebuild it with SpatialStore.writeDirs — from a " +
-        "MATERIALIZED copy or to a fresh path (an in-place " +
-        "writeDirs(read(path), ..., path) destroys the store and is " +
-        "refused) — then ingest.")
-    SpatialStore.writeMeta(stream.sparkSession, path,
-      SpatialStore.Meta("geom", index.space,
-        index.tiles :+ overflowBoundary(index)))
-    // cluster by tile before the sink, mirroring the batch writer: without
-    // it a microbatch writes from its source tasks (one task for a
-    // single-file batch — measured as the dominant 1.7 s single-task stage
-    // of the ingest gate) and every task writes a fragment into EVERY tile
-    // directory; with it writers parallelize across tiles and each tile
-    // gets one file per microbatch
-    val parts = stream.sparkSession.sessionState.conf.numShufflePartitions
-    tileTag(stream, wktCol, index)
-      .repartition(parts, col(SpatialStore.TileCol))
-      .writeStream
-      .format("parquet")
-      .option("path", path)
+    val spark = stream.sparkSession
+    val tiles = index.tiles :+ overflowBoundary(index)
+    val metaPath = new Path(path, SpatialStore.MetaFile)
+    if (metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(metaPath)) {
+      val old = SpatialStore.readMeta(spark, path).tiles
+      require(old.sameElements(tiles),
+        s"SpatialIngest.start: $path holds a store planned with a different " +
+          s"tiling (${old.length} tiles, this index has ${tiles.length} with " +
+          "the overflow tile); ingest with the store's own tiling, or into a " +
+          "fresh path")
+    }
+    SpatialStore.writeMeta(spark, path, SpatialStore.Meta("geom", index.space, tiles))
+    val append: (DataFrame, Long) => Unit =
+      (batch, _) => SpatialStore.writeRangeClustered(batch, path, append = true)
+    tileTag(stream, wktCol, index).writeStream
       .option("checkpointLocation", checkpoint)
-      .partitionBy(SpatialStore.TileCol)
-      .outputMode("append")
+      .foreachBatch(append)
       .start()
   }
 }

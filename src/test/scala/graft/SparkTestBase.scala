@@ -12,6 +12,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
+  /** `target/<rel>` under the working directory, made absolute — the root
+    * `Queries` keeps its side files under. */
+  def targetPath(rel: String): String =
+    java.nio.file.Paths.get("target", rel).toAbsolutePath.toString
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -23,6 +23,31 @@ class LinkGraphSpec extends SparkTestBase {
     assert(r2 == Map("A" -> 1361L, "B" -> 575L, "C" -> 1063L))
   }
 
+  test("pageRank restores the session conf when it throws") {
+    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val thresholdKey = "spark.graft.graph.aqeRowThreshold"
+    val saved = Seq(floorKey, aqeKey).map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(floorKey, "64k")
+    spark.conf.set(aqeKey, "true")
+    spark.conf.set(thresholdKey, "abc")
+    try {
+      val nodes = Seq("A", "B").toDF("host")
+      val edges = Seq(("A", "B", 1L)).toDF("src", "dst", "weight")
+      intercept[NumberFormatException] {
+        LinkGraph.pageRank(nodes, "host", edges, iterations = 1)
+      }
+      assert(spark.conf.getOption(floorKey) == Some("64k"))
+      assert(spark.conf.getOption(aqeKey) == Some("true"))
+    } finally {
+      spark.conf.unset(thresholdKey)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("dangling nodes keep teleport-only rank; foreign-dst edges drop") {
     // D is dangling (no out-edges) and nothing links to it after iter 1;
     // an edge to an unknown host X must not surface X in the output.

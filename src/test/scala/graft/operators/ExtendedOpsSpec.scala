@@ -97,6 +97,40 @@ class ExtendedOpsSpec extends SparkTestBase {
     assert(joined == brute)
   }
 
+  test("earth-mode dwithin across the antimeridian == brute-force haversine") {
+    // probe windows at lon ±179.9 cross ±180: a pair 0.2 degrees of
+    // longitude apart across the antimeridian must stay a candidate, at
+    // latitudes where the window also takes Geo.lonDegrees' 360 branch
+    val lats = Seq(85.0, 86.5, 88.0, 89.5)
+    val lons = Seq(179.9, -179.9, 179.3, -178.8)
+    val pts = for {
+      (lat, i) <- (lats ++ lats.map(-_)).zipWithIndex
+      (lon, j) <- lons.zipWithIndex
+    } yield (i * 10L + j, lon, lat)
+    val other = pts.map { case (id, lon, lat) =>
+      (id + 1000, -lon, lat - math.signum(lat) * 0.1) }
+    val a = pts.toDF("ida", "lona", "lata")
+      .withColumn("ga", st_point(col("lona"), col("lata")))
+    val b = other.toDF("idb", "lonb", "latb")
+      .withColumn("gb", st_point(col("lonb"), col("latb")))
+    for (d <- Seq(20000.0, 300000.0)) {
+      val joined = SpatialJoin.join(
+          a.select("ida", "ga"), "ga", b.select("idb", "gb"), "gb",
+          SpatialJoin.Config(predicate = "dwithin", distance = d, earth = true,
+            bucket = 8))
+        .select("ida", "idb").as[(Long, Long)].collect().toSet
+      val brute = (for {
+        (ia, lon1, lat1) <- pts
+        (ib, lon2, lat2) <- other
+        if Geo.haversineMeters(lon1, lat1, lon2, lat2) <= d
+      } yield (ia, ib)).toSet
+      val lonOf = (pts ++ other).map(p => p._1 -> p._2).toMap
+      assert(brute.exists { case (ia, ib) => lonOf(ia) * lonOf(ib) < 0 },
+        "the fixture must hold pairs across the antimeridian")
+      assert(joined == brute, s"d=$d")
+    }
+  }
+
   test("earth-mode dwithin rejects non-point geometries") {
     // planar fallback would compare degree-unit distance against a meter
     // threshold row-by-row — fail loudly instead

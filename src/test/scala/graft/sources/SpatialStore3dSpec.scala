@@ -83,10 +83,9 @@ class SpatialStore3dSpec extends SparkTestBase {
   test("compact (manifest-committed) layout: same reads, task-count files") {
     val dir = Files.createTempDirectory("graft_store3d").toString + "/t6"
     val df = cubesDf(800)
-    SpatialStore3d.writeCompact(df, C, dir, leafCap = 16)
-    // identical answers to the dir layout on the same window
+    SpatialStore3d.write(df, C, dir, leafCap = 16)
     val w = Array(10.0, 12.0, 8.0, 28.0, 30.0, 26.0)
-    val got = SpatialStore3d.containmentReadCompact(spark, dir, w)
+    val got = SpatialStore3d.containmentRead(spark, dir, w)
       .select("id").as[Long].collect().toSet
     val want = df.where(
         $"x0" <= w(3) && lit(w(0)) <= $"x1" &&
@@ -105,7 +104,7 @@ class SpatialStore3dSpec extends SparkTestBase {
     val manifest = spark.read.parquet(s"$dir/_graft_manifest")
     assert(manifest.count() == dataFiles.toLong)
     // empty window returns empty, not an error
-    assert(SpatialStore3d.containmentReadCompact(spark, dir,
+    assert(SpatialStore3d.containmentRead(spark, dir,
       Array(-500.0, -500.0, -500.0, -400.0, -400.0, -400.0)).count() == 0)
   }
 
@@ -115,7 +114,7 @@ class SpatialStore3dSpec extends SparkTestBase {
     }
     val dir = Files.createTempDirectory("graft_store3d").toString + "/torn"
     val df = cubesDf(400)
-    SpatialStore3d.writeCompact(df, C, dir, leafCap = 16)
+    SpatialStore3d.write(df, C, dir, leafCap = 16)
     val w = Array(10.0, 12.0, 8.0, 28.0, 30.0, 26.0)
     val want = df.where(
         $"x0" <= w(3) && lit(w(0)) <= $"x1" &&
@@ -126,11 +125,11 @@ class SpatialStore3dSpec extends SparkTestBase {
     // manifest lost between data write and commit → loud failure
     rmAll(new java.io.File(s"$dir/_graft_manifest"))
     val noManifest = intercept[IllegalStateException] {
-      SpatialStore3d.containmentReadCompact(spark, dir, w).count()
+      SpatialStore3d.containmentRead(spark, dir, w).count()
     }
     assert(noManifest.getMessage.contains("torn write"))
-    SpatialStore3d.writeCompact(df, C, dir, leafCap = 16)
-    assert(SpatialStore3d.containmentReadCompact(spark, dir, w)
+    SpatialStore3d.write(df, C, dir, leafCap = 16)
+    assert(SpatialStore3d.containmentRead(spark, dir, w)
       .select("id").as[Long].collect().toSet == want)
 
     // stale manifest naming a vanished data file → loud failure, heal
@@ -138,38 +137,11 @@ class SpatialStore3dSpec extends SparkTestBase {
       .filter(_.getName.endsWith(".parquet")).head
     assert(victim.delete())
     val stale = intercept[IllegalStateException] {
-      SpatialStore3d.containmentReadCompact(spark, dir, w).count()
+      SpatialStore3d.containmentRead(spark, dir, w).count()
     }
     assert(stale.getMessage.contains("stale manifest"))
-    SpatialStore3d.writeCompact(df, C, dir, leafCap = 16)
-    assert(SpatialStore3d.containmentReadCompact(spark, dir, w)
+    SpatialStore3d.write(df, C, dir, leafCap = 16)
+    assert(SpatialStore3d.containmentRead(spark, dir, w)
       .select("id").as[Long].collect().toSet == want)
-  }
-
-  test("writeCompact over a dir-layout 3-D store removes stale leaf dirs") {
-    val dir = Files.createTempDirectory("graft_store3d").toString + "/mixed"
-    SpatialStore3d.writeDirs(cubesDf(300), C, dir, leafCap = 16)
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(SpatialStore3d.TileCol + "=")))
-    val df2 = cubesDf(500)
-    SpatialStore3d.writeCompact(df2, C, dir, leafCap = 16)
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(SpatialStore3d.TileCol + "=")),
-      "stale dir-layout leaf dirs must not survive a compact overwrite")
-    val w = Array(10.0, 12.0, 8.0, 28.0, 30.0, 26.0)
-    assert(SpatialStore3d.containmentReadCompact(spark, dir, w)
-      .select("id").as[Long].collect().toSet ==
-      df2.where(
-          $"x0" <= w(3) && lit(w(0)) <= $"x1" &&
-          $"y0" <= w(4) && lit(w(1)) <= $"y1" &&
-          $"z0" <= w(5) && lit(w(2)) <= $"z1")
-        .select("id").as[Long].collect().toSet)
-  }
-
-  test("writeDirs warns past the leaf threshold (legacy-at-scale fence)") {
-    assert(SpatialStore3d.dirLayoutWarning(SpatialStore3d.DirLayoutLeafWarn).isEmpty)
-    val w = SpatialStore3d.dirLayoutWarning(SpatialStore3d.DirLayoutLeafWarn + 1)
-    assert(w.exists(_.contains("writeCompact")),
-      "over-threshold dir-layout write must point at the compact layout")
   }
 }

@@ -105,7 +105,7 @@ class SpatialStoreSpec extends SparkTestBase {
   test("containment read prunes tiles and matches direct filter") {
     val dir = Files.createTempDirectory("graft_store").toString + "/t2"
     val df = boxesDf(800)
-    SpatialStore.writeDirs(df, "geom", dir,
+    SpatialStore.write(df, "geom", dir,
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 40))
 
     val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
@@ -115,72 +115,11 @@ class SpatialStoreSpec extends SparkTestBase {
     assert(got.select("id").as[Long].collect().toSet ==
            want.select("id").as[Long].collect().toSet)
 
-    // pruning must touch fewer files than a full scan: read the scan node's
-    // numFiles metric (inputFiles does not reflect partition pruning)
+    // driver pruning engages: the window must not need every tile
     val meta = SpatialStore.readMeta(spark, dir)
     val wantedTiles = meta.tiles
       .filter(t => t.mbb.intersects(graft.core.Mbb(10, 10, 30, 25))).map(_.tileId)
     assert(wantedTiles.length < meta.tiles.length, "window should not span all tiles")
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      val plan = df.queryExecution.executedPlan
-      plan.execute().count()
-      plan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.get
-    }
-    val allFiles = scannedFiles(spark.read.parquet(dir))
-    val prunedFiles = scannedFiles(spark.read.parquet(dir)
-      .where(col(SpatialStore.TileCol).isin(wantedTiles.toSeq: _*)))
-    assert(prunedFiles < allFiles, s"pruned $prunedFiles vs all $allFiles")
-  }
-
-  test("prunedRead lists only window-selected tile dirs; off-space window is empty and schema-true") {
-    val dir = Files.createTempDirectory("graft_store").toString + "/pr"
-    val df = boxesDf(600)
-    SpatialStore.writeDirs(df, "geom", dir,
-      graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 40))
-
-    // the selective read's scan must see exactly the files under the
-    // wanted tile dirs — listing cost ∝ selectivity, not leaf count
-    val window = GeometryCodec.toWkb(GeometryCodec.box(5, 5, 20, 15))
-    val meta = SpatialStore.readMeta(spark, dir)
-    val wanted = meta.tiles
-      .filter(t => t.mbb.intersects(graft.core.Mbb(5, 5, 20, 15)))
-      .map(_.tileId).toSet
-    assert(wanted.nonEmpty && wanted.size < meta.tiles.length)
-    val filesUnderWanted = new java.io.File(dir).listFiles()
-      .filter(d => d.isDirectory &&
-        wanted.contains(d.getName.stripPrefix(SpatialStore.TileCol + "=").toInt))
-      .map(_.listFiles().count(f => f.getName.endsWith(".parquet"))).sum
-    val got = SpatialStore.containmentRead(spark, dir, window)
-    // execute THIS plan instance (a separate .count() builds its own query
-    // execution whose metrics this one never sees), then read the scan out
-    // of the finalized adaptive plan
-    val root = got.queryExecution.executedPlan
-    root.execute().count()
-    // AQE hides the scan inside materialized QueryStageExec leaves whose
-    // wrapped plan is not a TreeNode child — expand them explicitly
-    def expand(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val nested = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          expand(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          expand(q.plan)
-        case _ => Nil
-      }
-      (p +: p.children.flatMap(expand)) ++ nested
-    }
-    val scanned = expand(root).collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.max
-    assert(scanned == filesUnderWanted,
-      s"scan read $scanned files, wanted dirs hold $filesUnderWanted")
-    assert(got.select("id").as[Long].collect().toSet ==
-      df.where(st_intersects(col("geom"), lit(window)))
-        .select("id").as[Long].collect().toSet)
 
     // a window off the store's space: zero rows, original columns intact
     val off = GeometryCodec.toWkb(GeometryCodec.box(5000, 5000, 5010, 5010))
@@ -227,11 +166,11 @@ class SpatialStoreSpec extends SparkTestBase {
     assert(s.getAs[Long]("n_replicated_objects") >= 300)
     assert(s.getAs[Long]("max_objects") >= s.getAs[Long]("min_objects"))
 
-    // compact-store write through the API implicit round-trips
+    // store write through the API implicit round-trips
     val cDir = Files.createTempDirectory("graft_store").toString + "/api_c"
-    df.spatialPartitionWriteCompact(cDir, "geom", "fg", 50)
+    df.spatialPartitionWrite(cDir, "geom", "fg", 50)
     val w = GeometryCodec.toWkb(GeometryCodec.box(0, 0, 40, 40))
-    assert(SpatialStore.containmentReadCompact(spark, cDir, w)
+    assert(SpatialStore.containmentRead(spark, cDir, w)
       .count() == inWin.count())
   }
 
@@ -262,12 +201,11 @@ class SpatialStoreSpec extends SparkTestBase {
     // the environment's spark.sql.shuffle.partitions
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try SpatialStore.writeCompact(df, "geom", dir,
+    try SpatialStore.write(df, "geom", dir,
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    // identical answers to the dir layout's window semantics
     val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
-    val got = SpatialStore.containmentReadCompact(spark, dir, window)
+    val got = SpatialStore.containmentRead(spark, dir, window)
       .select("id").as[Long].collect().toSet
     val want = df.where(st_intersects(col("geom"), lit(window)))
       .select("id").as[Long].collect().toSet
@@ -288,10 +226,10 @@ class SpatialStoreSpec extends SparkTestBase {
       .filter(t => t.mbb.intersects(graft.core.Mbb(10, 10, 30, 25)))
       .map(_.tileId)
     val scanned =
-      SpatialStore.manifestRead(spark, dir, wantedTiles).inputFiles.length
+      SpatialStore.manifestRead(spark, dir, wantedTiles.toSeq).inputFiles.length
     assert(scanned < dataFiles, s"manifest pruned $scanned of $dataFiles files")
     // empty window returns empty, not an error
-    assert(SpatialStore.containmentReadCompact(spark, dir,
+    assert(SpatialStore.containmentRead(spark, dir,
       GeometryCodec.toWkb(GeometryCodec.box(-500, -500, -400, -400))).count() == 0)
     // relocatable: the manifest stores bare file names, not write-time
     // URIs — a moved store must read identically (and not silently read
@@ -307,7 +245,7 @@ class SpatialStoreSpec extends SparkTestBase {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmAll)); f.delete()
     }
     rmAll(new java.io.File(dir))
-    val gotMoved = SpatialStore.containmentReadCompact(spark, moved, window)
+    val gotMoved = SpatialStore.containmentRead(spark, moved, window)
       .select("id").as[Long].collect().toSet
     assert(gotMoved == want)
   }
@@ -319,7 +257,7 @@ class SpatialStoreSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft_store").toString + "/torn"
     val df = boxesDf(400)
     val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10)
-    SpatialStore.writeCompact(df, "geom", dir, cfg)
+    SpatialStore.write(df, "geom", dir, cfg)
     val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
     val want = df.where(st_intersects(col("geom"), lit(window)))
       .select("id").as[Long].collect().toSet
@@ -337,12 +275,12 @@ class SpatialStoreSpec extends SparkTestBase {
     cp(manifestDir, new java.io.File(saved, "_graft_manifest"))
     rmAll(manifestDir)
     val noManifest = intercept[IllegalStateException] {
-      SpatialStore.containmentReadCompact(spark, dir, window).count()
+      SpatialStore.containmentRead(spark, dir, window).count()
     }
     assert(noManifest.getMessage.contains("torn write"))
-    // re-running writeCompact heals: full answer, no double-counting
-    SpatialStore.writeCompact(df, "geom", dir, cfg)
-    assert(SpatialStore.containmentReadCompact(spark, dir, window)
+    // re-running write heals: full answer, no double-counting
+    SpatialStore.write(df, "geom", dir, cfg)
+    assert(SpatialStore.containmentRead(spark, dir, window)
       .select("id").as[Long].collect().toSet == want)
 
     // kill between a RE-write's data overwrite (clears data/) and its
@@ -352,11 +290,11 @@ class SpatialStoreSpec extends SparkTestBase {
     val victim = dataDir.listFiles().filter(_.getName.endsWith(".parquet")).head
     assert(victim.delete())
     val stale = intercept[IllegalStateException] {
-      SpatialStore.containmentReadCompact(spark, dir, window).count()
+      SpatialStore.containmentRead(spark, dir, window).count()
     }
     assert(stale.getMessage.contains("stale manifest"))
-    SpatialStore.writeCompact(df, "geom", dir, cfg)
-    assert(SpatialStore.containmentReadCompact(spark, dir, window)
+    SpatialStore.write(df, "geom", dir, cfg)
+    assert(SpatialStore.containmentRead(spark, dir, window)
       .select("id").as[Long].collect().toSet == want)
 
     // retired round-13 3-D manifest layout: name the format in the error
@@ -364,51 +302,9 @@ class SpatialStoreSpec extends SparkTestBase {
     cp(new java.io.File(saved, "_graft_manifest"),
        new java.io.File(s"$dir/_graft_manifest3d"))
     val legacy = intercept[IllegalStateException] {
-      SpatialStore.containmentReadCompact(spark, dir, window).count()
+      SpatialStore.containmentRead(spark, dir, window).count()
     }
     assert(legacy.getMessage.contains("_graft_manifest3d"))
-  }
-
-  test("writeCompact over a dir-layout store removes the stale tile dirs") {
-    val dir = Files.createTempDirectory("graft_store").toString + "/mixed"
-    val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10)
-    SpatialStore.writeDirs(boxesDf(300), "geom", dir, cfg)
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(SpatialStore.TileCol + "=")))
-    // different data: a mixed store would serve the OLD rows from the
-    // stale tile dirs against the new meta
-    val df2 = boxesDf(500)
-    SpatialStore.writeCompact(df2, "geom", dir, cfg)
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(SpatialStore.TileCol + "=")),
-      "stale dir-layout tile dirs must not survive a compact overwrite")
-    val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
-    assert(SpatialStore.containmentReadCompact(spark, dir, window)
-      .select("id").as[Long].collect().toSet ==
-      df2.where(st_intersects(col("geom"), lit(window)))
-        .select("id").as[Long].collect().toSet)
-  }
-
-  test("writeDirs over a compact store removes the stale manifest + data/") {
-    // the MIRROR of the compact-over-dirs lane: a dir-layout rebuild over
-    // a compact store must not leave data/ + _graft_manifest behind —
-    // layout detection prefers the manifest, so reads would silently
-    // serve the OLD rows against the new meta
-    val dir = Files.createTempDirectory("graft_store").toString + "/mixed2"
-    val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10)
-    SpatialStore.writeCompact(boxesDf(300), "geom", dir, cfg)
-    assert(new java.io.File(s"$dir/_graft_manifest").exists())
-    val df2 = boxesDf(500)
-    SpatialStore.writeDirs(df2, "geom", dir, cfg)
-    assert(!new java.io.File(s"$dir/_graft_manifest").exists(),
-      "stale compact manifest must not survive a dir-layout rebuild")
-    assert(!new java.io.File(s"$dir/data").exists(),
-      "stale compact data/ must not survive a dir-layout rebuild")
-    val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
-    assert(SpatialStore.containmentRead(spark, dir, window)
-      .select("id").as[Long].collect().toSet ==
-      df2.where(st_intersects(col("geom"), lit(window)))
-        .select("id").as[Long].collect().toSet)
   }
 
   test("manifest without data/ fails loudly (torn opposite half)") {
@@ -417,13 +313,41 @@ class SpatialStoreSpec extends SparkTestBase {
     }
     val dir = Files.createTempDirectory("graft_store").toString + "/nodata"
     val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10)
-    SpatialStore.writeCompact(boxesDf(200), "geom", dir, cfg)
+    SpatialStore.write(boxesDf(200), "geom", dir, cfg)
     rmAll(new java.io.File(s"$dir/data"))
     val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
     val err = intercept[IllegalStateException] {
-      SpatialStore.containmentReadCompact(spark, dir, window).count()
+      SpatialStore.containmentRead(spark, dir, window).count()
     }
     assert(err.getMessage.contains("no data/"),
       s"wanted the heal-instructing message, got: ${err.getMessage}")
+  }
+
+  test("a tile_id=N/-only path fails with the retired-layout message") {
+    // the retired Hive dir layout: a meta plus per-tile dirs, no manifest
+    // and no data/ — a read must name the layout and the rebuild instead
+    // of an opaque path error
+    val dir = Files.createTempDirectory("graft_store").toString + "/dirs"
+    val df = boxesDf(100)
+    val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10)
+    SpatialStore.write(df, "geom", dir, cfg)
+    spark.read.parquet(s"$dir/data").write
+      .partitionBy(SpatialStore.TileCol).parquet(s"$dir/legacy")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("data", "_graft_manifest").foreach(d =>
+      fs.delete(new org.apache.hadoop.fs.Path(dir, d), true))
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir, "legacy"))
+      .filter(_.getPath.getName.startsWith(SpatialStore.TileCol + "="))
+      .foreach(s => fs.rename(s.getPath, new org.apache.hadoop.fs.Path(dir, s.getPath.getName)))
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "legacy"), true)
+    val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
+    for (read <- Seq(() => SpatialStore.containmentRead(spark, dir, window),
+                     () => SpatialStore.read(spark, dir))) {
+      val err = intercept[IllegalStateException](read().count())
+      assert(err.getMessage.contains("retired Hive tile_id=N/ dir layout") &&
+        err.getMessage.contains("rebuild it with write"),
+        s"wanted the retired-layout message, got: ${err.getMessage}")
+    }
   }
 }

@@ -106,7 +106,7 @@ class StoreHardeningSpec extends SparkTestBase {
       SpatialStore.read(spark, dir).count()
     }
     assert(e.getMessage.contains("torn write") &&
-      e.getMessage.contains("writeCompact"),
+      e.getMessage.contains("re-run write"),
       s"wanted the heal-instructing error, got: ${e.getMessage}")
   }
 
@@ -122,12 +122,12 @@ class StoreHardeningSpec extends SparkTestBase {
     assert(e.getMessage.contains("torn write"))
   }
 
-  test("in-place rebuild writeDirs(read(path), ..., path) is refused, store intact") {
+  test("in-place rebuild write(read(p), ..., p) is refused, store intact") {
     val dir = Files.createTempDirectory("graft_self").toString + "/s"
     SpatialStore.write(boxesDf(80), "geom", dir,
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     val e = intercept[IllegalArgumentException] {
-      SpatialStore.writeDirs(SpatialStore.read(spark, dir), "geom", dir,
+      SpatialStore.write(SpatialStore.read(spark, dir), "geom", dir,
         graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     }
     assert(e.getMessage.contains("overwrite data its own input reads"))
@@ -135,20 +135,11 @@ class StoreHardeningSpec extends SparkTestBase {
     assert(SpatialStore.read(spark, dir).count() == 80)
   }
 
-  test("self-overwrite refusal covers writeCompact and the 3-D writeDirs") {
-    val dir2 = Files.createTempDirectory("graft_self2").toString + "/s"
-    SpatialStore.writeDirs(boxesDf(40), "geom", dir2,
-      graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
-    intercept[IllegalArgumentException] {
-      SpatialStore.writeCompact(SpatialStore.read(spark, dir2), "geom", dir2,
-        graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
-    }
-    assert(SpatialStore.read(spark, dir2).count() == 40)
-
+  test("self-overwrite refusal covers the 3-D write") {
     val dir3 = Files.createTempDirectory("graft_self3").toString + "/s"
     SpatialStore3d.write(cubesDf(50), C3, dir3, leafCap = 16)
     intercept[IllegalArgumentException] {
-      SpatialStore3d.writeDirs(SpatialStore3d.read(spark, dir3), C3, dir3,
+      SpatialStore3d.write(SpatialStore3d.read(spark, dir3), C3, dir3,
         leafCap = 16)
     }
     assert(SpatialStore3d.read(spark, dir3).count() == 50)
@@ -159,7 +150,7 @@ class StoreHardeningSpec extends SparkTestBase {
     SpatialStore.write(boxesDf(60), "geom", base + "/a",
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     // the legitimate migration the refusal message prescribes
-    SpatialStore.writeDirs(SpatialStore.read(spark, base + "/a"), "geom",
+    SpatialStore.write(SpatialStore.read(spark, base + "/a"), "geom",
       base + "/b",
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     assert(SpatialStore.read(spark, base + "/b").count() == 60)

@@ -11,7 +11,7 @@ class WarcSourceSpec extends SparkTestBase {
           200, "text/plain; charset=utf-8",
           s"body text $i é中".getBytes("UTF-8")))
       .toDF("target_uri", "warc_date", "http_status", "http_content_type", "body")
-    val path = "/root/repo/target/warc_spec/rt"
+    val path = SparkTestBase.targetPath("warc_spec/rt")
     WarcSource.write(docs.repartition(3), path)
     val got = WarcSource.read(spark, path).collect()
     val resp = got.filter(_.record_type == "response")
@@ -29,7 +29,7 @@ class WarcSourceSpec extends SparkTestBase {
   }
 
   test("lenient read stops a file at the last well-formed record; strict throws") {
-    val dir = new java.io.File("/root/repo/target/warc_spec/trunc")
+    val dir = new java.io.File(SparkTestBase.targetPath("warc_spec/trunc"))
     dir.mkdirs()
     val good = "WARC/1.0\r\nWARC-Type: resource\r\nWARC-Date: d\r\n" +
       "Content-Type: text/plain\r\nContent-Length: 5\r\n\r\nhello\r\n\r\n"
@@ -48,7 +48,7 @@ class WarcSourceSpec extends SparkTestBase {
   }
 
   test("a Content-Length beyond maxRecordBytes is rejected before allocation") {
-    val dir = new java.io.File("/root/repo/target/warc_spec/huge")
+    val dir = new java.io.File(SparkTestBase.targetPath("warc_spec/huge"))
     dir.mkdirs()
     val huge = "WARC/1.0\r\nWARC-Type: resource\r\nContent-Length: 999999999999\r\n\r\n"
     java.nio.file.Files.write(new java.io.File(dir, "h.warc").toPath,
@@ -58,7 +58,7 @@ class WarcSourceSpec extends SparkTestBase {
   }
 
   test("lenient read skips unopenable files (empty .gz, missing path); strict throws") {
-    val dir = new java.io.File("/root/repo/target/warc_spec/badopen")
+    val dir = new java.io.File(SparkTestBase.targetPath("warc_spec/badopen"))
     dir.mkdirs()
     val good = "WARC/1.0\r\nWARC-Type: resource\r\nWARC-Date: d\r\n" +
       "Content-Type: text/plain\r\nContent-Length: 2\r\n\r\nok\r\n\r\n"
@@ -76,7 +76,7 @@ class WarcSourceSpec extends SparkTestBase {
   }
 
   test("a binary non-WARC file is rejected by the line bound, not buffered whole") {
-    val dir = new java.io.File("/root/repo/target/warc_spec/binary")
+    val dir = new java.io.File(SparkTestBase.targetPath("warc_spec/binary"))
     dir.mkdirs()
     // 4 MB of newline-free bytes: must reject at the 1 MB line bound
     java.nio.file.Files.write(new java.io.File(dir, "b.warc").toPath,
@@ -89,7 +89,7 @@ class WarcSourceSpec extends SparkTestBase {
         (s"https://example.com/same", "2026-01-01T00:00:00Z", 200,
           "text/plain", s"b$i".getBytes("UTF-8")))
       .toDF("target_uri", "warc_date", "http_status", "http_content_type", "body")
-    val path = "/root/repo/target/warc_spec/ids"
+    val path = SparkTestBase.targetPath("warc_spec/ids")
     WarcSource.write(docs.repartition(3), path)
     val ids = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).flatMap { f =>
@@ -104,7 +104,7 @@ class WarcSourceSpec extends SparkTestBase {
   }
 
   test("a response payload without an HTTP separator comes back whole, status -1") {
-    val dir = new java.io.File("/root/repo/target/warc_spec/nohttp")
+    val dir = new java.io.File(SparkTestBase.targetPath("warc_spec/nohttp"))
     dir.mkdirs()
     val rec = "WARC/1.0\r\nWARC-Type: response\r\n" +
       "WARC-Target-URI: https://x.example.com/\r\n" +

@@ -237,33 +237,38 @@ class StreamingSpec extends SparkTestBase {
       Set((10L, 20L), (10L, 21L), (12L, 21L), (12L, 22L)))
   }
 
-  test("SpatialIngest: streamed tile-partitioned store == batch tag; readable by SpatialStore") {
-    implicit val sqlCtx = spark.sqlContext
+  /** 200 WKT boxes, one record far outside their space, and the FIXED
+    * fg index planned ahead of the stream on the boxes' MBBs. */
+  private def ingestFixture(bucket: Int = 30)
+      : (Seq[(Long, String)], (Long, String), graft.operators.TileIndex) = {
     import graft.core.{GeometryCodec, Mbb}
-    import graft.operators.TileIndex
-    import graft.partition.SpatialPartitioner
-    import graft.sources.SpatialStore
-
     val rnd = new scala.util.Random(31)
     val rows = (0 until 200).map { i =>
       val x = rnd.nextDouble() * 100; val y = rnd.nextDouble() * 50
       (i.toLong, s"POLYGON(($x $y,${x + 2} $y,${x + 2} ${y + 2},$x ${y + 2},$x $y))")
     }
-    // plan the FIXED index ahead of the stream (on "historical" MBBs)
     val mbbs = rows.map { case (_, w) =>
       val e = GeometryCodec.fromWkt(w).getEnvelopeInternal
       Mbb(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
     }.toArray
     val space = mbbs.reduce(_ union _)
-    val index = new TileIndex(
-      SpatialPartitioner("fg").partition(mbbs, space, 30), space)
+    val index = new graft.operators.TileIndex(
+      graft.partition.SpatialPartitioner("fg").partition(mbbs, space, bucket), space)
+    val far = (999L, "POLYGON((200 200,202 200,202 202,200 202,200 200))")
+    (rows, far, index)
+  }
 
+  test("SpatialIngest: streamed tile-partitioned store == batch tag; readable by SpatialStore") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.core.GeometryCodec
+    import graft.sources.SpatialStore
+
+    val (rows, far, index) = ingestFixture()
     val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
     val stream = MemoryStream[(Long, String)]
     val q = SpatialIngest.start(stream.toDF().toDF("id", "wkt"), "wkt", index,
       base + "/store", base + "/ckpt")
-    // a record the planner never saw — far outside the historical space
-    val far = (999L, "POLYGON((200 200,202 200,202 202,200 202,200 200))")
+    // `far` is a record the planner never saw — outside the historical space
     try {
       stream.addData(rows.take(120))
       q.processAllAvailable()
@@ -294,38 +299,67 @@ class StreamingSpec extends SparkTestBase {
     val batchTag = SpatialIngest.tileTag((rows :+ far).toDF("id", "wkt"), "wkt", index)
       .select(col("id"), col(SpatialStore.TileCol))
       .as[(Long, Int)].collect().toSet
-    val streamedTag = spark.read.parquet(base + "/store")
+    val streamedTag = spark.read.parquet(base + "/store/data")
       .select(col("id"), col(SpatialStore.TileCol).cast("int"))
       .as[(Long, Int)].collect().toSet
     assert(streamedTag == batchTag)
   }
 
-  test("spatial ingest refuses a compact-store path (appends would be invisible)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.core.Mbb
-    import graft.operators.TileIndex
-    import graft.partition.SpatialPartitioner
+  test("SpatialIngest replay after a crash: reads unchanged") {
+    import graft.core.GeometryCodec
     import graft.sources.SpatialStore
-    import graft.functions.st_geomfromwkt
-    // a compact store (the batch-write default) reads only data/ via its
-    // manifest; streamed tile_id= appends beside it would be silent data
-    // loss — start() must refuse up front
+
+    val (rows, far, index) = ingestFixture()
     val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val boxes = (0 until 50).map { i =>
-      (i.toLong, s"POLYGON((${i % 10} ${i / 10},${i % 10 + 1} ${i / 10}," +
-        s"${i % 10 + 1} ${i / 10 + 1},${i % 10} ${i / 10 + 1},${i % 10} ${i / 10}))")
-    }.toDF("id", "wkt").withColumn("geom", st_geomfromwkt(col("wkt")))
-    SpatialStore.write(boxes, "geom", base + "/store",
-      graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
-    val mbb = Mbb(0, 0, 11, 6)
-    val index = new TileIndex(
-      SpatialPartitioner("fg").partition(Array(mbb), mbb, 10), mbb)
-    val stream = MemoryStream[(Long, String)]
-    val err = intercept[IllegalArgumentException] {
-      SpatialIngest.start(stream.toDF().toDF("id", "wkt"), "wkt", index,
-        base + "/store", base + "/ckpt")
+    // a replayable file source, one file per microbatch
+    rows.take(120).toDF("id", "wkt").coalesce(1).write.parquet(base + "/src")
+    (rows.drop(120) :+ far).toDF("id", "wkt").coalesce(1)
+      .write.mode("append").parquet(base + "/src")
+    def ingest(): Unit = {
+      val stream = spark.readStream.schema("id BIGINT, wkt STRING")
+        .option("maxFilesPerTrigger", 1).parquet(base + "/src")
+      val q = SpatialIngest.start(stream, "wkt", index, base + "/store", base + "/ckpt")
+      try q.processAllAvailable() finally q.stop()
     }
-    assert(err.getMessage.contains("writeDirs"),
-      s"wanted the rebuild-with-writeDirs message, got: ${err.getMessage}")
+    def dataFiles(): Int = new java.io.File(base + "/store/data").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val window = GeometryCodec.toWkb(GeometryCodec.box(20, 10, 50, 30))
+    def contained(): Set[Long] =
+      SpatialStore.containmentRead(spark, base + "/store", window)
+        .select("id").as[Long].collect().toSet
+
+    ingest()
+    val filesBefore = dataFiles()
+    val containedBefore = contained()
+    // a crash after the last batch appended but before its commit: drop
+    // its commit entry, and the restart re-runs the batch
+    val commits = new java.io.File(base + "/ckpt/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toInt).max
+    assert(last == 1, "the fixture streams two microbatches")
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    ingest()
+
+    assert(dataFiles() > filesBefore, "the replayed batch appended again")
+    assert(SpatialStore.read(spark, base + "/store").count() == 201)
+    assert(contained() == containedBefore && containedBefore.nonEmpty)
+  }
+
+  test("SpatialIngest.start refuses a store planned with a different tiling") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SpatialStore
+
+    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val (_, _, index) = ingestFixture()
+    val (_, _, other) = ingestFixture(bucket = 10)
+    SpatialIngest.start(MemoryStream[(Long, String)].toDF().toDF("id", "wkt"),
+      "wkt", index, base + "/store", base + "/ckpt").stop()
+    val tiles = SpatialStore.readMeta(spark, base + "/store").tiles.toSeq
+    val err = intercept[IllegalArgumentException] {
+      SpatialIngest.start(MemoryStream[(Long, String)].toDF().toDF("id", "wkt"),
+        "wkt", other, base + "/store", base + "/ckpt2")
+    }
+    assert(err.getMessage.contains("different tiling"))
+    // the refusal left the store's meta alone
+    assert(SpatialStore.readMeta(spark, base + "/store").tiles.toSeq == tiles)
   }
 }

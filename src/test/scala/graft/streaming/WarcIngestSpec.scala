@@ -21,7 +21,7 @@ class WarcIngestSpec extends SparkTestBase {
   }
 
   test("manifest stream: within-batch + cross-batch URL dedup == batch twin") {
-    val base = s"/root/repo/target/warc_ingest_${System.nanoTime()}"
+    val base = SparkTestBase.targetPath(s"warc_ingest_${System.nanoTime()}")
     val f1 = writeWarc(s"$base/w1", Seq(
       ("HTTPS://WWW.A.COM/x/?utm_s=1", "<p>page x</p>"),
       ("https://a.com/x", "<p>page x dup</p>"), // same canon, in one batch
@@ -58,7 +58,7 @@ class WarcIngestSpec extends SparkTestBase {
   }
 
   test("same raw URL crawled twice in one drop: survivor is the smaller body hash") {
-    val base = s"/root/repo/target/warc_ingest_${System.nanoTime()}"
+    val base = SparkTestBase.targetPath(s"warc_ingest_${System.nanoTime()}")
     val bodies = Seq("<p>fetch one</p>", "<p>fetch two</p>")
     val f = writeWarc(s"$base/w", bodies.map(("https://a.com/p", _)))
     WarcIngest.processBatch(spark, Seq(f), s"$base/out", s"$base/seen")
@@ -74,7 +74,7 @@ class WarcIngestSpec extends SparkTestBase {
 
   test("robots politeness: disallowed pages enter neither corpus nor seen store") {
     import graft.text.Robots
-    val base = s"/root/repo/target/warc_ingest_${System.nanoTime()}"
+    val base = SparkTestBase.targetPath(s"warc_ingest_${System.nanoTime()}")
     val f = writeWarc(s"$base/w", Seq(
       ("https://a.com/private/x", "<p>secret</p>"),
       ("https://a.com/private/pub/ok", "<p>open enough</p>"),
@@ -104,7 +104,7 @@ class WarcIngestSpec extends SparkTestBase {
   }
 
   test("empty manifest batches and blank lines are no-ops") {
-    val base = s"/root/repo/target/warc_ingest_${System.nanoTime()}"
+    val base = SparkTestBase.targetPath(s"warc_ingest_${System.nanoTime()}")
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[String]
     val q = WarcIngest.start(stream.toDF(),
