@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.core.{Mbb, TileBoundary}
 import graft.functions.{st_envelope, st_intersects}
@@ -129,38 +130,61 @@ object SpatialStore {
     * (1.00×) where the retired Hive `tile_id=N/` dir layout paid one
     * dir+temp+rename per tile (2.55×); a read lists one manifest, not one
     * leaf per tile. At 100 TB: file count tracks writer count, not tile
-    * count. */
+    * count.
+    *
+    * The input is read ONCE: its row-id'd, enveloped rows are copied
+    * ([[readOnce]]) and tile planning, the tile tag, the range
+    * partitioner's sample and the write's map stage all scan that copy
+    * instead of re-running the input plan (for a text source: the scan,
+    * the WKT parse and the row-id hashes) per job. The copy is released
+    * when the write returns or throws. */
   def write(df: DataFrame, geomCol: String, path: String,
             cfg: SpatialJoin.Config = SpatialJoin.Config(),
             preserveDuplicates: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    val (tagged, index) = tileTagged(df, geomCol, cfg, preserveDuplicates)
-    writeRangeClustered(tagged, path)
-    writeMeta(spark, path, Meta(geomCol, index.space, index.tiles))
-  }
-
-  /** Shared planning: row-id lanes, empty/invalid-geometry drop, sampled
-    * tiling, boundary replication — everything up to (and including) the
-    * tile tag. */
-  private def tileTagged(df: DataFrame, geomCol: String,
-                         cfg: SpatialJoin.Config, preserveDuplicates: Boolean)
-      : (DataFrame, TileIndex) = {
-    val spark = df.sparkSession
-    val withId = withRowIds(df, preserveDuplicates)
+    // on the caller's plan: the copy's plan has no file scan to check
+    refuseSelfOverwrite(df, path, "write")
+    val enveloped = withRowIds(df, preserveDuplicates)
       .withColumn("__env", st_envelope(col(geomCol)))
       // st_envelope is null for unparseable WKB AND for empty/non-finite
       // envelopes (the kernel checks finiteness — see GeomKernels
       // .envelope; a relational isnan filter here re-parsed the WKB per
       // condition under pushdown and cost 2.1x on the store gates)
       .where(col("__env").isNotNull)
-    val env = withId.select(col("__env.xmin").as("__xmin"), col("__env.ymin").as("__ymin"),
+    readOnce(enveloped) { rows =>
+      val (tagged, index) = tileTagged(rows, cfg)
+      writeRangeClustered(tagged, path)
+      writeMeta(df.sparkSession, path, Meta(geomCol, index.space, index.tiles))
+    }
+  }
+
+  /** Runs `body` over a persisted copy of `df`'s rows
+    * ([[org.apache.spark.sql.graft.Bridge.persisted]]): every job `body`
+    * starts reads the copy, which the first of them fills, instead of
+    * re-running `df`'s plan. The copy keeps `df`'s partitioning and row
+    * order, so a seeded sample or a range partitioner's sample over it
+    * picks the same rows as over `df`. Released when `body` returns or
+    * throws — callers run their whole write inside `body`. Shared by both
+    * stores' writes and each [[graft.streaming.SpatialIngest]] microbatch. */
+  private[graft] def readOnce(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    val (copy, rows) = Bridge.persisted(df)
+    try body(copy) finally rows.unpersist(blocking = false)
+  }
+
+  /** Sampled tiling and boundary replication over `rows` — the copied
+    * row-id'd rows with their non-null `__env` envelope: planning's
+    * aggregates and the tag both scan the copy, so the input is read once.
+    * [[write]]'s [[readOnce]] releases the copy after the tagged rows are
+    * written. */
+  private def tileTagged(rows: DataFrame, cfg: SpatialJoin.Config)
+      : (DataFrame, TileIndex) = {
+    val env = rows.select(col("__env.xmin").as("__xmin"), col("__env.ymin").as("__ymin"),
       col("__env.xmax").as("__xmax"), col("__env.ymax").as("__ymax"))
     val index = SpatialJoin.planTiles(env, env.limit(0), cfg)
-    val bc = spark.sparkContext.broadcast(index)
+    val bc = rows.sparkSession.sparkContext.broadcast(index)
     val tileIds = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
       bc.value.tilesFor(x1, y1, x2, y2)
     }
-    val tagged = withId
+    val tagged = rows
       .withColumn(TileCol, explode(tileIds(
         col("__env.xmin"), col("__env.ymin"), col("__env.xmax"), col("__env.ymax"))))
       .drop("__env")
@@ -175,7 +199,10 @@ object SpatialStore {
     * cases destroying the old data). The analyzed plan names every
     * file-scan root; any root equal to, under, or above the target is the
     * bug. Rebuild via a materialized copy: read → write to a FRESH path
-    * (or plain parquet staging), then write the store from that. */
+    * (or plain parquet staging), then write the store from that. Both
+    * stores' writes check the CALLER's `df`, before [[readOnce]] copies it:
+    * the copy's plan names no file scan, so a check on it would pass
+    * vacuously. */
   private[sources] def refuseSelfOverwrite(df: DataFrame, path: String,
                                            op: String): Unit = {
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -211,11 +238,12 @@ object SpatialStore {
     * rows are never rewritten. Manifest entries are bare FILE NAMES (all
     * data files sit directly under `data/`), so the store stays
     * relocatable — an absolute URI manifest would silently read the OLD
-    * location after a copy/move. */
+    * location after a copy/move. Callers pass `tagged` over a [[readOnce]]
+    * copy, so the range sample and the write scan it, and a bulk write's
+    * caller has already run [[refuseSelfOverwrite]] on its own input. */
   private[graft] def writeRangeClustered(tagged: DataFrame, path: String,
                                          append: Boolean = false): Unit = {
     val spark = tagged.sparkSession
-    if (!append) refuseSelfOverwrite(tagged, path, "write")
     val dataPath = new Path(path, DataDir)
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(): Set[String] =

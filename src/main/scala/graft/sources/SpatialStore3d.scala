@@ -58,26 +58,23 @@ object SpatialStore3d {
     * scan of what was just written (the ZoneMap discipline). Leaf ids are
     * sorted within files, so parquet row-group stats finish the pruning
     * inside each surviving file. At 100 TB: LIST = one manifest read;
-    * file count ∝ writer count, not leaf count. */
+    * file count ∝ writer count, not leaf count.
+    *
+    * The input is read ONCE, as in [[SpatialStore.write]]: the row-id'd
+    * rows with complete, finite bounds are copied
+    * ([[SpatialStore.readOnce]]), and the envelope-and-count job, the
+    * center sample, the leaf tag, the range partitioner's sample and the
+    * write's map stage all scan that copy. The copy is released when the
+    * write returns or throws (an input with no complete envelope throws
+    * after the copy exists). */
   def write(df: DataFrame, c: Mbb3Cols, path: String,
             leafCap: Int = 4096, sampleTarget: Int = 100000,
             maxDepth: Int = 12, seed: Long = 42L,
             preserveDuplicates: Boolean = false): Unit = {
-    val (tagged, tree, names) =
-      leafTagged(df, c, leafCap, sampleTarget, maxDepth, seed, preserveDuplicates)
-    SpatialStore.writeRangeClustered(tagged, path)
-    writeMeta(df.sparkSession, path, Meta(names, tree.leafBoxes))
-  }
-
-  /** Shared planning: row-id lanes, null-envelope drop, sampled octree,
-    * leaf replication — everything up to (and including) the tile tag. */
-  private def leafTagged(df: DataFrame, c: Mbb3Cols, leafCap: Int,
-                         sampleTarget: Int, maxDepth: Int, seed: Long,
-                         preserveDuplicates: Boolean)
-      : (DataFrame, Octree3d.Tree, Seq[String]) = {
-    val spark = df.sparkSession
+    // on the caller's plan: the copy's plan has no file scan to check
+    SpatialStore.refuseSelfOverwrite(df, path, "write")
     val names = Seq(c.xmin, c.ymin, c.zmin, c.xmax, c.ymax, c.zmax)
-    val withId = SpatialStore.withRowIds(df, preserveDuplicates)
+    val complete = SpatialStore.withRowIds(df, preserveDuplicates)
       .where(names.map(col(_).isNotNull).reduce(_ && _))
       // non-finite bounds drop like incomplete envelopes (a NaN would
       // poison the global min/max envelope and every octree split after)
@@ -85,36 +82,57 @@ object SpatialStore3d {
         !isnan(col(f)) && col(f) > lit(Double.NegativeInfinity) &&
           col(f) < lit(Double.PositiveInfinity)
       }.reduce(_ && _))
-    // one pass: global envelope + row count
-    val a = withId.agg(
-      min(col(c.xmin)), min(col(c.ymin)), min(col(c.zmin)),
-      max(col(c.xmax)), max(col(c.ymax)), max(col(c.zmax)),
-      count(lit(1))).head()
-    val n = a.getLong(6)
+    SpatialStore.readOnce(complete) { rows =>
+      val (tagged, tree) = leafTagged(rows, names, leafCap, sampleTarget, maxDepth, seed)
+      SpatialStore.writeRangeClustered(tagged, path)
+      writeMeta(df.sparkSession, path, Meta(names, tree.leafBoxes))
+    }
+  }
+
+  /** Sampled octree and leaf replication over `rows` — the copied
+    * row-id'd rows with complete, finite bounds in the six `names`
+    * columns: the planning jobs and the tag scan the copy, so the input is
+    * read once. [[write]]'s [[SpatialStore.readOnce]] releases the copy
+    * after the tagged rows are written, or when planning throws. */
+  private def leafTagged(rows: DataFrame, names: Seq[String], leafCap: Int,
+                         sampleTarget: Int, maxDepth: Int, seed: Long)
+      : (DataFrame, Octree3d.Tree) = {
+    val Seq(cx0, cy0, cz0, cx1, cy1, cz1) = names.map(col)
+    // one plain RDD job: global envelope + row count (a DataFrame
+    // aggregate adds a SQL execution and an adaptive job per exchange —
+    // the SpatialJoin.planTiles idiom). A bound replaces the running one
+    // only when strictly beyond it, as SQL min/max do.
+    val (space, n) = rows.select(names.map(col): _*).queryExecution.toRdd
+      .aggregate((Array.fill(3)(Double.PositiveInfinity) ++
+                  Array.fill(3)(Double.NegativeInfinity), 0L))(
+        { case ((b, k), r) =>
+          for (i <- 0 until 3) {
+            if (r.getDouble(i) < b(i)) b(i) = r.getDouble(i)
+            if (r.getDouble(i + 3) > b(i + 3)) b(i + 3) = r.getDouble(i + 3)
+          }
+          (b, k + 1) },
+        { case ((a, ka), (b, kb)) =>
+          for (i <- 0 until 3) {
+            if (b(i) < a(i)) a(i) = b(i)
+            if (b(i + 3) > a(i + 3)) a(i + 3) = b(i + 3)
+          }
+          (a, ka + kb) })
     require(n > 0, s"SpatialStore3d.write: no rows with a complete 3-D envelope")
-    val space = Array(a.getDouble(0), a.getDouble(1), a.getDouble(2),
-      a.getDouble(3), a.getDouble(4), a.getDouble(5))
     val fraction = math.min(1.0, sampleTarget.toDouble / n)
     val centers = {
-      val cdf = withId.select(
-        ((col(c.xmin) + col(c.xmax)) / 2).as("_x"),
-        ((col(c.ymin) + col(c.ymax)) / 2).as("_y"),
-        ((col(c.zmin) + col(c.zmax)) / 2).as("_z"))
+      val cdf = rows.select(((cx0 + cx1) / 2).as("_x"), ((cy0 + cy1) / 2).as("_y"),
+        ((cz0 + cz1) / 2).as("_z"))
       (if (fraction >= 1.0) cdf else cdf.sample(withReplacement = false, fraction, seed))
         .collect().map(r => Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)))
     }
     val scaledCap = math.max(1, math.floor(leafCap * fraction).toInt)
     val tree = Octree3d.build(centers, space, scaledCap, maxDepth)
-    val bc = spark.sparkContext.broadcast(tree)
+    val bc = rows.sparkSession.sparkContext.broadcast(tree)
     val leaves = udf { (x0: Double, y0: Double, z0: Double,
                         x1: Double, y1: Double, z1: Double) =>
       bc.value.leavesFor(x0, y0, z0, x1, y1, z1)
     }
-    val tagged = withId
-      .withColumn(TileCol, explode(leaves(
-        col(c.xmin), col(c.ymin), col(c.zmin),
-        col(c.xmax), col(c.ymax), col(c.zmax))))
-    (tagged, tree, names)
+    (rows.withColumn(TileCol, explode(leaves(cx0, cy0, cz0, cx1, cy1, cz1))), tree)
   }
 
   /** Containment/window read: driver prunes octree leaves against the

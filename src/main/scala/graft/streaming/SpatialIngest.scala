@@ -29,6 +29,12 @@ import graft.sources.SpatialStore
   * every read collapses. `tileTag` itself is mode-agnostic — the SAME
   * transform runs on a batch frame (tested equal) per Structured
   * Streaming's contract.
+  *
+  * Each microbatch is read ONCE: [[SpatialStore.readOnce]] copies the
+  * tagged batch, so the range partitioner's sample and the write's map
+  * stage scan the copy instead of re-running the batch plan (source scan,
+  * WKT parse, row-id hashes) twice. The copy is released when the batch's
+  * append returns or throws.
   */
 object SpatialIngest {
 
@@ -77,9 +83,10 @@ object SpatialIngest {
   /** Start the ingest: writes the same `_graft_meta.json` the batch
     * writer produces up front (the tiling is fixed), so batch readers can
     * open the store while the stream runs, then appends every microbatch
-    * with [[SpatialStore.writeRangeClustered]]. Refuses a `path` whose
-    * existing meta was planned with a different tiling: its files' tile
-    * ids would be read against the new tiles. */
+    * with [[SpatialStore.writeRangeClustered]], over a copy of the batch
+    * released when the batch ends ([[SpatialStore.readOnce]]). Refuses a
+    * `path` whose existing meta was planned with a different tiling: its
+    * files' tile ids would be read against the new tiles. */
   def start(stream: DataFrame, wktCol: String, index: TileIndex,
             path: String, checkpoint: String): StreamingQuery = {
     val spark = stream.sparkSession
@@ -95,7 +102,8 @@ object SpatialIngest {
     }
     SpatialStore.writeMeta(spark, path, SpatialStore.Meta("geom", index.space, tiles))
     val append: (DataFrame, Long) => Unit =
-      (batch, _) => SpatialStore.writeRangeClustered(batch, path, append = true)
+      (batch, _) => SpatialStore.readOnce(batch)(
+        SpatialStore.writeRangeClustered(_, path, append = true))
     tileTag(stream, wktCol, index).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(append)

@@ -344,6 +344,24 @@ class StreamingSpec extends SparkTestBase {
     assert(contained() == containedBefore && containedBefore.nonEmpty)
   }
 
+  test("SpatialIngest evaluates each microbatch once per row") {
+    val (rows, _, index) = ingestFixture()
+    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    rows.toDF("id", "wkt").coalesce(1).write.parquet(base + "/src")
+    // an always-true filter counting its evaluations: Catalyst keeps it in
+    // every plan that re-runs the batch
+    val evals = spark.sparkContext.longAccumulator("ingest_evals")
+    val pass = udf { (_: Long) => evals.add(1); true }
+    val stream = spark.readStream.schema("id BIGINT, wkt STRING").parquet(base + "/src")
+      .where(pass(col("id")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val q = SpatialIngest.start(stream, "wkt", index, base + "/store", base + "/ckpt")
+    try q.processAllAvailable() finally q.stop()
+    assert(evals.value == rows.length.toLong, "the batch plan ran more than once per row")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before == Set.empty)
+    assert(graft.sources.SpatialStore.read(spark, base + "/store").count() == rows.length)
+  }
+
   test("SpatialIngest.start refuses a store planned with a different tiling") {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.SpatialStore
