@@ -11,14 +11,14 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions = the core count (scale-adaptive: AQE coalescing
   *    stays on; the driver's low-core bench lane follows automatically);
   *  - UTC + parquet nanosAsLong: the testdata contract;
-  *  - AQE coalescing floor 64k (env `SPARK_GRAFT_MIN_PARTITION_SIZE` for
-  *    A/B): parallelismFirst merges sub-1MB shuffle partitions, but this
-  *    engine's refinement kernels (geometry predicates, exact cosines)
-  *    carry seconds of CPU per MB — the byte heuristic under-parallelizes
-  *    exactly the dense stages (measured r16: the spjoin cogroup ran 1.0s
-  *    of CPU on 2 tasks at sf0.1; q_spjoin_intersects 1.47→0.95s at a 64k
-  *    floor). At production shuffle sizes partitions are far above 1MB, so
-  *    the floor is inert there.
+  *  - AQE coalescing floor 64k: parallelismFirst merges sub-1MB shuffle
+  *    partitions, but this engine's refinement kernels (geometry
+  *    predicates, exact cosines) carry seconds of CPU per MB — the byte
+  *    heuristic under-parallelizes exactly the dense stages (measured r16:
+  *    the spjoin cogroup ran 1.0s of CPU on 2 tasks at sf0.1;
+  *    q_spjoin_intersects 1.47→0.95s at a 64k floor). At production
+  *    shuffle sizes partitions are far above 1MB, so the floor is inert
+  *    there.
   */
 object Sessions {
 
@@ -37,6 +37,5 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
 }

@@ -1,8 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import graft.core.CacheHygiene
 
 /** Link-graph curation signals: host-level PageRank and anchor-text
   * aggregation over a page-level link list.
@@ -56,23 +60,29 @@ object LinkGraph {
     *  - Edges whose src is not in `nodes` never contribute (no rank row
     *    to join); edges whose dst is not in `nodes` are dropped by the
     *    final left join. The node set is the contract boundary.
-    *  - Overflow: ANSI mode throws rather than wrapping. Worst-case a
-    *    single sink holds ~n·scale mass, so choose `scale` with
-    *    n·scale·maxWeight < 2^63 headroom (the 1e6 default leaves room
-    *    for ~10^6 hosts at 10^6-link weights).
+    *  - SQL null semantics: a null node id stays a node (it gets the
+    *    teleport rank); an edge with a null src, dst or weight contributes
+    *    nothing, and a null weight does not count toward its src's
+    *    out-weight.
+    *  - Overflow throws rather than wrapping (`Math.multiplyExact` /
+    *    `addExact`, as ANSI SQL), and so does division by a zero
+    *    out-weight. Worst-case a single sink holds ~n·scale mass, so choose
+    *    `scale` with n·scale·maxWeight < 2^63 headroom (the 1e6 default
+    *    leaves room for ~10^6 hosts at 10^6-link weights).
     *
-    * Scale shape: the edge⋈outWeight relation is computed once and
-    * persisted; each iteration is one join of the (small — one row per
-    * host) rank relation against it plus one groupBy(dst) with map-side
-    * partial sums. Rank rounds are eagerly checkpointed so the iterative
-    * plan never grows (same lineage discipline as
-    * [[graft.dedup.Components]], and the same configurable mode:
-    * `spark.graft.graph.checkpoint` = auto | local | reliable — reliable
-    * writes rounds to the session checkpoint dir and survives executor
-    * loss; auto picks it whenever a checkpoint dir is set). Because each
-    * round is materialized, AQE sees its true (tiny) size and converts
-    * the per-iteration join to a broadcast at runtime — the only
-    * repeated shuffle is the contribution aggregation.
+    * Round shape (the classic RDD PageRank): the node set and the edges,
+    * grouped by src with their out-weight, are hash-partitioned once by
+    * one `HashPartitioner` (the session's shuffle-partition count), and
+    * the adjacency is persisted. Each round joins the ranks with the
+    * adjacency on that partitioner, which is a narrow join; `reduceByKey`
+    * of the contributions is the round's only shuffle, and their left join
+    * to the node set is narrow again. The rounds run outside adaptive
+    * execution and set no session conf; the lineage is `iterations`
+    * shuffles deep, so a lost block recomputes without a checkpoint.
+    * The rounds are lazy: they run in the first job that consumes the
+    * result, which also releases the persisted adjacency. Only the input
+    * frames' own exchanges (a `distinct` node set, a grouped edge list)
+    * run when this is called, as taking the RDD of an adaptive plan does.
     *
     * Returns one row per node: (idCol, rank) with rank in `scale` units.
     */
@@ -82,112 +92,38 @@ object LinkGraph {
     require(iterations >= 1, "pageRank needs at least one iteration")
     require(dampNum > 0 && dampNum < dampDen, "damping must be in (0,1)")
     val spark = nodes.sparkSession
-    val sc = spark.sparkContext
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
-    val mode = spark.conf.getOption("spark.graft.graph.checkpoint")
-      .getOrElse("auto")
-    val reliable = mode match {
-      case "reliable" =>
-        require(sc.getCheckpointDir.isDefined,
-          "spark.graft.graph.checkpoint=reliable needs " +
-            "SparkContext.setCheckpointDir (spark.checkpoint.dir) set")
-        true
-      case "local" => false
-      case "auto"  => sc.getCheckpointDir.isDefined
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.graph.checkpoint must be auto|local|reliable, got $other")
-    }
-    def round(e: DataFrame): (DataFrame, Seq[Int]) =
-      if (reliable) (e.checkpoint(true), Nil)
-      else graft.core.CacheHygiene.trackNewRdds(sc)(e.localCheckpoint(true))
-
-    // checkpoint the node set ONCE: `n` appears in every round's plan (and
-    // round 0), so an un-materialized distinct re-scans the node source and
-    // re-runs its shuffle PER ROUND — at 100 TB that is `iterations` extra
-    // passes over the host universe for an identical tiny relation
-    // (measured r17: 4 redundant scan+distinct subtrees in q_host_rank's
-    // job log). One row per host; freed after the last round is cut loose.
-    val (n, nIds) = round(
-      nodes.select(col(idCol).cast("string").as("host")).distinct())
-    val ew = edges
-      .select(col("src").cast("string").as("src"),
-              col("dst").cast("string").as("dst"),
-              col("weight").cast("long").as("weight"))
-      .withColumn("ow", sum(col("weight")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+    val n = nodes.select(col(idCol).cast("string")).rdd
+      .map(r => (r.getString(0), ()))
+      .reduceByKey(part, (a, _) => a)
+    // src -> its out-edges (dst, weight) and its out-weight; a null-dst
+    // edge counts toward the out-weight but has no target
+    val adj = edges
+      .select(col("src").cast("string"), col("dst").cast("string"),
+              col("weight").cast("long"))
+      .where(col("src").isNotNull && col("weight").isNotNull)
+      .rdd.map(r => (r.getString(0), (r.getString(1), r.getLong(2))))
+      .groupByKey(part)
+      .mapValues { out =>
+        val ow = out.foldLeft(0L)((s, e) => Math.addExact(s, e._2))
+        (out.filter(_._1 != null).toArray, ow)
+      }
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val tele = (scale * (dampDen - dampNum)) / dampDen
-    // The engine's AQE coalescing floor (Sessions: minPartitionSize=64k)
-    // exists for compute-DENSE small shuffles — kernels with seconds of
-    // CPU per MB. PageRank rounds are the opposite shape: iterative TINY
-    // shuffles whose per-row work is one long multiply-add, where extra
-    // post-coalesce tasks are pure scheduling overhead repeated every
-    // round (round-16 verdict: q_host_rank 0.74→1.09 s under the floor).
-    // The rounds execute EAGERLY here (each is checkpointed), so the
-    // exemption scopes exactly to this loop and restores on exit; the
-    // byte heuristic it falls back to is itself scale-adaptive, so
-    // production-sized rounds are unaffected either way.
-    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val savedFloor = spark.conf.getOption(floorKey)
-    // Bounded-round AQE bypass: AQE runs each shuffle/broadcast stage as
-    // its own JOB, so one checkpointed round costs ~6 scheduled jobs —
-    // pure per-round overhead when the rank relation is dim-table sized
-    // (measured r17: q_host_rank = 23 jobs of 12-70 ms wall with ~40 ms
-    // driver gaps between them; the data stages are trivial). When the
-    // just-materialized node set is small enough that a static-partition
-    // shuffle is safe on ANY cluster (`spark.graft.graph.aqeRowThreshold`,
-    // default 4M hosts — a few hundred MB per round), the loop runs with
-    // AQE off: one job per round. Larger graphs keep AQE (runtime
-    // broadcast conversion, skew handling — the things that matter when a
-    // round is NOT small). Results are partitioning-invariant either way
-    // (exact integer arithmetic; the bit-determinism specs pin it).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val savedAqe = spark.conf.getOption(aqeKey)
-    // round 0 is a literal column over the just-checkpointed `n` — narrow
-    // on materialized blocks, so it needs no checkpoint job of its own
-    // (rankIds Nil: freeing "round 0" must not free `n`, which every later
-    // round still reads)
-    var rank: DataFrame = n.withColumn("rank", lit(scale))
-    var rankIds: Seq[Int] = Nil
-    // every conf change sits inside the try, so the finally restores the
-    // session even when the threshold parse or the count throws
-    try {
-      spark.conf.unset(floorKey) // back to Spark's byte-based default
-      val aqeRowThreshold = spark.conf
-        .getOption("spark.graft.graph.aqeRowThreshold").map(_.toLong)
-        .getOrElse(4000000L)
-      if (n.count() <= aqeRowThreshold) spark.conf.set(aqeKey, "false")
-      for (_ <- 1 to iterations) {
-        val contrib = ew
-          .join(rank.withColumnRenamed("host", "src"), "src")
-          .select(col("dst").as("host"),
-            expr("(rank * weight) div ow").as("c"))
-          .groupBy("host").agg(sum("c").as("cin"))
-        val next = n.join(contrib, Seq("host"), "left").select(col("host"),
-          (lit(tele) +
-            expr(s"(${dampNum}L * coalesce(cin, 0L)) div ${dampDen}L")).as("rank"))
-        val (ckpt, ids) = round(next)
-        graft.core.CacheHygiene.freeRdds(sc, rankIds)
-        rank = ckpt; rankIds = ids
-      }
-    } finally {
-      savedFloor.foreach(spark.conf.set(floorKey, _))
-      savedAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None    => spark.conf.unset(aqeKey)
-      }
+    var rank = n.mapValues(_ => scale)
+    for (_ <- 1 to iterations) {
+      val cin = adj.join(rank, part).values
+        .flatMap { case ((out, ow), r) =>
+          out.iterator.map { case (dst, w) => (dst, Math.multiplyExact(r, w) / ow) } }
+        .reduceByKey(part, Math.addExact(_: Long, _: Long))
+      rank = n.leftOuterJoin(cin, part).mapValues { case (_, c) =>
+        Math.addExact(tele, Math.multiplyExact(dampNum, c.getOrElse(0L)) / dampDen) }
     }
-    ew.unpersist(blocking = false)
-    // every round (including the final one) is checkpointed, so `n`'s
-    // blocks have no live reader left
-    graft.core.CacheHygiene.freeRdds(sc, nIds)
-    // the FINAL round's blocks are deliberately not freed: the returned
-    // plan reads them, and a freed localCheckpoint cannot recompute (same
-    // policy as Components — superseded rounds were freed eagerly above,
-    // the live one is one row per host and reclaimed by the ContextCleaner
-    // once the caller drops the DataFrame)
-    rank.select(col("host").as(idCol), col("rank"))
+    CacheHygiene.releaseAfterFirstJob(spark.sparkContext, adj)(adj.unpersist(blocking = false))
+    spark.createDataFrame(rank.map { case (h, r) => Row(h, r) },
+      StructType(Seq(StructField(idCol, StringType), StructField("rank", LongType, nullable = false))))
   }
 
   /** Incoming-anchor-text aggregation: for each target host/page, the total

@@ -21,9 +21,7 @@ import graft.partition.SpatialPartitioner
   *   cache-file tile idx  -> broadcast [[TileIndex]] (padded to cover space)
   *   map-to-tile job      -> explode over broadcast index (1 row -> N tiles)
   *   RESQUE reducer       -> cogroup per tile: STRtree filter + exact refine
-  *   sort+uniq dedup job  -> reference-point emit (no extra shuffle); the
-  *                           reference's global sort+uniq is kept as the
-  *                           optional `dedup = "global"` mode
+  *   sort+uniq dedup job  -> reference-point emit (no extra shuffle)
   *
   * All stages live in ONE Spark DAG; the only materialization barriers are
   * the stats aggregate and the sample collect (the adaptive step the
@@ -41,8 +39,9 @@ object SpatialJoin {
     * @param partitioner fg|bsp|qt|str|hc|slc|bos
     * @param bucket     target objects per tile; <=0 = auto
     * @param sampleTarget max MBBs collected to the driver for partitioning
-    * @param dedup      refpoint|global|none (refpoint is exact for every
-    *                   partitioner because the tile index covers the space)
+    * @param dedup      refpoint|none (refpoint is exact for every
+    *                   partitioner because the tile index covers the space;
+    *                   none emits a pair once per tile both sides share)
     * @param keepTile   append an IntegerType `tile_id` column carrying the
     *                   tile that emitted each pair (the reference's `tileid`
     *                   projection field, resque_2d.cpp:448). With the
@@ -67,7 +66,6 @@ object SpatialJoin {
       partitioner: String = "fg",
       bucket: Int = 0,
       sampleTarget: Int = 100000,
-      seed: Long = 42L,
       dedup: String = "refpoint",
       knnBroadcastThreshold: Int = 10000,
       earth: Boolean = false,
@@ -84,7 +82,8 @@ object SpatialJoin {
   private val X1 = "__xmin"; private val Y1 = "__ymin"
   private val X2 = "__xmax"; private val Y2 = "__ymax"
   private val Rad = "__rad"
-  private val LId = "__lid"; private val RId = "__rid"
+  /** Seed of the tile-planning sample: the same inputs plan the same tiles. */
+  private val SampleSeed = 42L
 
   /** Adds envelope columns derived from the WKB geometry column `geom`;
     * drops rows with null/unparseable geometry (reference P3/P4 behavior).
@@ -157,6 +156,8 @@ object SpatialJoin {
     require(cfg.distance >= 0.0 && !cfg.distance.isNaN &&
         !cfg.distance.isInfinite,
       s"distance must be a finite value >= 0, got ${cfg.distance}")
+    require(cfg.dedup == "refpoint" || cfg.dedup == "none",
+      s"dedup must be refpoint|none, got ${cfg.dedup}")
   }
 
   /** Plan tiles from a seeded sample of both inputs' MBBs. Returns the tile
@@ -259,7 +260,7 @@ object SpatialJoin {
       return new TileIndex(tiles, space, shards)
     }
     val fraction = math.min(1.0, cfg.sampleTarget.toDouble / n)
-    val sample = mbbs.sample(withReplacement = false, fraction, cfg.seed)
+    val sample = mbbs.sample(withReplacement = false, fraction, SampleSeed)
       .limit(cfg.sampleTarget * 2)
       .collect()
       .map(row => Mbb(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3)))
@@ -332,21 +333,6 @@ object SpatialJoin {
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column name collision between join sides: $dup")
 
-    // global dedup keys pairs by per-side unique ids so value-identical input
-    // rows survive (plain dropDuplicates over all columns would merge them).
-    // The positional ids are FROZEN by an eager localCheckpoint: a partial
-    // stage retry then replays stored blocks instead of re-running
-    // monotonically_increasing_id with a different row order (the
-    // SPARK-23207 lost/duplicated-pair class); losing a checkpointed block
-    // fails the job loudly rather than silently re-keying pairs. Cost is
-    // one materialization of each side, paid only in this opt-in mode.
-    val useGlobal = cfg.dedup == "global"
-    val (left0, right0) =
-      if (useGlobal)
-        (left.withColumn(LId, monotonically_increasing_id()).localCheckpoint(true),
-         right.withColumn(RId, monotonically_increasing_id()).localCheckpoint(true))
-      else (left, right)
-
     // probe-side MBB expansion (spjoin_2d.hpp:61-66); earth mode converts
     // the meter distance to conservative per-row DEGREE windows instead of
     // expanding by meters-as-degrees (see withEnvEarthMeters — the refine
@@ -354,9 +340,9 @@ object SpatialJoin {
     val refineDist = if (cfg.predicate == "dwithin") cfg.distance else 0.0
     val lEnv =
       if (cfg.predicate == "dwithin" && cfg.earth)
-        withEnvEarthMeters(left0, leftGeom, cfg.distance)
-      else withEnv(left0, leftGeom, refineDist)
-    val rEnv = withEnv(right0, rightGeom, 0.0)
+        withEnvEarthMeters(left, leftGeom, cfg.distance)
+      else withEnv(left, leftGeom, refineDist)
+    val rEnv = withEnv(right, rightGeom, 0.0)
 
     // st_equals implies envelope equality, so the complete candidate set is
     // a plain hash EQUI-join on the four envelope coordinates — no tiling,
@@ -366,12 +352,10 @@ object SpatialJoin {
     // results (envelope-equal pairs always share every tile).
     if (cfg.predicate == "equals") {
       val keys = Seq(X1, Y1, X2, Y2)
-      val out0 = lEnv.join(rEnv, keys)
+      val out = lEnv.join(rEnv, keys)
         .where(graft.functions.st_equals(col(leftGeom), col(rightGeom)))
-        .select((left0.columns ++ right0.columns).map(col).toIndexedSeq: _*)
-      val out = if (cfg.keepTile) out0.withColumn("tile_id", lit(-1)) else out0
-      return if (useGlobal) out.dropDuplicates(LId, RId).drop(LId, RId)
-             else out
+        .select((left.columns ++ right.columns).map(col).toIndexedSeq: _*)
+      return if (cfg.keepTile) out.withColumn("tile_id", lit(-1)) else out
     }
 
     // each side is read ONCE: planning's aggregates and the cogroup all
@@ -404,11 +388,11 @@ object SpatialJoin {
         explode(probeKeys(col(X1), col(Y1), col(X2), col(Y2), col("__salt"))))
     val rt = r.withColumn(Tile,
       explode(buildKeys(col(X1), col(Y1), col(X2), col(Y2))))
-    val lOutCols = left0.columns
-    val rOutCols = right0.columns
+    val lOutCols = left.columns
+    val rOutCols = right.columns
     val keepTile = cfg.keepTile
     val outSchema0 = StructType(
-      lOutCols.map(left0.schema(_)) ++ rOutCols.map(right0.schema(_)))
+      lOutCols.map(left.schema(_)) ++ rOutCols.map(right.schema(_)))
     val outSchema =
       if (keepTile) outSchema0.add("tile_id", IntegerType, nullable = false)
       else outSchema0
@@ -421,7 +405,7 @@ object SpatialJoin {
     val lKeep = lOutCols.map(ltSchema.fieldIndex)
     val rKeep = rOutCols.map(rtSchema.fieldIndex)
     val predicate = cfg.predicate
-    val useRefPoint = !useGlobal && cfg.dedup != "none"
+    val useRefPoint = cfg.dedup == "refpoint"
 
     implicit val longEnc = Encoders.scalaLong
     implicit val rowEnc = Encoders.row(outSchema)
@@ -482,16 +466,7 @@ object SpatialJoin {
         }
       }
     }
-    val out0 = joined.toDF()
-    // global-dedup replicas of one pair differ ONLY in tile_id — normalize
-    // to the min tile so dropDuplicates' arbitrary row choice cannot leak
-    // a run-dependent tile id into the output
-    val out =
-      if (useGlobal && keepTile)
-        out0.withColumn("tile_id",
-          min(col("tile_id")).over(Window.partitionBy(col(LId), col(RId))))
-      else out0
-    if (useGlobal) out.dropDuplicates(LId, RId).drop(LId, RId) else out
+    joined.toDF()
   }
 
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every

@@ -698,44 +698,33 @@ object Queries {
     * as KnnJoinExec in TILE-LOCAL mode (the reference CLI's
     * `-p st_nearest2`, knn_2d.hpp:22-233, reachable without the
     * programmatic API). Shares q_knn_tile's oracle: the tiling is pinned
-    * to the gate's bucket=500 via the runtime conf (tile-local results
-    * DEPEND on the tiling, unlike exact kNN), restored afterwards so the
-    * conf never leaks into sibling gates. Distance is recomputed post-join
+    * to the gate's bucket=500 (tile-local results DEPEND on the tiling,
+    * unlike exact kNN) by planning in a copy of the caller's session with
+    * `graft.join.bucket=500`, so adaptive re-planning reads 500 every time
+    * and the caller's conf never changes. Distance is recomputed post-join
     * with st_distance (the same JTS distance the engine ranked by), and
     * the plan is asserted to carry a tileLocal KnnJoinExec. */
   def qKnnTileSqlGate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.{KnnJoinExec, SpatialJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(SpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SpatialJoinStrategy
-    graft.functions.registerAll(spark)
-    custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
+    import org.apache.spark.sql.graft.{Bridge, KnnJoinExec, SpatialJoinStrategy}
+    val s = Bridge.sessionWith(spark, "graft.join.bucket" -> "500")
+    if (!s.experimental.extraStrategies.contains(SpatialJoinStrategy))
+      s.experimental.extraStrategies = s.experimental.extraStrategies :+ SpatialJoinStrategy
+    graft.functions.registerAll(s)
+    custPoints(s, dir).select(col("id").as("cid"), col("geom").as("g1"))
       .createOrReplaceTempView("gate_knn2_c")
-    suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
+    suppPoints(s, dir).select(col("id").as("sid"), col("geom").as("g2"))
       .createOrReplaceTempView("gate_knn2_s")
-    val prev = spark.conf.getOption("graft.join.bucket")
-    spark.conf.set("graft.join.bucket", "500")
-    try {
-      val q = spark.sql(
-        """SELECT cid, st_distance(g1, g2) AS dist
-          |FROM gate_knn2_c c JOIN gate_knn2_s s
-          |ON st_nearest2(c.g1, s.g2, 3)""".stripMargin)
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      val root = q.queryExecution.executedPlan
-      val plans = root +: root.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
-      require(plans.exists(_.collect {
-        case e: KnnJoinExec if e.tileLocal => e }.nonEmpty),
-        "q_knn_tile_sql must plan through a tile-local KnnJoinExec")
-      // the conf is read whenever the join is (re)planned: materialize the kNN
-      // relation NOW (localCheckpoint, eager) so restoring the conf below
-      // cannot re-tile a lazily-executed plan
-      q.localCheckpoint(true)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.join.bucket", v)
-        case None => spark.conf.unset("graft.join.bucket")
-      }
-    }
+    val q = s.sql(
+      """SELECT cid, st_distance(g1, g2) AS dist
+        |FROM gate_knn2_c c JOIN gate_knn2_s s
+        |ON st_nearest2(c.g1, s.g2, 3)""".stripMargin)
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = q.queryExecution.executedPlan
+    val plans = root +: root.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
+    require(plans.exists(_.collect {
+      case e: KnnJoinExec if e.tileLocal => e }.nonEmpty),
+      "q_knn_tile_sql must plan through a tile-local KnnJoinExec")
+    q
   }
 
   val qKnnTileSqlGateSql: String = qKnnTileSql

@@ -405,6 +405,24 @@ class PlanHealthSpec extends SparkTestBase {
         s"only in GraftExtensions: ${(b -- a).toSeq.sorted}")
   }
 
+  test("no engine code sets session conf outside the Bridge clone helper") {
+    // a conf an operator sets on the session it was handed reaches the
+    // plans of sibling queries sharing that session; an operator that
+    // needs other settings plans in Bridge.sessionWith's copy instead
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("conf.set(") || line.contains("conf.unset(") =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }
+    val (bridge, others) = hits.partition(_.startsWith("org/apache/spark/sql/graft/Bridge.scala:"))
+    assert(others.isEmpty, s"session conf written outside Bridge.sessionWith: ${others.mkString("; ")}")
+    assert(bridge.size == 1, s"lint lost the Bridge clone helper: $hits")
+  }
+
   test("span dedup reassembly never explodes the corpus into token rows") {
     val df = graft.dedup.TextDedup.dedupSpansAcross(
       Queries.table(spark, dir, "documents"), "doc_id", "text", k = 5)
@@ -546,6 +564,7 @@ class PlanHealthSpec extends SparkTestBase {
       spark.sparkContext.addSparkListener(listener)
       try {
         graft.graph.LinkGraph.pageRank(nodes, "host", edges, iterations = iters)
+          .collect() // the rounds are lazy: they run in the consuming job
         Thread.sleep(500) // listener bus is async
       } finally spark.sparkContext.removeSparkListener(listener)
       w.get

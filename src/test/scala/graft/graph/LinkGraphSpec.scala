@@ -23,31 +23,6 @@ class LinkGraphSpec extends SparkTestBase {
     assert(r2 == Map("A" -> 1361L, "B" -> 575L, "C" -> 1063L))
   }
 
-  test("pageRank restores the session conf when it throws") {
-    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val thresholdKey = "spark.graft.graph.aqeRowThreshold"
-    val saved = Seq(floorKey, aqeKey).map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(floorKey, "64k")
-    spark.conf.set(aqeKey, "true")
-    spark.conf.set(thresholdKey, "abc")
-    try {
-      val nodes = Seq("A", "B").toDF("host")
-      val edges = Seq(("A", "B", 1L)).toDF("src", "dst", "weight")
-      intercept[NumberFormatException] {
-        LinkGraph.pageRank(nodes, "host", edges, iterations = 1)
-      }
-      assert(spark.conf.getOption(floorKey) == Some("64k"))
-      assert(spark.conf.getOption(aqeKey) == Some("true"))
-    } finally {
-      spark.conf.unset(thresholdKey)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
-
   test("dangling nodes keep teleport-only rank; foreign-dst edges drop") {
     // D is dangling (no out-edges) and nothing links to it after iter 1;
     // an edge to an unknown host X must not surface X in the output.
@@ -77,31 +52,31 @@ class LinkGraphSpec extends SparkTestBase {
     assert(a == b)
   }
 
-  test("reliable-checkpoint mode matches local rounds and writes files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt")
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    sc.setCheckpointDir(dir.toString)
-    spark.conf.set("spark.graft.graph.checkpoint", "reliable")
-    try {
-      val nodes = Seq("A", "B", "C").toDF("host")
-      val edges = Seq(("A", "B", 1L), ("B", "C", 1L), ("C", "A", 1L))
-        .toDF("src", "dst", "weight")
-      val rel = ranks(LinkGraph.pageRank(nodes, "host", edges, iterations = 3))
-      spark.conf.set("spark.graft.graph.checkpoint", "local")
-      val loc = ranks(LinkGraph.pageRank(nodes, "host", edges, iterations = 3))
-      assert(rel == loc)
-      def anyFile(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-      assert(anyFile(dir.toFile), "no reliable checkpoint files written")
-      spark.conf.set("spark.graft.graph.checkpoint", "bogus")
-      intercept[IllegalArgumentException] {
-        LinkGraph.pageRank(nodes, "host", edges, iterations = 1)
-      }
-    } finally {
-      spark.conf.unset("spark.graft.graph.checkpoint")
-      prior.foreach(sc.setCheckpointDir)
+  test("pageRank keeps SQL null semantics: null hosts are nodes, null edges contribute nothing") {
+    val nodes = Seq("A", "B", null).toDF("host")
+    // A's null-dst edge counts toward A's out-weight (2) but reaches no
+    // node; the null-src and null-weight edges count nowhere
+    val edges = Seq[(String, String, Option[Long])](("A", "B", Some(1L)),
+      ("A", null, Some(1L)), (null, "B", Some(5L)), ("B", "A", None),
+      ("B", "A", Some(2L))).toDF("src", "dst", "weight")
+    val r1 = ranks(LinkGraph.pageRank(nodes, "host", edges,
+      iterations = 1, scale = 1000L))
+    assert(r1 == Map("A" -> 1000L, "B" -> 575L, (null: String) -> 150L))
+  }
+
+  test("pageRank throws on overflow and on a zero out-weight") {
+    def arithmetic(body: => Any): Boolean = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
     }
+    val nodes = Seq("A", "B").toDF("host")
+    val heavy = Seq(("A", "B", 100L)).toDF("src", "dst", "weight")
+    assert(arithmetic(ranks(LinkGraph.pageRank(nodes, "host", heavy,
+      iterations = 1, scale = 100000000000000000L))), "rank * weight overflow")
+    val zero = Seq(("A", "B", 0L)).toDF("src", "dst", "weight")
+    assert(arithmetic(ranks(LinkGraph.pageRank(nodes, "host", zero,
+      iterations = 1))), "division by a zero out-weight")
   }
 
   test("hostGraph drops self-loops and counts multiplicity") {

@@ -114,6 +114,18 @@ class AdversarialInputSpec extends SparkTestBase {
     }).contains("maxDistance"))
   }
 
+  test("a misspelled dedup mode fails fast instead of running refpoint") {
+    val df = cleanRows.toDF("id", "geom")
+    val r = cleanRows.map { case (i, g) => (i + 50, g) }.toDF("rid", "rgeom")
+    for (mode <- Seq("global", "refpiont", "")) {
+      val e = intercept[IllegalArgumentException] {
+        SpatialJoin.join(df, "geom", r, "rgeom", SpatialJoin.Config(dedup = mode))
+      }
+      assert(Option(e.getMessage).exists(_.contains("dedup must be refpoint|none")),
+        s"dedup = '$mode': ${e.getMessage}")
+    }
+  }
+
   test("empty relations: joins return empty with the right schema, no crash") {
     val empty = Seq.empty[(Long, Array[Byte])].toDF("lid", "lgeom")
     val full = cleanRows.map { case (i, g) => (i + 1000, g) }.toDF("rid", "rgeom")

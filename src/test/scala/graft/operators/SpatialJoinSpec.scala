@@ -101,23 +101,23 @@ class SpatialJoinSpec extends SparkTestBase {
     assert(got == want)
   }
 
-  test("global dedup == refpoint dedup, and preserves duplicate input rows") {
-    val a = df(la, "id1", "g1"); val b = df(lb, "id2", "g2")
-    val ref = SpatialJoin.join(a, "g1", b, "g2", SpatialJoin.Config(bucket = 40))
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val glob = SpatialJoin.join(a, "g1", b, "g2",
-        SpatialJoin.Config(bucket = 40, dedup = "global"))
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
-    assert(ref == glob)
+  test("refpoint dedup == brute force, and preserves duplicate input rows") {
+    val b = df(lb, "id2", "g2")
+    val got = SpatialJoin.join(df(la, "id1", "g1"), "g1", b, "g2",
+        SpatialJoin.Config(bucket = 40))
+      .select("id1", "id2").as[(Long, Long)].collect().toSeq
+    val want = brute(la, lb, _.intersects(_))
+    assert(got.size == want.size && got.toSet == want)
 
-    // two value-identical left rows must yield 2x the pairs in global mode
+    // two value-identical left rows must yield every one of their pairs twice
     val dupRows = la.take(20) ++ la.take(20)
-    val ad = df(dupRows, "id1", "g1")
-    val n = SpatialJoin.join(ad, "g1", b, "g2",
-        SpatialJoin.Config(bucket = 40, dedup = "global")).count()
-    val n1 = SpatialJoin.join(df(la.take(20), "id1", "g1"), "g1", b, "g2",
-        SpatialJoin.Config(bucket = 40)).count()
-    assert(n == 2 * n1, s"global dedup collapsed duplicate input rows: $n vs 2*$n1")
+    val dup = SpatialJoin.join(df(dupRows, "id1", "g1"), "g1", b, "g2",
+        SpatialJoin.Config(bucket = 40))
+      .select("id1", "id2").as[(Long, Long)].collect().toSeq
+    val want20 = brute(la.take(20), lb, _.intersects(_))
+    assert(want20.nonEmpty)
+    assert(dup.groupBy(identity).map { case (p, ps) => p -> ps.size } ==
+      want20.map(_ -> 2).toMap, "duplicate input rows lost or gained pairs")
   }
 
   test("self-join excludes identity via caller predicate") {
