@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.Bridge
 
@@ -105,6 +105,20 @@ package object functions {
     col(CanonicalizeUrl(ex(url), dropParams))
   def cdc_chunks(bin: Column, minSize: Int, avgBits: Int, maxSize: Int): Column =
     col(CdcChunks(ex(bin), minSize, avgBits, maxSize))
+
+  /** `df` with `value` appended as column `name`, keeping only the rows
+    * where it is not null — with `value` evaluated once per row. The drop is
+    * a generator (explode of the value's null-filtered singleton array):
+    * Catalyst never pushes a filter on a generated column below its
+    * Generate, and the file scan stays the plan's leaf. The plain
+    * `withColumn(name, value).where(col(name).isNotNull)` lets predicate
+    * pushdown substitute `value` into a filter below the projection, so
+    * every kernel under it ran twice per row (three times for a WKT parse
+    * under an envelope). Column order and nullability are that form's. */
+  private[graft] def withNonNull(df: DataFrame, name: String, value: Column): DataFrame = {
+    import org.apache.spark.sql.{functions => F}
+    df.select(F.col("*"), F.explode(F.filter(F.array(value), _.isNotNull)).as(name))
+  }
 
   /** Register every spatial function in the session's FunctionRegistry for
     * SQL use. Idempotent. */

@@ -9,7 +9,7 @@ import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
 
 import graft.core.{CacheHygiene, Geo, GeometryCodec, GeomPredicates, Mbb, TileBoundary}
-import graft.functions.{st_envelope, st_geomfromwkt}
+import graft.functions.{st_envelope, withNonNull}
 import graft.partition.SpatialPartitioner
 
 /** Tile-partitioned spatial join — the Spark-native re-expression of the
@@ -20,7 +20,9 @@ import graft.partition.SpatialPartitioner
   *   sample+partition job -> driver-side partitioner over a seeded sample
   *   cache-file tile idx  -> broadcast [[TileIndex]] (padded to cover space)
   *   map-to-tile job      -> explode over broadcast index (1 row -> N tiles)
-  *   RESQUE reducer       -> cogroup per tile: STRtree filter + exact refine
+  *   RESQUE reducer       -> cogroup per refine slot (one tile, or shard
+  *                           of a hot tile, per task; heaviest first):
+  *                           STRtree filter + exact refine
   *   sort+uniq dedup job  -> reference-point emit (no extra shuffle)
   *
   * All stages live in ONE Spark DAG; the only materialization barriers are
@@ -79,9 +81,14 @@ object SpatialJoin {
       probeCollectMax: Long = 1000000L)
 
   private val Tile = "__tile"
+  private val Slot = "__slot"
   private val X1 = "__xmin"; private val Y1 = "__ymin"
   private val X2 = "__xmax"; private val Y2 = "__ymax"
   private val Rad = "__rad"
+  /** Tiles per core of the auto bucket, and the cap on refine tasks per
+    * core: enough tasks to balance uneven tiles without paying a task per
+    * tiny tile. */
+  private val TasksPerCore = 4
   /** Seed of the tile-planning sample: the same inputs plan the same tiles. */
   private val SampleSeed = 42L
 
@@ -92,12 +99,13 @@ object SpatialJoin {
     * doubles are already in hand — a relational isnan/Inf filter on these
     * columns measured 2.2x on every join gate (pushdown substitutes the
     * st_envelope alias into each condition, re-parsing the WKB per
-    * condition). */
+    * condition). For the same reason the null drop is a generator
+    * ([[graft.functions.withNonNull]]): a `__env IS NOT NULL` filter was
+    * pushed below the projection as `isnotnull(st_envelope(geom))`, and
+    * through a text source's projection as a second WKT parse. */
   private def withEnv(df: DataFrame, geom: String, expand: Double): DataFrame = {
-    val e = st_envelope(col(geom))
     val d = lit(expand)
-    df.withColumn("__env", e)
-      .where(col("__env").isNotNull)
+    withNonNull(df, "__env", st_envelope(col(geom)))
       .withColumn(X1, col("__env.xmin") - d)
       .withColumn(Y1, col("__env.ymin") - d)
       .withColumn(X2, col("__env.xmax") + d)
@@ -122,8 +130,7 @@ object SpatialJoin {
   private def withEnvEarthMeters(df: DataFrame, geom: String,
                                  meters: Double): DataFrame = {
     val dLat = Geo.latDegrees(meters)
-    df.withColumn("__env", st_envelope(col(geom)))
-      .where(col("__env").isNotNull)
+    withNonNull(df, "__env", st_envelope(col(geom)))
       .withColumn("__phimax",
         greatest(abs(col("__env.ymin")), abs(col("__env.ymax"))) + lit(dLat))
       .withColumn("__s", sin(lit(meters / (2.0 * Geo.EarthRadiusMeters))) /
@@ -144,6 +151,22 @@ object SpatialJoin {
       .drop("__env", "__phimax", "__s", "__dlon", "__wrap")
   }
 
+  /** The two sides of [[join]] as it reads them: envelope columns appended,
+    * rows without one dropped, each geometry's envelope computed once.
+    * Probe-side MBB expansion (spjoin_2d.hpp:61-66); earth mode converts
+    * the meter distance to conservative per-row DEGREE windows instead of
+    * expanding by meters-as-degrees (see withEnvEarthMeters — the refine
+    * threshold stays in meters, so results are unchanged). */
+  private[graft] def enveloped(left: DataFrame, leftGeom: String,
+                               right: DataFrame, rightGeom: String,
+                               cfg: Config): (DataFrame, DataFrame) = {
+    val l =
+      if (cfg.predicate == "dwithin" && cfg.earth)
+        withEnvEarthMeters(left, leftGeom, cfg.distance)
+      else withEnv(left, leftGeom, if (cfg.predicate == "dwithin") cfg.distance else 0.0)
+    (l, withEnv(right, rightGeom, 0.0))
+  }
+
   /** Shared entry-point argument validation: a malformed config must fail
     * with a targeted message BEFORE any job runs, never distort results
     * (round-14 verdict #7). `SpatialPartitioner(name)` already rejects
@@ -161,7 +184,9 @@ object SpatialJoin {
   }
 
   /** Plan tiles from a seeded sample of both inputs' MBBs. Returns the tile
-    * index to broadcast. Mirrors spjoin steps 2-4 (query_spjoin.hpp:74-230). */
+    * index to broadcast, with the per-tile counts planning took as its
+    * weights (none for the `*_dist` tilings). Mirrors spjoin steps 2-4
+    * (query_spjoin.hpp:74-230). */
   def planTiles(l: DataFrame, r: DataFrame, cfg: Config): TileIndex = {
     val cols = Seq(X1, Y1, X2, Y2).map(col)
     val mbbs = l.select(cols: _*).unionAll(r.select(cols: _*))
@@ -175,7 +200,7 @@ object SpatialJoin {
       return new TileIndex(Array(TileBoundary(0, Mbb(0, 0, 1, 1))), Mbb(0, 0, 1, 1))
     val spark = l.sparkSession
     val bucket = if (cfg.bucket > 0) cfg.bucket
-      else math.max(1000L, n / (spark.sparkContext.defaultParallelism.toLong * 4)).toInt
+      else math.max(1000L, n / (spark.sparkContext.defaultParallelism.toLong * TasksPerCore)).toInt
     // hc_dist: fully distributed Hilbert tiling over the WHOLE relation
     // (no driver sample) — the 100 TB path (SURVEY G5)
     if (cfg.partitioner == "hc_dist") {
@@ -231,33 +256,31 @@ object SpatialJoin {
     // column arithmetic, ≤ tiles output rows) — exact counts, where the
     // sampled path under-detects hotspots once the sample fraction drops
     // at scale. twoLevel still samples: its hot-tile refinement needs
-    // member envelopes.
+    // member envelopes. The histogram is kept whole: its counts weigh the
+    // refine tasks (TileIndex.refineSlots).
     if (cfg.partitioner == "fg" && !cfg.twoLevel) {
       val tiles = graft.partition.FixedGridPartitioner.partitionCount(n, space, bucket)
-      val shards: Map[Int, Int] =
-        if (cfg.hotTileFactor <= 0) Map.empty
-        else {
-          val (sx, sy) = graft.partition.FixedGridPartitioner.gridDims(n, space, bucket)
-          val w = math.max(space.width, 1e-12); val h = math.max(space.height, 1e-12)
-          def ax(c: org.apache.spark.sql.Column, lo: Double, span: Double, s: Int) =
-            greatest(lit(0), least(lit(s - 1),
-              floor((c - lit(lo)) / lit(span) * s).cast("int")))
-          val tileId =
-            ax(((col(Y1) + col(Y2)) / 2), space.ymin, h, sy) * sx +
-            ax(((col(X1) + col(X2)) / 2), space.xmin, w, sx)
-          val hotAt = cfg.hotTileFactor.toLong * bucket
-          val counts = mbbs.select(tileId).queryExecution.toRdd
-            .mapPartitions { rows =>
-              val c = scala.collection.mutable.HashMap.empty[Int, Long]
-              rows.foreach(row => c(row.getInt(0)) = c.getOrElse(row.getInt(0), 0L) + 1)
-              Iterator.single(c)
-            }
-            .reduce { (a, b) => b.foreach { case (t, k) => a(t) = a.getOrElse(t, 0L) + k }; a }
-          counts.iterator.collect { case (t, c) if c > hotAt =>
-            t -> math.min(TileIndex.MaxShards, math.ceil(2.0 * c / hotAt).toInt)
-          }.toMap
+      if (cfg.hotTileFactor <= 0) return new TileIndex(tiles, space)
+      val (sx, sy) = graft.partition.FixedGridPartitioner.gridDims(n, space, bucket)
+      val w = math.max(space.width, 1e-12); val h = math.max(space.height, 1e-12)
+      def ax(c: org.apache.spark.sql.Column, lo: Double, span: Double, s: Int) =
+        greatest(lit(0), least(lit(s - 1),
+          floor((c - lit(lo)) / lit(span) * s).cast("int")))
+      val tileId =
+        ax(((col(Y1) + col(Y2)) / 2), space.ymin, h, sy) * sx +
+        ax(((col(X1) + col(X2)) / 2), space.xmin, w, sx)
+      val hotAt = cfg.hotTileFactor.toLong * bucket
+      val counts = mbbs.select(tileId).queryExecution.toRdd
+        .mapPartitions { rows =>
+          val c = scala.collection.mutable.HashMap.empty[Int, Long]
+          rows.foreach(row => c(row.getInt(0)) = c.getOrElse(row.getInt(0), 0L) + 1)
+          Iterator.single(c)
         }
-      return new TileIndex(tiles, space, shards)
+        .reduce { (a, b) => b.foreach { case (t, k) => a(t) = a.getOrElse(t, 0L) + k }; a }
+      val shards = counts.iterator.collect { case (t, c) if c > hotAt =>
+        t -> math.min(TileIndex.MaxShards, math.ceil(2.0 * c / hotAt).toInt)
+      }.toMap
+      return new TileIndex(tiles, space, shards, counts.toMap)
     }
     val fraction = math.min(1.0, cfg.sampleTarget.toDouble / n)
     val sample = mbbs.sample(withReplacement = false, fraction, SampleSeed)
@@ -286,16 +309,17 @@ object SpatialJoin {
         }
       }
     // Spatially-unsplittable hotspots (many rows at one coordinate) cannot
-    // be tamed by more tiles: shard their probe side instead (salting).
+    // be tamed by more tiles: shard their probe side instead (salting). The
+    // sample's per-tile counts also weigh the refine tasks.
     val covered = new TileIndex(tiles, space)
+    val counts = scala.collection.mutable.Map.empty[Int, Long]
+    sample.foreach { m =>
+      val t = covered.refTile(m.centerX, m.centerY)
+      if (t >= 0) counts(t) = counts.getOrElse(t, 0L) + 1
+    }
     val shards: Map[Int, Int] =
       if (cfg.hotTileFactor <= 0) Map.empty
       else {
-        val counts = scala.collection.mutable.Map.empty[Int, Int]
-        sample.foreach { m =>
-          val t = covered.refTile(m.centerX, m.centerY)
-          if (t >= 0) counts(t) = counts.getOrElse(t, 0) + 1
-        }
         val hotAt = cfg.hotTileFactor.toLong * scaledBucket
         counts.iterator.collect {
           case (t, c) if c > hotAt =>
@@ -303,7 +327,7 @@ object SpatialJoin {
               math.ceil(2.0 * c / hotAt).toInt)
         }.toMap
       }
-    if (shards.isEmpty) covered else new TileIndex(covered.tiles, space, shards)
+    covered.withCounts(shards, counts.toMap)
   }
 
   /** J2: self spatial join. With replicate=false (the default, like the
@@ -324,7 +348,14 @@ object SpatialJoin {
   /** Full spatial join. `left`/`right` must contain a WKB BinaryType
     * geometry column named `leftGeom`/`rightGeom`; all other column names
     * must be disjoint between the two sides. Output = left columns ++ right
-    * columns, one row per matched pair (deduped across tiles). */
+    * columns, one row per matched pair (deduped across tiles).
+    *
+    * Each side's envelope is computed once per row ([[enveloped]]) into a
+    * persisted copy that planning and the refine stage share. The refine
+    * stage runs one task per (tile, shard) key, heaviest first by the
+    * per-tile counts planning took, up to 4 tasks per core; past that the
+    * keys pack into slots ([[TileIndex.refineSlots]]) and a task walks
+    * its keys in order, holding one key's STRtree at a time ([[keyRuns]]). */
   def join(left: DataFrame, leftGeom: String,
            right: DataFrame, rightGeom: String,
            cfg: Config = Config()): DataFrame = {
@@ -333,16 +364,8 @@ object SpatialJoin {
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"column name collision between join sides: $dup")
 
-    // probe-side MBB expansion (spjoin_2d.hpp:61-66); earth mode converts
-    // the meter distance to conservative per-row DEGREE windows instead of
-    // expanding by meters-as-degrees (see withEnvEarthMeters — the refine
-    // threshold below stays in meters, so results are unchanged)
     val refineDist = if (cfg.predicate == "dwithin") cfg.distance else 0.0
-    val lEnv =
-      if (cfg.predicate == "dwithin" && cfg.earth)
-        withEnvEarthMeters(left, leftGeom, cfg.distance)
-      else withEnv(left, leftGeom, refineDist)
-    val rEnv = withEnv(right, rightGeom, 0.0)
+    val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, cfg)
 
     // st_equals implies envelope equality, so the complete candidate set is
     // a plain hash EQUI-join on the four envelope coordinates — no tiling,
@@ -368,6 +391,11 @@ object SpatialJoin {
     Seq(lCopy, rCopy).foreach(c =>
       CacheHygiene.releaseAfterFirstJob(spark.sparkContext, c)(c.unpersist(blocking = false)))
     val bc = spark.sparkContext.broadcast(index)
+    // one refine task per (tile, shard) key, heaviest first, up to
+    // TasksPerCore per core; past that, keys pack into slots
+    val (nSlots, slotOf) =
+      index.refineSlots(TasksPerCore * spark.sparkContext.defaultParallelism)
+    val slotBc = spark.sparkContext.broadcast(slotOf)
 
     // composite (tile, shard) keys: probe rows land on one shard per tile,
     // build rows replicate to every shard of a hot tile (salting)
@@ -377,6 +405,7 @@ object SpatialJoin {
     val buildKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
       bc.value.buildKeys(x1, y1, x2, y2)
     }
+    val slot = udf { (key: Long) => slotBc.value(key) }
     // hot-tile shard salt must be DETERMINISTIC under stage re-execution
     // (monotonically_increasing_id depends on partition layout/row order, so
     // a partial map-stage retry could re-salt rows onto shards reducers
@@ -386,8 +415,10 @@ object SpatialJoin {
         xxhash64(col(X1), col(Y1), col(X2), col(Y2), col(leftGeom)))
       .withColumn(Tile,
         explode(probeKeys(col(X1), col(Y1), col(X2), col(Y2), col("__salt"))))
+      .withColumn(Slot, slot(col(Tile)))
     val rt = r.withColumn(Tile,
       explode(buildKeys(col(X1), col(Y1), col(X2), col(Y2))))
+      .withColumn(Slot, slot(col(Tile)))
     val lOutCols = left.columns
     val rOutCols = right.columns
     val keepTile = cfg.keepTile
@@ -407,66 +438,116 @@ object SpatialJoin {
     val predicate = cfg.predicate
     val useRefPoint = cfg.dedup == "refpoint"
 
-    implicit val longEnc = Encoders.scalaLong
+    // Both sides are partitioned straight onto their slot (the partition id
+    // IS the slot), then grouped by it: the pass-through partitioning
+    // satisfies the cogroup's clustering on the slot column, so no second
+    // exchange is planned. Hashing keys onto the session's shuffle
+    // partitions instead leaves one task holding several tiles while other
+    // cores idle; heaviest-first slots keep every core busy to the end.
+    // Within a slot both sides arrive sorted by key (the one sort the
+    // cogroup plans anyway, on (slot, key) instead of slot), so a task
+    // holds one key's STRtree at a time, however many keys the slot packs.
+    implicit val intEnc = Encoders.scalaInt
     implicit val rowEnc = Encoders.row(outSchema)
-    val lkv = lt.groupByKey(_.getLong(lTileIdx))
-    val rkv = rt.groupByKey(_.getLong(rTileIdx))
+    def bySlot(df: DataFrame) =
+      df.repartitionById(nSlots, col(Slot)).groupBy(col(Slot))
+        .as[Int, Row](intEnc, Encoders.row(df.schema))
 
-    val joined = lkv.cogroup(rkv) { (key: Long, ls: Iterator[Row], rs: Iterator[Row]) =>
-      val tile = (key / TileIndex.MaxShards).toInt
+    val joined = bySlot(lt).cogroupSorted(bySlot(rt))(col(Tile))(col(Tile)) {
+        (_: Int, ls: Iterator[Row], rs: Iterator[Row]) =>
       // index set 2, probe set 1 — same sides as RESQUE (spjoin_2d.hpp:34-50)
-      val tree = new STRtree()
-      var rCount = 0
-      rs.foreach { row =>
-        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-        if (g != null) {
-          val e = new Envelope(row.getDouble(rEnvIdx(0)), row.getDouble(rEnvIdx(2)),
-                               row.getDouble(rEnvIdx(1)), row.getDouble(rEnvIdx(3)))
-          tree.insert(e, (g, row)); rCount += 1
-        }
-      }
-      if (rCount == 0) Iterator.empty
-      else {
-        tree.build()
-        val idx = bc.value
-        ls.flatMap { lrow =>
-          val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-          if (g1 == null) Iterator.empty
-          else {
-            val px1 = lrow.getDouble(lEnvIdx(0)); val py1 = lrow.getDouble(lEnvIdx(1))
-            val px2 = lrow.getDouble(lEnvIdx(2)); val py2 = lrow.getDouble(lEnvIdx(3))
-            val probe = new Envelope(px1, px2, py1, py2)
-            val hits = tree.query(probe)
-            val out = Vector.newBuilder[Row]
-            var i = 0
-            while (i < hits.size()) {
-              val (g2, rrow) = hits.get(i).asInstanceOf[(Geometry, Row)]
-              if (GeomPredicates.eval(predicate, g1, g2, refineDist, cfg.earth)) {
-                val emit = if (!useRefPoint) true else {
-                  // bottom-left corner of probe-env ∩ build-env intersection
-                  val refx = math.max(px1, rrow.getDouble(rEnvIdx(0)))
-                  val refy = math.max(py1, rrow.getDouble(rEnvIdx(1)))
-                  idx.refTile(refx, refy) == tile
-                }
-                if (emit) {
-                  val vals = new Array[Any](
-                    lKeep.length + rKeep.length + (if (keepTile) 1 else 0))
-                  var k = 0
-                  while (k < lKeep.length) { vals(k) = lrow.get(lKeep(k)); k += 1 }
-                  var m = 0
-                  while (m < rKeep.length) { vals(k + m) = rrow.get(rKeep(m)); m += 1 }
-                  if (keepTile) vals(k + m) = tile
-                  out += Row.fromSeq(vals.toIndexedSeq)
-                }
-              }
-              i += 1
-            }
-            out.result().iterator
+      val idx = bc.value
+      keyRuns(rs, ls)(_.getLong(rTileIdx), _.getLong(lTileIdx)) { build =>
+        val tree = new STRtree()
+        build.foreach { row =>
+          val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
+          if (g != null) {
+            val e = new Envelope(row.getDouble(rEnvIdx(0)), row.getDouble(rEnvIdx(2)),
+                                 row.getDouble(rEnvIdx(1)), row.getDouble(rEnvIdx(3)))
+            tree.insert(e, (g, row))
           }
+        }
+        tree.build()
+        tree
+      } { (tree, lrow) =>
+        val g1 =
+          if (tree.isEmpty) null
+          else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
+        if (g1 == null) Iterator.empty
+        else {
+          val tile = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
+          val px1 = lrow.getDouble(lEnvIdx(0)); val py1 = lrow.getDouble(lEnvIdx(1))
+          val px2 = lrow.getDouble(lEnvIdx(2)); val py2 = lrow.getDouble(lEnvIdx(3))
+          val probe = new Envelope(px1, px2, py1, py2)
+          val hits = tree.query(probe)
+          val out = Vector.newBuilder[Row]
+          var i = 0
+          while (i < hits.size()) {
+            val (g2, rrow) = hits.get(i).asInstanceOf[(Geometry, Row)]
+            if (GeomPredicates.eval(predicate, g1, g2, refineDist, cfg.earth)) {
+              val emit = if (!useRefPoint) true else {
+                // bottom-left corner of probe-env ∩ build-env intersection
+                val refx = math.max(px1, rrow.getDouble(rEnvIdx(0)))
+                val refy = math.max(py1, rrow.getDouble(rEnvIdx(1)))
+                idx.refTile(refx, refy) == tile
+              }
+              if (emit) {
+                val vals = new Array[Any](
+                  lKeep.length + rKeep.length + (if (keepTile) 1 else 0))
+                var k = 0
+                while (k < lKeep.length) { vals(k) = lrow.get(lKeep(k)); k += 1 }
+                var m = 0
+                while (m < rKeep.length) { vals(k + m) = rrow.get(rKeep(m)); m += 1 }
+                if (keepTile) vals(k + m) = tile
+                out += Row.fromSeq(vals.toIndexedSeq)
+              }
+            }
+            i += 1
+          }
+          out.result().iterator
         }
       }
     }
     joined.toDF()
+  }
+
+  /** Walks one refine slot whose build and probe rows both arrive sorted by
+    * key: for each run of build rows with one key, `index` builds that
+    * key's index, and `refine` runs each probe row of the key against it,
+    * before the next key's build rows are read. The last key's index is
+    * dropped before the next one is built, so a slot holds one key's index
+    * at a time however many keys it packs. Probe rows of keys with no build
+    * rows are skipped. */
+  private[operators] def keyRuns[B, P, T, R](build: Iterator[B], probe: Iterator[P])(
+      buildKey: B => Long, probeKey: P => Long)(index: Iterator[B] => T)(
+      refine: (T, P) => Iterator[R]): Iterator[R] = new Iterator[R] {
+    private val bs = build.buffered
+    private val ps = probe.buffered
+    private var key = 0L
+    private var current: Option[T] = None
+    private var out: Iterator[R] = Iterator.empty
+
+    private def advance(): Boolean =
+      if (current.isDefined && ps.hasNext && probeKey(ps.head) == key) {
+        out = refine(current.get, ps.next()); true
+      } else if (bs.hasNext) {
+        current = None
+        key = buildKey(bs.head)
+        val run = new Iterator[B] {
+          def hasNext: Boolean = bs.hasNext && buildKey(bs.head) == key
+          def next(): B = bs.next()
+        }
+        current = Some(index(run))
+        run.foreach(_ => ())
+        while (ps.hasNext && probeKey(ps.head) < key) ps.next()
+        true
+      } else false
+
+    def hasNext: Boolean = {
+      while (!out.hasNext && advance()) {}
+      out.hasNext
+    }
+    def next(): R = if (hasNext) out.next() else Iterator.empty.next()
   }
 
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every

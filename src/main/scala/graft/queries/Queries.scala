@@ -1348,7 +1348,7 @@ object Queries {
     * write -> tokenize -> WKT-parse -> envelope must equal the oracle's
     * box arithmetic. */
   def qWktRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = "/tmp/graft_wkt_roundtrip"
+    val out = workDir("graft_wkt_roundtrip", dir)
     val good = partBoxes(spark, dir)
       .select(concat_ws("\t", col("id"), st_astext(col("geom")), col("w")).as("line"))
     // P3/P4 gated here too: malformed-WKT and empty-geometry rows are NOT
@@ -1376,7 +1376,7 @@ object Queries {
     * (manipulate_2d.cpp:199-203). Writes `id x1 y1 x2 y2` TSV + trailer,
     * reads back through WktTsvSource.readMbb. */
   def qMbbRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = "/tmp/graft_mbb_roundtrip"
+    val out = workDir("graft_mbb_roundtrip", dir)
     val b = partBoxes(spark, dir)
     val rows = b.select(concat_ws("\t", col("id"), col("x0"), col("y0"),
       col("x0") + col("w"), col("y0") + col("w")).as("line"))
@@ -1401,7 +1401,7 @@ object Queries {
     * Local-FS sink is a test harness affordance; the read path is the
     * production surface. */
   def qWholeFile(spark: SparkSession, dir: String): DataFrame = {
-    val out = "/tmp/graft_wholefile"
+    val out = workDir("graft_wholefile", dir)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm)
       f.delete()
@@ -1462,8 +1462,7 @@ object Queries {
     * plain window filter. */
   def qStoreContainment(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SpatialStore
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_store_gate_" +
-      new java.io.File(dir).getName
+    val path = workDir("graft_store_gate", dir)
     SpatialStore.write(partBoxes(spark, dir), "geom", path,
       SpatialJoin.Config(partitioner = "fg", bucket = 300))
     val window = graft.core.GeometryCodec.toWkb(
@@ -1488,8 +1487,7 @@ object Queries {
   def qStoreContainment3d(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SpatialStore3d
     import graft.operators.SpatialJoin3d.Mbb3Cols
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_store3d_gate_" +
-      new java.io.File(dir).getName
+    val path = workDir("graft_store3d_gate", dir)
     val cubes = partCubes(spark, dir).select(col("id"),
       col("x0"), col("y0"), col("z0"),
       (col("x0") + col("w")).as("x1"), (col("y0") + col("w")).as("y1"),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import graft.core.{Mbb, TileBoundary}
-import graft.functions.{st_envelope, st_intersects}
+import graft.functions.{st_envelope, st_intersects, withNonNull}
 import graft.operators.{SpatialJoin, TileIndex}
 
 /** Spatially partitioned table layout — the Spark re-expression of the
@@ -143,19 +143,24 @@ object SpatialStore {
             preserveDuplicates: Boolean = false): Unit = {
     // on the caller's plan: the copy's plan has no file scan to check
     refuseSelfOverwrite(df, path, "write")
-    val enveloped = withRowIds(df, preserveDuplicates)
-      .withColumn("__env", st_envelope(col(geomCol)))
-      // st_envelope is null for unparseable WKB AND for empty/non-finite
-      // envelopes (the kernel checks finiteness — see GeomKernels
-      // .envelope; a relational isnan filter here re-parsed the WKB per
-      // condition under pushdown and cost 2.1x on the store gates)
-      .where(col("__env").isNotNull)
-    readOnce(enveloped) { rows =>
+    readOnce(enveloped(df, geomCol, preserveDuplicates)) { rows =>
       val (tagged, index) = tileTagged(rows, cfg)
       writeRangeClustered(tagged, path)
       writeMeta(df.sparkSession, path, Meta(geomCol, index.space, index.tiles))
     }
   }
+
+  /** The rows [[write]] copies: `df` with its row ids and the `__env`
+    * envelope of `geomCol`, rows without one dropped. st_envelope is null
+    * for unparseable WKB AND for empty/non-finite envelopes (the kernel
+    * checks finiteness — see GeomKernels.envelope; a relational isnan
+    * filter here re-parsed the WKB per condition under pushdown and cost
+    * 2.1x on the store gates). The drop is a generator
+    * ([[graft.functions.withNonNull]]) so pushdown cannot copy the envelope,
+    * or a text source's WKT parse, into a filter: each runs once per row. */
+  private[sources] def enveloped(df: DataFrame, geomCol: String,
+                                 preserveDuplicates: Boolean): DataFrame =
+    withNonNull(withRowIds(df, preserveDuplicates), "__env", st_envelope(col(geomCol)))
 
   /** Runs `body` over a persisted copy of `df`'s rows
     * ([[org.apache.spark.sql.graft.Bridge.persisted]]): every job `body`

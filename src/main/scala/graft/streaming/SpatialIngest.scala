@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.{Mbb, TileBoundary}
-import graft.functions.{st_envelope, st_geomfromwkt}
+import graft.functions.{st_envelope, st_geomfromwkt, withNonNull}
 import graft.operators.TileIndex
 import graft.sources.SpatialStore
 
@@ -71,9 +71,9 @@ object SpatialIngest {
       else if (contained) bc.value.tilesFor(x1, y1, x2, y2)
       else bc.value.tilesFor(x1, y1, x2, y2) :+ overflow
     }
-    SpatialStore.withRowIds(df)
-      .withColumn("geom", st_geomfromwkt(col(wktCol)))
-      .where(col("geom").isNotNull)
+    // unparseable rows drop through a generator, so the WKT parses once
+    // per row (graft.functions.withNonNull)
+    withNonNull(SpatialStore.withRowIds(df), "geom", st_geomfromwkt(col(wktCol)))
       .withColumn("__env", st_envelope(col("geom")))
       .withColumn(SpatialStore.TileCol, explode(tileIds(
         col("__env.xmin"), col("__env.ymin"), col("__env.xmax"), col("__env.ymax"))))

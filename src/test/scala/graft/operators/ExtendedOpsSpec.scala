@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 import graft.core.Geo
@@ -22,6 +23,15 @@ class ExtendedOpsSpec extends SparkTestBase {
       "4\t\tdelta\n")
     val df = WktTsvSource.read(spark, f.toString, shpIdx = 2)
     assert(df.columns.toSeq == Seq("f1", "f2", "f3", "geom"))
+    // every field a nullable string, then the nullable WKB geometry
+    assert(df.schema == StructType(Seq("f1", "f2", "f3").map(StructField(_, StringType)) :+
+      StructField("geom", BinaryType)))
+    // one st_geomfromwkt in the optimized plan: the malformed-row drop must
+    // not become a pushed-down filter that parses every row again
+    def parses(d: org.apache.spark.sql.DataFrame) = d.queryExecution.optimizedPlan.collect {
+      case p => p.expressions.map(_.collect { case e: StGeomFromWkt => e }.size).sum
+    }.sum
+    assert(parses(df) == 1, df.queryExecution.optimizedPlan)
     assert(df.count() == 2) // malformed + empty dropped
     val kept = df.select("f1").as[String].collect().toSet
     assert(kept == Set("1", "2"))
@@ -30,6 +40,7 @@ class ExtendedOpsSpec extends SparkTestBase {
 
     val lax = WktTsvSource.read(spark, f.toString, shpIdx = 2, dropMalformed = false)
     assert(lax.count() == 4)
+    assert(lax.schema == df.schema && parses(lax) == 1)
 
     // roundtrip write
     val out = dir.resolve("out").toString
