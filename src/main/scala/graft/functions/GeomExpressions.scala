@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.{Envelope, Geometry}
 
 import graft.core.GeometryCodec
 
@@ -73,14 +73,18 @@ object GeomKernels {
       // envelope columns costs 2.2x on every join gate (measured r15:
       // filter pushdown substitutes the st_envelope alias into each of
       // the 12 conditions, re-parsing the WKB 12x per row).
-      if (e.isNull ||
-          !(java.lang.Double.isFinite(e.getMinX) &&
-            java.lang.Double.isFinite(e.getMinY) &&
-            java.lang.Double.isFinite(e.getMaxX) &&
-            java.lang.Double.isFinite(e.getMaxY))) null
+      if (!located(e)) null
       else InternalRow(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
     }
   }
+
+  /** Whether `e` places its geometry in the plane: not JTS's null envelope
+    * and no non-finite bound. Rows failing it are dropped by every join and
+    * store path (see [[envelope]]). */
+  def located(e: Envelope): Boolean =
+    !e.isNull &&
+      java.lang.Double.isFinite(e.getMinX) && java.lang.Double.isFinite(e.getMinY) &&
+      java.lang.Double.isFinite(e.getMaxX) && java.lang.Double.isFinite(e.getMaxY)
 
   def predicate(a: Array[Byte], b: Array[Byte], name: String): java.lang.Boolean = {
     val g1 = GeometryCodec.fromWkb(a)

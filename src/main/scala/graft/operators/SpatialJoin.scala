@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -9,7 +12,7 @@ import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
 
 import graft.core.{CacheHygiene, Geo, GeometryCodec, GeomPredicates, Mbb, TileBoundary}
-import graft.functions.{st_envelope, withNonNull}
+import graft.functions.{GeomKernels, st_envelope, withNonNull}
 import graft.partition.SpatialPartitioner
 
 /** Tile-partitioned spatial join — the Spark-native re-expression of the
@@ -85,9 +88,9 @@ object SpatialJoin {
   private val X1 = "__xmin"; private val Y1 = "__ymin"
   private val X2 = "__xmax"; private val Y2 = "__ymax"
   private val Rad = "__rad"
-  /** Tiles per core of the auto bucket, and the cap on refine tasks per
-    * core: enough tasks to balance uneven tiles without paying a task per
-    * tiny tile. */
+  /** Tiles per core of the auto bucket, and the most refine keys per core
+    * that still run one task each ([[slotCogroup]]): enough tasks to
+    * balance uneven tiles without paying a task per tiny tile. */
   private val TasksPerCore = 4
   /** Seed of the tile-planning sample: the same inputs plan the same tiles. */
   private val SampleSeed = 42L
@@ -352,17 +355,16 @@ object SpatialJoin {
     *
     * Each side's envelope is computed once per row ([[enveloped]]) into a
     * persisted copy that planning and the refine stage share. The refine
-    * stage runs one task per (tile, shard) key, heaviest first by the
-    * per-tile counts planning took, up to 4 tasks per core; past that the
-    * keys pack into slots ([[TileIndex.refineSlots]]) and a task walks
-    * its keys in order, holding one key's STRtree at a time ([[keyRuns]]). */
+    * stage is [[slotCogroup]]: one task per (tile, shard) key, heaviest
+    * first by the per-tile counts planning took, up to 4 tasks per core
+    * (more keys pack onto one task per core), each holding one key's
+    * STRtree at a time. */
   def join(left: DataFrame, leftGeom: String,
            right: DataFrame, rightGeom: String,
            cfg: Config = Config()): DataFrame = {
     val spark = left.sparkSession
     validate(cfg)
-    val dup = left.columns.toSet.intersect(right.columns.toSet)
-    require(dup.isEmpty, s"column name collision between join sides: $dup")
+    requireDisjoint(left, right)
 
     val refineDist = if (cfg.predicate == "dwithin") cfg.distance else 0.0
     val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, cfg)
@@ -391,11 +393,6 @@ object SpatialJoin {
     Seq(lCopy, rCopy).foreach(c =>
       CacheHygiene.releaseAfterFirstJob(spark.sparkContext, c)(c.unpersist(blocking = false)))
     val bc = spark.sparkContext.broadcast(index)
-    // one refine task per (tile, shard) key, heaviest first, up to
-    // TasksPerCore per core; past that, keys pack into slots
-    val (nSlots, slotOf) =
-      index.refineSlots(TasksPerCore * spark.sparkContext.defaultParallelism)
-    val slotBc = spark.sparkContext.broadcast(slotOf)
 
     // composite (tile, shard) keys: probe rows land on one shard per tile,
     // build rows replicate to every shard of a hot tile (salting)
@@ -405,7 +402,6 @@ object SpatialJoin {
     val buildKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
       bc.value.buildKeys(x1, y1, x2, y2)
     }
-    val slot = udf { (key: Long) => slotBc.value(key) }
     // hot-tile shard salt must be DETERMINISTIC under stage re-execution
     // (monotonically_increasing_id depends on partition layout/row order, so
     // a partial map-stage retry could re-salt rows onto shards reducers
@@ -415,10 +411,8 @@ object SpatialJoin {
         xxhash64(col(X1), col(Y1), col(X2), col(Y2), col(leftGeom)))
       .withColumn(Tile,
         explode(probeKeys(col(X1), col(Y1), col(X2), col(Y2), col("__salt"))))
-      .withColumn(Slot, slot(col(Tile)))
     val rt = r.withColumn(Tile,
       explode(buildKeys(col(X1), col(Y1), col(X2), col(Y2))))
-      .withColumn(Slot, slot(col(Tile)))
     val lOutCols = left.columns
     val rOutCols = right.columns
     val keepTile = cfg.keepTile
@@ -429,7 +423,7 @@ object SpatialJoin {
       else outSchema0
 
     val ltSchema = lt.schema; val rtSchema = rt.schema
-    val lTileIdx = ltSchema.fieldIndex(Tile); val rTileIdx = rtSchema.fieldIndex(Tile)
+    val lTileIdx = ltSchema.fieldIndex(Tile)
     val lGeomIdx = ltSchema.fieldIndex(leftGeom); val rGeomIdx = rtSchema.fieldIndex(rightGeom)
     val lEnvIdx = Seq(X1, Y1, X2, Y2).map(ltSchema.fieldIndex)
     val rEnvIdx = Seq(X1, Y1, X2, Y2).map(rtSchema.fieldIndex)
@@ -438,86 +432,123 @@ object SpatialJoin {
     val predicate = cfg.predicate
     val useRefPoint = cfg.dedup == "refpoint"
 
-    // Both sides are partitioned straight onto their slot (the partition id
-    // IS the slot), then grouped by it: the pass-through partitioning
-    // satisfies the cogroup's clustering on the slot column, so no second
-    // exchange is planned. Hashing keys onto the session's shuffle
-    // partitions instead leaves one task holding several tiles while other
-    // cores idle; heaviest-first slots keep every core busy to the end.
-    // Within a slot both sides arrive sorted by key (the one sort the
-    // cogroup plans anyway, on (slot, key) instead of slot), so a task
-    // holds one key's STRtree at a time, however many keys the slot packs.
-    implicit val intEnc = Encoders.scalaInt
-    implicit val rowEnc = Encoders.row(outSchema)
-    def bySlot(df: DataFrame) =
-      df.repartitionById(nSlots, col(Slot)).groupBy(col(Slot))
-        .as[Int, Row](intEnc, Encoders.row(df.schema))
-
-    val joined = bySlot(lt).cogroupSorted(bySlot(rt))(col(Tile))(col(Tile)) {
-        (_: Int, ls: Iterator[Row], rs: Iterator[Row]) =>
-      // index set 2, probe set 1 — same sides as RESQUE (spjoin_2d.hpp:34-50)
-      val idx = bc.value
-      keyRuns(rs, ls)(_.getLong(rTileIdx), _.getLong(lTileIdx)) { build =>
-        val tree = new STRtree()
-        build.foreach { row =>
-          val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-          if (g != null) {
-            val e = new Envelope(row.getDouble(rEnvIdx(0)), row.getDouble(rEnvIdx(2)),
-                                 row.getDouble(rEnvIdx(1)), row.getDouble(rEnvIdx(3)))
-            tree.insert(e, (g, row))
-          }
-        }
-        tree.build()
-        tree
-      } { (tree, lrow) =>
-        val g1 =
-          if (tree.isEmpty) null
-          else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-        if (g1 == null) Iterator.empty
-        else {
-          val tile = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
-          val px1 = lrow.getDouble(lEnvIdx(0)); val py1 = lrow.getDouble(lEnvIdx(1))
-          val px2 = lrow.getDouble(lEnvIdx(2)); val py2 = lrow.getDouble(lEnvIdx(3))
-          val probe = new Envelope(px1, px2, py1, py2)
-          val hits = tree.query(probe)
-          val out = Vector.newBuilder[Row]
-          var i = 0
-          while (i < hits.size()) {
-            val (g2, rrow) = hits.get(i).asInstanceOf[(Geometry, Row)]
-            if (GeomPredicates.eval(predicate, g1, g2, refineDist, cfg.earth)) {
-              val emit = if (!useRefPoint) true else {
-                // bottom-left corner of probe-env ∩ build-env intersection
-                val refx = math.max(px1, rrow.getDouble(rEnvIdx(0)))
-                val refy = math.max(py1, rrow.getDouble(rEnvIdx(1)))
-                idx.refTile(refx, refy) == tile
-              }
-              if (emit) {
-                val vals = new Array[Any](
-                  lKeep.length + rKeep.length + (if (keepTile) 1 else 0))
-                var k = 0
-                while (k < lKeep.length) { vals(k) = lrow.get(lKeep(k)); k += 1 }
-                var m = 0
-                while (m < rKeep.length) { vals(k + m) = rrow.get(rKeep(m)); m += 1 }
-                if (keepTile) vals(k + m) = tile
-                out += Row.fromSeq(vals.toIndexedSeq)
-              }
+    // index set 2, probe set 1 — same sides as RESQUE (spjoin_2d.hpp:34-50)
+    slotCogroup(lt, rt, index, outSchema)(rowTree(rGeomIdx, rEnvIdx)) { (tree, lrow) =>
+      val g1 =
+        if (tree.isEmpty) null
+        else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
+      if (g1 == null) Iterator.empty
+      else {
+        val idx = bc.value
+        val tile = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
+        val px1 = lrow.getDouble(lEnvIdx(0)); val py1 = lrow.getDouble(lEnvIdx(1))
+        val px2 = lrow.getDouble(lEnvIdx(2)); val py2 = lrow.getDouble(lEnvIdx(3))
+        val probe = new Envelope(px1, px2, py1, py2)
+        val hits = tree.query(probe)
+        val out = Vector.newBuilder[Row]
+        var i = 0
+        while (i < hits.size()) {
+          val (g2, rrow) = hits.get(i).asInstanceOf[(Geometry, Row)]
+          if (GeomPredicates.eval(predicate, g1, g2, refineDist, cfg.earth)) {
+            val emit = if (!useRefPoint) true else {
+              // bottom-left corner of probe-env ∩ build-env intersection
+              val refx = math.max(px1, rrow.getDouble(rEnvIdx(0)))
+              val refy = math.max(py1, rrow.getDouble(rEnvIdx(1)))
+              idx.refTile(refx, refy) == tile
             }
-            i += 1
+            if (emit) {
+              val vals = new Array[Any](
+                lKeep.length + rKeep.length + (if (keepTile) 1 else 0))
+              var k = 0
+              while (k < lKeep.length) { vals(k) = lrow.get(lKeep(k)); k += 1 }
+              var m = 0
+              while (m < rKeep.length) { vals(k + m) = rrow.get(rKeep(m)); m += 1 }
+              if (keepTile) vals(k + m) = tile
+              out += Row.fromSeq(vals.toIndexedSeq)
+            }
           }
-          out.result().iterator
+          i += 1
         }
+        out.result().iterator
       }
     }
-    joined.toDF()
+  }
+
+  /** An STRtree over `rows` with a parseable geometry at `geomIdx`, each
+    * inserted as (geometry, row) under its envelope columns `envIdx`. */
+  private def rowTree(geomIdx: Int, envIdx: Seq[Int])(rows: Iterator[Row]): STRtree = {
+    val tree = new STRtree()
+    rows.foreach { row =>
+      val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](geomIdx))
+      if (g != null)
+        tree.insert(new Envelope(row.getDouble(envIdx(0)), row.getDouble(envIdx(2)),
+                                 row.getDouble(envIdx(1)), row.getDouble(envIdx(3))), (g, row))
+    }
+    tree.build()
+    tree
+  }
+
+  private def requireDisjoint(left: DataFrame, right: DataFrame): Unit = {
+    val dup = left.columns.toSet.intersect(right.columns.toSet)
+    require(dup.isEmpty, s"column name collision between join sides: $dup")
+  }
+
+  /** The refine stage of every 2-D tiled operator. `probe` and `build` rows
+    * carry their composite (tile, shard) key in a LongType `__tile` column,
+    * built by `index`'s key arithmetic ([[TileIndex.probeKeys]],
+    * [[TileIndex.buildKeys]], [[TileIndex.probeKey]]). Both sides are
+    * partitioned straight onto the key's refine slot
+    * ([[TileIndex.refineSlots]], heaviest key first; the partition id IS
+    * the slot). Up to [[TasksPerCore]] keys per core, each key is one
+    * task, so the scheduler evens out keys whose planned weight misjudges
+    * their work. Past that, keys are packed anyway, and packing by weight
+    * onto one slot per core spends the fewest tasks: a q_knn_tile
+    * `knnJoin` (30 keys of cheap point searches, 4 cores) used 0.32-0.36
+    * task-CPU-s per run on 16 packed slots against 0.24-0.27 on 4, in the
+    * same wall time. The slots are then grouped: the pass-through
+    * partitioning satisfies the cogroup's clustering on the slot column, so
+    * no second exchange is planned. Hashing keys onto the session's shuffle
+    * partitions instead leaves one task holding several tiles while other
+    * cores idle, and adaptive execution coalesces them further.
+    *
+    * Within a slot both sides arrive sorted by key (the one sort the
+    * cogroup plans anyway, on (slot, key) instead of slot), and [[keyRuns]]
+    * walks them: `index` builds one key's index from its build rows, and
+    * `refine` turns each of the key's probe rows into output rows laid out
+    * as `outSchema`. */
+  private def slotCogroup[T](probe: DataFrame, build: DataFrame, slots: TileIndex,
+                             outSchema: StructType)(
+      index: Iterator[Row] => T)(refine: (T, Row) => Iterator[Row]): DataFrame = {
+    val sc = probe.sparkSession.sparkContext
+    val cores = sc.defaultParallelism
+    val keys = slots.tiles.iterator.map(t => slots.shardsOf(t.tileId)).sum
+    val (nSlots, slotOf) =
+      slots.refineSlots(if (keys <= TasksPerCore * cores) keys else cores)
+    val slotBc = sc.broadcast(slotOf)
+    val slot = udf { (key: Long) => slotBc.value(key) }
+    val pKey = probe.schema.fieldIndex(Tile); val bKey = build.schema.fieldIndex(Tile)
+    // keys are never null: declaring the slot non-null gives both sides the
+    // same grouping type, whatever the nullability of their key columns
+    val slotCol = Bridge.column(AssertNotNull(Bridge.expression(slot(col(Tile)))))
+    def bySlot(df: DataFrame) = {
+      val slotted = df.withColumn(Slot, slotCol)
+      slotted.repartitionById(nSlots, col(Slot)).groupBy(col(Slot))
+        .as[Int, Row](Encoders.scalaInt, Encoders.row(slotted.schema))
+    }
+    bySlot(probe).cogroupSorted(bySlot(build))(col(Tile))(col(Tile)) {
+      (_: Int, ps: Iterator[Row], bs: Iterator[Row]) =>
+        keyRuns(bs, ps)(_.getLong(bKey), _.getLong(pKey))(index)(refine)
+    }(Encoders.row(outSchema)).toDF()
   }
 
   /** Walks one refine slot whose build and probe rows both arrive sorted by
-    * key: for each run of build rows with one key, `index` builds that
-    * key's index, and `refine` runs each probe row of the key against it,
-    * before the next key's build rows are read. The last key's index is
-    * dropped before the next one is built, so a slot holds one key's index
-    * at a time however many keys it packs. Probe rows of keys with no build
-    * rows are skipped. */
+    * key: for each key that has probe rows, `index` builds that key's index
+    * from its build rows (none, for a key without build rows), and `refine`
+    * runs each probe row of the key against it, before the next key's rows
+    * are read. The last key's index is dropped before the next one is
+    * built, so a slot holds one key's index at a time however many keys it
+    * packs. Build rows of keys without probe rows are passed over unread
+    * into any index. */
   private[operators] def keyRuns[B, P, T, R](build: Iterator[B], probe: Iterator[P])(
       buildKey: B => Long, probeKey: P => Long)(index: Iterator[B] => T)(
       refine: (T, P) => Iterator[R]): Iterator[R] = new Iterator[R] {
@@ -530,16 +561,16 @@ object SpatialJoin {
     private def advance(): Boolean =
       if (current.isDefined && ps.hasNext && probeKey(ps.head) == key) {
         out = refine(current.get, ps.next()); true
-      } else if (bs.hasNext) {
+      } else if (ps.hasNext) {
         current = None
-        key = buildKey(bs.head)
+        key = probeKey(ps.head)
+        while (bs.hasNext && buildKey(bs.head) < key) bs.next()
         val run = new Iterator[B] {
           def hasNext: Boolean = bs.hasNext && buildKey(bs.head) == key
           def next(): B = bs.next()
         }
         current = Some(index(run))
         run.foreach(_ => ())
-        while (ps.hasNext && probeKey(ps.head) < key) ps.next()
         true
       } else false
 
@@ -550,139 +581,174 @@ object SpatialJoin {
     def next(): R = if (hasNext) out.next() else Iterator.empty.next()
   }
 
+  /** One tile's right geometries, in arrival order, indexed for nearest-
+    * neighbour search — the per-tile R-tree of the reference's kNN reducer
+    * (knn_2d.hpp:146-179) and the one top-m kernel of every kNN path.
+    * Every geometry, and every query, must be located
+    * ([[GeomKernels.located]]): the search below ends once its query
+    * envelope covers the m-th candidate or the whole tile, and an empty or
+    * non-finite envelope is never covered. */
+  private[operators] final class KnnTile(geoms: Array[Geometry]) {
+    require(geoms.forall(g => GeomKernels.located(g.getEnvelopeInternal)),
+      "KnnTile indexes located geometries only")
+    // built on first need: a tile with at most m geometries answers every
+    // query by a full sort and never pays for the tree
+    private lazy val (tree, dataDiag) = {
+      val t = new STRtree()
+      val dataEnv = new Envelope()
+      var p = 0
+      while (p < geoms.length) {
+        t.insert(geoms(p).getEnvelopeInternal, (geoms(p), p))
+        dataEnv.expandToInclude(geoms(p).getEnvelopeInternal)
+        p += 1
+      }
+      t.build()
+      // radius-growth floor for the re-query loop below
+      (t, math.hypot(dataEnv.getWidth, dataEnv.getHeight))
+    }
+
+    /** (distance, position) pairs sorted by distance, then position: the m
+      * nearest geometries to `g1` (all of them, when there are at most m),
+      * followed by every other geometry within the radius that proved them,
+      * which includes every geometry tied with the m-th.
+      *
+      * Branch-and-bound seeds the radius with the largest distance among
+      * the m items JTS's nearestNeighbour returns. Seed only: it can return
+      * the same item twice, so that maximum may undershoot the true m-th
+      * distance. The envelope query re-runs with a doubled radius until the
+      * m-th candidate provably lies inside it (nothing outside the query
+      * envelope can beat it) or the query covered the whole tile, which
+      * makes the result exact regardless. O(log n) per query instead of a
+      * full sort of the tile. */
+    def nearest(g1: Geometry, m: Int): Array[(Double, Int)] = {
+      require(GeomKernels.located(g1.getEnvelopeInternal), "KnnTile queries a located geometry")
+      def ranked(ps: Iterator[Int]): Array[(Double, Int)] =
+        ps.map(p => (g1.distance(geoms(p)), p)).toArray.sorted(ByDistPos)
+      if (geoms.length <= m) ranked(geoms.indices.iterator)
+      else {
+        val itemDist = new org.locationtech.jts.index.strtree.ItemDistance {
+          override def distance(a: ItemBoundable, b: ItemBoundable): Double =
+            a.getItem.asInstanceOf[(Geometry, Int)]._1
+              .distance(b.getItem.asInstanceOf[(Geometry, Int)]._1)
+        }
+        var r = tree.nearestNeighbour(g1.getEnvelopeInternal, (g1, -1), itemDist, m)
+          .iterator.map(o => g1.distance(o.asInstanceOf[(Geometry, Int)]._1)).max
+        var res: Array[(Double, Int)] = null
+        while (res == null) {
+          val env = g1.getEnvelopeInternal.copy(); env.expandBy(r)
+          val cand = ranked(tree.query(env).iterator.asScala
+            .map(_.asInstanceOf[(Geometry, Int)]._2))
+          if ((cand.length >= m && cand(m - 1)._1 <= r) || cand.length == geoms.length)
+            res = cand
+          else r = math.max(r * 2, dataDiag / 1024)
+        }
+        res
+      }
+    }
+  }
+
+  /** `g` when it parsed and is located ([[GeomKernels.located]]). */
+  private def located(g: Geometry): Option[Geometry] =
+    Option(g).filter(g => GeomKernels.located(g.getEnvelopeInternal))
+
+  private val ByDistPos: Ordering[(Double, Int)] =
+    Ordering.fromLessThan((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
+
+  /** Argument checks shared by the kNN entry points, run before any job. */
+  private def validateKnn(left: DataFrame, right: DataFrame, k: Int, cfg: Config): Unit = {
+    validate(cfg)
+    require(k >= 1, s"k must be >= 1, got $k")
+    requireDisjoint(left, right)
+  }
+
+  /** Owner-tile kNN, shared by [[knnJoin]] and pass 1 of [[knnJoinExact]]:
+    * every left row of `l` goes to exactly ONE tile of `index`, the owner
+    * of its envelope center, and right rows of `r` replicate to every tile
+    * their envelope touches. Each tile's right rows become one [[KnnTile]]
+    * in the refine stage [[slotCogroup]] runs, and each left row with a
+    * parseable geometry is answered by its `m` nearest; `emit` turns the
+    * left row, its owner tile and those (distance, right row) candidates
+    * into (right row or null, distance, rank) triples. Left rows whose tile
+    * holds no right row meet an empty candidate list. Output = left columns
+    * ++ right columns, typed as `fields` (whose nullability the caller
+    * picks: a null right row needs nullable right fields), ++ `knn_dist` ++
+    * `knn_rank`. */
+  private def ownerTileKnn(left: DataFrame, l: DataFrame, leftGeom: String,
+                           right: DataFrame, r: DataFrame, rightGeom: String,
+                           index: TileIndex, m: Int, fields: Seq[StructField])(
+      emit: (Row, Int, Array[(Double, Row)]) => Iterator[(Row, Double, Int)]): DataFrame = {
+    // one key per tile: owner tiles take no hot-tile shards
+    val owners = index.withCounts(Map.empty, index.tileWeights)
+    val bc = left.sparkSession.sparkContext.broadcast(owners)
+    val ownerKey = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
+      bc.value.refTile((x1 + x2) / 2, (y1 + y2) / 2).toLong * TileIndex.MaxShards
+    }
+    val tileKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
+      bc.value.buildKeys(x1, y1, x2, y2)
+    }
+    val lt = l.withColumn(Tile, ownerKey(col(X1), col(Y1), col(X2), col(Y2)))
+    val rt = r.withColumn(Tile, explode(tileKeys(col(X1), col(Y1), col(X2), col(Y2))))
+    val lOutCols = left.columns; val rOutCols = right.columns
+    val outSchema = StructType(fields :+
+      StructField("knn_dist", DoubleType, nullable = false) :+
+      StructField("knn_rank", IntegerType, nullable = false))
+    val lTileIdx = lt.schema.fieldIndex(Tile)
+    val lGeomIdx = lt.schema.fieldIndex(leftGeom); val rGeomIdx = rt.schema.fieldIndex(rightGeom)
+    val lKeep = lOutCols.map(lt.schema.fieldIndex)
+    val rKeep = rOutCols.map(rt.schema.fieldIndex)
+
+    slotCogroup(lt, rt, owners, outSchema) { build =>
+      val items = build.flatMap { row =>
+        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
+        if (g == null) None else Some((g, row))
+      }.toArray
+      (new KnnTile(items.map(_._1)), items.map(_._2))
+    } { case ((tile, rows), lrow) =>
+      val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
+      if (g1 == null) Iterator.empty
+      else {
+        val owner = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
+        val near = tile.nearest(g1, m).map { case (d, p) => (d, rows(p)) }
+        emit(lrow, owner, near).map { case (rrow, d, rank) =>
+          knnRow(lrow, lKeep, rrow, rKeep, d, rank)
+        }
+      }
+    }
+  }
+
+  /** A kNN output row: columns `lKeep` of `lrow`, columns `rKeep` of
+    * `rrow` (nulls for a null `rrow`), the distance and the rank. */
+  private def knnRow(lrow: Row, lKeep: Array[Int], rrow: Row, rKeep: Array[Int],
+                     d: Double, rank: Int): Row = {
+    val vals = new Array[Any](lKeep.length + rKeep.length + 2)
+    var a = 0
+    while (a < lKeep.length) { vals(a) = lrow.get(lKeep(a)); a += 1 }
+    var b = 0
+    while (b < rKeep.length) {
+      vals(a + b) = if (rrow == null) null else rrow.get(rKeep(b)); b += 1
+    }
+    vals(a + b) = d; vals(a + b + 1) = rank
+    Row.fromSeq(vals.toIndexedSeq)
+  }
+
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every
     * left row is assigned to exactly ONE tile (the owner of its envelope
     * center) and matched with its k nearest right rows *in that tile* —
     * reproducing the reference's tile-local caveat without the reference's
-    * cross-tile duplicate emission. Output = left cols ++ right cols ++
-    * `knn_dist`. */
+    * cross-tile duplicate emission. Equal distances rank in arrival order.
+    * This is pass 1 of [[knnJoinExact]] without its safety classification
+    * ([[ownerTileKnn]]). Column names must be disjoint between the sides.
+    * Output = left cols ++ right cols ++ `knn_dist`. */
   def knnJoin(left: DataFrame, leftGeom: String,
               right: DataFrame, rightGeom: String,
               k: Int, cfg: Config = Config()): DataFrame = {
-    val spark = left.sparkSession
-    validate(cfg)
-    require(k >= 1, s"k must be >= 1, got $k")
+    validateKnn(left, right, k, cfg)
     val l = withEnv(left, leftGeom, 0.0)
     val r = withEnv(right, rightGeom, 0.0)
-    val index = planTiles(l, r, cfg)
-    val bc = spark.sparkContext.broadcast(index)
-    // left: single owner tile (envelope center); right: replicated to all
-    // intersecting tiles so boundary-spanning neighbors are still seen
-    val ownerTile = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.refTile((x1 + x2) / 2, (y1 + y2) / 2)
-    }
-    val tileIds = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.tilesFor(x1, y1, x2, y2)
-    }
-    val lt = l.withColumn(Tile, ownerTile(col(X1), col(Y1), col(X2), col(Y2)))
-    val rt = r.withColumn(Tile, explode(tileIds(col(X1), col(Y1), col(X2), col(Y2))))
-    val lOutCols = left.columns; val rOutCols = right.columns
-    val outSchema = StructType(
-      lOutCols.map(left.schema(_)) ++ rOutCols.map(right.schema(_)) :+
-        StructField("knn_dist", DoubleType, nullable = false))
-    val ltSchema = lt.schema; val rtSchema = rt.schema
-    val lTileIdx = ltSchema.fieldIndex(Tile); val rTileIdx = rtSchema.fieldIndex(Tile)
-    val lGeomIdx = ltSchema.fieldIndex(leftGeom); val rGeomIdx = rtSchema.fieldIndex(rightGeom)
-    val lKeep = lOutCols.map(ltSchema.fieldIndex)
-    val rKeep = rOutCols.map(rtSchema.fieldIndex)
-
-    implicit val intEnc = Encoders.scalaInt
-    implicit val rowEnc = Encoders.row(outSchema)
-    val lkv = lt.groupByKey(_.getInt(lTileIdx))
-    val rkv = rt.groupByKey(_.getInt(rTileIdx))
-    lkv.cogroup(rkv) { (_: Int, ls: Iterator[Row], rs: Iterator[Row]) =>
-      import scala.jdk.CollectionConverters._
-      val items = rs.flatMap { row =>
-        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-        if (g == null) None else Some((g, row))
-      }.toArray
-      if (items.isEmpty) Iterator.empty
-      else {
-        // per-tile STRtree probe (the reference's own R-tree shape,
-        // knn_2d.hpp:146-179): branch-and-bound finds the k-th distance,
-        // then one envelope query collects the (>= k, tie-inclusive)
-        // candidate set. O(|L| log |R|) per tile instead of the former
-        // full scan + full sort (O(|L|*|R|) distance evals — bucket^2 work
-        // per tile at the auto bucket). Deterministic ordering is kept
-        // identical to the old plan: (dist, arrival position). Lazy: a
-        // tile with |R| <= k answers every left row by the brute branch
-        // below and must not pay the tree build.
-        lazy val (tree, dataDiag) = {
-          val t = new STRtree()
-          val dataEnv = new Envelope()
-          var p = 0
-          while (p < items.length) {
-            val (g, row) = items(p)
-            t.insert(g.getEnvelopeInternal, (g, row, p))
-            dataEnv.expandToInclude(g.getEnvelopeInternal)
-            p += 1
-          }
-          t.build()
-          // radius-growth floor/ceiling for the re-query loop below
-          (t, math.sqrt(dataEnv.getWidth * dataEnv.getWidth +
-            dataEnv.getHeight * dataEnv.getHeight))
-        }
-        lazy val itemDist = new org.locationtech.jts.index.strtree.ItemDistance {
-          override def distance(a: ItemBoundable, b: ItemBoundable): Double =
-            a.getItem.asInstanceOf[(Geometry, Row, Int)]._1
-              .distance(b.getItem.asInstanceOf[(Geometry, Row, Int)]._1)
-        }
-        ls.flatMap { lrow =>
-          val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-          if (g1 == null) Iterator.empty
-          else {
-            val top: Array[(Double, Row)] =
-              if (items.length <= k) {
-                items.zipWithIndex
-                  .map { case ((g2, rrow), pos) => (g1.distance(g2), rrow, pos) }
-                  .sortBy { case (d, _, pos) => (d, pos) }
-                  .map { case (d, rrow, _) => (d, rrow) }
-              } else {
-                // branch-and-bound SEED radius: the max distance among the
-                // k items JTS's kNN returns. Seed only — JTS's
-                // nearestNeighbourK can return the same item twice (so its
-                // max may undershoot the true k-th distance); the loop
-                // below re-queries with a doubled radius until the k-th
-                // candidate provably lies inside the query radius, which
-                // makes the result exact regardless.
-                val seed = tree.nearestNeighbour(g1.getEnvelopeInternal,
-                    (g1, null.asInstanceOf[Row], -1), itemDist, k)
-                  .iterator.map(o =>
-                    g1.distance(o.asInstanceOf[(Geometry, Row, Int)]._1))
-                  .max
-                var r = seed
-                var res: Array[(Double, Row)] = null
-                while (res == null) {
-                  val env = g1.getEnvelopeInternal.copy(); env.expandBy(r)
-                  val cand = tree.query(env).asScala
-                    .map(_.asInstanceOf[(Geometry, Row, Int)])
-                    .map { case (g2, rrow, pos) => (g1.distance(g2), rrow, pos) }
-                    .toArray
-                    .sortBy { case (d, _, pos) => (d, pos) }
-                  // exact iff the k-th candidate is within r (nothing
-                  // outside the envelope can beat it) or the query already
-                  // covered the whole tile
-                  if ((cand.length >= k && cand(k - 1)._1 <= r) ||
-                      cand.length == items.length)
-                    res = cand.take(k).map { case (d, rrow, _) => (d, rrow) }
-                  else
-                    r = math.max(r * 2, dataDiag / 1024)
-                }
-                res
-              }
-            top.iterator.map { case (d, rrow) =>
-              val vals = new Array[Any](lKeep.length + rKeep.length + 1)
-              var i = 0
-              while (i < lKeep.length) { vals(i) = lrow.get(lKeep(i)); i += 1 }
-              var j = 0
-              while (j < rKeep.length) { vals(i + j) = rrow.get(rKeep(j)); j += 1 }
-              vals(i + j) = d
-              Row.fromSeq(vals.toIndexedSeq)
-            }
-          }
-        }
-      }
-    }.toDF()
+    ownerTileKnn(left, l, leftGeom, right, r, rightGeom, planTiles(l, r, cfg), k,
+        left.schema ++ right.schema) { (_, _, near) =>
+      near.iterator.take(k).zipWithIndex.map { case ((d, rrow), i) => (rrow, d, i + 1) }
+    }.drop("knn_rank")
   }
 
   /** Per-tile kNN ring plans over arbitrary tile boxes: for each tile,
@@ -777,25 +843,35 @@ object SpatialJoin {
   }
 
   /** EXACT (global) kNN join — the improvement over the reference's
-    * tile-local st_nearest2. One tiling, two cogroup passes:
+    * tile-local st_nearest2. One tiling, two refine passes, both on the
+    * refine slots [[join]] uses ([[slotCogroup]]):
     *
-    *   1. tile-local kNN over each left row's owner tile. A left row is
+    *   1. owner-tile kNN ([[ownerTileKnn]], the [[knnJoin]] kernel asked for
+    *      k + 1 neighbours, so a tie at the k boundary shows). A left row is
     *      SAFE — its local top-k is provably the global top-k — when its
     *      k-th local distance is smaller than the distance from its
     *      envelope to the owner tile's boundary (every unseen right row is
     *      farther) and no distance tie makes ranks ambiguous. Safe rows are
     *      emitted final, with ranks, straight from pass 1.
     *   2. only the unsafe remainder (boundary-adjacent rows, tied ranks,
-    *      tiles with < k right rows) re-joins with a per-row radius bound:
-    *      the k-th local distance, tightened by the owner tile's
-    *      density-planned ring radius (tileRingRadii — the smallest set of
-    *      tiles holding ≥ k right centers); starved tiles search that ring
-    *      instead of the space diagonal. Reference-point deduped, then a
-    *      window top-k.
+    *      tiles with < k right rows, right-empty tiles included) re-joins
+    *      with a per-row radius bound: the k-th local distance, tightened
+    *      by the owner tile's density-planned ring radius (tileRingRadii —
+    *      the smallest set of tiles holding ≥ k right centers); starved
+    *      tiles search that ring instead of the space diagonal. Tiles whose
+    *      replica load passes the refine-slot share split into hot-tile
+    *      shards. Reference-point deduped, then a window top-k.
+    *
+    * A right side of at most `knnBroadcastThreshold` rows is broadcast
+    * instead ([[knnBroadcast]]): no tiling, no shuffle. Both intermediates
+    * of the tiled path are RDD-level copies, released after the first query
+    * that consumes the result; nothing registers in the session's
+    * CacheManager.
     *
     * `leftId` must uniquely key left rows. `tieBreak` columns (right side)
-    * order equal distances deterministically. Output = left cols ++ right
-    * cols ++ knn_dist ++ knn_rank.
+    * order equal distances deterministically. Column names must be disjoint
+    * between the sides. Output = left cols ++ right cols ++ knn_dist ++
+    * knn_rank.
     */
   def knnJoinExact(left: DataFrame, leftGeom: String, leftId: String,
                    right: DataFrame, rightGeom: String, k: Int,
@@ -803,12 +879,9 @@ object SpatialJoin {
                    cfg: Config = Config(),
                    maxDistance: Double = Double.PositiveInfinity): DataFrame = {
     val spark = left.sparkSession
-    validate(cfg)
-    require(k >= 1, s"k must be >= 1, got $k")
+    validateKnn(left, right, k, cfg)
     require(maxDistance > 0 && !maxDistance.isNaN,
       s"maxDistance must be positive (PositiveInfinity = unbounded), got $maxDistance")
-    val dup = left.columns.toSet.intersect(right.columns.toSet)
-    require(dup.isEmpty, s"column name collision between join sides: $dup")
 
     // Small right side (dim-table shape): broadcast it and scan left once —
     // exact global kNN with ZERO shuffles (the plan a hand-tuned engine
@@ -882,81 +955,37 @@ object SpatialJoin {
     }
 
     val lOutCols = left.columns; val rOutCols = right.columns
-    // nullable right fields: pass-1 marker rows carry null right columns
-    val outSchema = StructType(
-      lOutCols.map(f => left.schema(f).copy(nullable = true)) ++
-        rOutCols.map(f => right.schema(f).copy(nullable = true)) :+
-        StructField("knn_dist", DoubleType, nullable = false) :+
-        StructField("knn_rank", IntegerType, nullable = false))
 
     // ---------------- pass 1: owner-tile kNN + safety classification
-    val lt1 = l.withColumn(Tile, ownerTile(col(X1), col(Y1), col(X2), col(Y2)))
-    val rt1 = r.withColumn(Tile, explode(tileIds(col(X1), col(Y1), col(X2), col(Y2))))
-    val lt1S = lt1.schema; val rt1S = rt1.schema
-    val l1Tile = lt1S.fieldIndex(Tile); val r1Tile = rt1S.fieldIndex(Tile)
-    val l1Geom = lt1S.fieldIndex(leftGeom); val r1Geom = rt1S.fieldIndex(rightGeom)
-    val l1Env = Seq(X1, Y1, X2, Y2).map(lt1S.fieldIndex)
-    val l1Keep = lOutCols.map(lt1S.fieldIndex)
-    val r1Keep = rOutCols.map(rt1S.fieldIndex)
-    val nR = rOutCols.length
-
-    implicit val intEnc = Encoders.scalaInt
-    implicit val rowEnc = Encoders.row(outSchema)
-    val p1 = lt1.groupByKey(_.getInt(l1Tile))
-      .cogroup(rt1.groupByKey(_.getInt(r1Tile))) { (tile, ls, rs) =>
-        val items = rs.flatMap { row =>
-          val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](r1Geom))
-          if (g == null) None else Some((g, row))
-        }.toArray
-        val tb = bc.value.tileById(tile).mbb
-        ls.flatMap { lrow =>
-          val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](l1Geom))
-          if (g1 == null) Iterator.empty
-          else {
-            def emit(rrow: Row, d: Double, rank: Int): Row = {
-              val vals = new Array[Any](l1Keep.length + nR + 2)
-              var a = 0
-              while (a < l1Keep.length) { vals(a) = lrow.get(l1Keep(a)); a += 1 }
-              var b = 0
-              while (b < nR) {
-                vals(a + b) = if (rrow == null) null else rrow.get(r1Keep(b)); b += 1
-              }
-              vals(a + b) = d; vals(a + b + 1) = rank
-              Row.fromSeq(vals.toIndexedSeq)
-            }
-            if (items.length < k) Iterator.single(emit(null, -1.0, -1))
-            else {
-              val sorted = items.map { case (g2, rrow) => (g1.distance(g2), rrow) }
-                .zipWithIndex.sortBy { case ((d, _), pos) => (d, pos) }
-              val dk = sorted(k - 1)._1._1
-              // envelope gap to the owner tile's boundary (conservative)
-              val edge = math.min(
-                math.min(lrow.getDouble(l1Env(0)) - tb.xmin,
-                         tb.xmax - lrow.getDouble(l1Env(2))),
-                math.min(lrow.getDouble(l1Env(1)) - tb.ymin,
-                         tb.ymax - lrow.getDouble(l1Env(3))))
-              val tieAtBoundary = sorted.length > k && sorted(k)._1._1 == dk
-              val internalTie =
-                (1 until k).exists(i => sorted(i)._1._1 == sorted(i - 1)._1._1)
-              if (dk < edge && !tieAtBoundary && !internalTie)
-                sorted.iterator.take(k).zipWithIndex.map {
-                  case (((d, rrow), _), i) => emit(rrow, d, i + 1)
-                }
-              else Iterator.single(emit(null, dk, -1))
-            }
-          }
-        }
-      }.toDF()
-      // consumed twice (safe rows + unsafeRadii): without a persist the
-      // whole owner-tile cogroup — STRtree build + per-row sorts — would
-      // recompute per consumer. Released after the consuming query
-      // (CacheHygiene) so long-lived sessions don't accumulate blocks.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lEnvIdx = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex)
+    // marker rows carry null right columns
+    val pass1 = ownerTileKnn(left, l, leftGeom, right, r, rightGeom, index, k + 1,
+        (left.schema ++ right.schema).map(_.copy(nullable = true))) { (lrow, owner, near) =>
+      if (near.length < k) Iterator.single((null, -1.0, -1))
+      else {
+        val tb = bc.value.tileById(owner).mbb
+        val dk = near(k - 1)._1
+        // envelope gap to the owner tile's boundary (conservative)
+        val edge = math.min(
+          math.min(lrow.getDouble(lEnvIdx(0)) - tb.xmin,
+                   tb.xmax - lrow.getDouble(lEnvIdx(2))),
+          math.min(lrow.getDouble(lEnvIdx(1)) - tb.ymin,
+                   tb.ymax - lrow.getDouble(lEnvIdx(3))))
+        val tieAtBoundary = near.length > k && near(k)._1 == dk
+        val internalTie = (1 until k).exists(i => near(i)._1 == near(i - 1)._1)
+        if (dk < edge && !tieAtBoundary && !internalTie)
+          near.iterator.take(k).zipWithIndex.map { case ((d, rrow), i) => (rrow, d, i + 1) }
+        else Iterator.single((null, dk, -1))
+      }
+    }
+    // consumed twice (safe rows + unsafeRadii): an RDD-level copy, so the
+    // owner-tile refine runs once, without registering in the session's
+    // CacheManager, where sibling queries could hit or unpersist it.
+    // Released after the consuming query (CacheHygiene). Filled here as a
     // materialization barrier (keyOverlapPairs discipline): safe and
-    // unsafeRadii are concurrent subtrees of the final plan — a lazy
-    // persist read by both would race its own cache population and run
-    // the owner-tile cogroup twice
-    p1.count()
+    // unsafeRadii are concurrent subtrees of the final plan — a lazy copy
+    // read by both would race its own population and refine twice
+    val (p1, p1Rows) = Bridge.filled(pass1)
 
     val safe = p1.where(col("knn_rank") > 0)
     // per-row pass-2 search radius: the k-th local distance, or the space
@@ -1180,50 +1209,42 @@ object SpatialJoin {
     }
     // pass-2 hot-key sharding: under clustered rights, ~every starved left
     // replicates to the same few cluster-edge tiles, so the plain tile key
-    // skews the cogroup into a handful of straggler tasks (measured in the
+    // skews the refine into a handful of straggler tasks (measured in the
     // knn2d 100× rehearsal: 872 s of pass-2 CPU, one task holding 570 s
     // of it — the corner tiles facing the bulk of the sparse lefts carry
-    // ~everything). Composite (tile, shard) keys — the spjoin path's
-    // probeKeys/buildKeys protocol — spread it: each LEFT picks one shard
-    // by content hash of its id, rights replicate to every shard of each
-    // tile they touch. Shard counts are ADAPTIVE, from the exact per-tile
-    // replica loads: the radius-resolved left relation is persisted (it is
-    // consumed again by the cogroup below — without the persist the whole
+    // ~everything). Composite (tile, shard) keys — [[join]]'s protocol —
+    // spread it: each LEFT picks one shard by content hash of its id,
+    // rights replicate to every shard of each tile they touch. Shard counts
+    // are ADAPTIVE, from the exact per-tile replica loads: the
+    // radius-resolved left relation is copied once, by its own SQL
+    // execution (the refine reads it again — without the copy the whole
     // probe phase would recompute) and one bounded aggregate (≤ occupied
-    // tiles rows) prices each tile at ceil(load / target), so uniform data
-    // keeps 1 shard everywhere and pays only the counting scan, while a
-    // hot corner tile splits ∝ its measured load up to MaxShards.
-    val CKey = "__ck"
-    val l2p = l2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // tiles rows) prices each tile at ceil(load / target), where the
+    // target is one refine slot's share of the load, so uniform data keeps
+    // 1 shard everywhere and pays only the counting scan, while a hot
+    // corner tile splits ∝ its measured load up to MaxShards. The loads
+    // also weigh the refine slots.
+    val (l2p, l2Rows) = Bridge.filled(l2)
     val ballTilesCol =
       ballTiles(col(X1), col(Y1), col(X2), col(Y2), col(Rad))
     val tileLoads = l2p.select(explode(ballTilesCol).as(Tile))
       .groupBy(col(Tile)).agg(count(lit(1)).as("__c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val shardOf: Map[Int, Int] = {
-      val sp = spark.sessionState.conf.numShufflePartitions
-      val target = math.max(20000L, tileLoads.valuesIterator.sum / (4L * sp))
-      tileLoads.map { case (t, c) =>
-        t -> math.min(TileIndex.MaxShards.toLong,
-          math.max(1L, (c + target - 1) / target)).toInt
-      }
-    }
-    val shardOfBc = spark.sparkContext.broadcast(shardOf)
-    val lShardKey = udf { (t: Int, h: Long) =>
-      val s = shardOfBc.value.getOrElse(t, 1)
-      t.toLong * TileIndex.MaxShards +
-        (if (s <= 1) 0L else java.lang.Long.remainderUnsigned(h, s))
-    }
-    val rShardKeys = udf { (t: Int) =>
-      val s = shardOfBc.value.getOrElse(t, 1)
-      Array.tabulate(s)(i => t.toLong * TileIndex.MaxShards + i)
+    val target = math.max(20000L, tileLoads.valuesIterator.sum /
+      (TasksPerCore.toLong * spark.sparkContext.defaultParallelism))
+    val sharded = index.withCounts(tileLoads.collect { case (t, c) if c > target =>
+      t -> math.min(TileIndex.MaxShards.toLong, (c + target - 1) / target).toInt
+    }, tileLoads)
+    val shardBc = spark.sparkContext.broadcast(sharded)
+    val lShardKey = udf { (t: Int, h: Long) => shardBc.value.probeKey(t, h) }
+    val rShardKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
+      shardBc.value.buildKeys(x1, y1, x2, y2)
     }
     val lt2 = l2p.withColumn(Tile, explode(ballTilesCol))
-      .withColumn(CKey, lShardKey(col(Tile), xxhash64(col(leftId))))
-    val rt2 = r.withColumn(Tile, explode(tileIds(col(X1), col(Y1), col(X2), col(Y2))))
-      .withColumn(CKey, explode(rShardKeys(col(Tile))))
+      .withColumn(Tile, lShardKey(col(Tile), xxhash64(col(leftId))))
+    val rt2 = r.withColumn(Tile, explode(rShardKeys(col(X1), col(Y1), col(X2), col(Y2))))
     val lt2S = lt2.schema; val rt2S = rt2.schema
-    val l2Key = lt2S.fieldIndex(CKey); val r2Key = rt2S.fieldIndex(CKey)
+    val l2Key = lt2S.fieldIndex(Tile)
     val l2Geom = lt2S.fieldIndex(leftGeom); val r2Geom = rt2S.fieldIndex(rightGeom)
     val l2Env = Seq(X1, Y1, X2, Y2).map(lt2S.fieldIndex)
     val r2Env = Seq(X1, Y1, X2, Y2).map(rt2S.fieldIndex)
@@ -1231,91 +1252,67 @@ object SpatialJoin {
     val l2Keep = lOutCols.map(lt2S.fieldIndex)
     val r2Keep = rOutCols.map(rt2S.fieldIndex)
 
-    implicit val longEnc = Encoders.scalaLong
-    val cands = lt2.groupByKey(_.getLong(l2Key))
-      .cogroup(rt2.groupByKey(_.getLong(r2Key))) { (key, ls, rs) =>
-        val tile = (key / TileIndex.MaxShards).toInt
-        val tree = new STRtree()
-        var rCount = 0
-        rs.foreach { row =>
-          val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](r2Geom))
-          if (g != null) {
-            val e = new Envelope(row.getDouble(r2Env(0)), row.getDouble(r2Env(2)),
-                                 row.getDouble(r2Env(1)), row.getDouble(r2Env(3)))
-            tree.insert(e, (g, row)); rCount += 1
-          }
-        }
-        if (rCount == 0) Iterator.empty
-        else {
-          tree.build()
-          val idx = bc.value
-          ls.flatMap { lrow =>
-            val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](l2Geom))
-            if (g1 == null) Iterator.empty
-            else {
-              val rad = lrow.getDouble(radIdx)
-              val px1 = lrow.getDouble(l2Env(0)); val py1 = lrow.getDouble(l2Env(1))
-              val px2 = lrow.getDouble(l2Env(2)); val py2 = lrow.getDouble(l2Env(3))
-              // ball-bounded branch-and-bound over the tile tree: descend
-              // only nodes whose EUCLIDEAN envelope gap to the row's
-              // ORIGINAL envelope is ≤ rad. A Chebyshev-box query here
-              // admitted every right in the expanded box — for a far left
-              // whose ball grazes a clustered region that is ~the whole
-              // tile, each hit paying a per-item gap check (the pass-2
-      	      // cogroup was the hottest stage of the knn2d 100×
-              // rehearsal); the bound prunes whole subtrees instead.
-              // gap(lEnv, rEnv) ≤ d(g1, g2) always, so pruning on it is
-              // loss-free (1e-9 slack for rounding); each rejected item
-              // also saves a ~100× costlier DistanceOp.
-              val ox1 = px1 + rad; val oy1 = py1 + rad
-              val ox2 = px2 - rad; val oy2 = py2 - rad
-              val rSlack = rad + 1e-9; val rr2 = rSlack * rSlack
-              val out = Vector.newBuilder[Row]
-              def visit(node: Boundable): Unit = {
-                val e = node.getBounds.asInstanceOf[Envelope]
-                val gx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
-                val gy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
-                if (gx * gx + gy * gy <= rr2) node match {
-                  case n: AbstractNode =>
-                    val cs = n.getChildBoundables
-                    var j = 0
-                    while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
-                  case item: ItemBoundable =>
-                    val (g2, rrow) = item.getItem.asInstanceOf[(Geometry, Row)]
-                    val d = g1.distance(g2)
-                    if (d <= rad) {
-                      // refpoint = nearest point of the RIGHT envelope to
-                      // the row's ORIGINAL envelope (overlap → its low
-                      // edge, a deterministic pair function): it lies in
-                      // the right envelope (tile is right-occupied) at
-                      // dist = minDist(lEnv, rEnv) ≤ d ≤ rad from the left
-                      // envelope, so its owner tile carries BOTH replicas
-                      // under the ball prune above — each qualifying pair
-                      // is emitted exactly once, by that tile
-                      val rx0 = rrow.getDouble(r2Env(0)); val ry0 = rrow.getDouble(r2Env(1))
-                      val rx1 = rrow.getDouble(r2Env(2)); val ry1 = rrow.getDouble(r2Env(3))
-                      val refx = if (rx0 > ox2) rx0 else if (rx1 < ox1) rx1
-                                 else math.max(ox1, rx0)
-                      val refy = if (ry0 > oy2) ry0 else if (ry1 < oy1) ry1
-                                 else math.max(oy1, ry0)
-                      if (idx.refTile(refx, refy) == tile) {
-                        val vals = new Array[Any](l2Keep.length + r2Keep.length + 2)
-                        var a = 0
-                        while (a < l2Keep.length) { vals(a) = lrow.get(l2Keep(a)); a += 1 }
-                        var b = 0
-                        while (b < r2Keep.length) { vals(a + b) = rrow.get(r2Keep(b)); b += 1 }
-                        vals(a + b) = d; vals(a + b + 1) = 0
-                        out += Row.fromSeq(vals.toIndexedSeq)
-                      }
-                    }
-                }
+    val cands = slotCogroup(lt2, rt2, sharded, p1.schema)(rowTree(r2Geom, r2Env)) { (tree, lrow) =>
+      val g1 =
+        if (tree.isEmpty) null
+        else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](l2Geom))
+      if (g1 == null) Iterator.empty
+      else {
+        val idx = bc.value
+        val tile = (lrow.getLong(l2Key) / TileIndex.MaxShards).toInt
+        val rad = lrow.getDouble(radIdx)
+        val px1 = lrow.getDouble(l2Env(0)); val py1 = lrow.getDouble(l2Env(1))
+        val px2 = lrow.getDouble(l2Env(2)); val py2 = lrow.getDouble(l2Env(3))
+        // ball-bounded branch-and-bound over the tile tree: descend only
+        // nodes whose EUCLIDEAN envelope gap to the row's ORIGINAL envelope
+        // is ≤ rad. A Chebyshev-box query here admitted every right in the
+        // expanded box — for a far left whose ball grazes a clustered
+        // region that is ~the whole tile, each hit paying a per-item gap
+        // check (the pass-2 refine was the hottest stage of the knn2d 100×
+        // rehearsal); the bound prunes whole subtrees instead.
+        // gap(lEnv, rEnv) ≤ d(g1, g2) always, so pruning on it is
+        // loss-free (1e-9 slack for rounding); each rejected item also
+        // saves a ~100× costlier DistanceOp.
+        val ox1 = px1 + rad; val oy1 = py1 + rad
+        val ox2 = px2 - rad; val oy2 = py2 - rad
+        val rSlack = rad + 1e-9; val rr2 = rSlack * rSlack
+        val out = Vector.newBuilder[Row]
+        def visit(node: Boundable): Unit = {
+          val e = node.getBounds.asInstanceOf[Envelope]
+          val gx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
+          val gy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
+          if (gx * gx + gy * gy <= rr2) node match {
+            case n: AbstractNode =>
+              val cs = n.getChildBoundables
+              var j = 0
+              while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
+            case item: ItemBoundable =>
+              val (g2, rrow) = item.getItem.asInstanceOf[(Geometry, Row)]
+              val d = g1.distance(g2)
+              if (d <= rad) {
+                // refpoint = nearest point of the RIGHT envelope to the
+                // row's ORIGINAL envelope (overlap → its low edge, a
+                // deterministic pair function): it lies in the right
+                // envelope (tile is right-occupied) at dist =
+                // minDist(lEnv, rEnv) ≤ d ≤ rad from the left envelope, so
+                // its owner tile carries BOTH replicas under the ball prune
+                // above — each qualifying pair is emitted exactly once, by
+                // that tile
+                val rx0 = rrow.getDouble(r2Env(0)); val ry0 = rrow.getDouble(r2Env(1))
+                val rx1 = rrow.getDouble(r2Env(2)); val ry1 = rrow.getDouble(r2Env(3))
+                val refx = if (rx0 > ox2) rx0 else if (rx1 < ox1) rx1
+                           else math.max(ox1, rx0)
+                val refy = if (ry0 > oy2) ry0 else if (ry1 < oy1) ry1
+                           else math.max(oy1, ry0)
+                if (idx.refTile(refx, refy) == tile)
+                  out += knnRow(lrow, l2Keep, rrow, r2Keep, d, 0)
               }
-              visit(tree.getRoot)
-              out.result().iterator
-            }
           }
         }
-      }.toDF()
+        visit(tree.getRoot)
+        out.result().iterator
+      }
+    }
 
     // nulls LAST to agree with knnBroadcast's cmpAny — Spark's plain .asc is
     // nulls-first, which would rank null-tieBreak ties differently depending
@@ -1325,8 +1322,8 @@ object SpatialJoin {
       .withColumn("knn_rank",
         row_number().over(Window.partitionBy(col(leftId)).orderBy(order: _*)))
       .where(col("knn_rank") <= k)
-    CacheHygiene.releaseAfterFirstJob(spark.sparkContext, Bridge.cachedRdd(p1))(
-      Seq(l2p, p1).foreach(_.unpersist(blocking = false)))
+    CacheHygiene.releaseAfterFirstJob(spark.sparkContext, p1Rows)(
+      Seq(l2Rows, p1Rows).foreach(_.unpersist(blocking = false)))
     safe.unionByName(pass2)
   }
 
@@ -1349,9 +1346,13 @@ object SpatialJoin {
         maxDistance = maxDistance)
       .where(col("knn_dist") < maxDistance)
 
-  /** Broadcast exact kNN: the whole (small) right side ships to every task;
-    * each left partition scans it with a bounded (dist, tieBreak) selection.
-    * No shuffle, no tiling, deterministic ties. */
+  /** Broadcast exact kNN: the whole (small) right side ships to every task
+    * as one [[KnnTile]]; each left row takes every right row within its
+    * k-th distance (ties at the boundary included) and ranks them under the
+    * caller's (distance, tieBreak) order. No shuffle, no tiling,
+    * deterministic ties. Rows whose geometry is null, unparseable, empty or
+    * non-finite take no part, as on the tiled path, whose envelopes drop
+    * them. */
   private def knnBroadcast(left: DataFrame, leftGeom: String,
                            right: DataFrame, rightGeom: String,
                            rRows: Array[Row], k: Int,
@@ -1377,25 +1378,14 @@ object SpatialJoin {
 
     implicit val rowEnc = Encoders.row(outSchema)
     left.mapPartitions { rows =>
-      import scala.jdk.CollectionConverters._
-      // deserialize the broadcast side once per partition, into an STRtree:
-      // the old linear scan was O(L x R) distance calls — fine at the
-      // gate's 15k x 1k, 6e9 calls at the threshold's 300k x 10k shape
-      // (17.6x wall for 10x data, SCALE.md sf1 step). Branch-and-bound
-      // kNN is O(L log R).
+      // deserialize the broadcast side once per partition, into one
+      // KnnTile: O(L log R) instead of the O(L x R) scan that cost 17.6x
+      // wall for 10x data at the threshold's 300k x 10k shape (SCALE.md
+      // sf1 step)
       val items = bc.value.flatMap { row =>
-        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-        if (g == null) None else Some((g, row))
+        located(GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))).map((_, row))
       }
-      val tree = new org.locationtech.jts.index.strtree.STRtree()
-      items.foreach { case (g, row) => tree.insert(g.getEnvelopeInternal, (g, row)) }
-      if (items.nonEmpty) tree.build()
-      val itemDist = new org.locationtech.jts.index.strtree.ItemDistance {
-        override def distance(a: org.locationtech.jts.index.strtree.ItemBoundable,
-                              b: org.locationtech.jts.index.strtree.ItemBoundable): Double =
-          a.getItem.asInstanceOf[(Geometry, Row)]._1
-            .distance(b.getItem.asInstanceOf[(Geometry, Row)]._1)
-      }
+      val tile = new KnnTile(items.map(_._1))
       val ord = new Ordering[(Double, Row)] {
         override def compare(x: (Double, Row), y: (Double, Row)): Int = {
           val c = java.lang.Double.compare(x._1, y._1)
@@ -1412,35 +1402,17 @@ object SpatialJoin {
         }
       }
       rows.flatMap { lrow =>
-        val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-        if (g1 == null || items.isEmpty) Iterator.empty
-        else {
-          // phase 1: the k-th smallest distance (a unique order statistic,
-          // however JTS breaks its internal ties) via branch-and-bound
-          val dk =
-            if (items.length <= k) Double.MaxValue
-            else tree.nearestNeighbour(g1.getEnvelopeInternal,
-                (g1, null.asInstanceOf[Row]), itemDist, k)
-              .iterator.map(o => g1.distance(o.asInstanceOf[(Geometry, Row)]._1))
-              .max
-          // phase 2: ALL rights within dk (>= k rows — dk-distance ties
-          // included), ranked under the caller's deterministic
-          // (distance, tieBreak) order — tie handling identical to the
-          // distributed path's
-          val cands =
-            if (dk == Double.MaxValue) items.toSeq
-            else {
-              val env = g1.getEnvelopeInternal.copy(); env.expandBy(dk)
-              tree.query(env).asScala.toSeq
-                .map(_.asInstanceOf[(Geometry, Row)])
-            }
-          val lVals = lrow.toSeq
-          cands.iterator.map { case (g2, rrow) => (g1.distance(g2), rrow) }
-            .filter(_._1 <= dk)
-            .toSeq.sorted(ord).take(k)
-            .iterator.zipWithIndex.map { case ((d, rrow), i) =>
-              Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ (i + 1))
-            }
+        located(GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))) match {
+          case Some(g1) if items.nonEmpty =>
+            val near = tile.nearest(g1, k)
+            val dk = near(math.min(k, near.length) - 1)._1
+            val lVals = lrow.toSeq
+            near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
+              .toSeq.sorted(ord).take(k)
+              .iterator.zipWithIndex.map { case ((d, rrow), i) =>
+                Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ (i + 1))
+              }
+          case _ => Iterator.empty
         }
       }
     }.toDF(outSchema.fieldNames.toIndexedSeq: _*)

@@ -97,11 +97,15 @@ final class TileIndex private (val tiles: Array[TileBoundary], val space: Mbb,
     * their probe rows across shards. */
   def probeKeys(xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                 salt: Long): Array[Long] =
-    tilesFor(xmin, ymin, xmax, ymax).map { t =>
-      val s = shardsOf(t)
-      t.toLong * TileIndex.MaxShards +
-        (if (s <= 1) 0L else java.lang.Long.remainderUnsigned(salt, s))
-    }
+    tilesFor(xmin, ymin, xmax, ymax).map(probeKey(_, salt))
+
+  /** The composite key of the shard of `tile` that a probe row with `salt`
+    * lands on. */
+  def probeKey(tile: Int, salt: Long): Long = {
+    val s = shardsOf(tile)
+    tile.toLong * TileIndex.MaxShards +
+      (if (s <= 1) 0L else java.lang.Long.remainderUnsigned(salt, s))
+  }
 
   /** Composite keys for the BUILD side: replicated to every shard of each
     * intersecting tile (the build side of a hot tile ships to all shards). */

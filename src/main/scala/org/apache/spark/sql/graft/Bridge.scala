@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -31,16 +32,25 @@ object Bridge {
     * queries share. The first job over the frame fills the copy; the
     * returned RDD is the handle to unpersist it by. */
   def persisted(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val rows = df.queryExecution.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = copyOf(castToImpl(df).queryExecution)
     (frame(df.sparkSession, rows, df.schema), rows)
   }
 
-  /** The RDD that holds the blocks of `df`, which `Dataset.persist` cached. */
-  def cachedRdd(df: DataFrame): RDD[_] =
-    castToImpl(df.sparkSession).sharedState.cacheManager
-      .lookupCachedData(castToImpl(df)).get
-      .cachedRepresentation.cacheBuilder.cachedColumnBuffers
+  /** [[persisted]], filled now by a SQL execution of `df`'s own plan: the
+    * plan shows to SQL listeners, and the adaptive jobs of its exchanges
+    * run under that execution instead of outside any. */
+  def filled(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val qe = castToImpl(df).queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("copy")) {
+      val rows = copyOf(qe)
+      rows.count()
+      rows
+    }
+    (frame(df.sparkSession, rows, df.schema), rows)
+  }
+
+  private def copyOf(qe: QueryExecution): RDD[InternalRow] =
+    qe.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** A copy of `spark` with `confs` set: it keeps the caller's runtime
     * conf, temp views, functions and planner strategies, and shares its

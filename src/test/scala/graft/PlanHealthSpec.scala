@@ -67,16 +67,34 @@ class PlanHealthSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val custs = Queries.custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
     val supps = Queries.suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
-    val q = graft.operators.SpatialJoin.knnJoinExact(custs, "g1", "cid",
-      supps, "g2", k = 3, tieBreak = Seq("sid"),
-      cfg = graft.operators.SpatialJoin.Config(bucket = 100,
-        knnBroadcastThreshold = 0, probeCollectMax = 0L))
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("kth_smallest"),
-      s"relational probe radius is not the kth_smallest aggregate:\n$plan")
-    assert(plan.contains("partial_kth_smallest"),
+    // the probe feeds pass 2's input, which is copied once by its own SQL
+    // execution while the join is built: read the probe's plan there
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = graft.operators.SpatialJoin.knnJoinExact(custs, "g1", "cid",
+        supps, "g2", k = 3, tieBreak = Seq("sid"),
+        cfg = graft.operators.SpatialJoin.Config(bucket = 100,
+          knnBroadcastThreshold = 0, probeCollectMax = 0L))
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val probe = plans.asScala.filter(_.contains("kth_smallest")).toSeq
+    assert(probe.nonEmpty,
+      s"relational probe radius is not the kth_smallest aggregate:\n${plans.asScala.mkString("\n")}")
+    assert(probe.exists(_.contains("partial_kth_smallest")),
       "kth_smallest lost its map-side partial stage (every candidate " +
-      s"row would cross the probe exchange):\n$plan")
+      s"row would cross the probe exchange):\n${probe.mkString("\n")}")
+    val plan = q.queryExecution.executedPlan.toString
     // the final top-k rank still compiles to WindowGroupLimit
     assert(plan.contains("WindowGroupLimit"),
       s"output rank did not compile to WindowGroupLimit:\n$plan")
@@ -421,6 +439,20 @@ class PlanHealthSpec extends SparkTestBase {
     val (bridge, others) = hits.partition(_.startsWith("org/apache/spark/sql/graft/Bridge.scala:"))
     assert(others.isEmpty, s"session conf written outside Bridge.sessionWith: ${others.mkString("; ")}")
     assert(bridge.size == 1, s"lint lost the Bridge clone helper: $hits")
+  }
+
+  test("every 2-D tile cogroup refines on slots: no groupByKey in SpatialJoin") {
+    // a groupByKey cogroup hashes tiles onto the session's shuffle
+    // partitions, which adaptive execution coalesces onto a few tasks; the
+    // tiled operators share SpatialJoin.slotCogroup instead
+    import scala.jdk.CollectionConverters._
+    val path = java.nio.file.Paths.get("src/main/scala/graft/operators/SpatialJoin.scala")
+    val lines = java.nio.file.Files.readAllLines(path).asScala
+    val hits = lines.zipWithIndex.collect {
+      case (line, i) if line.contains("groupByKey(") => s"${i + 1}: ${line.trim}"
+    }
+    assert(hits.isEmpty, s"groupByKey cogroup in SpatialJoin.scala: ${hits.mkString("; ")}")
+    assert(lines.exists(_.contains("cogroupSorted(")), "lint lost the slot cogroup")
   }
 
   test("span dedup reassembly never explodes the corpus into token rows") {

@@ -14,8 +14,8 @@ import graft.core.{GeometryCodec, Mbb, TileBoundary}
 import graft.functions._
 
 /** The refine stage of a spatial join runs one task per (tile, shard) key,
-  * heaviest first, up to 4 per core, and packs keys into slots past that —
-  * with results unchanged. */
+  * heaviest first, up to 4 per core, and packs keys onto one slot per core
+  * past that — with results unchanged. */
 class RefineSlotsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -104,9 +104,11 @@ class RefineSlotsSpec extends SparkTestBase {
     assert(log.isEmpty, "nothing is built before the first row is asked for")
     assert(out.toList == List("aq", "bq", "ar", "br", "dt", "et", "fv"))
     // every probe row of a key runs before the next key's build rows are
-    // read, and probe rows of keys without build rows (0, 2, 6, 9) never do
-    assert(log == Seq("build ab", "probe q", "probe r", "build c", "build de", "probe t",
-      "build f", "probe v"))
+    // read; probe rows of keys without build rows (0, 2, 6, 9) meet an
+    // empty index, and build rows of a key without probe rows (3) build none
+    assert(log == Seq("build ", "probe p", "build ab", "probe q", "probe r",
+      "build ", "probe s", "build de", "probe t", "build ", "probe u",
+      "build f", "probe v", "build ", "probe w"))
   }
 
   test("the refine cogroup sorts each side once, by (slot, key), after one exchange") {
@@ -195,9 +197,15 @@ class RefineSlotsSpec extends SparkTestBase {
     }.toMap
     def tiles(m: Mbb) = idx.tilesFor(m.xmin, m.ymin, m.xmax, m.ymax).toSet
 
-    val once = SpatialJoin.join(a, "ga", b, "gb", cfg)
-      .select("ida", "idb").as[(Long, Long)].collect()
+    var once: Array[(Long, Long)] = null
+    val reads = shuffleReads {
+      once = SpatialJoin.join(a, "ga", b, "gb", cfg).select("ida", "idb").as[(Long, Long)].collect()
+    }
     assert(once.length == once.toSet.size && once.toSet == want)
+    // past the cap the keys pack onto one refine slot per core
+    val refine = reads.values.filter(_.sum > 0).toSeq
+    assert(refine.map(_.size) == Seq(spark.sparkContext.defaultParallelism),
+      s"stages reading shuffle data: $reads")
 
     // dedup none: a pair once per tile both sides share
     val none = SpatialJoin.join(a, "ga", b, "gb", cfg.copy(dedup = "none"))
