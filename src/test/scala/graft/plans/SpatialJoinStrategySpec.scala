@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{SpatialJoinExec, SpatialJoinStrategy}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkTestBase
 import graft.core.GeometryCodec
@@ -255,6 +256,125 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     // empty subquery side: nothing matches, every left row (null geometry
     // included) is NOT EXISTS
     verdicts("SELECT 1 FROM xe WHERE st_intersects(ga, gb)", Set.empty[Long])
+  }
+
+  /** lon/lat around three anchors each way, the antimeridian (±180) and the
+    * poles (|lat| > 85) among them, on a unit lattice so that shared edges,
+    * equal points and touching boxes occur. */
+  private val lonLat: Gen[(Double, Double)] = for {
+    ax <- Gen.oneOf(-180.0, 0.0, 175.0); kx <- Gen.chooseNum(0, 5)
+    ay <- Gen.oneOf(-90.0, 0.0, 84.0); ky <- Gen.chooseNum(0, 6)
+  } yield (ax + kx, ay + ky)
+
+  /** A geometry's WKT: points, boxes and segments, degenerate shapes
+    * (zero-length segment, zero-width box), empty geometries, unparseable
+    * text and null. */
+  private val wktGen: Gen[String] = for {
+    (x, y) <- lonLat
+    w <- Gen.chooseNum(1, 3); h <- Gen.chooseNum(1, 3)
+    s <- Gen.frequency(
+      4 -> s"POINT ($x $y)",
+      6 -> s"POLYGON(($x $y,${x + w} $y,${x + w} ${y + h},$x ${y + h},$x $y))",
+      2 -> s"LINESTRING ($x $y, ${x + w} ${y + h})",
+      1 -> s"LINESTRING ($x $y, $x $y)",
+      1 -> s"POLYGON(($x $y,$x $y,$x ${y + h},$x ${y + h},$x $y))",
+      1 -> Gen.oneOf("POINT EMPTY", "POLYGON EMPTY"),
+      1 -> "not-a-wkt",
+      1 -> (null: String))
+  } yield s
+
+  /** One side: ids from `base`, sometimes empty. */
+  private def sideGen(base: Long, g: Gen[String]): Gen[Seq[(Long, String)]] =
+    Gen.frequency(1 -> Gen.const(0), 6 -> Gen.chooseNum(1, 45)).flatMap { n =>
+      Gen.listOfN(n, g).map(_.zipWithIndex.map { case (w, i) => (base + i, w) })
+    }
+
+  test("property: SQL join == SpatialJoin.join == brute force over every matched predicate, semi/anti and earth dwithin") {
+    import graft.core.{Geo, GeomPredicates}
+    import graft.operators.SpatialJoin
+    import org.apache.spark.sql.DataFrame
+    val bucket = 8
+    val residual = "(ida + idb) % 3 <> 0"
+    def res(i: Long, j: Long) = (i + j) % 3 != 0
+    // (predicate, distance, SQL condition over (ga, gb)); each swappable
+    // predicate also in its swapped orientation, which the strategy
+    // rewrites (contains <-> within)
+    val preds = Seq("intersects", "touches", "crosses", "contains", "within",
+      "overlaps", "equals", "adjacent").map((_, 0.0)) :+ ("dwithin", 1.5)
+    def sqlCond(p: String, d: Double, a: String, b: String) =
+      if (p == "dwithin") s"st_dwithin($a, $b, ${d}D)" else s"st_$p($a, $b)"
+    val swapped = Map("intersects" -> "intersects", "touches" -> "touches",
+      "overlaps" -> "overlaps", "equals" -> "equals", "adjacent" -> "adjacent",
+      "contains" -> "within", "within" -> "contains")
+
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.select(col("ida"), col("idb")).as[(Long, Long)].collect().toSeq
+    def same(what: String, got: Seq[(Long, Long)], want: Set[(Long, Long)]): Boolean = {
+      val ok = got.length == got.toSet.size && got.toSet == want
+      if (!ok) println(s"$what: ${got.length} rows, missing=${(want -- got.toSet).take(5)} " +
+        s"extra=${(got.toSet -- want).take(5)}")
+      ok
+    }
+
+    val planar = Prop.forAllNoShrink(sideGen(0, wktGen), sideGen(1000, wktGen)) { (la, lb) =>
+      val a = geomFrame(la, "ida", "ga"); val b = geomFrame(lb, "idb", "gb")
+      // a view over a checkpoint: an empty side the optimizer cannot fold
+      a.localCheckpoint().createOrReplaceTempView("pa")
+      b.localCheckpoint().createOrReplaceTempView("pb")
+      // an empty geometry has no envelope and matches nothing
+      val ga = la.flatMap { case (i, w) => jts(w).filter(!_.isEmpty).map(i -> _) }
+      val gb = lb.flatMap { case (j, w) => jts(w).filter(!_.isEmpty).map(j -> _) }
+      def brute(p: String, d: Double) = (for {
+        (i, x) <- ga; (j, y) <- gb if GeomPredicates.eval(p, x, y, d)
+      } yield (i, j)).toSet
+      val cfg = SpatialJoin.Config(bucket = bucket)
+      spark.conf.set("graft.join.bucket", bucket.toString)
+      try preds.forall { case (p, d) =>
+        val want = brute(p, d)
+        val wantRes = want.filter { case (i, j) => res(i, j) }
+        val engine = SpatialJoin.join(a, "ga", b, "gb", cfg.copy(predicate = p, distance = d))
+        val orientations = sqlCond(p, d, "ga", "gb") +:
+          swapped.get(p).map(q => sqlCond(q, d, "gb", "ga")).toSeq
+        same(s"engine $p", pairs(engine), want) &&
+        same(s"engine $p + residual", pairs(engine.where(expr(residual))), wantRes) &&
+        orientations.forall { c =>
+          same(s"SQL $c", pairs(spark.sql(s"SELECT ida, idb FROM pa JOIN pb ON $c")), want) &&
+          same(s"SQL $c + residual",
+            pairs(spark.sql(s"SELECT ida, idb FROM pa JOIN pb ON $c AND $residual")), wantRes)
+        } &&
+        Seq(want, wantRes).zip(Seq("", s" AND $residual")).forall { case (w, r) =>
+          val hit = w.map(_._1)
+          Seq("EXISTS" -> hit, "NOT EXISTS" -> (la.map(_._1).toSet -- hit)).forall {
+            case (op, ids) =>
+              val got = spark.sql(s"SELECT ida FROM pa WHERE $op " +
+                s"(SELECT 1 FROM pb WHERE ${sqlCond(p, d, "ga", "gb")}$r)").as[Long].collect()
+              same(s"$op $p$r", got.map(i => (i, 0L)).toSeq, ids.map(i => (i, 0L)))
+          }
+        }
+      } finally spark.conf.unset("graft.join.bucket")
+    }
+
+    // earth mode: points only, a meter threshold, haversine refine; the
+    // candidate windows must wrap the antimeridian and widen at the poles
+    val pointGen = Gen.frequency(
+      8 -> lonLat.map { case (x, y) => s"POINT ($x $y)" },
+      1 -> Gen.oneOf("POINT EMPTY", "not-a-wkt", null: String))
+    val meters = 400000.0
+    val earth = Prop.forAllNoShrink(sideGen(0, pointGen), sideGen(1000, pointGen)) { (la, lb) =>
+      val ga = la.flatMap { case (i, w) => jts(w).filter(!_.isEmpty).map(i -> _.getCoordinate) }
+      val gb = lb.flatMap { case (j, w) => jts(w).filter(!_.isEmpty).map(j -> _.getCoordinate) }
+      val want = (for {
+        (i, p) <- ga; (j, q) <- gb if Geo.haversineMeters(p.x, p.y, q.x, q.y) <= meters
+      } yield (i, j)).toSet
+      val got = SpatialJoin.join(geomFrame(la, "ida", "ga"), "ga", geomFrame(lb, "idb", "gb"), "gb",
+        SpatialJoin.Config(predicate = "dwithin", distance = meters, earth = true, bucket = bucket))
+      same("earth dwithin", pairs(got), want)
+    }
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(4).withWorkers(1)
+    Seq("planar" -> planar, "earth" -> earth).foreach { case (name, prop) =>
+      val r = SCTest.check(params, prop)
+      assert(r.passed, s"$name: $r")
+    }
   }
 
   test("a SQL spatial join validates the planning-time tuning conf") {
