@@ -127,6 +127,29 @@ class PartitionersSpec extends AnyFunSuite {
     assert(idx.refTile(75, 40) == 5)
   }
 
+  test("TileIndex.covering keeps str and hc tilings near their planned tile count") {
+    // union-MBB tilings leave gaps between tiles; padding each strip's gaps
+    // separately multiplied the count (str: 1,024 planned → 15,061 padded)
+    val rnd = new Random(17)
+    val space = Mbb(0, 0, 1000, 1000)
+    val boxes = Array.fill(100000) {
+      val x = rnd.nextDouble() * 999; val y = rnd.nextDouble() * 999
+      Mbb(x, y, x + 1, y + 1)
+    }
+    for (name <- Seq("str", "hc")) {
+      val planned = SpatialPartitioner(name).partition(boxes, space, 100)
+      val padded = TileIndex.covering(planned, space)
+      assert(padded.length < 2 * planned.length,
+        s"$name: ${planned.length} planned tiles padded to ${padded.length}")
+      // the pads partition the gaps: pads overlap no tile and no other pad
+      val pads = padded.drop(planned.length)
+      def overlap(a: Mbb, b: Mbb) =
+        a.xmin < b.xmax && b.xmin < a.xmax && a.ymin < b.ymax && b.ymin < a.ymax
+      assert(pads.forall(p => padded.forall(t => t.tileId == p.tileId || !overlap(p.mbb, t.mbb))),
+        s"$name: a pad overlaps another tile")
+    }
+  }
+
   test("empty sample still yields a usable tiling") {
     for (name <- SpatialPartitioner.all.keys) {
       val tiles = SpatialPartitioner(name).partition(Array.empty, space, 10)
