@@ -2,12 +2,20 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference,
+  DirectShufflePartitionID, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, ShufflePartitionIdPassThrough}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.{Bridge, SpatialJoinNode, SpatialJoinStrategy}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.random.BernoulliCellSampler
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
 
@@ -23,16 +31,18 @@ import graft.partition.SpatialPartitioner
   *   sample+partition job -> driver-side partitioner over a seeded sample
   *   cache-file tile idx  -> broadcast [[TileIndex]] (padded to cover space)
   *   map-to-tile job      -> explode over broadcast index (1 row -> N tiles)
-  *   RESQUE reducer       -> cogroup per refine slot (one tile, or shard
-  *                           of a hot tile, per task; heaviest first):
-  *                           STRtree filter + exact refine
+  *   RESQUE reducer       -> one refine slot (one tile, or shard of a hot
+  *                           tile, per task; heaviest first): STRtree
+  *                           filter + exact refine ([[slotCogroup]])
   *   sort+uniq dedup job  -> reference-point emit (no extra shuffle)
   *
-  * All stages live in ONE Spark DAG; the only materialization barriers are
-  * the stats aggregate and the sample collect (the adaptive step the
-  * reference also performs, with a forced single reducer,
-  * queryprocessor_2d.cpp:286-293); they and the cogroup read one persisted
-  * copy of each side. SQL joins ([[org.apache.spark.sql.graft.SpatialJoinStrategy]]) run it too.
+  * [[join]] builds a logical node that
+  * [[org.apache.spark.sql.graft.SpatialJoinExec]] runs, the operator SQL
+  * spatial joins plan into too: all stages live in the caller's one SQL
+  * execution, and the only materialization barriers are the stats
+  * aggregate and the sample collect (the adaptive step the reference also
+  * performs, with a forced single reducer, queryprocessor_2d.cpp:286-293);
+  * they and the refine stage read one persisted copy of each side.
   */
 object SpatialJoin {
 
@@ -172,9 +182,9 @@ object SpatialJoin {
 
   /** Shared entry-point argument validation: a malformed config must fail
     * with a targeted message BEFORE any job runs, never distort results
-    * (round-14 verdict #7). `SpatialPartitioner(name)` already rejects
-    * unknown partitioner names with its own targeted error. */
-  private def validate(cfg: Config): Unit = {
+    * (round-14 verdict #7). `SpatialPartitioner(name)` rejects unknown
+    * partitioner names with its own targeted error. */
+  def validate(cfg: Config): Unit = {
     require(cfg.bucket >= 0,
       s"bucket must be >= 0 (0 = auto-size from row count), got ${cfg.bucket}")
     require(cfg.sampleTarget > 0,
@@ -184,6 +194,8 @@ object SpatialJoin {
       s"distance must be a finite value >= 0, got ${cfg.distance}")
     require(cfg.dedup == "refpoint" || cfg.dedup == "none",
       s"dedup must be refpoint|none, got ${cfg.dedup}")
+    if (!Set("hc_dist", "str_dist", "slc_dist", "qt_dist", "bsp_dist", "bos_dist")(cfg.partitioner))
+      SpatialPartitioner(cfg.partitioner) // rejects an unknown name
   }
 
   /** Plan tiles from a seeded sample of both inputs' MBBs. Returns the tile
@@ -192,49 +204,47 @@ object SpatialJoin {
     * (query_spjoin.hpp:74-230). */
   def planTiles(l: DataFrame, r: DataFrame, cfg: Config): TileIndex = {
     val cols = Seq(X1, Y1, X2, Y2).map(col)
-    val mbbs = l.select(cols: _*).unionAll(r.select(cols: _*))
-    // one plain RDD job per planning aggregate over the (non-null) MBBs; a
-    // DataFrame aggregate adds a SQL execution and an adaptive job per exchange
-    val (space, n) = mbbs.queryExecution.toRdd.aggregate((Mbb.empty, 0L))(
-      (acc, m) => (acc._1.union(Mbb(m.getDouble(0), m.getDouble(1), m.getDouble(2), m.getDouble(3))),
-                   acc._2 + 1),
-      (a, b) => (a._1.union(b._1), a._2 + b._2))
+    planTiles(l.sparkSession, l.select(cols: _*).unionAll(r.select(cols: _*)).queryExecution.toRdd
+      .map(m => Mbb(m.getDouble(0), m.getDouble(1), m.getDouble(2), m.getDouble(3))), cfg)
+  }
+
+  /** [[planTiles]] over the inputs' MBBs. Its aggregates and the sample are
+    * plain RDD jobs (a DataFrame aggregate adds a SQL execution and an
+    * adaptive job per exchange), so they run in the caller's SQL execution;
+    * only the `*_dist` tilings plan through DataFrames. */
+  def planTiles(spark: SparkSession, mbbs: RDD[Mbb], cfg: Config): TileIndex = {
+    val (space, n) = mbbs.aggregate((Mbb.empty, 0L))(
+      (acc, m) => (acc._1.union(m), acc._2 + 1), (a, b) => (a._1.union(b._1), a._2 + b._2))
     if (n == 0)
       return new TileIndex(Array(TileBoundary(0, Mbb(0, 0, 1, 1))), Mbb(0, 0, 1, 1))
-    val spark = l.sparkSession
     val bucket = if (cfg.bucket > 0) cfg.bucket
       else math.max(1000L, n / (spark.sparkContext.defaultParallelism.toLong * TasksPerCore)).toInt
+    // the *_dist tilings read the MBBs as (xmin, ymin, xmax, ymax) columns
+    def frame = spark.createDataFrame(mbbs.map(m => Row(m.xmin, m.ymin, m.xmax, m.ymax)),
+      StructType(Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType, nullable = false))))
     // hc_dist: fully distributed Hilbert tiling over the WHOLE relation
     // (no driver sample) — the 100 TB path (SURVEY G5)
     if (cfg.partitioner == "hc_dist") {
-      val tiles = graft.partition.DistributedHilbert.tiles(
-        mbbs.select(col(X1).as("xmin"), col(Y1).as("ymin"),
-          col(X2).as("xmax"), col(Y2).as("ymax")), space, n, bucket)
+      val tiles = graft.partition.DistributedHilbert.tiles(frame, space, n, bucket)
       return new TileIndex(tiles, space)
     }
     // str_dist: fully distributed STR packing over the WHOLE relation (two
     // distributed sorts, no driver sample) — the 100 TB path (SURVEY G4)
     if (cfg.partitioner == "str_dist") {
-      val tiles = graft.partition.DistributedStr.tiles(
-        mbbs.select(col(X1).as("xmin"), col(Y1).as("ymin"),
-          col(X2).as("xmax"), col(Y2).as("ymax")), n, bucket)
+      val tiles = graft.partition.DistributedStr.tiles(frame, n, bucket)
       return new TileIndex(tiles, space)
     }
     // slc_dist: fully distributed strip-line chop (one distributed sort,
     // only the cut abscissas reach the driver) — SURVEY G6 at 100 TB
     if (cfg.partitioner == "slc_dist") {
-      val tiles = graft.partition.DistributedSlc.tiles(
-        mbbs.select(col(X1).as("xmin"), col(Y1).as("ymin"),
-          col(X2).as("xmax"), col(Y2).as("ymax")), space, n, bucket)
+      val tiles = graft.partition.DistributedSlc.tiles(frame, space, n, bucket)
       return new TileIndex(tiles, space)
     }
     // qt_dist / bsp_dist: recursive splits driven by one EXACT count
     // histogram (bounded collect) instead of a driver sample — G3/G2 at
     // 100 TB
     if (cfg.partitioner == "qt_dist" || cfg.partitioner == "bsp_dist") {
-      val counts = graft.partition.DistributedHisto.histogram(
-        mbbs.select(col(X1).as("xmin"), col(Y1).as("ymin"),
-          col(X2).as("xmax"), col(Y2).as("ymax")), space)
+      val counts = graft.partition.DistributedHisto.histogram(frame, space)
       val tiles =
         if (cfg.partitioner == "qt_dist")
           graft.partition.DistributedHisto.qtTiles(counts, space, bucket)
@@ -245,9 +255,7 @@ object SpatialJoin {
     // marginal tables for the crossing cost — G7 at 100 TB. All five
     // tables come from ONE fused aggregate (one scan, one shuffle).
     if (cfg.partitioner == "bos_dist") {
-      val env = mbbs.select(col(X1).as("xmin"), col(Y1).as("ymin"),
-        col(X2).as("xmax"), col(Y2).as("ymax"))
-      val (counts, cross) = graft.partition.DistributedHisto.allHistograms(env, space)
+      val (counts, cross) = graft.partition.DistributedHisto.allHistograms(frame, space)
       val tiles = graft.partition.DistributedHisto.bosTiles(counts, cross, space, bucket)
       return new TileIndex(tiles, space)
     }
@@ -266,17 +274,17 @@ object SpatialJoin {
       if (cfg.hotTileFactor <= 0) return new TileIndex(tiles, space)
       val (sx, sy) = graft.partition.FixedGridPartitioner.gridDims(n, space, bucket)
       val w = math.max(space.width, 1e-12); val h = math.max(space.height, 1e-12)
-      def ax(c: org.apache.spark.sql.Column, lo: Double, span: Double, s: Int) =
-        greatest(lit(0), least(lit(s - 1),
-          floor((c - lit(lo)) / lit(span) * s).cast("int")))
-      val tileId =
-        ax(((col(Y1) + col(Y2)) / 2), space.ymin, h, sy) * sx +
-        ax(((col(X1) + col(X2)) / 2), space.xmin, w, sx)
+      def ax(c: Double, lo: Double, span: Double, s: Int) =
+        math.max(0, math.min(s - 1, math.floor((c - lo) / span * s).toLong.toInt))
       val hotAt = cfg.hotTileFactor.toLong * bucket
-      val counts = mbbs.select(tileId).queryExecution.toRdd
-        .mapPartitions { rows =>
+      val counts = mbbs
+        .mapPartitions { ms =>
           val c = scala.collection.mutable.HashMap.empty[Int, Long]
-          rows.foreach(row => c(row.getInt(0)) = c.getOrElse(row.getInt(0), 0L) + 1)
+          ms.foreach { m =>
+            val t = ax((m.ymin + m.ymax) / 2, space.ymin, h, sy) * sx +
+              ax((m.xmin + m.xmax) / 2, space.xmin, w, sx)
+            c(t) = c.getOrElse(t, 0L) + 1
+          }
           Iterator.single(c)
         }
         .reduce { (a, b) => b.foreach { case (t, k) => a(t) = a.getOrElse(t, 0L) + k }; a }
@@ -285,11 +293,13 @@ object SpatialJoin {
       }.toMap
       return new TileIndex(tiles, space, shards, counts.toMap)
     }
+    // a Bernoulli sample seeded per partition, as a DataFrame sample draws it
     val fraction = math.min(1.0, cfg.sampleTarget.toDouble / n)
-    val sample = mbbs.sample(withReplacement = false, fraction, SampleSeed)
-      .limit(cfg.sampleTarget * 2)
-      .collect()
-      .map(row => Mbb(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3)))
+    val sample = mbbs.mapPartitionsWithIndex { (i, ms) =>
+      val s = new BernoulliCellSampler[Mbb](0.0, fraction)
+      s.setSeed(SampleSeed + i)
+      ms.filter(_ => s.sample() > 0)
+    }.take(cfg.sampleTarget * 2)
     // scale bucket by the sample rate (reference queryprocessor_2d.cpp:280)
     val scaledBucket = math.max(1, math.floor(bucket * fraction).toInt)
     val part = SpatialPartitioner(cfg.partitioner)
@@ -353,20 +363,20 @@ object SpatialJoin {
     * must be disjoint between the two sides. Output = left columns ++ right
     * columns, one row per matched pair (deduped across tiles).
     *
-    * Each side's envelope is computed once per row ([[enveloped]]) into a
-    * persisted copy that planning and the refine stage share. The refine
-    * stage is [[slotCogroup]]: one task per (tile, shard) key, heaviest
-    * first by the per-tile counts planning took, up to 4 tasks per core
-    * (more keys pack onto one task per core), each holding one key's
-    * STRtree at a time. */
+    * Lazy: the result is a logical [[SpatialJoinNode]] over the two
+    * [[enveloped]] sides (each envelope computed once per row), which
+    * [[SpatialJoinStrategy]] (added to the session's planner here) plans
+    * into [[org.apache.spark.sql.graft.SpatialJoinExec]], the operator SQL
+    * spatial joins run too. Its refine stage is [[slotCogroup]]: one task
+    * per (tile, shard) key, heaviest first by the per-tile counts planning
+    * took, up to 4 tasks per core (more keys pack onto one task per core),
+    * each holding one key's STRtree at a time. */
   def join(left: DataFrame, leftGeom: String,
            right: DataFrame, rightGeom: String,
            cfg: Config = Config()): DataFrame = {
     val spark = left.sparkSession
     validate(cfg)
     requireDisjoint(left, right)
-
-    val refineDist = if (cfg.predicate == "dwithin") cfg.distance else 0.0
     val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, cfg)
 
     // st_equals implies envelope equality, so the complete candidate set is
@@ -383,106 +393,26 @@ object SpatialJoin {
       return if (cfg.keepTile) out.withColumn("tile_id", lit(-1)) else out
     }
 
-    // each side is read ONCE: planning's aggregates and the cogroup all
-    // scan a persisted copy of the enveloped rows instead of re-running the
-    // input plan per job (for a text source, re-parsing the file). The
-    // copies are freed once the query consuming this join has run.
-    val (l, lCopy) = Bridge.persisted(lEnv)
-    val (r, rCopy) = Bridge.persisted(rEnv)
-    val index = planTiles(l, r, cfg)
-    Seq(lCopy, rCopy).foreach(c =>
-      CacheHygiene.releaseAfterFirstJob(spark.sparkContext, c)(c.unpersist(blocking = false)))
-    val bc = spark.sparkContext.broadcast(index)
-
-    // composite (tile, shard) keys: probe rows land on one shard per tile,
-    // build rows replicate to every shard of a hot tile (salting)
-    val probeKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double, salt: Long) =>
-      bc.value.probeKeys(x1, y1, x2, y2, salt)
-    }
-    val buildKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.buildKeys(x1, y1, x2, y2)
-    }
-    // hot-tile shard salt must be DETERMINISTIC under stage re-execution
-    // (monotonically_increasing_id depends on partition layout/row order, so
-    // a partial map-stage retry could re-salt rows onto shards reducers
-    // already fetched — the SPARK-23207 lost/duplicated-rows class). Hash
-    // the row content instead: recomputation reproduces identical keys.
-    val lt = l.withColumn("__salt",
-        xxhash64(col(X1), col(Y1), col(X2), col(Y2), col(leftGeom)))
-      .withColumn(Tile,
-        explode(probeKeys(col(X1), col(Y1), col(X2), col(Y2), col("__salt"))))
-    val rt = r.withColumn(Tile,
-      explode(buildKeys(col(X1), col(Y1), col(X2), col(Y2))))
-    val lOutCols = left.columns
-    val rOutCols = right.columns
-    val keepTile = cfg.keepTile
-    val outSchema0 = StructType(
-      lOutCols.map(left.schema(_)) ++ rOutCols.map(right.schema(_)))
-    val outSchema =
-      if (keepTile) outSchema0.add("tile_id", IntegerType, nullable = false)
-      else outSchema0
-
-    val ltSchema = lt.schema; val rtSchema = rt.schema
-    val lTileIdx = ltSchema.fieldIndex(Tile)
-    val lGeomIdx = ltSchema.fieldIndex(leftGeom); val rGeomIdx = rtSchema.fieldIndex(rightGeom)
-    val lEnvIdx = Seq(X1, Y1, X2, Y2).map(ltSchema.fieldIndex)
-    val rEnvIdx = Seq(X1, Y1, X2, Y2).map(rtSchema.fieldIndex)
-    val lKeep = lOutCols.map(ltSchema.fieldIndex)
-    val rKeep = rOutCols.map(rtSchema.fieldIndex)
-    val predicate = cfg.predicate
-    val useRefPoint = cfg.dedup == "refpoint"
-
-    // index set 2, probe set 1 — same sides as RESQUE (spjoin_2d.hpp:34-50)
-    slotCogroup(lt, rt, index, outSchema)(rowTree(rGeomIdx, rEnvIdx)) { (tree, lrow) =>
-      val g1 =
-        if (tree.isEmpty) null
-        else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-      if (g1 == null) Iterator.empty
-      else {
-        val idx = bc.value
-        val tile = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
-        val px1 = lrow.getDouble(lEnvIdx(0)); val py1 = lrow.getDouble(lEnvIdx(1))
-        val px2 = lrow.getDouble(lEnvIdx(2)); val py2 = lrow.getDouble(lEnvIdx(3))
-        val probe = new Envelope(px1, px2, py1, py2)
-        val hits = tree.query(probe)
-        val out = Vector.newBuilder[Row]
-        var i = 0
-        while (i < hits.size()) {
-          val (g2, rrow) = hits.get(i).asInstanceOf[(Geometry, Row)]
-          if (GeomPredicates.eval(predicate, g1, g2, refineDist, cfg.earth)) {
-            val emit = if (!useRefPoint) true else {
-              // bottom-left corner of probe-env ∩ build-env intersection
-              val refx = math.max(px1, rrow.getDouble(rEnvIdx(0)))
-              val refy = math.max(py1, rrow.getDouble(rEnvIdx(1)))
-              idx.refTile(refx, refy) == tile
-            }
-            if (emit) {
-              val vals = new Array[Any](
-                lKeep.length + rKeep.length + (if (keepTile) 1 else 0))
-              var k = 0
-              while (k < lKeep.length) { vals(k) = lrow.get(lKeep(k)); k += 1 }
-              var m = 0
-              while (m < rKeep.length) { vals(k + m) = rrow.get(rKeep(m)); m += 1 }
-              if (keepTile) vals(k + m) = tile
-              out += Row.fromSeq(vals.toIndexedSeq)
-            }
-          }
-          i += 1
-        }
-        out.result().iterator
-      }
-    }
+    SpatialJoinStrategy.install(spark)
+    val (lp, rp) = (lEnv.queryExecution.analyzed, rEnv.queryExecution.analyzed)
+    def attrs(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, names: String*) =
+      names.map(n => p.output.find(_.name == n).get)
+    Bridge.ofPlan(spark, SpatialJoinNode(lp, rp, attrs(lp, leftGeom).head, attrs(rp, rightGeom).head,
+      attrs(lp, X1, Y1, X2, Y2), attrs(rp, X1, Y1, X2, Y2), cfg,
+      if (cfg.keepTile) Some(AttributeReference("tile_id", IntegerType, nullable = false)())
+      else None))
   }
 
   /** An STRtree over `rows` with a parseable geometry at `geomIdx`, each
-    * inserted as (geometry, row) under its envelope columns `envIdx`. */
-  private def rowTree(geomIdx: Int, envIdx: Seq[Int])(rows: Iterator[Row]): STRtree = {
+    * inserted as (geometry, a copy of the row) under its envelope columns
+    * `envIdx`. */
+  def rowTree(geomIdx: Int, envIdx: Seq[Int])(rows: Iterator[InternalRow]): STRtree = {
     val tree = new STRtree()
     rows.foreach { row =>
-      val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](geomIdx))
+      val g = GeometryCodec.fromWkb(row.getBinary(geomIdx))
       if (g != null)
         tree.insert(new Envelope(row.getDouble(envIdx(0)), row.getDouble(envIdx(2)),
-                                 row.getDouble(envIdx(1)), row.getDouble(envIdx(3))), (g, row))
+                                 row.getDouble(envIdx(1)), row.getDouble(envIdx(3))), (g, row.copy()))
     }
     tree.build()
     tree
@@ -493,52 +423,73 @@ object SpatialJoin {
     require(dup.isEmpty, s"column name collision between join sides: $dup")
   }
 
-  /** The refine stage of every 2-D tiled operator. `probe` and `build` rows
-    * carry their composite (tile, shard) key in a LongType `__tile` column,
-    * built by `index`'s key arithmetic ([[TileIndex.probeKeys]],
-    * [[TileIndex.buildKeys]], [[TileIndex.probeKey]]). Both sides are
-    * partitioned straight onto the key's refine slot
-    * ([[TileIndex.refineSlots]], heaviest key first; the partition id IS
-    * the slot). Up to [[TasksPerCore]] keys per core, each key is one
-    * task, so the scheduler evens out keys whose planned weight misjudges
-    * their work. Past that, keys are packed anyway, and packing by weight
-    * onto one slot per core spends the fewest tasks: a q_knn_tile
-    * `knnJoin` (30 keys of cheap point searches, 4 cores) used 0.32-0.36
-    * task-CPU-s per run on 16 packed slots against 0.24-0.27 on 4, in the
-    * same wall time. The slots are then grouped: the pass-through
-    * partitioning satisfies the cogroup's clustering on the slot column, so
-    * no second exchange is planned. Hashing keys onto the session's shuffle
-    * partitions instead leaves one task holding several tiles while other
-    * cores idle, and adaptive execution coalesces them further.
+  /** The layout of the rows [[slotCogroup]] hands its callbacks: the refine
+    * slot, the (tile, shard) key, then the input's `attrs`. */
+  def keyed(attrs: Seq[Attribute]): Seq[Attribute] =
+    AttributeReference(Slot, IntegerType, nullable = false)() +:
+      AttributeReference(Tile, LongType, nullable = false)() +: attrs
+
+  /** `rows`, laid out as `attrs`, shuffled into the partitions of `by` and
+    * sorted within each by `order`, on Spark's UnsafeRow serializer and
+    * spilling external sorter. The returned iterators reuse their rows. */
+  def clustered(spark: SparkSession, rows: RDD[InternalRow], attrs: Seq[Attribute],
+                               by: Partitioning, order: Seq[SortOrder]): RDD[InternalRow] =
+    Bridge.withActive(spark) {
+      SortExec(order, global = false, ShuffleExchangeExec(by, RDDScanExec(attrs, rows, "rows")))
+        .execute()
+    }
+
+  /** The refine stage of every 2-D tiled operator, on internal rows.
+    * `probeKeys` and `buildKeys` give each row of `probe` / `build` (laid
+    * out as `probeAttrs` / `buildAttrs`) its composite (tile, shard) keys,
+    * built by `slots`' key arithmetic ([[TileIndex.probeKeys]],
+    * [[TileIndex.buildKeys]], [[TileIndex.probeKey]]). Each keyed row is
+    * shuffled straight onto its key's refine slot ([[TileIndex.refineSlots]],
+    * heaviest key first; the partition id IS the slot). Up to
+    * [[TasksPerCore]] keys per core, each key is one task, so the scheduler
+    * evens out keys whose planned weight misjudges their work. Past that,
+    * keys are packed anyway, and packing by weight onto one slot per core
+    * spends the fewest tasks: a q_knn_tile `knnJoin` (30 keys of cheap point
+    * searches, 4 cores) used 0.32-0.36 task-CPU-s per run on 16 packed
+    * slots against 0.24-0.27 on 4, in the same wall time. Hashing keys onto
+    * the session's shuffle partitions instead leaves one task holding
+    * several tiles while other cores idle, and adaptive execution coalesces
+    * them further.
     *
-    * Within a slot both sides arrive sorted by key (the one sort the
-    * cogroup plans anyway, on (slot, key) instead of slot), and [[keyRuns]]
-    * walks them: `index` builds one key's index from its build rows, and
-    * `refine` turns each of the key's probe rows into output rows laid out
-    * as `outSchema`. */
-  private def slotCogroup[T](probe: DataFrame, build: DataFrame, slots: TileIndex,
-                             outSchema: StructType)(
-      index: Iterator[Row] => T)(refine: (T, Row) => Iterator[Row]): DataFrame = {
-    val sc = probe.sparkSession.sparkContext
+    * Within a slot both sides are sorted by key ([[clustered]]), and
+    * [[keyRuns]] walks them: `index` builds one key's index from its build
+    * rows (which it must copy to keep), and the per-task `refine` turns
+    * each of the key's probe rows into output rows. Both see rows laid out
+    * as [[keyed]]. */
+  def slotCogroup[T](spark: SparkSession, slots: TileIndex,
+      probe: RDD[InternalRow], probeAttrs: Seq[Attribute], probeKeys: InternalRow => Iterator[Long],
+      build: RDD[InternalRow], buildAttrs: Seq[Attribute], buildKeys: InternalRow => Iterator[Long])(
+      index: Iterator[InternalRow] => T)(
+      refine: () => (T, InternalRow) => Iterator[InternalRow]): RDD[InternalRow] = {
+    val sc = spark.sparkContext
     val cores = sc.defaultParallelism
     val keys = slots.tiles.iterator.map(t => slots.shardsOf(t.tileId)).sum
     val (nSlots, slotOf) =
       slots.refineSlots(if (keys <= TasksPerCore * cores) keys else cores)
     val slotBc = sc.broadcast(slotOf)
-    val slot = udf { (key: Long) => slotBc.value(key) }
-    val pKey = probe.schema.fieldIndex(Tile); val bKey = build.schema.fieldIndex(Tile)
-    // keys are never null: declaring the slot non-null gives both sides the
-    // same grouping type, whatever the nullability of their key columns
-    val slotCol = Bridge.column(AssertNotNull(Bridge.expression(slot(col(Tile)))))
-    def bySlot(df: DataFrame) = {
-      val slotted = df.withColumn(Slot, slotCol)
-      slotted.repartitionById(nSlots, col(Slot)).groupBy(col(Slot))
-        .as[Int, Row](Encoders.scalaInt, Encoders.row(slotted.schema))
+    def bySlot(rows: RDD[InternalRow], attrs: Seq[Attribute], keysOf: InternalRow => Iterator[Long]) = {
+      val out = keyed(attrs)
+      val tagged: RDD[InternalRow] = rows.mapPartitions { it =>
+        val head = new GenericInternalRow(2)
+        val joined = new JoinedRow(head, null)
+        val proj = UnsafeProjection.create(out, out)
+        it.flatMap { row =>
+          joined.withRight(row)
+          keysOf(row).map { k => head.setInt(0, slotBc.value(k)); head.setLong(1, k); proj(joined) }
+        }
+      }
+      clustered(spark, tagged, out,
+        ShufflePartitionIdPassThrough(DirectShufflePartitionID(out.head), nSlots),
+        Seq(SortOrder(out(1), Ascending)))
     }
-    bySlot(probe).cogroupSorted(bySlot(build))(col(Tile))(col(Tile)) {
-      (_: Int, ps: Iterator[Row], bs: Iterator[Row]) =>
-        keyRuns(bs, ps)(_.getLong(bKey), _.getLong(pKey))(index)(refine)
-    }(Encoders.row(outSchema)).toDF()
+    bySlot(probe, probeAttrs, probeKeys).zipPartitions(bySlot(build, buildAttrs, buildKeys)) {
+      (ps, bs) => keyRuns(bs, ps)(_.getLong(1), _.getLong(1))(index)(refine())
+    }
   }
 
   /** Walks one refine slot whose build and probe rows both arrive sorted by
@@ -667,68 +618,78 @@ object SpatialJoin {
     * their envelope touches. Each tile's right rows become one [[KnnTile]]
     * in the refine stage [[slotCogroup]] runs, and each left row with a
     * parseable geometry is answered by its `m` nearest; `emit` turns the
-    * left row, its owner tile and those (distance, right row) candidates
-    * into (right row or null, distance, rank) triples. Left rows whose tile
-    * holds no right row meet an empty candidate list. Output = left columns
-    * ++ right columns, typed as `fields` (whose nullability the caller
-    * picks: a null right row needs nullable right fields), ++ `knn_dist` ++
-    * `knn_rank`. */
+    * left row (laid out as [[keyed]] `l`), its owner tile and those
+    * (distance, right row) candidates into (right row or null, distance,
+    * rank) triples. Left rows whose tile holds no right row meet an empty
+    * candidate list. Output = left columns ++ right columns, typed as
+    * `fields` (whose nullability the caller picks: a null right row needs
+    * nullable right fields), ++ `knn_dist` ++ `knn_rank`. */
   private def ownerTileKnn(left: DataFrame, l: DataFrame, leftGeom: String,
                            right: DataFrame, r: DataFrame, rightGeom: String,
                            index: TileIndex, m: Int, fields: Seq[StructField])(
-      emit: (Row, Int, Array[(Double, Row)]) => Iterator[(Row, Double, Int)]): DataFrame = {
+      emit: (InternalRow, Int, Array[(Double, InternalRow)]) => Iterator[(InternalRow, Double, Int)]
+  ): DataFrame = {
+    val spark = left.sparkSession
     // one key per tile: owner tiles take no hot-tile shards
     val owners = index.withCounts(Map.empty, index.tileWeights)
-    val bc = left.sparkSession.sparkContext.broadcast(owners)
-    val ownerKey = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.refTile((x1 + x2) / 2, (y1 + y2) / 2).toLong * TileIndex.MaxShards
-    }
-    val tileKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.buildKeys(x1, y1, x2, y2)
-    }
-    val lt = l.withColumn(Tile, ownerKey(col(X1), col(Y1), col(X2), col(Y2)))
-    val rt = r.withColumn(Tile, explode(tileKeys(col(X1), col(Y1), col(X2), col(Y2))))
-    val lOutCols = left.columns; val rOutCols = right.columns
+    val bc = spark.sparkContext.broadcast(owners)
+    val Seq(lx1, ly1, lx2, ly2) = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex)
+    val rEnv = Seq(X1, Y1, X2, Y2).map(r.schema.fieldIndex)
+    val ownerKey = (row: InternalRow) => Iterator.single(bc.value.refTile(
+      (row.getDouble(lx1) + row.getDouble(lx2)) / 2,
+      (row.getDouble(ly1) + row.getDouble(ly2)) / 2).toLong * TileIndex.MaxShards)
+    val tileKeys = (row: InternalRow) => bc.value.buildKeys(row.getDouble(rEnv(0)),
+      row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
+    val (lA, rA) = (attrsOf(l), attrsOf(r))
+    val (lK, rK) = (keyed(lA), keyed(rA))
+    val lGeom = l.schema.fieldIndex(leftGeom) + 2; val rGeom = r.schema.fieldIndex(rightGeom) + 2
+    val lOut = left.columns.toSeq.map(c => lK(l.schema.fieldIndex(c) + 2))
+    val rOut = right.columns.toSeq.map(c => rK(r.schema.fieldIndex(c) + 2))
     val outSchema = StructType(fields :+
       StructField("knn_dist", DoubleType, nullable = false) :+
       StructField("knn_rank", IntegerType, nullable = false))
-    val lTileIdx = lt.schema.fieldIndex(Tile)
-    val lGeomIdx = lt.schema.fieldIndex(leftGeom); val rGeomIdx = rt.schema.fieldIndex(rightGeom)
-    val lKeep = lOutCols.map(lt.schema.fieldIndex)
-    val rKeep = rOutCols.map(rt.schema.fieldIndex)
 
-    slotCogroup(lt, rt, owners, outSchema) { build =>
+    val rows = slotCogroup(spark, owners, l.queryExecution.toRdd, lA, ownerKey,
+        r.queryExecution.toRdd, rA, tileKeys) { build =>
       val items = build.flatMap { row =>
-        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-        if (g == null) None else Some((g, row))
+        Option(GeometryCodec.fromWkb(row.getBinary(rGeom))).map((_, row.copy()))
       }.toArray
       (new KnnTile(items.map(_._1)), items.map(_._2))
-    } { case ((tile, rows), lrow) =>
-      val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-      if (g1 == null) Iterator.empty
-      else {
-        val owner = (lrow.getLong(lTileIdx) / TileIndex.MaxShards).toInt
-        val near = tile.nearest(g1, m).map { case (d, p) => (d, rows(p)) }
-        emit(lrow, owner, near).map { case (rrow, d, rank) =>
-          knnRow(lrow, lKeep, rrow, rKeep, d, rank)
+    } { () =>
+      val knnRow = knnRows(lOut, lK, rOut, rK)
+      (tileRows, lrow) => {
+        val (tile, rows) = tileRows
+        val g1 = GeometryCodec.fromWkb(lrow.getBinary(lGeom))
+        if (g1 == null) Iterator.empty
+        else {
+          val owner = (lrow.getLong(1) / TileIndex.MaxShards).toInt
+          val near = tile.nearest(g1, m).map { case (d, p) => (d, rows(p)) }
+          emit(lrow, owner, near).map { case (rrow, d, rank) => knnRow(lrow, rrow, d, rank) }
         }
       }
     }
+    Bridge.frame(spark, rows, outSchema)
   }
 
-  /** A kNN output row: columns `lKeep` of `lrow`, columns `rKeep` of
-    * `rrow` (nulls for a null `rrow`), the distance and the rank. */
-  private def knnRow(lrow: Row, lKeep: Array[Int], rrow: Row, rKeep: Array[Int],
-                     d: Double, rank: Int): Row = {
-    val vals = new Array[Any](lKeep.length + rKeep.length + 2)
-    var a = 0
-    while (a < lKeep.length) { vals(a) = lrow.get(lKeep(a)); a += 1 }
-    var b = 0
-    while (b < rKeep.length) {
-      vals(a + b) = if (rrow == null) null else rrow.get(rKeep(b)); b += 1
+  private def attrsOf(df: DataFrame): Seq[Attribute] = DataTypeUtils.toAttributes(df.schema)
+
+  /** Per task: a kNN output row from a left row laid out as `lIn` and a
+    * right row laid out as `rIn` (or null): the `lOut` columns, the `rOut`
+    * columns (nulls for a null right row), the distance and the rank. */
+  private def knnRows(lOut: Seq[Attribute], lIn: Seq[Attribute],
+                      rOut: Seq[Attribute], rIn: Seq[Attribute]
+  ): (InternalRow, InternalRow, Double, Int) => InternalRow = {
+    val dr = Seq(AttributeReference("knn_dist", DoubleType, nullable = false)(),
+      AttributeReference("knn_rank", IntegerType, nullable = false)())
+    val proj = UnsafeProjection.create(lOut ++ rOut ++ dr,
+      lIn ++ rIn.map(_.withNullability(true)) ++ dr)
+    val nulls = new GenericInternalRow(rIn.length)
+    val last = new GenericInternalRow(2)
+    val (lr, lrd) = (new JoinedRow, new JoinedRow)
+    (lrow, rrow, d, rank) => {
+      last.setDouble(0, d); last.setInt(1, rank)
+      proj(lrd(lr(lrow, if (rrow == null) nulls else rrow), last))
     }
-    vals(a + b) = d; vals(a + b + 1) = rank
-    Row.fromSeq(vals.toIndexedSeq)
   }
 
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every
@@ -737,18 +698,23 @@ object SpatialJoin {
     * reproducing the reference's tile-local caveat without the reference's
     * cross-tile duplicate emission. Equal distances rank in arrival order.
     * This is pass 1 of [[knnJoinExact]] without its safety classification
-    * ([[ownerTileKnn]]). Column names must be disjoint between the sides.
-    * Output = left cols ++ right cols ++ `knn_dist`. */
+    * ([[ownerTileKnn]]). Each side's envelopes are read through one
+    * persisted copy, released after the consuming query. Column names must
+    * be disjoint between the sides. Output = left cols ++ right cols ++
+    * `knn_dist`. */
   def knnJoin(left: DataFrame, leftGeom: String,
               right: DataFrame, rightGeom: String,
               k: Int, cfg: Config = Config()): DataFrame = {
     validateKnn(left, right, k, cfg)
-    val l = withEnv(left, leftGeom, 0.0)
-    val r = withEnv(right, rightGeom, 0.0)
-    ownerTileKnn(left, l, leftGeom, right, r, rightGeom, planTiles(l, r, cfg), k,
+    val (l, lCopy) = Bridge.persisted(withEnv(left, leftGeom, 0.0))
+    val (r, rCopy) = Bridge.persisted(withEnv(right, rightGeom, 0.0))
+    val out = ownerTileKnn(left, l, leftGeom, right, r, rightGeom, planTiles(l, r, cfg), k,
         left.schema ++ right.schema) { (_, _, near) =>
       near.iterator.take(k).zipWithIndex.map { case ((d, rrow), i) => (rrow, d, i + 1) }
     }.drop("knn_rank")
+    CacheHygiene.releaseAfterFirstJob(left.sparkSession.sparkContext, lCopy)(
+      Seq(lCopy, rCopy).foreach(_.unpersist(blocking = false)))
+    out
   }
 
   /** Per-tile kNN ring plans over arbitrary tile boxes: for each tile,
@@ -892,8 +858,10 @@ object SpatialJoin {
         return knnBroadcast(left, leftGeom, right, rightGeom, probe, k, tieBreak)
     }
 
-    val l = withEnv(left, leftGeom, 0.0)
-    val r = withEnv(right, rightGeom, 0.0)
+    // each side's envelopes are read through one copy, released with the
+    // intermediates after the consuming query
+    val (l, lCopy) = Bridge.persisted(withEnv(left, leftGeom, 0.0))
+    val (r, rCopy) = Bridge.persisted(withEnv(right, rightGeom, 0.0))
     val index = planTiles(l, r, cfg)
     val diag = math.sqrt(index.space.width * index.space.width +
                          index.space.height * index.space.height)
@@ -957,7 +925,7 @@ object SpatialJoin {
     val lOutCols = left.columns; val rOutCols = right.columns
 
     // ---------------- pass 1: owner-tile kNN + safety classification
-    val lEnvIdx = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex)
+    val lEnvIdx = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex(_) + 2)
     // marker rows carry null right columns
     val pass1 = ownerTileKnn(left, l, leftGeom, right, r, rightGeom, index, k + 1,
         (left.schema ++ right.schema).map(_.copy(nullable = true))) { (lrow, owner, near) =>
@@ -1185,8 +1153,7 @@ object SpatialJoin {
     // refpoint's owner tile always survives this filter (1e-9 slack
     // absorbs float rounding; slack only ADDS tiles). Measured in the
     // knn2d 100× rehearsal: pass-2 shuffle 23 GB spill → bounded.
-    val ballTiles = udf { (ex1: Double, ey1: Double,
-                           ex2: Double, ey2: Double, rad: Double) =>
+    val ballTilesOf = (ex1: Double, ey1: Double, ex2: Double, ey2: Double, rad: Double) => {
       val ox1 = ex1 + rad; val oy1 = ey1 + rad
       val ox2 = ex2 - rad; val oy2 = ey2 - rad
       val rr = rad + 1e-9; val rr2 = rr * rr
@@ -1207,13 +1174,14 @@ object SpatialJoin {
       if (!occEmpty) visit(occTreeBc.value.getRoot)
       out.result()
     }
+    val ballTiles = udf(ballTilesOf)
     // pass-2 hot-key sharding: under clustered rights, ~every starved left
     // replicates to the same few cluster-edge tiles, so the plain tile key
     // skews the refine into a handful of straggler tasks (measured in the
     // knn2d 100× rehearsal: 872 s of pass-2 CPU, one task holding 570 s
     // of it — the corner tiles facing the bulk of the sparse lefts carry
     // ~everything). Composite (tile, shard) keys — [[join]]'s protocol —
-    // spread it: each LEFT picks one shard by content hash of its id,
+    // spread it: each LEFT picks one shard by content hash of its row,
     // rights replicate to every shard of each tile they touch. Shard counts
     // are ADAPTIVE, from the exact per-tile replica loads: the
     // radius-resolved left relation is copied once, by its own SQL
@@ -1236,83 +1204,89 @@ object SpatialJoin {
       t -> math.min(TileIndex.MaxShards.toLong, (c + target - 1) / target).toInt
     }, tileLoads)
     val shardBc = spark.sparkContext.broadcast(sharded)
-    val lShardKey = udf { (t: Int, h: Long) => shardBc.value.probeKey(t, h) }
-    val rShardKeys = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      shardBc.value.buildKeys(x1, y1, x2, y2)
+    val Seq(e1, e2, e3, e4, radIdx) = Seq(X1, Y1, X2, Y2, Rad).map(l2p.schema.fieldIndex)
+    val lt2Keys = (row: InternalRow) => {
+      val h = row.hashCode.toLong
+      ballTilesOf(row.getDouble(e1), row.getDouble(e2), row.getDouble(e3), row.getDouble(e4),
+        row.getDouble(radIdx)).iterator.map(shardBc.value.probeKey(_, h))
     }
-    val lt2 = l2p.withColumn(Tile, explode(ballTilesCol))
-      .withColumn(Tile, lShardKey(col(Tile), xxhash64(col(leftId))))
-    val rt2 = r.withColumn(Tile, explode(rShardKeys(col(X1), col(Y1), col(X2), col(Y2))))
-    val lt2S = lt2.schema; val rt2S = rt2.schema
-    val l2Key = lt2S.fieldIndex(Tile)
-    val l2Geom = lt2S.fieldIndex(leftGeom); val r2Geom = rt2S.fieldIndex(rightGeom)
-    val l2Env = Seq(X1, Y1, X2, Y2).map(lt2S.fieldIndex)
-    val r2Env = Seq(X1, Y1, X2, Y2).map(rt2S.fieldIndex)
-    val radIdx = lt2S.fieldIndex(Rad)
-    val l2Keep = lOutCols.map(lt2S.fieldIndex)
-    val r2Keep = rOutCols.map(rt2S.fieldIndex)
+    val rEnv = Seq(X1, Y1, X2, Y2).map(r.schema.fieldIndex)
+    val rt2Keys = (row: InternalRow) => shardBc.value.buildKeys(row.getDouble(rEnv(0)),
+      row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
+    // the refine stage's layouts: slot, key, then the frames' columns
+    val (l2A, r2A) = (attrsOf(l2p), attrsOf(r))
+    val (l2K, r2K) = (keyed(l2A), keyed(r2A))
+    val l2Geom = l2p.schema.fieldIndex(leftGeom) + 2; val r2Geom = r.schema.fieldIndex(rightGeom) + 2
+    val l2Env = Seq(e1, e2, e3, e4).map(_ + 2); val r2Env = rEnv.map(_ + 2)
+    val l2Out = lOutCols.toSeq.map(c => l2K(l2p.schema.fieldIndex(c) + 2))
+    val r2Out = rOutCols.toSeq.map(c => r2K(r.schema.fieldIndex(c) + 2))
 
-    val cands = slotCogroup(lt2, rt2, sharded, p1.schema)(rowTree(r2Geom, r2Env)) { (tree, lrow) =>
-      val g1 =
-        if (tree.isEmpty) null
-        else GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](l2Geom))
-      if (g1 == null) Iterator.empty
-      else {
-        val idx = bc.value
-        val tile = (lrow.getLong(l2Key) / TileIndex.MaxShards).toInt
-        val rad = lrow.getDouble(radIdx)
-        val px1 = lrow.getDouble(l2Env(0)); val py1 = lrow.getDouble(l2Env(1))
-        val px2 = lrow.getDouble(l2Env(2)); val py2 = lrow.getDouble(l2Env(3))
-        // ball-bounded branch-and-bound over the tile tree: descend only
-        // nodes whose EUCLIDEAN envelope gap to the row's ORIGINAL envelope
-        // is ≤ rad. A Chebyshev-box query here admitted every right in the
-        // expanded box — for a far left whose ball grazes a clustered
-        // region that is ~the whole tile, each hit paying a per-item gap
-        // check (the pass-2 refine was the hottest stage of the knn2d 100×
-        // rehearsal); the bound prunes whole subtrees instead.
-        // gap(lEnv, rEnv) ≤ d(g1, g2) always, so pruning on it is
-        // loss-free (1e-9 slack for rounding); each rejected item also
-        // saves a ~100× costlier DistanceOp.
-        val ox1 = px1 + rad; val oy1 = py1 + rad
-        val ox2 = px2 - rad; val oy2 = py2 - rad
-        val rSlack = rad + 1e-9; val rr2 = rSlack * rSlack
-        val out = Vector.newBuilder[Row]
-        def visit(node: Boundable): Unit = {
-          val e = node.getBounds.asInstanceOf[Envelope]
-          val gx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
-          val gy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
-          if (gx * gx + gy * gy <= rr2) node match {
-            case n: AbstractNode =>
-              val cs = n.getChildBoundables
-              var j = 0
-              while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
-            case item: ItemBoundable =>
-              val (g2, rrow) = item.getItem.asInstanceOf[(Geometry, Row)]
-              val d = g1.distance(g2)
-              if (d <= rad) {
-                // refpoint = nearest point of the RIGHT envelope to the
-                // row's ORIGINAL envelope (overlap → its low edge, a
-                // deterministic pair function): it lies in the right
-                // envelope (tile is right-occupied) at dist =
-                // minDist(lEnv, rEnv) ≤ d ≤ rad from the left envelope, so
-                // its owner tile carries BOTH replicas under the ball prune
-                // above — each qualifying pair is emitted exactly once, by
-                // that tile
-                val rx0 = rrow.getDouble(r2Env(0)); val ry0 = rrow.getDouble(r2Env(1))
-                val rx1 = rrow.getDouble(r2Env(2)); val ry1 = rrow.getDouble(r2Env(3))
-                val refx = if (rx0 > ox2) rx0 else if (rx1 < ox1) rx1
-                           else math.max(ox1, rx0)
-                val refy = if (ry0 > oy2) ry0 else if (ry1 < oy1) ry1
-                           else math.max(oy1, ry0)
-                if (idx.refTile(refx, refy) == tile)
-                  out += knnRow(lrow, l2Keep, rrow, r2Keep, d, 0)
-              }
+    val candRows = slotCogroup(spark, sharded, l2p.queryExecution.toRdd, l2A, lt2Keys,
+        r.queryExecution.toRdd, r2A, rt2Keys)(rowTree(r2Geom, r2Env)) { () =>
+      val knnRow = knnRows(l2Out, l2K, r2Out, r2K)
+      (tree, lrow) => {
+        val g1 =
+          if (tree.isEmpty) null
+          else GeometryCodec.fromWkb(lrow.getBinary(l2Geom))
+        if (g1 == null) Iterator.empty
+        else {
+          val idx = bc.value
+          val tile = (lrow.getLong(1) / TileIndex.MaxShards).toInt
+          val rad = lrow.getDouble(radIdx + 2)
+          val px1 = lrow.getDouble(l2Env(0)); val py1 = lrow.getDouble(l2Env(1))
+          val px2 = lrow.getDouble(l2Env(2)); val py2 = lrow.getDouble(l2Env(3))
+          // ball-bounded branch-and-bound over the tile tree: descend only
+          // nodes whose EUCLIDEAN envelope gap to the row's ORIGINAL envelope
+          // is ≤ rad. A Chebyshev-box query here admitted every right in the
+          // expanded box — for a far left whose ball grazes a clustered
+          // region that is ~the whole tile, each hit paying a per-item gap
+          // check (the pass-2 refine was the hottest stage of the knn2d 100×
+          // rehearsal); the bound prunes whole subtrees instead.
+          // gap(lEnv, rEnv) ≤ d(g1, g2) always, so pruning on it is
+          // loss-free (1e-9 slack for rounding); each rejected item also
+          // saves a ~100× costlier DistanceOp.
+          val ox1 = px1 + rad; val oy1 = py1 + rad
+          val ox2 = px2 - rad; val oy2 = py2 - rad
+          val rSlack = rad + 1e-9; val rr2 = rSlack * rSlack
+          val out = Vector.newBuilder[InternalRow]
+          def visit(node: Boundable): Unit = {
+            val e = node.getBounds.asInstanceOf[Envelope]
+            val gx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
+            val gy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
+            if (gx * gx + gy * gy <= rr2) node match {
+              case n: AbstractNode =>
+                val cs = n.getChildBoundables
+                var j = 0
+                while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
+              case item: ItemBoundable =>
+                val (g2, rrow) = item.getItem.asInstanceOf[(Geometry, InternalRow)]
+                val d = g1.distance(g2)
+                if (d <= rad) {
+                  // refpoint = nearest point of the RIGHT envelope to the
+                  // row's ORIGINAL envelope (overlap → its low edge, a
+                  // deterministic pair function): it lies in the right
+                  // envelope (tile is right-occupied) at dist =
+                  // minDist(lEnv, rEnv) ≤ d ≤ rad from the left envelope, so
+                  // its owner tile carries BOTH replicas under the ball prune
+                  // above — each qualifying pair is emitted exactly once, by
+                  // that tile
+                  val rx0 = rrow.getDouble(r2Env(0)); val ry0 = rrow.getDouble(r2Env(1))
+                  val rx1 = rrow.getDouble(r2Env(2)); val ry1 = rrow.getDouble(r2Env(3))
+                  val refx = if (rx0 > ox2) rx0 else if (rx1 < ox1) rx1
+                             else math.max(ox1, rx0)
+                  val refy = if (ry0 > oy2) ry0 else if (ry1 < oy1) ry1
+                             else math.max(oy1, ry0)
+                  if (idx.refTile(refx, refy) == tile)
+                    out += knnRow(lrow, rrow, d, 0).copy()
+                }
+            }
           }
+          visit(tree.getRoot)
+          out.result().iterator
         }
-        visit(tree.getRoot)
-        out.result().iterator
       }
     }
+    val cands = Bridge.frame(spark, candRows, p1.schema)
 
     // nulls LAST to agree with knnBroadcast's cmpAny — Spark's plain .asc is
     // nulls-first, which would rank null-tieBreak ties differently depending
@@ -1323,7 +1297,7 @@ object SpatialJoin {
         row_number().over(Window.partitionBy(col(leftId)).orderBy(order: _*)))
       .where(col("knn_rank") <= k)
     CacheHygiene.releaseAfterFirstJob(spark.sparkContext, p1Rows)(
-      Seq(l2Rows, p1Rows).foreach(_.unpersist(blocking = false)))
+      Seq(l2Rows, p1Rows, lCopy, rCopy).foreach(_.unpersist(blocking = false)))
     safe.unionByName(pass2)
   }
 

@@ -589,9 +589,7 @@ object Queries {
     * self-contained in any session (the q_disjoint_sql convention). */
   def qKnnSqlGate(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.{KnnJoinExec, SpatialJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(SpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SpatialJoinStrategy
+    SpatialJoinStrategy.install(spark)
     graft.functions.registerAll(spark)
     custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
       .createOrReplaceTempView("gate_knn_c")
@@ -707,8 +705,7 @@ object Queries {
   def qKnnTileSqlGate(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.{Bridge, KnnJoinExec, SpatialJoinStrategy}
     val s = Bridge.sessionWith(spark, "graft.join.bucket" -> "500")
-    if (!s.experimental.extraStrategies.contains(SpatialJoinStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ SpatialJoinStrategy
+    SpatialJoinStrategy.install(s)
     graft.functions.registerAll(s)
     custPoints(s, dir).select(col("id").as("cid"), col("geom").as("g1"))
       .createOrReplaceTempView("gate_knn2_c")
@@ -4826,15 +4823,13 @@ object Queries {
 
   /** The SQL form of global disjoint: plain `NOT EXISTS(st_intersects)`
     * text, which Catalyst rewrites to a LeftAnti join and
-    * SpatialJoinStrategy plans as the tiled semi/anti engine
-    * (SpatialJoinExec) — the q_disjoint_global plan reachable without the
+    * SpatialJoinStrategy plans as SpatialJoinExec in its semi/anti mode —
+    * the q_disjoint_global result reachable without the
     * programmatic API. Strategy + function registry are injected
     * idempotently so the gate is self-contained in any session. */
   def qDisjointSql(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.SpatialJoinStrategy
-    if (!spark.experimental.extraStrategies.contains(SpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SpatialJoinStrategy
+    SpatialJoinStrategy.install(spark)
     graft.functions.registerAll(spark)
     partBoxes(spark, dir).select(col("id").as("pid"), col("geom").as("g1"))
       .createOrReplaceTempView("gate_disjoint_parts")

@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -20,6 +21,14 @@ import org.apache.spark.storage.StorageLevel
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over the logical `plan`. */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(castToImpl(spark), plan)
+
+  /** `body` run with `spark` as the thread's active session, which physical
+    * operators built at run time take their context from. */
+  def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
 
   /** A DataFrame over `rows`, which must be laid out as `schema`. */
   def frame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =

@@ -9,10 +9,11 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** How the spatial exec nodes run their children through the DataFrame
-  * engine ([[graft.operators.SpatialJoin]]): each child's rows become a
-  * DataFrame with positional column names, one narrow map per side, and the
-  * engine's result comes back as the exec's output rows. */
+/** How [[KnnJoinExec]] runs its children through the DataFrame kNN engine
+  * ([[graft.operators.SpatialJoin.knnJoinExact]] and kin): each child's
+  * rows become a DataFrame with positional column names, one narrow map
+  * per side, and the engine's result comes back as the exec's output rows.
+  * ([[SpatialJoinExec]] runs its engine on the rows themselves.) */
 private[graft] object ExecFrames {
 
   val Id = "__lid"

@@ -38,11 +38,31 @@ class PlanHealthSpec extends SparkTestBase {
   }
 
   test("spatial join plans avoid cartesian/nested-loop fallbacks") {
-    val plan = Queries.qSpjoinIntersects(spark, dir).queryExecution.executedPlan.toString
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.graft.SpatialJoinExec
+    val root = Queries.qSpjoinIntersects(spark, dir).queryExecution.executedPlan
+    val plan = root.toString
     assert(!plan.contains("CartesianProduct"), "cartesian product in spatial join")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "BNLJ in spatial join")
-    assert(plan.contains("MapGroups") || plan.contains("CoGroup"),
-      "expected the cogroup tile join")
+    // the tile join: a cogroup, or the spatial-join exec that runs its own
+    val plans = root +: root.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
+    assert(plan.contains("MapGroups") || plan.contains("CoGroup") ||
+      plans.exists(_.collect { case e: SpatialJoinExec => e }.nonEmpty),
+      s"expected the tiled spatial join:\n$plan")
+  }
+
+  test("the spatial-join exec never re-enters the DataFrame API") {
+    // the exec runs the engine on its children's rows in the caller's SQL
+    // execution: a DataFrame built inside it would start a second one
+    import scala.jdk.CollectionConverters._
+    val path = java.nio.file.Paths.get("src/main/scala/org/apache/spark/sql/graft/SpatialJoinExec.scala")
+    val lines = java.nio.file.Files.readAllLines(path).asScala
+    val hits = lines.zipWithIndex.collect {
+      case (line, i) if Seq("Bridge.frame", "ExecFrames", "queryExecution.toRdd").exists(line.contains) =>
+        s"${i + 1}: ${line.trim}"
+    }
+    assert(lines.exists(_.contains("def doExecute")), "lint lost the exec")
+    assert(hits.isEmpty, s"DataFrame re-entry in SpatialJoinExec.scala: ${hits.mkString("; ")}")
   }
 
   test("broadcast kNN path runs with zero shuffles") {
@@ -452,7 +472,13 @@ class PlanHealthSpec extends SparkTestBase {
       case (line, i) if line.contains("groupByKey(") => s"${i + 1}: ${line.trim}"
     }
     assert(hits.isEmpty, s"groupByKey cogroup in SpatialJoin.scala: ${hits.mkString("; ")}")
-    assert(lines.exists(_.contains("cogroupSorted(")), "lint lost the slot cogroup")
+    // one refine helper, whose shuffle passes each key's slot through
+    val defs = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala.filter(_.contains("def slotCogroup")))
+      .toSeq
+    assert(defs.size == 1, s"slotCogroup definitions: $defs")
+    assert(lines.exists(_.contains("ShufflePartitionIdPassThrough(")), "lint lost the slot shuffle")
   }
 
   test("span dedup reassembly never explodes the corpus into token rows") {

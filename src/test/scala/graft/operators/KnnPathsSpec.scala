@@ -228,6 +228,32 @@ class KnnPathsSpec extends SparkTestBase {
     }
   }
 
+  test("a tiled knnJoinExact evaluates each input once per row, through either probe") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // a parquet input behind an always-true filter that counts its
+    // evaluations: Catalyst keeps the filter in every plan scanning it
+    def counted(rows: Seq[(Long, Array[Byte])], id: String, g: String) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_knn_once").toString + "/in"
+      frame(rows, id, g).write.parquet(dir)
+      val evals = spark.sparkContext.longAccumulator(dir)
+      val pass = udf { (_: Long) => evals.add(1); true }
+      (spark.read.parquet(dir).where(pass(col(id))), evals)
+    }
+    val rnd = new Random(9)
+    val a = (0 until 120).map(i => (i.toLong, point(rnd.nextDouble() * 30, rnd.nextDouble() * 30)))
+    val b = (0 until 60).map(i => (i.toLong, point(rnd.nextDouble() * 30, rnd.nextDouble() * 30)))
+    for (probeCollectMax <- Seq(1000000L, 0L)) {
+      val (l, lEvals) = counted(a, "id1", "g1"); val (r, rEvals) = counted(b, "id2", "g2")
+      val got = SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", 3, tieBreak = Seq("id2"),
+          cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = 0,
+            probeCollectMax = probeCollectMax))
+        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
+      assert(got.toSet == bruteExact(a, b, 3))
+      assert((lEvals.value, rEvals.value) == (120L, 60L),
+        s"probeCollectMax $probeCollectMax: input rows evaluated ${lEvals.value}, ${rEvals.value}")
+    }
+  }
+
   test("a tiled knnJoinExact registers nothing in the session's CacheManager") {
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager

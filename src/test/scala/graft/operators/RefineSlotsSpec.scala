@@ -111,25 +111,31 @@ class RefineSlotsSpec extends SparkTestBase {
       "build f", "probe v", "build ", "probe w"))
   }
 
-  test("the refine cogroup sorts each side once, by (slot, key), after one exchange") {
+  test("the refine stage shuffles each side once onto its slots, on the UnsafeRow serializer") {
     val a = frame(randomBoxes(100, 3), "ida", "ga"); val b = frame(randomBoxes(100, 4, 500L), "idb", "gb")
-    val plan = SpatialJoin.join(a, "ga", b, "gb", SpatialJoin.Config(bucket = 8))
-      .queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
+    val cfg = SpatialJoin.Config(bucket = 8)
+    val exec = SpatialJoin.join(a, "ga", b, "gb", cfg).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val joins = exec.collect { case e: org.apache.spark.sql.graft.SpatialJoinExec => e }
+    assert(joins.size == 1, exec.toString)
+    // the shuffles between the exec's children and its output
+    def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap {
+        case s: org.apache.spark.ShuffleDependency[_, _, _] => Seq(s)
+        case d => shuffles(d.rdd)
       }
-    val cogroups = plan.collect { case c: org.apache.spark.sql.execution.CoGroupExec => c }
-    assert(cogroups.size == 1, plan.toString)
-    val sides = cogroups.head.children
-    sides.foreach { side =>
-      val sorts = side.collect { case s: org.apache.spark.sql.execution.SortExec => s }
-      assert(sorts.size == 1, side.toString)
-      assert(sorts.head.sortOrder.map(_.child.references.head.name) == Seq("__slot", "__tile"),
-        sorts.head.toString)
-      val exchanges = side.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
-      assert(exchanges.size == 1, side.toString)
+    val deps = shuffles(joins.head.execute())
+    val (l, r) = SpatialJoin.enveloped(a, "ga", b, "gb", cfg)
+    val idx = SpatialJoin.planTiles(l, r, cfg)
+    val keys = idx.tiles.map(t => idx.shardsOf(t.tileId)).sum
+    val cores = spark.sparkContext.defaultParallelism
+    val (nSlots, _) = idx.refineSlots(if (keys <= 4 * cores) keys else cores)
+    assert(deps.size == 2, s"one shuffle per side: $deps")
+    deps.foreach { d =>
+      assert(d.partitioner.numPartitions == nSlots)
+      assert(d.serializer.getClass.getSimpleName == "UnsafeRowSerializer", d.serializer)
     }
   }
 

@@ -182,7 +182,12 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     def check(sql: String, engine: => org.apache.spark.sql.DataFrame,
               want: Set[(Long, Long)]): Unit = {
       val q = spark.sql(sql)
-      assert(execs(q).nonEmpty, s"expected SpatialJoinExec for: $sql")
+      // st_equals plans as a hash equi-join on the envelopes instead
+      if (sql.contains("st_equals")) {
+        val plan = q.queryExecution.executedPlan.toString
+        assert(execs(q).isEmpty && plan.matches("(?s).*(SortMergeJoin|HashJoin).*"),
+          s"expected an envelope equi-join for: $sql\n$plan")
+      } else assert(execs(q).nonEmpty, s"expected SpatialJoinExec for: $sql")
       val got = q.as[(Long, Long)].collect()
       assert(got.length == got.toSet.size, s"duplicate pairs for: $sql")
       val eng = engine.select(col("ida"), col("idb")).as[(Long, Long)].collect().toSet
@@ -375,6 +380,64 @@ class SpatialJoinStrategySpec extends SparkTestBase {
       val r = SCTest.check(params, prop)
       assert(r.passed, s"$name: $r")
     }
+  }
+
+  /** SQL executions and jobs started while `body` runs, and the ids of the
+    * persisted RDDs those jobs read. */
+  private def activity(body: => Unit): (Int, Int, Set[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.graft.Bridge
+    val sc = spark.sparkContext
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val persisted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        js.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel.isValid).foreach(r => persisted.add(r.id))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; Bridge.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (executions.get, jobs.get, persisted.asScala.toSet)
+  }
+
+  test("a SQL spatial join and SpatialJoin.join each run in one SQL execution; SQL runs no more jobs") {
+    import graft.operators.SpatialJoin
+    val a = geomFrame(boxes(250, 5), "ida", "ga"); val b = geomFrame(boxes(300, 6), "idb", "gb")
+    a.createOrReplaceTempView("ea"); b.createOrReplaceTempView("eb")
+    var df: org.apache.spark.sql.DataFrame = null
+    val (lazyExecs, lazyJobs, _) = activity { df = SpatialJoin.join(a, "ga", b, "gb") }
+    assert((lazyExecs, lazyJobs) == (0, 0), "SpatialJoin.join ran a job before an action")
+    val (dfExecs, dfJobs, _) = activity { df.select("ida", "idb").collect() }
+    val (sqlExecs, sqlJobs, _) = activity {
+      spark.sql("SELECT ida, idb FROM ea JOIN eb ON st_intersects(ga, gb)").collect()
+    }
+    assert(dfExecs == 1 && sqlExecs == 1, s"SQL executions: DataFrame $dfExecs, SQL $sqlExecs")
+    assert(sqlJobs <= dfJobs, s"jobs: DataFrame $dfJobs, SQL $sqlJobs")
+  }
+
+  test("NOT EXISTS resolves in the engine: fewer jobs than the id-join composition, one copy per side") {
+    val la = boxes(220, 11); val lb = boxes(180, 12)
+    geomFrame(la, "ida", "ga").createOrReplaceTempView("na")
+    geomFrame(lb, "idb", "gb").createOrReplaceTempView("nb")
+    var got: Array[Long] = null
+    val (execs, jobs, persisted) = activity {
+      got = spark.sql("SELECT ida FROM na WHERE NOT EXISTS " +
+        "(SELECT 1 FROM nb WHERE st_intersects(ga, gb))").as[Long].collect()
+    }
+    val hit = bruteInner(la, lb, _.intersects(_)).map(_._1)
+    assert(got.toSet == la.map(_._1).toSet -- hit && got.length == got.toSet.size)
+    // the id-join composition ran 9 jobs and persisted a third, id'd left copy
+    assert(execs == 1 && jobs < 9, s"$execs SQL executions, $jobs jobs")
+    assert(persisted.size <= 2, s"persisted RDDs read: $persisted")
   }
 
   test("a SQL spatial join validates the planning-time tuning conf") {
