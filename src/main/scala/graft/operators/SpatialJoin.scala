@@ -219,46 +219,28 @@ object SpatialJoin {
       return new TileIndex(Array(TileBoundary(0, Mbb(0, 0, 1, 1))), Mbb(0, 0, 1, 1))
     val bucket = if (cfg.bucket > 0) cfg.bucket
       else math.max(1000L, n / (spark.sparkContext.defaultParallelism.toLong * TasksPerCore)).toInt
-    // the *_dist tilings read the MBBs as (xmin, ymin, xmax, ymax) columns
+    // the *_dist tilings plan over the WHOLE relation, without a driver
+    // sample — the 100 TB paths — reading the MBBs as (xmin, ymin, xmax,
+    // ymax) columns: Hilbert runs (G5), STR packing by two distributed sorts
+    // (G4), the strip-line chop whose cut abscissas alone reach the driver
+    // (G6), qt/bsp splits driven by one EXACT count histogram (G3/G2), and
+    // bos strip carving on that histogram plus four bounded marginal tables
+    // for the crossing cost, all five from one fused aggregate (G7)
     def frame = spark.createDataFrame(mbbs.map(m => Row(m.xmin, m.ymin, m.xmax, m.ymax)),
       StructType(Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType, nullable = false))))
-    // hc_dist: fully distributed Hilbert tiling over the WHOLE relation
-    // (no driver sample) — the 100 TB path (SURVEY G5)
-    if (cfg.partitioner == "hc_dist") {
-      val tiles = graft.partition.DistributedHilbert.tiles(frame, space, n, bucket)
-      return new TileIndex(tiles, space)
+    import graft.partition.{DistributedHilbert, DistributedHisto, DistributedSlc, DistributedStr}
+    val distTiles: Option[Array[TileBoundary]] = cfg.partitioner match {
+      case "hc_dist" => Some(DistributedHilbert.tiles(frame, space, n, bucket))
+      case "str_dist" => Some(DistributedStr.tiles(frame, n, bucket))
+      case "slc_dist" => Some(DistributedSlc.tiles(frame, space, n, bucket))
+      case "qt_dist" => Some(DistributedHisto.qtTiles(DistributedHisto.histogram(frame, space), space, bucket))
+      case "bsp_dist" => Some(DistributedHisto.bspTiles(DistributedHisto.histogram(frame, space), space, bucket))
+      case "bos_dist" =>
+        val (counts, cross) = DistributedHisto.allHistograms(frame, space)
+        Some(DistributedHisto.bosTiles(counts, cross, space, bucket))
+      case _ => None
     }
-    // str_dist: fully distributed STR packing over the WHOLE relation (two
-    // distributed sorts, no driver sample) — the 100 TB path (SURVEY G4)
-    if (cfg.partitioner == "str_dist") {
-      val tiles = graft.partition.DistributedStr.tiles(frame, n, bucket)
-      return new TileIndex(tiles, space)
-    }
-    // slc_dist: fully distributed strip-line chop (one distributed sort,
-    // only the cut abscissas reach the driver) — SURVEY G6 at 100 TB
-    if (cfg.partitioner == "slc_dist") {
-      val tiles = graft.partition.DistributedSlc.tiles(frame, space, n, bucket)
-      return new TileIndex(tiles, space)
-    }
-    // qt_dist / bsp_dist: recursive splits driven by one EXACT count
-    // histogram (bounded collect) instead of a driver sample — G3/G2 at
-    // 100 TB
-    if (cfg.partitioner == "qt_dist" || cfg.partitioner == "bsp_dist") {
-      val counts = graft.partition.DistributedHisto.histogram(frame, space)
-      val tiles =
-        if (cfg.partitioner == "qt_dist")
-          graft.partition.DistributedHisto.qtTiles(counts, space, bucket)
-        else graft.partition.DistributedHisto.bspTiles(counts, space, bucket)
-      return new TileIndex(tiles, space)
-    }
-    // bos_dist: strip carving on the exact histogram plus four bounded
-    // marginal tables for the crossing cost — G7 at 100 TB. All five
-    // tables come from ONE fused aggregate (one scan, one shuffle).
-    if (cfg.partitioner == "bos_dist") {
-      val (counts, cross) = graft.partition.DistributedHisto.allHistograms(frame, space)
-      val tiles = graft.partition.DistributedHisto.bosTiles(counts, cross, space, bucket)
-      return new TileIndex(tiles, space)
-    }
+    if (distTiles.isDefined) return new TileIndex(distTiles.get, space)
     // fg depends on the input only through its row count, which the stats
     // aggregate above already computed EXACTLY — no sample scan, no
     // sampled-count jitter (tiles = ceil(n/bucket), the arithmetic the
