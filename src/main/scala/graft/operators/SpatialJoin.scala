@@ -1080,7 +1080,7 @@ object SpatialJoin {
     // pair's refpoint lies inside the right's envelope, so its emitting
     // tile is always envelope-occupied — replicas into right-empty tiles
     // (the bulk of a sparse space) carry no information and only inflate
-    // the cogroup shuffle
+    // the refine shuffle
     val envOccupied = r
       .select(explode(tileIds(col(X1), col(Y1), col(X2), col(Y2))).as("__t"))
       .distinct().collect().map(_.getInt(0)).toSet

@@ -25,9 +25,8 @@ private[graft] object ExecFrames {
   /** `plan`'s rows as a DataFrame: its attributes under [[names]], then the
     * geometry `geom` (unless it is a plain child attribute) and `extra`.
     * Returns the frame and the geometry column's name. With `id`, an [[Id]]
-    * lane comes first: (partition index << 36 | local sequence), unique
-    * with no counting job, and stable only while the child replays its
-    * partitions in order, so a caller reading the frame twice persists it. */
+    * lane comes first ([[SpatialJoinExec.withIds]]), so a caller reading
+    * the frame twice persists it. */
   def of(plan: SparkPlan, prefix: String, geom: Expression,
          id: Boolean = false,
          extra: Seq[(String, Expression)] = Nil): (DataFrame, String) = {
@@ -41,22 +40,11 @@ private[graft] object ExecFrames {
     val input = if (id) idAttr +: attrs else attrs
     val named = (if (id) Seq(Id -> idAttr) else Nil) ++ cols.zip(attrs) ++ lanes
     val schema = StructType(named.map { case (n, e) => StructField(n, e.dataType, e.nullable) })
-    val rows: RDD[InternalRow] = plan.execute().mapPartitionsWithIndex { (pi, iter) =>
-      val proj = UnsafeProjection.create(named.map(_._2), input)
-      if (!id) iter.map(row => proj(row).copy())
-      else {
-        val idRow = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        var seq = 0L
-        iter.map { row =>
-          require(seq < (1L << 36),
-            s"partition $pi exceeds 2^36 rows; repartition the probe side")
-          idRow.setLong(0, (pi.toLong << 36) | seq)
-          seq += 1
-          proj(joined(idRow, row)).copy()
-        }
+    val rows = (if (id) SpatialJoinExec.withIds(plan.execute()) else plan.execute())
+      .mapPartitions[InternalRow] { iter =>
+        val proj = UnsafeProjection.create(named.map(_._2), input)
+        iter.map(row => proj(row).copy())
       }
-    }
     (Bridge.frame(plan.session, rows, schema), geomName)
   }
 

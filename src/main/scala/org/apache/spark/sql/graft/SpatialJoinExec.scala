@@ -291,13 +291,15 @@ case class SpatialJoinExec(
     val refineDist = if (predicate == "dwithin") cfg.distance else 0.0
     val refPoint = cfg.dedup == "refpoint"
     val cond = extraCond
+    // semi/anti: a tile's report on a left row, its hit flag then the row;
+    // inner: the output, whose keepTile column is the key's tile
     val hitA = AttributeReference("__hit", BooleanType, nullable = false)()
-    val outLayout = if (semi) hitA +: lIn else lK ++ rK
-    // the tile column of keepTile: the key's tile
-    val outExprs = output.map { a =>
-      if (outLayout.exists(_.exprId == a.exprId)) a
-      else Cast(IntegralDivide(lK(1), Literal(TileIndex.MaxShards.toLong)), IntegerType)
-    }
+    val (outExprs, outIn) =
+      if (semi) (hitA +: lIn, hitA +: lK)
+      else (output.map { a =>
+        if ((lK ++ rK).exists(_.exprId == a.exprId)) a
+        else Cast(IntegralDivide(lK(1), Literal(TileIndex.MaxShards.toLong)), IntegerType)
+      }, lK ++ rK)
 
     val refined = SpatialJoin.slotCogroup(session, index, lRows, lIn, probeKeys, rRows, rIn, buildKeys)(
         SpatialJoin.rowTree(rg, ords(rK, rightEnv))) { () =>
@@ -305,7 +307,7 @@ case class SpatialJoinExec(
         val p = Predicate.create(c, lK ++ rK); p.initialize(0); p
       }
       val joined = new JoinedRow
-      val proj = UnsafeProjection.create(if (semi) outLayout else outExprs, if (semi) hitA +: lK else outLayout)
+      val proj = UnsafeProjection.create(outExprs, outIn)
       val hitRow = new GenericInternalRow(1)
       (tree, lrow) => {
         val g1 = if (tree.isEmpty) null else GeometryCodec.fromWkb(lrow.getBinary(lg))
@@ -339,11 +341,12 @@ case class SpatialJoinExec(
     else {
       // one reduce by left id: a row's reports arrive together, a hit first
       val anti = joinType == LeftAnti
-      val verdicts = SpatialJoin.clustered(session, refined, outLayout,
+      val reports = hitA +: lIn
+      val verdicts = SpatialJoin.clustered(session, refined, reports,
           HashPartitioning(Seq(id), sc.defaultParallelism),
           Seq(SortOrder(id, Ascending), SortOrder(hitA, Descending)))
         .mapPartitions[InternalRow] { rows =>
-          val proj = UnsafeProjection.create(output, outLayout)
+          val proj = UnsafeProjection.create(output, reports)
           var last = -1L
           rows.filter { row =>
             val first = row.getLong(1) != last
@@ -360,22 +363,31 @@ case class SpatialJoinExec(
   }
 
   /** `plan`'s rows, copied once into an RDD-level MEMORY_AND_DISK persist;
-    * with `withId`, after a unique id (partition << 36 | sequence). */
-  private def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] =
-    plan.execute().mapPartitionsWithIndex[InternalRow] { (pi, rows) =>
-      val in = (if (withId) Seq(AttributeReference("__lid", LongType)()) else Nil) ++ plan.output
-      val proj = UnsafeProjection.create(in, in)
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow(idRow, null)
-      var seq = 0L
-      rows.map { row =>
-        if (!withId) proj(row).copy()
-        else {
-          require(seq < (1L << 36), s"partition $pi exceeds 2^36 rows; repartition the probe side")
-          idRow.setLong(0, (pi.toLong << 36) | seq)
-          seq += 1
-          proj(joined.withRight(row)).copy()
-        }
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    * with `withId`, after an id lane ([[SpatialJoinExec.withIds]]). */
+  private def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] = {
+    val in = (if (withId) Seq(AttributeReference("__lid", LongType)()) else Nil) ++ plan.output
+    (if (withId) SpatialJoinExec.withIds(plan.execute()) else plan.execute())
+      .mapPartitions[InternalRow] { rows =>
+        val proj = UnsafeProjection.create(in, in)
+        rows.map(proj(_).copy())
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+}
+
+object SpatialJoinExec {
+  /** `rows` after a unique LongType id, (partition index << 36 | local
+    * sequence): no counting job, and stable only while the input replays
+    * its partitions in order, so a caller reading the ids twice persists
+    * them. The returned rows are views, valid until the next row. */
+  def withIds(rows: RDD[InternalRow]): RDD[InternalRow] = rows.mapPartitionsWithIndex { (pi, it) =>
+    val idRow = new GenericInternalRow(1)
+    val joined = new JoinedRow(idRow, null)
+    var seq = 0L
+    it.map { row =>
+      require(seq < (1L << 36), s"partition $pi exceeds 2^36 rows; repartition the probe side")
+      idRow.setLong(0, (pi.toLong << 36) | seq)
+      seq += 1
+      joined.withRight(row)
+    }
+  }
 }

@@ -167,8 +167,12 @@ class SpatialJoinStrategySpec extends SparkTestBase {
       (i, wa) <- la; ga <- jts(wa); (j, wb) <- lb; gb <- jts(wb) if p(ga, gb)
     } yield (i, j)).toSet
 
-  private def execs(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.executedPlan.collect { case e: SpatialJoinExec => e }
+  private def execs(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = df.queryExecution.executedPlan
+    (root +: root.collect { case a: AdaptiveSparkPlanExec => a.executedPlan })
+      .flatMap(_.collect { case e: SpatialJoinExec => e })
+  }
 
   test("SQL == SpatialJoin.join == brute force: predicates, orientations, null geometry, empty side, hot spot") {
     import graft.operators.SpatialJoin
@@ -214,6 +218,12 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     }
     check("SELECT ida, idb FROM da JOIN de ON st_intersects(ga, gb)",
       SpatialJoin.join(a, "ga", b.where(col("idb") < 0), "gb"), Set.empty[(Long, Long)])
+    // a side behind an exchange, which adaptive execution runs as a stage
+    // before the join
+    check("SELECT ida, idb FROM (SELECT ida, first(ga) AS ga FROM da GROUP BY ida) " +
+        "JOIN db ON st_intersects(ga, gb)",
+      SpatialJoin.join(a.groupBy("ida").agg(first("ga").as("ga")), "ga", b, "gb"),
+      bruteInner(la, lb, _.intersects(_)))
 
     // hot spot: more than hotTileFactor × bucket left rows at one point,
     // which the tiled engine salts across shards
