@@ -37,13 +37,14 @@ class KnnPathsSpec extends SparkTestBase {
     rows.flatMap { case (i, b) => Option(b).flatMap(w => Option(GeometryCodec.fromWkb(w))).map(i -> _) }
       .filter { case (_, g) => GeomKernels.located(g.getEnvelopeInternal) }
 
-  /** Global top-k by (distance, right id): (left id, right id, rank). */
+  /** Global top-k by (distance, right id), kept while the distance is
+    * below `maxD`: (left id, right id, rank). */
   private def bruteExact(a: Seq[(Long, Array[Byte])], b: Seq[(Long, Array[Byte])],
-                         k: Int): Set[(Long, Long, Int)] = {
+                         k: Int, maxD: Double = Double.PositiveInfinity): Set[(Long, Long, Int)] = {
     val gb = parse(b)
     parse(a).flatMap { case (i, g1) =>
       gb.map { case (j, g2) => (g1.distance(g2), j) }.sorted.take(k).zipWithIndex
-        .map { case ((_, j), r) => (i, j, r + 1) }
+        .collect { case ((d, j), r) if d < maxD => (i, j, r + 1) }
     }.toSet
   }
 
@@ -72,24 +73,101 @@ class KnnPathsSpec extends SparkTestBase {
     SpatialJoin.planTiles(l, r, cfg)
   }
 
-  /** Runs all three paths on `a` x `b` and checks each against brute force. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graft.functions.registerAll(spark)
+    org.apache.spark.sql.graft.SpatialJoinStrategy.install(spark)
+  }
+
+  private def withJoinConf[T](bucket: Int, threshold: Int)(body: => T): T =
+    try {
+      spark.conf.set("graft.join.bucket", bucket.toString)
+      spark.conf.set("graft.knn.broadcastThreshold", threshold.toString)
+      body
+    } finally {
+      spark.conf.unset("graft.join.bucket")
+      spark.conf.unset("graft.knn.broadcastThreshold")
+    }
+
+  private def same[T](what: String, got: Seq[T], want: Set[T]): Unit = {
+    assert(got.length == got.toSet.size, s"$what: duplicate rows")
+    assert(got.toSet == want, s"$what: missing=${(want -- got.toSet).take(5)} " +
+      s"extra=${(got.toSet -- want).take(5)}")
+  }
+
+  /** Runs every kNN path on `a` x `b` and checks each against brute force:
+    * knnJoinExact and knnJoinBounded on the tiled and the broadcast path,
+    * each with the collected and the relational probe; SQL st_nearest on
+    * both paths, unbounded, and bounded with a residual conjunct in the
+    * swapped orientation; knnJoin and SQL st_nearest2 against the
+    * tile-local brute force. */
   private def checkAllPaths(a: Seq[(Long, Array[Byte])], b: Seq[(Long, Array[Byte])],
-                            k: Int, bucket: Int): Unit = {
+                            k: Int, bucket: Int, maxD: Double = 2.3): Unit = {
     val l = frame(a, "id1", "g1"); val r = frame(b, "id2", "g2")
+    l.createOrReplaceTempView("kp_l"); r.createOrReplaceTempView("kp_r")
     val want = bruteExact(a, b, k)
+    val residual = (i: Long, j: Long) => (i + j) % 3 != 0
+    val wantSql = bruteExact(a, b, k, maxD).collect { case (i, j, _) if residual(i, j) => (i, j) }
+    def ranked(df: DataFrame) = df.select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect().toSeq
     for ((path, threshold) <- Seq("tiled" -> 0, "broadcast" -> 10000)) {
-      val got = SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", k, tieBreak = Seq("id2"),
-          cfg = SpatialJoin.Config(bucket = bucket, knnBroadcastThreshold = threshold))
-        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
-      assert(got.length == got.toSet.size, s"$path: duplicate rows")
-      assert(got.toSet == want, s"$path: missing=${(want -- got.toSet).take(5)} " +
-        s"extra=${(got.toSet -- want).take(5)}")
+      for (probeCollectMax <- Seq(0L, SpatialJoin.Config().probeCollectMax)) {
+        val cfg = SpatialJoin.Config(bucket = bucket, knnBroadcastThreshold = threshold,
+          probeCollectMax = probeCollectMax)
+        val what = s"$path, probeCollectMax $probeCollectMax"
+        same(s"knnJoinExact $what",
+          ranked(SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", k, tieBreak = Seq("id2"), cfg = cfg)),
+          want)
+        same(s"knnJoinBounded $what",
+          ranked(SpatialJoin.knnJoinBounded(l, "g1", "id1", r, "g2", k, maxD, tieBreak = Seq("id2"),
+            cfg = cfg)),
+          bruteExact(a, b, k, maxD))
+      }
+      withJoinConf(bucket, threshold) {
+        same(s"SQL st_nearest $path",
+          spark.sql(s"SELECT id1, id2 FROM kp_l JOIN kp_r ON st_nearest(g1, g2, $k)")
+            .as[(Long, Long)].collect().toSeq,
+          want.map { case (i, j, _) => (i, j) })
+        same(s"SQL bounded st_nearest with a residual, swapped, $path",
+          spark.sql(s"SELECT id1, id2 FROM kp_r JOIN kp_l ON st_nearest(g1, g2, $k, ${maxD}D) " +
+            "AND (id1 + id2) % 3 <> 0").as[(Long, Long)].collect().toSeq,
+          wantSql)
+      }
     }
     val cfg = SpatialJoin.Config(bucket = bucket)
+    val wantLocal = bruteTileLocal(a, b, k, cfg)
     val local = SpatialJoin.knnJoin(l, "g1", r, "g2", k, cfg)
       .select("id1", "knn_dist").as[(Long, Double)].collect()
       .groupBy(_._1).map { case (i, ds) => i -> ds.map(_._2).sorted.toSeq }
-    assert(local == bruteTileLocal(a, b, k, cfg), "knnJoin")
+    assert(local == wantLocal, "knnJoin")
+    val (ga, gb) = (parse(a).toMap, parse(b).toMap)
+    val sqlLocal = withJoinConf(bucket, 10000) {
+      spark.sql(s"SELECT id1, id2 FROM kp_l JOIN kp_r ON st_nearest2(g1, g2, $k)")
+        .as[(Long, Long)].collect()
+    }.groupBy(_._1).map { case (i, js) => i -> js.map(p => ga(i).distance(gb(p._2))).sorted.toSeq }
+    assert(sqlLocal == wantLocal, "SQL st_nearest2")
+  }
+
+  test("property: every kNN path == brute force on lattice ties, junk geometry, empty and small right sides") {
+    // integer lattice rights and half-integer lattice lefts: distances tie
+    // at the k boundary; each side sometimes empty or carrying rows whose
+    // geometry is null, unparseable, empty or non-finite
+    val junk = Seq(null.asInstanceOf[Array[Byte]], Array[Byte](9, 9), empty,
+      point(3, Double.NaN), point(Double.PositiveInfinity, 5))
+    def side(n: Int, half: Boolean): Gen[Seq[(Long, Array[Byte])]] = {
+      val geom = Gen.frequency(
+        8 -> Gen.zip(Gen.choose(0, 9), Gen.choose(0, 9)).map { case (x, y) =>
+          if (half) point(x + 0.5, y) else point(x, y) },
+        1 -> Gen.oneOf(junk))
+      Gen.chooseNum(0, n).flatMap(Gen.listOfN(_, geom))
+        .map(_.zipWithIndex.map { case (g, i) => (i.toLong, g) })
+    }
+    val prop = Prop.forAll(side(40, half = true), side(30, half = false),
+        Gen.choose(1, 6), Gen.oneOf(8, 16)) { (a, b, k, bucket) =>
+      checkAllPaths(a, b, k, bucket)
+      true
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6).withWorkers(1), prop)
+    assert(res.passed, res.toString)
   }
 
   test("all three kNN paths == brute force with the right side clustered in one corner") {
