@@ -36,10 +36,10 @@ package object api {
       SpatialJoin.knnJoin(df, leftGeom, right, rightGeom, k)
 
     /** Exact global kNN join. */
-    def knnJoinExact(right: DataFrame, leftGeom: String, leftId: String,
+    def knnJoinExact(right: DataFrame, leftGeom: String,
                      rightGeom: String, k: Int,
                      tieBreak: Seq[String] = Seq.empty): DataFrame =
-      SpatialJoin.knnJoinExact(df, leftGeom, leftId, right, rightGeom, k, tieBreak)
+      SpatialJoin.knnJoinExact(df, leftGeom, right, rightGeom, k, tieBreak)
 
     /** Window/containment filter against a WKT window. */
     def containment(windowWkt: String, geomCol: String = "geom"): DataFrame = {

@@ -3,23 +3,22 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference,
   DirectShufflePartitionID, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, ShufflePartitionIdPassThrough}
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{RDDScanExec, SortExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Bridge, SpatialJoinNode, SpatialJoinStrategy}
+import org.apache.spark.sql.graft.{Bridge, KnnJoinNode, SpatialJoinNode, SpatialJoinStrategy}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.random.BernoulliCellSampler
 import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
+import org.locationtech.jts.index.strtree.{ItemBoundable, STRtree}
 
-import graft.core.{CacheHygiene, Geo, GeometryCodec, GeomPredicates, Mbb, TileBoundary}
+import graft.core.{Geo, GeometryCodec, Mbb, TileBoundary}
 import graft.functions.{GeomKernels, st_envelope, withNonNull}
 import graft.partition.SpatialPartitioner
 
@@ -97,7 +96,6 @@ object SpatialJoin {
   private val Slot = "__slot"
   private val X1 = "__xmin"; private val Y1 = "__ymin"
   private val X2 = "__xmax"; private val Y2 = "__ymax"
-  private val Rad = "__rad"
   /** Tiles per core of the auto bucket, and the most refine keys per core
     * that still run one task each ([[slotCogroup]]): enough tasks to
     * balance uneven tiles without paying a task per tiny tile. */
@@ -377,13 +375,16 @@ object SpatialJoin {
 
     SpatialJoinStrategy.install(spark)
     val (lp, rp) = (lEnv.queryExecution.analyzed, rEnv.queryExecution.analyzed)
-    def attrs(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, names: String*) =
-      names.map(n => p.output.find(_.name == n).get)
     Bridge.ofPlan(spark, SpatialJoinNode(lp, rp, attrs(lp, leftGeom).head, attrs(rp, rightGeom).head,
       attrs(lp, X1, Y1, X2, Y2), attrs(rp, X1, Y1, X2, Y2), cfg,
       if (cfg.keepTile) Some(AttributeReference("tile_id", IntegerType, nullable = false)())
       else None))
   }
+
+  /** The attributes of `plan`'s output named `names`. */
+  private def attrs(plan: LogicalPlan, names: String*): Seq[Attribute] =
+    names.map(n => plan.output.find(_.name == n)
+      .getOrElse(throw new IllegalArgumentException(s"no column $n among ${plan.output.map(_.name)}")))
 
   /** An STRtree over `rows` with a parseable geometry at `geomIdx`, each
     * inserted as (geometry, a copy of the row) under its envelope columns
@@ -521,7 +522,7 @@ object SpatialJoin {
     * ([[GeomKernels.located]]): the search below ends once its query
     * envelope covers the m-th candidate or the whole tile, and an empty or
     * non-finite envelope is never covered. */
-  private[operators] final class KnnTile(geoms: Array[Geometry]) {
+  final class KnnTile(geoms: Array[Geometry]) {
     require(geoms.forall(g => GeomKernels.located(g.getEnvelopeInternal)),
       "KnnTile indexes located geometries only")
     // built on first need: a tile with at most m geometries answers every
@@ -580,98 +581,33 @@ object SpatialJoin {
     }
   }
 
-  /** `g` when it parsed and is located ([[GeomKernels.located]]). */
-  private def located(g: Geometry): Option[Geometry] =
-    Option(g).filter(g => GeomKernels.located(g.getEnvelopeInternal))
-
   private val ByDistPos: Ordering[(Double, Int)] =
     Ordering.fromLessThan((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
 
-  /** Argument checks shared by the kNN entry points, run before any job. */
-  private def validateKnn(left: DataFrame, right: DataFrame, k: Int, cfg: Config): Unit = {
+  /** The logical kNN join every kNN entry point builds: a [[KnnJoinNode]]
+    * over the two [[enveloped]] sides, with `knn_dist` and, unless
+    * `tileLocal`, `knn_rank`, which [[SpatialJoinStrategy]] (added to the
+    * session's planner here) plans into
+    * [[org.apache.spark.sql.graft.KnnJoinExec]], the operator SQL kNN joins
+    * run too. Arguments are checked here, before any job; nothing runs
+    * until an action. */
+  private def knnNode(left: DataFrame, leftGeom: String, right: DataFrame, rightGeom: String,
+                      k: Int, maxDistance: Double, tieBreak: Seq[String], cfg: Config,
+                      tileLocal: Boolean): DataFrame = {
     validate(cfg)
     require(k >= 1, s"k must be >= 1, got $k")
+    require(maxDistance > 0 && !maxDistance.isNaN,
+      s"maxDistance must be positive (PositiveInfinity = unbounded), got $maxDistance")
     requireDisjoint(left, right)
-  }
-
-  /** Owner-tile kNN, shared by [[knnJoin]] and pass 1 of [[knnJoinExact]]:
-    * every left row of `l` goes to exactly ONE tile of `index`, the owner
-    * of its envelope center, and right rows of `r` replicate to every tile
-    * their envelope touches. Each tile's right rows become one [[KnnTile]]
-    * in the refine stage [[slotCogroup]] runs, and each left row with a
-    * parseable geometry is answered by its `m` nearest; `emit` turns the
-    * left row (laid out as [[keyed]] `l`), its owner tile and those
-    * (distance, right row) candidates into (right row or null, distance,
-    * rank) triples. Left rows whose tile holds no right row meet an empty
-    * candidate list. Output = left columns ++ right columns, typed as
-    * `fields` (whose nullability the caller picks: a null right row needs
-    * nullable right fields), ++ `knn_dist` ++ `knn_rank`. */
-  private def ownerTileKnn(left: DataFrame, l: DataFrame, leftGeom: String,
-                           right: DataFrame, r: DataFrame, rightGeom: String,
-                           index: TileIndex, m: Int, fields: Seq[StructField])(
-      emit: (InternalRow, Int, Array[(Double, InternalRow)]) => Iterator[(InternalRow, Double, Int)]
-  ): DataFrame = {
     val spark = left.sparkSession
-    // one key per tile: owner tiles take no hot-tile shards
-    val owners = index.withCounts(Map.empty, index.tileWeights)
-    val bc = spark.sparkContext.broadcast(owners)
-    val Seq(lx1, ly1, lx2, ly2) = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex)
-    val rEnv = Seq(X1, Y1, X2, Y2).map(r.schema.fieldIndex)
-    val ownerKey = (row: InternalRow) => Iterator.single(bc.value.refTile(
-      (row.getDouble(lx1) + row.getDouble(lx2)) / 2,
-      (row.getDouble(ly1) + row.getDouble(ly2)) / 2).toLong * TileIndex.MaxShards)
-    val tileKeys = (row: InternalRow) => bc.value.buildKeys(row.getDouble(rEnv(0)),
-      row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
-    val (lA, rA) = (attrsOf(l), attrsOf(r))
-    val (lK, rK) = (keyed(lA), keyed(rA))
-    val lGeom = l.schema.fieldIndex(leftGeom) + 2; val rGeom = r.schema.fieldIndex(rightGeom) + 2
-    val lOut = left.columns.toSeq.map(c => lK(l.schema.fieldIndex(c) + 2))
-    val rOut = right.columns.toSeq.map(c => rK(r.schema.fieldIndex(c) + 2))
-    val outSchema = StructType(fields :+
-      StructField("knn_dist", DoubleType, nullable = false) :+
-      StructField("knn_rank", IntegerType, nullable = false))
-
-    val rows = slotCogroup(spark, owners, l.queryExecution.toRdd, lA, ownerKey,
-        r.queryExecution.toRdd, rA, tileKeys) { build =>
-      val items = build.flatMap { row =>
-        Option(GeometryCodec.fromWkb(row.getBinary(rGeom))).map((_, row.copy()))
-      }.toArray
-      (new KnnTile(items.map(_._1)), items.map(_._2))
-    } { () =>
-      val knnRow = knnRows(lOut, lK, rOut, rK)
-      (tileRows, lrow) => {
-        val (tile, rows) = tileRows
-        val g1 = GeometryCodec.fromWkb(lrow.getBinary(lGeom))
-        if (g1 == null) Iterator.empty
-        else {
-          val owner = (lrow.getLong(1) / TileIndex.MaxShards).toInt
-          val near = tile.nearest(g1, m).map { case (d, p) => (d, rows(p)) }
-          emit(lrow, owner, near).map { case (rrow, d, rank) => knnRow(lrow, rrow, d, rank) }
-        }
-      }
-    }
-    Bridge.frame(spark, rows, outSchema)
-  }
-
-  private def attrsOf(df: DataFrame): Seq[Attribute] = DataTypeUtils.toAttributes(df.schema)
-
-  /** Per task: a kNN output row from a left row laid out as `lIn` and a
-    * right row laid out as `rIn` (or null): the `lOut` columns, the `rOut`
-    * columns (nulls for a null right row), the distance and the rank. */
-  private def knnRows(lOut: Seq[Attribute], lIn: Seq[Attribute],
-                      rOut: Seq[Attribute], rIn: Seq[Attribute]
-  ): (InternalRow, InternalRow, Double, Int) => InternalRow = {
-    val dr = Seq(AttributeReference("knn_dist", DoubleType, nullable = false)(),
-      AttributeReference("knn_rank", IntegerType, nullable = false)())
-    val proj = UnsafeProjection.create(lOut ++ rOut ++ dr,
-      lIn ++ rIn.map(_.withNullability(true)) ++ dr)
-    val nulls = new GenericInternalRow(rIn.length)
-    val last = new GenericInternalRow(2)
-    val (lr, lrd) = (new JoinedRow, new JoinedRow)
-    (lrow, rrow, d, rank) => {
-      last.setDouble(0, d); last.setInt(1, rank)
-      proj(lrd(lr(lrow, if (rrow == null) nulls else rrow), last))
-    }
+    SpatialJoinStrategy.install(spark)
+    val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, Config())
+    val (lp, rp) = (lEnv.queryExecution.analyzed, rEnv.queryExecution.analyzed)
+    val knn = AttributeReference("knn_dist", DoubleType, nullable = false)() +:
+      (if (tileLocal) Nil else Seq(AttributeReference("knn_rank", IntegerType, nullable = false)()))
+    Bridge.ofPlan(spark, KnnJoinNode(lp, rp, attrs(lp, leftGeom).head, attrs(rp, rightGeom).head,
+      attrs(lp, X1, Y1, X2, Y2), attrs(rp, X1, Y1, X2, Y2), k, maxDistance, attrs(rp, tieBreak: _*),
+      cfg, tileLocal, knn))
   }
 
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every
@@ -679,25 +615,13 @@ object SpatialJoin {
     * center) and matched with its k nearest right rows *in that tile* —
     * reproducing the reference's tile-local caveat without the reference's
     * cross-tile duplicate emission. Equal distances rank in arrival order.
-    * This is pass 1 of [[knnJoinExact]] without its safety classification
-    * ([[ownerTileKnn]]). Each side's envelopes are read through one
-    * persisted copy, released after the consuming query. Column names must
-    * be disjoint between the sides. Output = left cols ++ right cols ++
-    * `knn_dist`. */
+    * This is pass 1 of [[knnJoinExact]] without its safety classification.
+    * Lazy, like [[knnJoinExact]]. Column names must be disjoint between the
+    * sides. Output = left cols ++ right cols ++ `knn_dist`. */
   def knnJoin(left: DataFrame, leftGeom: String,
               right: DataFrame, rightGeom: String,
-              k: Int, cfg: Config = Config()): DataFrame = {
-    validateKnn(left, right, k, cfg)
-    val (l, lCopy) = Bridge.persisted(withEnv(left, leftGeom, 0.0))
-    val (r, rCopy) = Bridge.persisted(withEnv(right, rightGeom, 0.0))
-    val out = ownerTileKnn(left, l, leftGeom, right, r, rightGeom, planTiles(l, r, cfg), k,
-        left.schema ++ right.schema) { (_, _, near) =>
-      near.iterator.take(k).zipWithIndex.map { case ((d, rrow), i) => (rrow, d, i + 1) }
-    }.drop("knn_rank")
-    CacheHygiene.releaseAfterFirstJob(left.sparkSession.sparkContext, lCopy)(
-      Seq(lCopy, rCopy).foreach(_.unpersist(blocking = false)))
-    out
-  }
+              k: Int, cfg: Config = Config()): DataFrame =
+    knnNode(left, leftGeom, right, rightGeom, k, Double.PositiveInfinity, Nil, cfg, tileLocal = true)
 
   /** Per-tile kNN ring plans over arbitrary tile boxes: for each tile,
     * the smallest set of tiles (in increasing max box-to-box distance)
@@ -722,7 +646,7 @@ object SpatialJoin {
     * the optimal prefix has mindist ≤ maxDist ≤ M ≤ R, so it was a
     * candidate); otherwise one re-query at R = M is provably sufficient.
     * Cost: O(tiles × neighborhood) instead of O(tiles × occupied). */
-  private[operators] def tileRingPlans(tiles: Array[TileBoundary],
+  def tileRingPlans(tiles: Array[TileBoundary],
                                        stats: Map[Int, (Long, Double)],
                                        k: Int): (Array[Array[Int]], Array[Double]) = {
     val nT = tiles.length
@@ -791,497 +715,23 @@ object SpatialJoin {
   }
 
   /** EXACT (global) kNN join — the improvement over the reference's
-    * tile-local st_nearest2. One tiling, two refine passes, both on the
-    * refine slots [[join]] uses ([[slotCogroup]]):
-    *
-    *   1. owner-tile kNN ([[ownerTileKnn]], the [[knnJoin]] kernel asked for
-    *      k + 1 neighbours, so a tie at the k boundary shows). A left row is
-    *      SAFE — its local top-k is provably the global top-k — when its
-    *      k-th local distance is smaller than the distance from its
-    *      envelope to the owner tile's boundary (every unseen right row is
-    *      farther) and no distance tie makes ranks ambiguous. Safe rows are
-    *      emitted final, with ranks, straight from pass 1.
-    *   2. only the unsafe remainder (boundary-adjacent rows, tied ranks,
-    *      tiles with < k right rows, right-empty tiles included) re-joins
-    *      with a per-row radius bound: the k-th local distance, tightened
-    *      by the owner tile's density-planned ring radius (tileRingRadii —
-    *      the smallest set of tiles holding ≥ k right centers); starved
-    *      tiles search that ring instead of the space diagonal. Tiles whose
-    *      replica load passes the refine-slot share split into hot-tile
-    *      shards. Reference-point deduped, then a window top-k.
-    *
-    * A right side of at most `knnBroadcastThreshold` rows is broadcast
-    * instead ([[knnBroadcast]]): no tiling, no shuffle. Both intermediates
-    * of the tiled path are RDD-level copies, released after the first query
-    * that consumes the result; nothing registers in the session's
-    * CacheManager.
-    *
-    * `leftId` must uniquely key left rows. `tieBreak` columns (right side)
-    * order equal distances deterministically. Column names must be disjoint
-    * between the sides. Output = left cols ++ right cols ++ knn_dist ++
-    * knn_rank.
-    */
-  def knnJoinExact(left: DataFrame, leftGeom: String, leftId: String,
+    * tile-local st_nearest2: for each left row, its k nearest right rows
+    * under a (distance, `tieBreak` columns) order, ascending with nulls
+    * last; `knn_rank` numbers them from 1. A right side of at most
+    * `knnBroadcastThreshold` rows is broadcast; otherwise one tiling and
+    * two refine passes on [[join]]'s refine slots ([[slotCogroup]]) find
+    * them. Lazy: the result is a logical node that
+    * [[org.apache.spark.sql.graft.KnnJoinExec]] runs, the operator SQL
+    * `st_nearest` joins plan into too, so all its jobs run in the caller's
+    * one SQL execution, and nothing registers in the session's
+    * CacheManager. Column names must be disjoint between the sides.
+    * Output = left cols ++ right cols ++ knn_dist ++ knn_rank. */
+  def knnJoinExact(left: DataFrame, leftGeom: String,
                    right: DataFrame, rightGeom: String, k: Int,
                    tieBreak: Seq[String] = Seq.empty,
                    cfg: Config = Config(),
-                   maxDistance: Double = Double.PositiveInfinity): DataFrame = {
-    val spark = left.sparkSession
-    validateKnn(left, right, k, cfg)
-    require(maxDistance > 0 && !maxDistance.isNaN,
-      s"maxDistance must be positive (PositiveInfinity = unbounded), got $maxDistance")
-
-    // Small right side (dim-table shape): broadcast it and scan left once —
-    // exact global kNN with ZERO shuffles (the plan a hand-tuned engine
-    // would pick; Catalyst's broadcast-join analog for kNN).
-    if (cfg.knnBroadcastThreshold > 0) {
-      val probe = right.limit(cfg.knnBroadcastThreshold + 1).collect()
-      if (probe.length <= cfg.knnBroadcastThreshold)
-        return knnBroadcast(left, leftGeom, right, rightGeom, probe, k, tieBreak)
-    }
-
-    // each side's envelopes are read through one copy, released with the
-    // intermediates after the consuming query
-    val (l, lCopy) = Bridge.persisted(withEnv(left, leftGeom, 0.0))
-    val (r, rCopy) = Bridge.persisted(withEnv(right, rightGeom, 0.0))
-    val index = planTiles(l, r, cfg)
-    val diag = math.sqrt(index.space.width * index.space.width +
-                         index.space.height * index.space.height)
-    val bc = spark.sparkContext.broadcast(index)
-    val tileIds = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.tilesFor(x1, y1, x2, y2)
-    }
-    val ownerTile = udf { (x1: Double, y1: Double, x2: Double, y2: Double) =>
-      bc.value.refTile((x1 + x2) / 2, (y1 + y2) / 2)
-    }
-
-    // Per-tile search radii from EXACT right-center counts (the 3-D kNN's
-    // density-planned radius, generalized to arbitrary tile boxes): the
-    // smallest set of tiles — in increasing max box-to-box distance —
-    // holding ≥ k right envelope centers bounds any resident left row's
-    // k-th neighbor at geometry precision via
-    //   g1.distance(g2) ≤ hd(g1) + |c1 − c2| + hd(g2)
-    // (hd = half envelope diagonal; some point of each geometry lies
-    // within hd of its envelope center). Starved owner tiles then search
-    // ring-bounded neighborhoods instead of the space diagonal, which
-    // replicated their probes to EVERY tile — the 3-D near-cartesian
-    // failure mode, latent here on sparse-region data.
-    val halfDiag =
-      sqrt(pow(col(X2) - col(X1), lit(2)) + pow(col(Y2) - col(Y1), lit(2))) / 2
-    val tileStats = r.select(
-        ((col(X1) + col(X2)) / 2).as("__cx"),
-        ((col(Y1) + col(Y2)) / 2).as("__cy"),
-        halfDiag.as("__hd"))
-      .groupBy(udf { (x: Double, y: Double) => bc.value.refTile(x, y) }
-        .apply(col("__cx"), col("__cy")).as("__t"))
-      .agg(count(lit(1)).as("__c"), max(col("__hd")).as("__mhd"))
-      .collect().map(row => row.getInt(0) -> (row.getLong(1), row.getDouble(2))).toMap
-    val (ringSets, ringMhds) = tileRingPlans(index.tiles, tileStats, k)
-    val planBc = spark.sparkContext.broadcast((ringSets, ringMhds))
-    // per-ROW ring radius, measured from the row's own envelope center to
-    // its owner tile's planned ring set:
-    //   g1.distance(g2) ≤ hd1 + |c1 − c2| + hd2 ≤ hd1 + maxDist(c1, U.box) + mhd
-    // for every right centered in ring tile U — ≥ k such rights exist, so
-    // the max over the set bounds the row's k-th NN. Measuring from c1
-    // (not the owner tile's far corner) keeps the radius tight when the
-    // owner tile is large and right-empty — the shape where a per-tile
-    // radius degenerates pass 2 (SCALE.md knn2d rehearsal).
-    val ringRadRow = udf { (cx: Double, cy: Double, ot: Int) =>
-      val (sets, mhds) = planBc.value
-      if (ot < 0 || ot >= sets.length || sets(ot).isEmpty)
-        null.asInstanceOf[java.lang.Double] // no plan → caller's cap
-      else {
-        val tiles = bc.value.tiles
-        var m = 0.0
-        sets(ot).foreach { t =>
-          val b = tiles(t).mbb
-          val dx = math.max(math.abs(cx - b.xmin), math.abs(cx - b.xmax))
-          val dy = math.max(math.abs(cy - b.ymin), math.abs(cy - b.ymax))
-          val d = math.sqrt(dx * dx + dy * dy)
-          if (d > m) m = d
-        }
-        java.lang.Double.valueOf(m + mhds(ot))
-      }
-    }
-
-    val lOutCols = left.columns; val rOutCols = right.columns
-
-    // ---------------- pass 1: owner-tile kNN + safety classification
-    val lEnvIdx = Seq(X1, Y1, X2, Y2).map(l.schema.fieldIndex(_) + 2)
-    // marker rows carry null right columns
-    val pass1 = ownerTileKnn(left, l, leftGeom, right, r, rightGeom, index, k + 1,
-        (left.schema ++ right.schema).map(_.copy(nullable = true))) { (lrow, owner, near) =>
-      if (near.length < k) Iterator.single((null, -1.0, -1))
-      else {
-        val tb = bc.value.tileById(owner).mbb
-        val dk = near(k - 1)._1
-        // envelope gap to the owner tile's boundary (conservative)
-        val edge = math.min(
-          math.min(lrow.getDouble(lEnvIdx(0)) - tb.xmin,
-                   tb.xmax - lrow.getDouble(lEnvIdx(2))),
-          math.min(lrow.getDouble(lEnvIdx(1)) - tb.ymin,
-                   tb.ymax - lrow.getDouble(lEnvIdx(3))))
-        val tieAtBoundary = near.length > k && near(k)._1 == dk
-        val internalTie = (1 until k).exists(i => near(i)._1 == near(i - 1)._1)
-        if (dk < edge && !tieAtBoundary && !internalTie)
-          near.iterator.take(k).zipWithIndex.map { case ((d, rrow), i) => (rrow, d, i + 1) }
-        else Iterator.single((null, dk, -1))
-      }
-    }
-    // consumed twice (safe rows + unsafeRadii): an RDD-level copy, so the
-    // owner-tile refine runs once, without registering in the session's
-    // CacheManager, where sibling queries could hit or unpersist it.
-    // Released after the consuming query (CacheHygiene). Filled here as a
-    // materialization barrier (keyOverlapPairs discipline): safe and
-    // unsafeRadii are concurrent subtrees of the final plan — a lazy copy
-    // read by both would race its own population and refine twice
-    val (p1, p1Rows) = Bridge.filled(pass1)
-
-    val safe = p1.where(col("knn_rank") > 0)
-    // per-row pass-2 search radius: the k-th local distance, or the space
-    // diagonal when the owner tile was starved — clamped to maxDistance for
-    // bounded-d kNN (a starved tile would otherwise replicate its probes to
-    // EVERY tile; with a bound, neighbors beyond d are dropped anyway)
-    val cap = math.min(diag, maxDistance)
-    val unsafeRadii = p1.where(col("knn_rank") === -1)
-      .select(col(leftId), when(col("knn_dist") < 0, lit(cap))
-        .otherwise(least(col("knn_dist"), lit(cap))).as(Rad))
-
-    // ---------------- probe: per-row EXACT k-th upper bound (3-D knnCore's
-    // probe phase, 2-D form). Each unsafe left joins ONLY its owner tile's
-    // planned ring set against the single-replica (center-tile) right
-    // relation and takes its k-th probe distance: the set holds ≥ k real
-    // rights, so that distance is a true upper bound on the row's k-th NN
-    // — far tighter than any tile-granular radius when owner tiles are
-    // large and right-empty (SCALE.md knn2d: per-tile radii degenerate
-    // pass 2 near-cartesian under point-mass clustering). The rank filter
-    // compiles to Spark's WindowGroupLimit: per-key top-k runs map-side
-    // before the exchange, so probe shuffle is O(lefts × k), not
-    // O(lefts × candidates).
-    val probeDf = {
-      import spark.implicits._
-      ringSets.zipWithIndex.flatMap { case (ts, i) => ts.map(t => (i, t)) }
-        .toSeq.toDF("__ot", "__pt")
-    }
-    // Candidates per probe tile are CAPPED at max(k, 64): any subset of
-    // min(cap, cᵢ) rights per ring tile still holds Σ min(cap, cᵢ) ≥
-    // min(cap, Σ cᵢ) ≥ k candidates (cap ≥ k, plan guarantees Σ cᵢ ≥ k),
-    // so the k-th probe distance stays a true upper bound — only looser
-    // for lefts INSIDE dense tiles, whose pass-1 k-th local distance
-    // already bounds them tightly. The payoff is scale-shaped: the probe
-    // relation shrinks from O(|right|) to ≤ ringTiles × cap rows — bounded
-    // by the tiling, not the data — so it BROADCASTS, the probe join never
-    // shuffles the lefts by tile, and the hot-ring-tile straggler (nearly
-    // every left in a sparse space probes the same few cluster-edge tiles;
-    // measured as a single-partition near-stall in SCALE.md's knn2d
-    // rehearsal) disappears. Rank order is content-hashed → deterministic
-    // across runs and independent of scan order; the cap rank itself
-    // compiles to WindowGroupLimit (map-side top-cap before the exchange).
-    val probeTiles = ringSets.iterator.flatten.toSet
-    val probeTileCap = math.max(k, 64)
-    val probeTilesBc = spark.sparkContext.broadcast(probeTiles)
-    val inProbeTiles = udf { (t: Int) => probeTilesBc.value.contains(t) }
-    val rtc = r.select(ownerTile(col(X1), col(Y1), col(X2), col(Y2)).as(Tile),
-      col(X1).as("__rx1"), col(Y1).as("__ry1"),
-      col(X2).as("__rx2"), col(Y2).as("__ry2"))
-      .where(inProbeTiles(col(Tile)))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col(Tile)).orderBy(
-          xxhash64(col("__rx1"), col("__ry1"), col("__rx2"), col("__ry2")).asc,
-          col("__rx1").asc, col("__ry1").asc)))
-      .where(col("__pr") <= probeTileCap).drop("__pr")
-    val lu = l.join(unsafeRadii, Seq(leftId))
-      .withColumn("__ot", ownerTile(col(X1), col(Y1), col(X2), col(Y2)))
-    // probe metric = envelope MAX distance (far corners): an upper bound
-    // on the geometry distance per candidate, so the k-th smallest over
-    // ≥ k candidates upper-bounds the row's true k-th NN — exact for
-    // point data, looser only by geometry extents.
-    // Up to 1M capped candidates (tiling-sized, the same bound that made
-    // the relation broadcastable) the probe phase is a single map: the
-    // capped candidates are collected once and each left's k-th probe
-    // distance comes from a k-bounded heap over its ring tiles' broadcast
-    // arrays — no probe join, no per-left rank exchange, no join-back by
-    // leftId (the 3-D knnCore's probe shape; the k-th smallest of any ≥ k
-    // candidate subset is a valid bound, so no sort or tie-break is
-    // needed). Past 1M the relational window form carries the
-    // giant-tiling case.
-    val luP = if (probeTiles.size.toLong * probeTileCap <= cfg.probeCollectMax) {
-      val packed = rtc
-        .select(col(Tile), col("__rx1"), col("__ry1"), col("__rx2"), col("__ry2"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (t, rs) =>
-          val a = new Array[Double](rs.length * 4)
-          var i = 0
-          rs.foreach { row =>
-            var j = 0
-            while (j < 4) { a(i + j) = row.getDouble(1 + j); j += 1 }
-            i += 4
-          }
-          t -> a
-        }
-      val candBc = spark.sparkContext.broadcast(packed)
-      val ringSetsBc = spark.sparkContext.broadcast(ringSets)
-      val kk = k
-      val probeKth = udf { (ot: Int, x1: Double, y1: Double,
-                            x2: Double, y2: Double) =>
-        val sets = ringSetsBc.value
-        if (ot < 0 || ot >= sets.length || sets(ot).isEmpty)
-          null.asInstanceOf[java.lang.Double]
-        else {
-          val heap = new graft.functions.KthHeap(kk)
-          sets(ot).foreach { t =>
-            candBc.value.get(t) match {
-              case Some(a) =>
-                var i = 0
-                while (i < a.length) {
-                  // same max-distance arithmetic as the relational form
-                  val dx = math.max(x2 - a(i), a(i + 2) - x1)
-                  val dy = math.max(y2 - a(i + 1), a(i + 3) - y1)
-                  heap.insert(math.sqrt(dx * dx + dy * dy))
-                  i += 4
-                }
-              case None => ()
-            }
-          }
-          if (heap.n < kk) null.asInstanceOf[java.lang.Double]
-          else java.lang.Double.valueOf(heap.arr(0))
-        }
-      }
-      lu.withColumn("__pd",
-        probeKth(col("__ot"), col(X1), col(Y1), col(X2), col(Y2)))
-    } else {
-      // relational probe (whole-stage codegen). The k-th distance comes
-      // from the kth_smallest BOUNDED-HEAP AGGREGATE, not a window rank:
-      // partial aggregation runs map-side on the join output (≤ k doubles
-      // per left cross the wire) and nothing is ever sorted. The previous
-      // row_number form had to SORT the whole exploded probe relation —
-      // lefts × ringTiles × cap rows — inside whatever partitioning AQE
-      // had sized for the join's slim INPUTS; at the sf10 area lane that
-      // was ~10⁸ rows in 4 coalesced partitions, the executor starved its
-      // heartbeats for 10 minutes and the JVM self-terminated. Identical
-      // semantics: k-th smallest including duplicates, null when fewer
-      // than k candidates arrived (the rank===k row simply didn't exist
-      // before, and the left join produced the same null).
-      val mdx = greatest(col(X2) - col("__rx1"), col("__rx2") - col(X1))
-      val mdy = greatest(col(Y2) - col("__ry1"), col("__ry2") - col(Y1))
-      val probeRad = lu.select(col(leftId), col("__ot"),
-          col(X1), col(Y1), col(X2), col(Y2))
-        .join(broadcast(probeDf), Seq("__ot"))
-        .withColumn(Tile, col("__pt"))
-        .join(rtc.hint("shuffle_hash"), Seq(Tile))
-        .withColumn("__pd", sqrt(mdx * mdx + mdy * mdy))
-        .groupBy(col(leftId))
-        .agg(graft.functions.kth_smallest(col("__pd"), k).as("__pd"))
-      lu.join(probeRad, Seq(leftId), "left")
-    }
-
-    // pass-2 replication prunes to tiles some right ENVELOPE touches: a
-    // pair's refpoint lies inside the right's envelope, so its emitting
-    // tile is always envelope-occupied — replicas into right-empty tiles
-    // (the bulk of a sparse space) carry no information and only inflate
-    // the refine shuffle
-    val envOccupied = r
-      .select(explode(tileIds(col(X1), col(Y1), col(X2), col(Y2))).as("__t"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    // …and the pruning happens INSIDE the enumeration: an STRtree over just
-    // the occupied tile boundaries (tiny — bounded by the tiling), walked
-    // with a branch-and-bound on the EUCLIDEAN gap to the row's ORIGINAL
-    // envelope. One UDF call per left row replaces explode-all-box-tiles +
-    // occupied-filter + ball-filter (three per-replica calls over ~every
-    // tile intersecting the expanded box — for a far left in a sparse
-    // space that box covers most of the tiling, while its ball grazes a
-    // handful of cluster-edge tiles; measured as the map-side hot stages
-    // of the knn2d 100× rehearsal).
-    val occTree = {
-      val t = new STRtree()
-      envOccupied.foreach { id =>
-        val m = index.tileById(id).mbb
-        t.insert(new Envelope(m.xmin, m.xmax, m.ymin, m.ymax), Integer.valueOf(id))
-      }
-      t.build()
-      t
-    }
-    val occTreeBc = spark.sparkContext.broadcast(occTree)
-    val occEmpty = envOccupied.isEmpty
-
-    // ---------------- pass 2: radius-bounded candidate join on the
-    // remainder. Radius = min(k-th local distance/cap, per-row ring bound
-    // + own half-diagonal, exact probe k-th distance) — least() skips the
-    // null components (no ring plan / fewer than k parseable probes)
-    val l2 = luP
-      .withColumn("__rr", ringRadRow(
-        (col(X1) + col(X2)) / 2, (col(Y1) + col(Y2)) / 2, col("__ot")))
-      .withColumn(Rad, least(col(Rad), col("__rr") + halfDiag, col("__pd")))
-      // relative float slack: the probe radius is column sqrt(dx²+dy²)
-      // but pass-2 distances come from JTS (Math.hypot internally), which
-      // can land one ulp HIGHER for the very candidate that defined the
-      // radius — without the pad, that row's k-th neighbor fails d ≤ rad
-      // by 1 ulp and silently vanishes (caught by the sparse-region
-      // spec). Padding only ever ADMITS extra candidates; the exact rank
-      // filter drops them
-      .withColumn(Rad, col(Rad) + lit(1e-9) * (lit(1.0) + abs(col(Rad))))
-      .drop("__ot", "__rr", "__pd")
-      .withColumn(X1, col(X1) - col(Rad)).withColumn(Y1, col(Y1) - col(Rad))
-      .withColumn(X2, col(X2) + col(Rad)).withColumn(Y2, col(Y2) + col(Rad))
-    // ball prune: a replica tile must lie within EUCLIDEAN distance rad of
-    // the row's ORIGINAL envelope (recovered as expanded ∓ rad), not just
-    // inside the expanded box — the box corners reach rad·√2 and, for a
-    // left far from a clustered right region, cover the WHOLE cluster
-    // while its k-ball (rad = exact probe k-th distance) grazes only the
-    // near edge. Loss-free because the emitting refpoint below is the
-    // nearest point of the right envelope to the left envelope:
-    // dist(ref, lEnv) = minDist(lEnv, rEnv) ≤ d(g1,g2) ≤ rad, so the
-    // refpoint's owner tile always survives this filter (1e-9 slack
-    // absorbs float rounding; slack only ADDS tiles). Measured in the
-    // knn2d 100× rehearsal: pass-2 shuffle 23 GB spill → bounded.
-    val ballTilesOf = (ex1: Double, ey1: Double, ex2: Double, ey2: Double, rad: Double) => {
-      val ox1 = ex1 + rad; val oy1 = ey1 + rad
-      val ox2 = ex2 - rad; val oy2 = ey2 - rad
-      val rr = rad + 1e-9; val rr2 = rr * rr
-      val out = new scala.collection.mutable.ArrayBuilder.ofInt
-      def visit(b: Boundable): Unit = {
-        val e = b.getBounds.asInstanceOf[Envelope]
-        val dx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
-        val dy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
-        if (dx * dx + dy * dy <= rr2) b match {
-          case n: AbstractNode =>
-            val cs = n.getChildBoundables
-            var j = 0
-            while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
-          case it: ItemBoundable =>
-            out += it.getItem.asInstanceOf[Integer].intValue
-        }
-      }
-      if (!occEmpty) visit(occTreeBc.value.getRoot)
-      out.result()
-    }
-    val ballTiles = udf(ballTilesOf)
-    // pass-2 hot-key sharding: under clustered rights, ~every starved left
-    // replicates to the same few cluster-edge tiles, so the plain tile key
-    // skews the refine into a handful of straggler tasks (measured in the
-    // knn2d 100× rehearsal: 872 s of pass-2 CPU, one task holding 570 s
-    // of it — the corner tiles facing the bulk of the sparse lefts carry
-    // ~everything). Composite (tile, shard) keys — [[join]]'s protocol —
-    // spread it: each LEFT picks one shard by content hash of its row,
-    // rights replicate to every shard of each tile they touch. Shard counts
-    // are ADAPTIVE, from the exact per-tile replica loads: the
-    // radius-resolved left relation is copied once, by its own SQL
-    // execution (the refine reads it again — without the copy the whole
-    // probe phase would recompute) and one bounded aggregate (≤ occupied
-    // tiles rows) prices each tile at ceil(load / target), where the
-    // target is one refine slot's share of the load, so uniform data keeps
-    // 1 shard everywhere and pays only the counting scan, while a hot
-    // corner tile splits ∝ its measured load up to MaxShards. The loads
-    // also weigh the refine slots.
-    val (l2p, l2Rows) = Bridge.filled(l2)
-    val ballTilesCol =
-      ballTiles(col(X1), col(Y1), col(X2), col(Y2), col(Rad))
-    val tileLoads = l2p.select(explode(ballTilesCol).as(Tile))
-      .groupBy(col(Tile)).agg(count(lit(1)).as("__c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val target = math.max(20000L, tileLoads.valuesIterator.sum /
-      (TasksPerCore.toLong * spark.sparkContext.defaultParallelism))
-    val sharded = index.withCounts(tileLoads.collect { case (t, c) if c > target =>
-      t -> math.min(TileIndex.MaxShards.toLong, (c + target - 1) / target).toInt
-    }, tileLoads)
-    val shardBc = spark.sparkContext.broadcast(sharded)
-    val Seq(e1, e2, e3, e4, radIdx) = Seq(X1, Y1, X2, Y2, Rad).map(l2p.schema.fieldIndex)
-    val lt2Keys = (row: InternalRow) => {
-      val h = row.hashCode.toLong
-      ballTilesOf(row.getDouble(e1), row.getDouble(e2), row.getDouble(e3), row.getDouble(e4),
-        row.getDouble(radIdx)).iterator.map(shardBc.value.probeKey(_, h))
-    }
-    val rEnv = Seq(X1, Y1, X2, Y2).map(r.schema.fieldIndex)
-    val rt2Keys = (row: InternalRow) => shardBc.value.buildKeys(row.getDouble(rEnv(0)),
-      row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
-    // the refine stage's layouts: slot, key, then the frames' columns
-    val (l2A, r2A) = (attrsOf(l2p), attrsOf(r))
-    val (l2K, r2K) = (keyed(l2A), keyed(r2A))
-    val l2Geom = l2p.schema.fieldIndex(leftGeom) + 2; val r2Geom = r.schema.fieldIndex(rightGeom) + 2
-    val l2Env = Seq(e1, e2, e3, e4).map(_ + 2); val r2Env = rEnv.map(_ + 2)
-    val l2Out = lOutCols.toSeq.map(c => l2K(l2p.schema.fieldIndex(c) + 2))
-    val r2Out = rOutCols.toSeq.map(c => r2K(r.schema.fieldIndex(c) + 2))
-
-    val candRows = slotCogroup(spark, sharded, l2p.queryExecution.toRdd, l2A, lt2Keys,
-        r.queryExecution.toRdd, r2A, rt2Keys)(rowTree(r2Geom, r2Env)) { () =>
-      val knnRow = knnRows(l2Out, l2K, r2Out, r2K)
-      (tree, lrow) => {
-        val g1 =
-          if (tree.isEmpty) null
-          else GeometryCodec.fromWkb(lrow.getBinary(l2Geom))
-        if (g1 == null) Iterator.empty
-        else {
-          val idx = bc.value
-          val tile = (lrow.getLong(1) / TileIndex.MaxShards).toInt
-          val rad = lrow.getDouble(radIdx + 2)
-          val px1 = lrow.getDouble(l2Env(0)); val py1 = lrow.getDouble(l2Env(1))
-          val px2 = lrow.getDouble(l2Env(2)); val py2 = lrow.getDouble(l2Env(3))
-          // ball-bounded branch-and-bound over the tile tree: descend only
-          // nodes whose EUCLIDEAN envelope gap to the row's ORIGINAL envelope
-          // is ≤ rad. A Chebyshev-box query here admitted every right in the
-          // expanded box — for a far left whose ball grazes a clustered
-          // region that is ~the whole tile, each hit paying a per-item gap
-          // check (the pass-2 refine was the hottest stage of the knn2d 100×
-          // rehearsal); the bound prunes whole subtrees instead.
-          // gap(lEnv, rEnv) ≤ d(g1, g2) always, so pruning on it is
-          // loss-free (1e-9 slack for rounding); each rejected item also
-          // saves a ~100× costlier DistanceOp.
-          val ox1 = px1 + rad; val oy1 = py1 + rad
-          val ox2 = px2 - rad; val oy2 = py2 - rad
-          val rSlack = rad + 1e-9; val rr2 = rSlack * rSlack
-          val out = Vector.newBuilder[InternalRow]
-          def visit(node: Boundable): Unit = {
-            val e = node.getBounds.asInstanceOf[Envelope]
-            val gx = math.max(0.0, math.max(e.getMinX - ox2, ox1 - e.getMaxX))
-            val gy = math.max(0.0, math.max(e.getMinY - oy2, oy1 - e.getMaxY))
-            if (gx * gx + gy * gy <= rr2) node match {
-              case n: AbstractNode =>
-                val cs = n.getChildBoundables
-                var j = 0
-                while (j < cs.size()) { visit(cs.get(j).asInstanceOf[Boundable]); j += 1 }
-              case item: ItemBoundable =>
-                val (g2, rrow) = item.getItem.asInstanceOf[(Geometry, InternalRow)]
-                val d = g1.distance(g2)
-                if (d <= rad) {
-                  // refpoint = nearest point of the RIGHT envelope to the
-                  // row's ORIGINAL envelope (overlap → its low edge, a
-                  // deterministic pair function): it lies in the right
-                  // envelope (tile is right-occupied) at dist =
-                  // minDist(lEnv, rEnv) ≤ d ≤ rad from the left envelope, so
-                  // its owner tile carries BOTH replicas under the ball prune
-                  // above — each qualifying pair is emitted exactly once, by
-                  // that tile
-                  val rx0 = rrow.getDouble(r2Env(0)); val ry0 = rrow.getDouble(r2Env(1))
-                  val rx1 = rrow.getDouble(r2Env(2)); val ry1 = rrow.getDouble(r2Env(3))
-                  val refx = if (rx0 > ox2) rx0 else if (rx1 < ox1) rx1
-                             else math.max(ox1, rx0)
-                  val refy = if (ry0 > oy2) ry0 else if (ry1 < oy1) ry1
-                             else math.max(oy1, ry0)
-                  if (idx.refTile(refx, refy) == tile)
-                    out += knnRow(lrow, rrow, d, 0).copy()
-                }
-            }
-          }
-          visit(tree.getRoot)
-          out.result().iterator
-        }
-      }
-    }
-    val cands = Bridge.frame(spark, candRows, p1.schema)
-
-    // nulls LAST to agree with knnBroadcast's cmpAny — Spark's plain .asc is
-    // nulls-first, which would rank null-tieBreak ties differently depending
-    // on which physical path (broadcast vs tiled) the join took
-    val order = col("knn_dist").asc +: tieBreak.map(col(_).asc_nulls_last)
-    val pass2 = cands
-      .withColumn("knn_rank",
-        row_number().over(Window.partitionBy(col(leftId)).orderBy(order: _*)))
-      .where(col("knn_rank") <= k)
-    CacheHygiene.releaseAfterFirstJob(spark.sparkContext, p1Rows)(
-      Seq(l2Rows, p1Rows, lCopy, rCopy).foreach(_.unpersist(blocking = false)))
-    safe.unionByName(pass2)
-  }
+                   maxDistance: Double = Double.PositiveInfinity): DataFrame =
+    knnNode(left, leftGeom, right, rightGeom, k, maxDistance, tieBreak, cfg, tileLocal = false)
 
   /** J13 bounded-distance kNN (the reference's st_nearest,
     * knn_2d.hpp:113-217): for each left row, the k nearest right rows with
@@ -1293,84 +743,10 @@ object SpatialJoin {
     * starved owner tile searches min(space diagonal, d), so at scale a
     * sparse region replicates probes only to the tiles within d, never to
     * the whole space. */
-  def knnJoinBounded(left: DataFrame, leftGeom: String, leftId: String,
+  def knnJoinBounded(left: DataFrame, leftGeom: String,
                      right: DataFrame, rightGeom: String, k: Int,
                      maxDistance: Double,
                      tieBreak: Seq[String] = Seq.empty,
                      cfg: Config = Config()): DataFrame =
-    knnJoinExact(left, leftGeom, leftId, right, rightGeom, k, tieBreak, cfg,
-        maxDistance = maxDistance)
-      .where(col("knn_dist") < maxDistance)
-
-  /** Broadcast exact kNN: the whole (small) right side ships to every task
-    * as one [[KnnTile]]; each left row takes every right row within its
-    * k-th distance (ties at the boundary included) and ranks them under the
-    * caller's (distance, tieBreak) order. No shuffle, no tiling,
-    * deterministic ties. Rows whose geometry is null, unparseable, empty or
-    * non-finite take no part, as on the tiled path, whose envelopes drop
-    * them. */
-  private def knnBroadcast(left: DataFrame, leftGeom: String,
-                           right: DataFrame, rightGeom: String,
-                           rRows: Array[Row], k: Int,
-                           tieBreak: Seq[String]): DataFrame = {
-    val spark = left.sparkSession
-    val rSchema = right.schema
-    val rGeomIdx = rSchema.fieldIndex(rightGeom)
-    val tieIdx = tieBreak.map(rSchema.fieldIndex).toArray
-    val bc = spark.sparkContext.broadcast(rRows)
-    val lSchema = left.schema
-    val lGeomIdx = lSchema.fieldIndex(leftGeom)
-    val outSchema = StructType(
-      lSchema.fields.map(_.copy(nullable = true)) ++
-        rSchema.fields.map(_.copy(nullable = true)) :+
-        StructField("knn_dist", DoubleType, nullable = false) :+
-        StructField("knn_rank", IntegerType, nullable = false))
-
-    def cmpAny(a: Any, b: Any): Int =
-      if (a == null && b == null) 0
-      else if (a == null) 1
-      else if (b == null) -1
-      else a.asInstanceOf[Comparable[Any]].compareTo(b)
-
-    implicit val rowEnc = Encoders.row(outSchema)
-    left.mapPartitions { rows =>
-      // deserialize the broadcast side once per partition, into one
-      // KnnTile: O(L log R) instead of the O(L x R) scan that cost 17.6x
-      // wall for 10x data at the threshold's 300k x 10k shape (SCALE.md
-      // sf1 step)
-      val items = bc.value.flatMap { row =>
-        located(GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))).map((_, row))
-      }
-      val tile = new KnnTile(items.map(_._1))
-      val ord = new Ordering[(Double, Row)] {
-        override def compare(x: (Double, Row), y: (Double, Row)): Int = {
-          val c = java.lang.Double.compare(x._1, y._1)
-          if (c != 0) c
-          else {
-            var i = 0
-            while (i < tieIdx.length) {
-              val cc = cmpAny(x._2.get(tieIdx(i)), y._2.get(tieIdx(i)))
-              if (cc != 0) return cc
-              i += 1
-            }
-            0
-          }
-        }
-      }
-      rows.flatMap { lrow =>
-        located(GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))) match {
-          case Some(g1) if items.nonEmpty =>
-            val near = tile.nearest(g1, k)
-            val dk = near(math.min(k, near.length) - 1)._1
-            val lVals = lrow.toSeq
-            near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
-              .toSeq.sorted(ord).take(k)
-              .iterator.zipWithIndex.map { case ((d, rrow), i) =>
-                Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ (i + 1))
-              }
-          case _ => Iterator.empty
-        }
-      }
-    }.toDF(outSchema.fieldNames.toIndexedSeq: _*)
-  }
+    knnJoinExact(left, leftGeom, right, rightGeom, k, tieBreak, cfg, maxDistance)
 }

@@ -539,7 +539,7 @@ object Queries {
   def qKnn(spark: SparkSession, dir: String): DataFrame = {
     val custs = custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
     val supps = suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
-    SpatialJoin.knnJoinExact(custs, "g1", "cid", supps, "g2", k = 3,
+    SpatialJoin.knnJoinExact(custs, "g1", supps, "g2", k = 3,
         tieBreak = Seq("sid"), cfg = SpatialJoin.Config(bucket = 500))
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
   }
@@ -560,7 +560,7 @@ object Queries {
   def qKnnBounded(spark: SparkSession, dir: String): DataFrame = {
     val custs = custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
     val supps = suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
-    SpatialJoin.knnJoinBounded(custs, "g1", "cid", supps, "g2", k = 3,
+    SpatialJoin.knnJoinBounded(custs, "g1", supps, "g2", k = 3,
         maxDistance = 2.5, tieBreak = Seq("sid"),
         cfg = SpatialJoin.Config(bucket = 500))
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
@@ -862,7 +862,7 @@ object Queries {
       .select(col("id").as("cid"), col("geom").as("g1"))
     val supps = keyPointsArea(spark, dir, "supplier", "s_suppkey", 13)
       .select(col("id").as("sid"), col("geom").as("g2"))
-    SpatialJoin.knnJoinExact(custs, "g1", "cid", supps, "g2", k = 3,
+    SpatialJoin.knnJoinExact(custs, "g1", supps, "g2", k = 3,
         tieBreak = Seq("sid"), cfg = SpatialJoin.Config(bucket = 500))
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
   }

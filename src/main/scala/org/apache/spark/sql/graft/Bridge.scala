@@ -9,8 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Expression <-> Column and RDD <-> DataFrame bridge. `ExpressionUtils`,
@@ -30,10 +28,6 @@ object Bridge {
     * operators built at run time take their context from. */
   def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
 
-  /** A DataFrame over `rows`, which must be laid out as `schema`. */
-  def frame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    castToImpl(spark).internalCreateDataFrame(rows, schema)
-
   /** `df`'s rows copied into an RDD-level MEMORY_AND_DISK persist, exposed
     * as a DataFrame: every job over the returned frame reads the copy
     * instead of re-running `df`'s plan. Unlike `Dataset.persist`, nothing
@@ -41,25 +35,9 @@ object Bridge {
     * queries share. The first job over the frame fills the copy; the
     * returned RDD is the handle to unpersist it by. */
   def persisted(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val rows = copyOf(castToImpl(df).queryExecution)
-    (frame(df.sparkSession, rows, df.schema), rows)
+    val rows = castToImpl(df).queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    (castToImpl(df.sparkSession).internalCreateDataFrame(rows, df.schema), rows)
   }
-
-  /** [[persisted]], filled now by a SQL execution of `df`'s own plan: the
-    * plan shows to SQL listeners, and the adaptive jobs of its exchanges
-    * run under that execution instead of outside any. */
-  def filled(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val qe = castToImpl(df).queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("copy")) {
-      val rows = copyOf(qe)
-      rows.count()
-      rows
-    }
-    (frame(df.sparkSession, rows, df.schema), rows)
-  }
-
-  private def copyOf(qe: QueryExecution): RDD[InternalRow] =
-    qe.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** A copy of `spark` with `confs` set: it keeps the caller's runtime
     * conf, temp views, functions and planner strategies, and shares its

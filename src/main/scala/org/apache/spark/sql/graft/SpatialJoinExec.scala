@@ -83,6 +83,9 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case n: KnnJoinNode =>
+      KnnJoinExec(planLater(n.left), planLater(n.right), n.leftGeom, n.rightGeom, n.leftEnv,
+        n.rightEnv, n.k, n.maxDistance, n.tieBreak, None, n.cfg, n.tileLocal, n.output) :: Nil
     case n: SpatialJoinNode =>
       SpatialJoinExec(planLater(n.left), planLater(n.right), n.leftGeom, n.rightGeom,
         n.leftEnv, n.rightEnv, n.cfg, None, Inner, n.output) :: Nil
@@ -151,44 +154,39 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
       g, bounds.map(_.toAttribute))
   }
 
-  /** `a JOIN b ON st_nearest(a.g, b.g, k[, d])` → [[KnnJoinExec]]. The
-    * first geometry arg names the probe side, the second the index side;
-    * remaining conjuncts apply as a post-join filter (SQL conjunction
-    * semantics: the pair must be in the kNN relation AND satisfy them).
-    * st_nearest is unevaluable row-at-a-time, so this strategy is the only
-    * way such a join can run — an unmatched orientation (both geometry
-    * args on one side) falls through to Catalyst and fails at runtime with
-    * the expression's targeted error. */
+  /** `a JOIN b ON st_nearest(a.g, b.g, k[, d])` (or `st_nearest2`) →
+    * [[KnnJoinExec]]. The first geometry arg names the probe side, the
+    * second the index side, whichever SQL side each comes from; the rest of
+    * the condition filters the ranked pairs (SQL conjunction semantics: the
+    * pair must be in the kNN relation AND satisfy it). Distance ties rank by
+    * the index side's orderable columns, in their order. st_nearest is
+    * unevaluable row-at-a-time, so this strategy is the only way such a
+    * join can run — an unmatched orientation (both geometry args on one
+    * side) falls through to Catalyst and fails at runtime with the
+    * expression's targeted error. */
   private def planKnn(l: LogicalPlan, r: LogicalPlan,
                       conjuncts: Seq[Expression]): Seq[SparkPlan] = {
     import graft.functions.{StNearest, StNearest2}
-    // (marker, probeGeom, indexGeom, k, maxDist, swapped, tileLocal)
+    // (marker, probeGeom, indexGeom, k, maxDist, tileLocal)
     val hit = conjuncts.collectFirst {
-      case e @ StNearest(a, b, k, d)
-          if a.references.subsetOf(l.outputSet) && b.references.subsetOf(r.outputSet) =>
-        (e, a, b, k, d, false, false)
-      case e @ StNearest(a, b, k, d)
-          if a.references.subsetOf(r.outputSet) && b.references.subsetOf(l.outputSet) =>
-        (e, a, b, k, d, true, false)
-      case e @ StNearest2(a, b, k)
-          if a.references.subsetOf(l.outputSet) && b.references.subsetOf(r.outputSet) =>
-        (e, a, b, k, Double.PositiveInfinity, false, true)
-      case e @ StNearest2(a, b, k)
-          if a.references.subsetOf(r.outputSet) && b.references.subsetOf(l.outputSet) =>
-        (e, a, b, k, Double.PositiveInfinity, true, true)
+      case e @ StNearest(a, b, k, d) => (e, a, b, k, d, false)
+      case e @ StNearest2(a, b, k) => (e, a, b, k, Double.PositiveInfinity, true)
+    }.flatMap { case (e, a, b, k, d, tileLocal) =>
+      def on(p: LogicalPlan, g: Expression) = g.references.subsetOf(p.outputSet)
+      if (on(l, a) && on(r, b)) Some((e, l, a, r, b, k, d, tileLocal))
+      else if (on(r, a) && on(l, b)) Some((e, r, a, l, b, k, d, tileLocal))
+      else None
     }
     hit match {
-      case Some((matched, lg, rg, k, d, swapped, tileLocal)) =>
-        val rest = conjuncts.filterNot(_ fastEquals matched).reduceOption(And)
+      case Some((matched, probe, pg, index, ig, k, d, tileLocal)) =>
         val cfg = tuning()
-        if (!swapped)
-          KnnJoinExec(planLater(l), planLater(r), lg, rg, k, d, rest, cfg, tileLocal) :: Nil
-        else {
-          // probe side is the SQL-right child: run the exec with the sides
-          // exchanged, then project back to the join's l ++ r output order
-          val exec = KnnJoinExec(planLater(r), planLater(l), lg, rg, k, d, rest, cfg, tileLocal)
-          ProjectExec(l.output ++ r.output, exec) :: Nil
-        }
+        SpatialJoin.validate(cfg)
+        val (pe, pgA, pEnv) = enveloped(probe, pg, 0.0, dropNull = true)
+        val (ie, igA, iEnv) = enveloped(index, ig, 0.0, dropNull = true)
+        val tie = if (tileLocal) Nil else index.output.filter(a => RowOrdering.isOrderable(a.dataType))
+        KnnJoinExec(planLater(pe), planLater(ie), pgA, igA, pEnv, iEnv, k, d, tie,
+          conjuncts.filterNot(_ fastEquals matched).reduceOption(And), cfg, tileLocal,
+          l.output ++ r.output) :: Nil
       case None => Nil
     }
   }
@@ -250,6 +248,7 @@ case class SpatialJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
+    import SpatialJoinExec.{copied, mbbs, ords}
     val sc = sparkContext
     val semi = joinType != Inner
     val id = AttributeReference("__lid", LongType, nullable = false)()
@@ -258,17 +257,9 @@ case class SpatialJoinExec(
     val rIn = right.output
     val lRows = copied(left, withId = semi)
     val rRows = copied(right, withId = false)
-    def ords(in: Seq[Attribute], as: Seq[Attribute]) = as.map(a => in.indexWhere(_.exprId == a.exprId))
     val Seq(lx1, ly1, lx2, ly2) = ords(lIn, leftEnv)
     val rEnv = ords(rIn, rightEnv)
-    def mbbs(rows: RDD[InternalRow], e: Seq[Int]) = rows.flatMap { row =>
-      if (row.isNullAt(e(0))) None
-      else Some(Mbb(row.getDouble(e(0)), row.getDouble(e(1)), row.getDouble(e(2)), row.getDouble(e(3))))
-    }
     val index = SpatialJoin.planTiles(session, mbbs(lRows, Seq(lx1, ly1, lx2, ly2)).union(mbbs(rRows, rEnv)), cfg)
-    // released once the SQL execution (or job) consuming this exec ends
-    Seq(lRows, rRows).foreach(c =>
-      CacheHygiene.releaseAfterFirstJob(sc, c)(c.unpersist(blocking = false)))
     val bc = sc.broadcast(index)
 
     // composite (tile, shard) keys: probe rows land on one shard per tile,
@@ -361,20 +352,39 @@ case class SpatialJoinExec(
       })
     }
   }
+}
 
-  /** `plan`'s rows, copied once into an RDD-level MEMORY_AND_DISK persist;
-    * with `withId`, after an id lane ([[SpatialJoinExec.withIds]]). */
-  private def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] = {
+/** The row plumbing [[SpatialJoinExec]] and [[KnnJoinExec]] share. */
+object SpatialJoinExec {
+  /** The ordinals of `as` in the layout `in`. */
+  def ords(in: Seq[Attribute], as: Seq[Attribute]): Seq[Int] =
+    as.map(a => in.indexWhere(_.exprId == a.exprId))
+
+  /** The envelopes at ordinals `e` of `rows`, skipping rows without one. */
+  def mbbs(rows: RDD[InternalRow], e: Seq[Int]): RDD[Mbb] = rows.flatMap { row =>
+    if (row.isNullAt(e(0))) None
+    else Some(Mbb(row.getDouble(e(0)), row.getDouble(e(1)), row.getDouble(e(2)), row.getDouble(e(3))))
+  }
+
+  /** `plan`'s rows, copied once ([[persisted]]); with `withId`, after an id
+    * lane ([[withIds]]). */
+  def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] = {
     val in = (if (withId) Seq(AttributeReference("__lid", LongType)()) else Nil) ++ plan.output
-    (if (withId) SpatialJoinExec.withIds(plan.execute()) else plan.execute())
+    persisted((if (withId) withIds(plan.execute()) else plan.execute())
       .mapPartitions[InternalRow] { rows =>
         val proj = UnsafeProjection.create(in, in)
         rows.map(proj(_).copy())
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      })
   }
-}
 
-object SpatialJoinExec {
+  /** `rows`, which must not reuse row objects, in an RDD-level
+    * MEMORY_AND_DISK persist, released once the SQL execution (or job)
+    * that first reads them ends. Nothing registers in the session's
+    * CacheManager, which concurrent sibling queries share. */
+  def persisted(rows: RDD[InternalRow]): RDD[InternalRow] =
+    CacheHygiene.releaseAfterFirstJob(rows.sparkContext, rows.persist(StorageLevel.MEMORY_AND_DISK))(
+      rows.unpersist(blocking = false))
+
   /** `rows` after a unique LongType id, (partition index << 36 | local
     * sequence): no counting job, and stable only while the input replays
     * its partitions in order, so a caller reading the ids twice persists

@@ -52,17 +52,20 @@ class PlanHealthSpec extends SparkTestBase {
   }
 
   test("the spatial-join exec never re-enters the DataFrame API") {
-    // the exec runs the engine on its children's rows in the caller's SQL
-    // execution: a DataFrame built inside it would start a second one
+    // the spatial-join and kNN execs run the engine on their children's
+    // rows in the caller's SQL execution: a DataFrame built inside one would
+    // start a second one
     import scala.jdk.CollectionConverters._
-    val path = java.nio.file.Paths.get("src/main/scala/org/apache/spark/sql/graft/SpatialJoinExec.scala")
-    val lines = java.nio.file.Files.readAllLines(path).asScala
-    val hits = lines.zipWithIndex.collect {
-      case (line, i) if Seq("Bridge.frame", "ExecFrames", "queryExecution.toRdd").exists(line.contains) =>
-        s"${i + 1}: ${line.trim}"
+    for (exec <- Seq("SpatialJoinExec", "KnnJoinExec")) {
+      val path = java.nio.file.Paths.get(s"src/main/scala/org/apache/spark/sql/graft/$exec.scala")
+      val lines = java.nio.file.Files.readAllLines(path).asScala
+      val hits = lines.zipWithIndex.collect {
+        case (line, i) if Seq("Bridge.", "ExecFrames", "queryExecution", "DataFrame").exists(line.contains) =>
+          s"${i + 1}: ${line.trim}"
+      }
+      assert(lines.exists(_.contains("def doExecute")), s"lint lost $exec")
+      assert(hits.isEmpty, s"DataFrame re-entry in $exec.scala: ${hits.mkString("; ")}")
     }
-    assert(lines.exists(_.contains("def doExecute")), "lint lost the exec")
-    assert(hits.isEmpty, s"DataFrame re-entry in SpatialJoinExec.scala: ${hits.mkString("; ")}")
   }
 
   test("broadcast kNN path runs with zero shuffles") {
@@ -74,53 +77,58 @@ class PlanHealthSpec extends SparkTestBase {
       s"broadcast kNN should not shuffle:\n${df.queryExecution.executedPlan}")
   }
 
-  test("relational kNN probe aggregates map-side (kth_smallest, no probe sort)") {
-    // force the giant-tiling relational branch at spec scale: threshold 0
-    // disables the broadcast path, probeCollectMax 0 disables the
-    // collected-map probe — this is the lane that carries the q_knn family
-    // past probeCollectMax at sf10. Its radius extraction must be the
-    // kth_smallest partial aggregate (≤ k doubles per left cross the
-    // wire, nothing sorted): the window-rank form sorted the whole
-    // exploded probe relation and starved the executor to death at the
-    // sf10 area lane (r16 measurement — heartbeat timeout after ~10⁸
-    // rows in 4 AQE-coalesced partitions).
+  test("relational kNN probe shuffles only rows and capped ring candidates") {
+    // force the giant-tiling relational probe at spec scale: threshold 0
+    // disables the broadcast path, probeCollectMax 0 the collected-map
+    // probe. It must meet each owner tile's unsafe lefts with its ring's
+    // capped candidates in one task: the lefts and those candidates cross
+    // its shuffle, never a row per (left, candidate) pair — sorting that
+    // exploded relation starved the executor to death at the sf10 area
+    // lane (r16: heartbeat timeout after ~10⁸ rows in 4 partitions). The
+    // two probe forms shuffle the same rows everywhere else, so their
+    // difference is the probe's shuffle.
     import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.operators.SpatialJoin
     val custs = Queries.custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
     val supps = Queries.suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
-    // the probe feeds pass 2's input, which is copied once by its own SQL
-    // execution while the join is built: read the probe's plan there
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          plans.add(s.physicalPlanDescription)
-        case _ =>
+    def run(probeCollectMax: Long): (Long, Long, Set[(Long, Long, Int)]) = {
+      val (records, spilled) = (spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null) {
+            records.add(t.taskMetrics.shuffleReadMetrics.recordsRead)
+            spilled.add(t.taskMetrics.memoryBytesSpilled)
+          }
       }
-    }
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val q = try {
-      val q = graft.operators.SpatialJoin.knnJoinExact(custs, "g1", "cid",
-        supps, "g2", k = 3, tieBreak = Seq("sid"),
-        cfg = graft.operators.SpatialJoin.Config(bucket = 100,
-          knnBroadcastThreshold = 0, probeCollectMax = 0L))
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-      q
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val probe = plans.asScala.filter(_.contains("kth_smallest")).toSeq
-    assert(probe.nonEmpty,
-      s"relational probe radius is not the kth_smallest aggregate:\n${plans.asScala.mkString("\n")}")
-    assert(probe.exists(_.contains("partial_kth_smallest")),
-      "kth_smallest lost its map-side partial stage (every candidate " +
-      s"row would cross the probe exchange):\n${probe.mkString("\n")}")
-    val plan = q.queryExecution.executedPlan.toString
-    // the final top-k rank still compiles to WindowGroupLimit
-    assert(plan.contains("WindowGroupLimit"),
-      s"output rank did not compile to WindowGroupLimit:\n$plan")
-    // and it still answers exactly (tiny check; the full differential is
-    // SpatialJoinSpec's relational-probe mode)
-    assert(q.limit(1).count() == 1)
+      spark.sparkContext.addSparkListener(listener)
+      val got = try {
+        val got = SpatialJoin.knnJoinExact(custs, "g1", supps, "g2", k = 3, tieBreak = Seq("sid"),
+            cfg = SpatialJoin.Config(bucket = 100, knnBroadcastThreshold = 0,
+              probeCollectMax = probeCollectMax))
+          .select("cid", "sid", "knn_rank").as[(Long, Long, Int)].collect().toSet
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+        got
+      } finally spark.sparkContext.removeSparkListener(listener)
+      (records.sum, spilled.sum, got)
+    }
+    val (relational, spilled, got) = run(0L)
+    val (mapped, _, want) = run(SpatialJoin.Config().probeCollectMax)
+    assert(got == want && got.nonEmpty)
+    // the bound: every left, plus Σ over owner tiles of ring tiles × cap
+    val cfg = SpatialJoin.Config(bucket = 100)
+    val (l, r) = SpatialJoin.enveloped(custs, "g1", supps, "g2", cfg)
+    val index = SpatialJoin.planTiles(l, r, cfg)
+    val centres = r.select("__xmin", "__ymin", "__xmax", "__ymax").as[(Double, Double, Double, Double)]
+      .collect().groupBy { case (x1, y1, x2, y2) => index.refTile((x1 + x2) / 2, (y1 + y2) / 2) }
+      .map { case (t, es) => t -> (es.length.toLong,
+        es.map { case (x1, y1, x2, y2) => math.hypot(x2 - x1, y2 - y1) / 2 }.max) }
+    val (rings, _) = SpatialJoin.tileRingPlans(index.tiles, centres, 3)
+    val bound = custs.count() + rings.map(_.length.toLong).sum * 64
+    val probe = relational - mapped
+    assert(probe > 0 && probe <= bound, s"probe shuffle records $probe, bound $bound")
+    assert(spilled == 0, s"relational kNN spilled $spilled bytes")
   }
 
   test("ANN brute top-k never shuffles the scored cross product") {

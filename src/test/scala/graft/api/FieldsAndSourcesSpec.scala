@@ -126,7 +126,7 @@ class FieldsAndSourcesSpec extends SparkTestBase {
       (i.toLong, s"POINT (${rnd.nextDouble() * 100} ${rnd.nextDouble() * 5})"))
     val a = pa.toDF("id1", "w").withColumn("g1", st_geomfromwkt(col("w"))).drop("w")
     val b = pb.toDF("id2", "w").withColumn("g2", st_geomfromwkt(col("w"))).drop("w")
-    val got = SpatialJoin.knnJoinExact(a, "g1", "id1", b, "g2", k = 3,
+    val got = SpatialJoin.knnJoinExact(a, "g1", b, "g2", k = 3,
         tieBreak = Seq("id2"),
         cfg = SpatialJoin.Config(bucket = 40, knnBroadcastThreshold = 0))
       .select("id1", "id2").as[(Long, Long)].collect()

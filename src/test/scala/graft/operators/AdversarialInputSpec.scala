@@ -106,10 +106,10 @@ class AdversarialInputSpec extends SparkTestBase {
       SpatialJoin.knnJoin(df, "geom", r, "rgeom", k = 0)
     }).contains("k must be >= 1"))
     assert(msg(intercept[IllegalArgumentException] {
-      SpatialJoin.knnJoinExact(df, "geom", "id", r, "rgeom", k = -2)
+      SpatialJoin.knnJoinExact(df, "geom", r, "rgeom", k = -2)
     }).contains("k must be >= 1"))
     assert(msg(intercept[IllegalArgumentException] {
-      SpatialJoin.knnJoinBounded(df, "geom", "id", r, "rgeom", k = 3,
+      SpatialJoin.knnJoinBounded(df, "geom", r, "rgeom", k = 3,
         maxDistance = 0.0)
     }).contains("maxDistance"))
   }
@@ -137,7 +137,7 @@ class AdversarialInputSpec extends SparkTestBase {
       Seq.empty[(Long, Array[Byte])].toDF("rid", "rgeom"), "rgeom",
       SpatialJoin.Config(partitioner = "qt", bucket = 4))
     assert(b.count() == 0)
-    val c = SpatialJoin.knnJoinExact(empty, "lgeom", "lid",
+    val c = SpatialJoin.knnJoinExact(empty, "lgeom",
       full, "rgeom", k = 2)
     assert(c.count() == 0)
   }

@@ -61,7 +61,7 @@ class EdgeCasesSpec extends SparkTestBase {
     assert(SpatialJoin.join(
       some.toDF("id1", "g1"), "g1", empty.toDF("id2", "g2"), "g2").count() == 0)
     assert(SpatialJoin.knnJoin(empty, "g1", some, "g2", 3).count() == 0)
-    assert(SpatialJoin.knnJoinExact(empty, "g1", "id1", some, "g2", 3).count() == 0)
+    assert(SpatialJoin.knnJoinExact(empty, "g1", some, "g2", 3).count() == 0)
 
     val emptyDocs = Seq.empty[(Long, String)].toDF("id", "text")
     assert(graft.dedup.TextDedup.ngramJaccardPairs(emptyDocs, "id", "text", 3, 0.5)

@@ -115,10 +115,10 @@ class KnnPathsSpec extends SparkTestBase {
           probeCollectMax = probeCollectMax)
         val what = s"$path, probeCollectMax $probeCollectMax"
         same(s"knnJoinExact $what",
-          ranked(SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", k, tieBreak = Seq("id2"), cfg = cfg)),
+          ranked(SpatialJoin.knnJoinExact(l, "g1", r, "g2", k, tieBreak = Seq("id2"), cfg = cfg)),
           want)
         same(s"knnJoinBounded $what",
-          ranked(SpatialJoin.knnJoinBounded(l, "g1", "id1", r, "g2", k, maxD, tieBreak = Seq("id2"),
+          ranked(SpatialJoin.knnJoinBounded(l, "g1", r, "g2", k, maxD, tieBreak = Seq("id2"),
             cfg = cfg)),
           bruteExact(a, b, k, maxD))
       }
@@ -282,15 +282,58 @@ class KnnPathsSpec extends SparkTestBase {
     }
     assert(local == Seq(slots), s"knnJoin shuffle-reading stages' tasks: $local")
 
-    // pass 1 runs while knnJoinExact is built; its other shuffle readers
-    // are small planning aggregates
-    var exact: DataFrame = null
-    val built = shuffleStageTasks {
-      exact = SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", 2, Seq("id2"), cfg)
+    // knnJoinExact runs nothing until the action; there pass 1 and pass 2
+    // each refine in one task per tile (the last stage reads the rank
+    // reduce beside pass 1's safe rows)
+    var got: Set[(Long, Long, Int)] = null
+    val exact = shuffleStageTasks {
+      got = SpatialJoin.knnJoinExact(l, "g1", r, "g2", 2, Seq("id2"), cfg)
+        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect().toSet
     }
-    assert(built.count(_ == slots) == 1, s"knnJoinExact build's shuffle-reading stages: $built")
-    assert(exact.select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect().toSet ==
-      bruteExact(a, b, 2))
+    assert(exact.count(_ == slots) == 2, s"knnJoinExact shuffle-reading stages' tasks: $exact")
+    assert(got == bruteExact(a, b, 2))
+  }
+
+  test("knnJoinExact ranks distance ties by a binary tie-break column on both paths") {
+    // rights on the integer lattice, lefts at cell centres: four rights tie
+    // at each left's nearest distance. The keys are distinct, and half have
+    // a first byte past 127, so signed and unsigned byte orders differ
+    val b = for (x <- 0 until 6; y <- 0 until 6)
+      yield ((x * 6 + y).toLong, point(x, y), Array(((x * 6 + y) * 37).toByte, 7.toByte))
+    val a = for (x <- 0 until 5; y <- 0 until 5) yield ((x * 5 + y).toLong, point(x + 0.5, y + 0.5))
+    val l = frame(a, "id1", "g1"); val r = b.toDF("id2", "g2", "b2")
+    val byKey = Ordering.Tuple2(Ordering.Double.TotalOrdering,
+      Ordering.fromLessThan[Array[Byte]](java.util.Arrays.compareUnsigned(_, _) < 0))
+    val rights = b.map { case (j, w, key) => (j, GeometryCodec.fromWkb(w), key) }
+    val want = parse(a).flatMap { case (i, g1) =>
+      rights.sortBy { case (_, g2, key) => (g1.distance(g2), key) }(byKey).take(3).zipWithIndex
+        .map { case ((j, _, _), rank) => (i, j, rank + 1) }
+    }.toSet
+    for (threshold <- Seq(0, 10000)) {
+      val got = SpatialJoin.knnJoinExact(l, "g1", r, "g2", 3, tieBreak = Seq("b2"),
+          cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = threshold))
+        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect().toSeq
+      same(s"threshold $threshold", got, want)
+    }
+  }
+
+  test("knnJoinExact answers left rows that share an id each on their own") {
+    // 240 lefts, each id used twice, and rights clustered in one corner, so
+    // nearly every left row reaches pass 2
+    val rnd = new Random(5)
+    val a = (0 until 240).map(i => ((i / 2).toLong, point(rnd.nextDouble() * 100, rnd.nextDouble() * 100)))
+    val b = (0 until 60).map(i => (i.toLong, point(rnd.nextDouble() * 5, rnd.nextDouble() * 5)))
+    val gb = parse(b)
+    val want = parse(a).flatMap { case (i, g1) =>
+      gb.map { case (j, g2) => (g1.distance(g2), j) }.sorted.take(3).zipWithIndex
+        .map { case ((d, j), rank) => (i, j, rank + 1, d) }
+    }.sorted
+    for (threshold <- Seq(0, 10000)) {
+      val got = SpatialJoin.knnJoinExact(frame(a, "id1", "g1"), "g1", frame(b, "id2", "g2"), "g2", 3,
+          tieBreak = Seq("id2"), cfg = SpatialJoin.Config(bucket = 20, knnBroadcastThreshold = threshold))
+        .select("id1", "id2", "knn_rank", "knn_dist").as[(Long, Long, Int, Double)].collect().toSeq.sorted
+      assert(got == want, s"threshold $threshold: ${got.length} rows, want ${want.length}")
+    }
   }
 
   test("every kNN entry point rejects colliding column names") {
@@ -299,7 +342,7 @@ class KnnPathsSpec extends SparkTestBase {
     val calls = Seq[(String, () => DataFrame)](
       "join" -> (() => SpatialJoin.join(a, "g", b, "g2")),
       "knnJoin" -> (() => SpatialJoin.knnJoin(a, "g", b, "g2", 1)),
-      "knnJoinExact" -> (() => SpatialJoin.knnJoinExact(a, "g", "id", b, "g2", 1)))
+      "knnJoinExact" -> (() => SpatialJoin.knnJoinExact(a, "g", b, "g2", 1)))
     for ((name, call) <- calls) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains("column name collision between join sides"), s"$name: $e")
@@ -322,7 +365,7 @@ class KnnPathsSpec extends SparkTestBase {
     val b = (0 until 60).map(i => (i.toLong, point(rnd.nextDouble() * 30, rnd.nextDouble() * 30)))
     for (probeCollectMax <- Seq(1000000L, 0L)) {
       val (l, lEvals) = counted(a, "id1", "g1"); val (r, rEvals) = counted(b, "id2", "g2")
-      val got = SpatialJoin.knnJoinExact(l, "g1", "id1", r, "g2", 3, tieBreak = Seq("id2"),
+      val got = SpatialJoin.knnJoinExact(l, "g1", r, "g2", 3, tieBreak = Seq("id2"),
           cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = 0,
             probeCollectMax = probeCollectMax))
         .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
@@ -340,7 +383,7 @@ class KnnPathsSpec extends SparkTestBase {
     val rnd = new Random(3)
     val a = (0 until 100).map(i => (i.toLong, point(rnd.nextDouble() * 30, rnd.nextDouble() * 30)))
     val b = (0 until 40).map(i => (i.toLong, point(rnd.nextDouble() * 30, rnd.nextDouble() * 30)))
-    val out = SpatialJoin.knnJoinExact(frame(a, "id1", "g1"), "g1", "id1",
+    val out = SpatialJoin.knnJoinExact(frame(a, "id1", "g1"), "g1",
       frame(b, "id2", "g2"), "g2", 3, tieBreak = Seq("id2"),
       cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = 0))
     assert(cache.isEmpty, "knnJoinExact cached an intermediate in the CacheManager")

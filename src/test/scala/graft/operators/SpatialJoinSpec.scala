@@ -212,7 +212,7 @@ class SpatialJoinSpec extends SparkTestBase {
       val pb = (0 until 80).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
       val a = df(pa, "id1", "g1"); val b = df(pb, "id2", "g2")
       val k = 4
-      val got = SpatialJoin.knnJoinExact(a, "g1", "id1", b, "g2", k,
+      val got = SpatialJoin.knnJoinExact(a, "g1", b, "g2", k,
           tieBreak = Seq("id2"),
           cfg = SpatialJoin.Config(bucket = 30, knnBroadcastThreshold = threshold,
             probeCollectMax = pcm))
@@ -242,7 +242,7 @@ class SpatialJoinSpec extends SparkTestBase {
       (i.toLong, s"POINT (${rnd.nextInt(1000) / 100.0} ${rnd.nextInt(1000) / 100.0})"))
     val a = df(pa, "id1", "g1"); val b = df(pb, "id2", "g2")
     val k = 3
-    val got = SpatialJoin.knnJoinExact(a, "g1", "id1", b, "g2", k,
+    val got = SpatialJoin.knnJoinExact(a, "g1", b, "g2", k,
         tieBreak = Seq("id2"),
         cfg = SpatialJoin.Config(bucket = 20, knnBroadcastThreshold = 0))
       .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
@@ -265,7 +265,7 @@ class SpatialJoinSpec extends SparkTestBase {
       val pb = (0 until 70).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
       val a = df(pa, "id1", "g1"); val b = df(pb, "id2", "g2")
       val k = 4; val d = 2.5 // mid-gap on the integer lattice
-      val got = SpatialJoin.knnJoinBounded(a, "g1", "id1", b, "g2", k, d,
+      val got = SpatialJoin.knnJoinBounded(a, "g1", b, "g2", k, d,
           tieBreak = Seq("id2"),
           cfg = SpatialJoin.Config(bucket = 30, knnBroadcastThreshold = threshold))
         .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()

@@ -505,6 +505,38 @@ class SpatialJoinStrategySpec extends SparkTestBase {
       if d < maxD
     } yield (i, j)).toSet
 
+  test("a tiled SQL st_nearest join and knnJoinExact each run in one SQL execution") {
+    import graft.operators.SpatialJoin
+    val probes = points(300, 31); val index = points(200, 32)
+    val pdf = probes.toDF("idc", "wc").withColumn("gc", st_geomfromwkt(col("wc")))
+    val idf = index.toDF("ids", "ws").withColumn("gs", st_geomfromwkt(col("ws")))
+    pdf.createOrReplaceTempView("ex_c"); idf.createOrReplaceTempView("ex_s")
+    val cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = 0)
+    var dfs: Seq[org.apache.spark.sql.DataFrame] = null
+    val (lazyExecs, lazyJobs, _) = activity {
+      dfs = Seq(SpatialJoin.knnJoinExact(pdf, "gc", idf, "gs", 3, Seq("ids"), cfg),
+        SpatialJoin.knnJoinBounded(pdf, "gc", idf, "gs", 3, 2.5, Seq("ids"), cfg),
+        SpatialJoin.knnJoin(pdf, "gc", idf, "gs", 3, cfg))
+    }
+    assert((lazyExecs, lazyJobs) == (0, 0), "a kNN entry point ran a job before an action")
+    var got: Array[(Long, Long)] = null
+    val (dfExecs, _, _) = activity { got = dfs.head.select("idc", "ids").as[(Long, Long)].collect() }
+    var sql: Array[(Long, Long)] = null
+    val (sqlExecs, _, _) = activity {
+      try {
+        spark.conf.set("graft.knn.broadcastThreshold", "0")
+        spark.conf.set("graft.join.bucket", "16")
+        sql = spark.sql("SELECT idc, ids FROM ex_c JOIN ex_s ON st_nearest(gc, gs, 3)")
+          .as[(Long, Long)].collect()
+      } finally {
+        spark.conf.unset("graft.knn.broadcastThreshold")
+        spark.conf.unset("graft.join.bucket")
+      }
+    }
+    assert(dfExecs == 1 && sqlExecs == 1, s"SQL executions: DataFrame $dfExecs, SQL $sqlExecs")
+    assert(got.toSet == bruteKnn(probes, index, 3) && sql.toSet == got.toSet)
+  }
+
   test("SQL st_nearest join plans as KnnJoinExec and matches brute force") {
     import org.apache.spark.sql.graft.KnnJoinExec
     val probes = points(180, 21); val index = points(90, 22)
