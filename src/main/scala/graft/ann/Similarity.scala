@@ -82,7 +82,7 @@ object Similarity {
     import Similarity.{cmpAny, sameId}
     // best-first: similarity desc, item id asc; PriorityQueue.head under
     // this ordering is the WORST retained candidate (same bounded-selection
-    // pattern as SpatialJoin.knnBroadcast)
+    // pattern as KnnJoinExec's broadcast path)
     val ord = new Ordering[(Double, Any)] {
       override def compare(x: (Double, Any), y: (Double, Any)): Int = {
         val c = java.lang.Double.compare(y._1, x._1)

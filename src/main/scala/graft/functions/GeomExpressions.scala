@@ -626,8 +626,8 @@ object HilbertValue {
   * reference's -d bound). It is NOT a row-at-a-time predicate: evaluating
   * it requires the whole right relation, so [[eval]] throws and
   * [[org.apache.spark.sql.graft.SpatialJoinStrategy]] must plan the
-  * enclosing join as KnnJoinExec (which delegates to the exact global
-  * [[graft.operators.SpatialJoin.knnJoinExact]] engine). k and maxDistance
+  * enclosing join as KnnJoinExec, the exact global kNN operator
+  * [[graft.operators.SpatialJoin.knnJoinExact]] plans into too. k and maxDistance
   * parameterize the operator, so they must be literals. */
 case class StNearest(left: Expression, right: Expression,
                      k: Int, maxDistance: Double)

@@ -105,10 +105,12 @@ case class KnnJoinExec(
   private def tieOrder(in: Seq[Attribute]): Seq[SortOrder] =
     tieBreak.map(a => SortOrder(in(ords(in, Seq(a)).head), Ascending, NullsLast, Seq.empty))
 
-  /** Per task: the output row of a left row laid out as `lIn`, a right row
-    * laid out as `rIn`, their distance and rank. */
-  private def emitter(lIn: Seq[Attribute], rIn: Seq[Attribute]): (InternalRow, InternalRow, Double, Int) => InternalRow = {
-    val proj = UnsafeProjection.create(output, lIn ++ rIn ++ Seq(distA, rankA))
+  /** Per task: the row laid out as `out` (by default `output`) of a left
+    * row laid out as `lIn`, a right row laid out as `rIn`, their distance
+    * and rank. */
+  private def emitter(lIn: Seq[Attribute], rIn: Seq[Attribute],
+                      out: Seq[Attribute] = output): (InternalRow, InternalRow, Double, Int) => InternalRow = {
+    val proj = UnsafeProjection.create(out, lIn ++ rIn ++ Seq(distA, rankA))
     val last = new GenericInternalRow(2)
     val (lr, lrd) = (new JoinedRow, new JoinedRow)
     (l, r, d, rank) => {
@@ -122,7 +124,10 @@ case class KnnJoinExec(
     val t = cfg.knnBroadcastThreshold
     val small = if (tileLocal || t <= 0) None else Some(rRows.take(t + 1)).filter(_.length <= t)
     small.foreach(_ => rRows.unpersist(blocking = false))
-    val out = small.fold(if (tileLocal) tileLocalKnn(rRows) else tiled(rRows))(broadcast)
+    val out = small match {
+      case Some(rs) => broadcast(rs)
+      case None => if (tileLocal) tileLocalKnn(rRows) else tiled(rRows)
+    }
     extraCond.fold(out) { c =>
       out.mapPartitionsWithIndex { (i, rows) =>
         val p = Predicate.create(c, output); p.initialize(i)
@@ -265,15 +270,10 @@ case class KnnJoinExec(
     // k-th local distance (-1 when the owner tile holds fewer than k rights)
     val p1In = lIn ++ rIn.map(_.withNullability(true)) ++ Seq(distA, rankA)
     val p1 = persisted(ownerTileKnn(index, lRows, lIn, rRows, k + 1) { () =>
-      val row = UnsafeProjection.create(p1In,
-        keyed(lIn) ++ keyed(rIn).map(_.withNullability(true)) ++ Seq(distA, rankA))
+      val row = emitter(keyed(lIn), keyed(rIn).map(_.withNullability(true)), p1In)
       val nulls = new GenericInternalRow(rIn.length + 2)
-      val last = new GenericInternalRow(2)
-      val (lr, lrd) = (new JoinedRow, new JoinedRow)
-      def out(l: InternalRow, r: InternalRow, d: Double, rank: Int) = {
-        last.setDouble(0, d); last.setInt(1, rank)
-        row(lrd(lr(l, if (r == null) nulls else r), last)).copy()
-      }
+      def out(l: InternalRow, r: InternalRow, d: Double, rank: Int) =
+        row(l, if (r == null) nulls else r, d, rank).copy()
       (lrow, owner, near) =>
         if (near.length < kk) Iterator.single(out(lrow, null, -1.0, -1))
         else {
