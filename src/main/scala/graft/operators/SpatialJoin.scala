@@ -99,7 +99,7 @@ object SpatialJoin {
   /** Tiles per core of the auto bucket, and the most refine keys per core
     * that still run one task each ([[slotCogroup]]): enough tasks to
     * balance uneven tiles without paying a task per tiny tile. */
-  private val TasksPerCore = 4
+  val TasksPerCore = 4
   /** Seed of the tile-planning sample: the same inputs plan the same tiles. */
   private val SampleSeed = 42L
 

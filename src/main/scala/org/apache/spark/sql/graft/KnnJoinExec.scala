@@ -384,10 +384,10 @@ case class KnnJoinExec(
       t
     }
     val occEmpty = stats.occupied.isEmpty
-    def ballTiles(row: InternalRow, o: Int): Array[Int] = {
+    def ballTiles(row: InternalRow): Array[Int] = {
       val out = new scala.collection.mutable.ArrayBuilder.ofInt
-      if (!occEmpty) ballWalk(occTreeBc.value.getRoot, row.getDouble(lx1 + o), row.getDouble(ly1 + o),
-          row.getDouble(lx2 + o), row.getDouble(ly2 + o), row.getDouble(radO + o)) {
+      if (!occEmpty) ballWalk(occTreeBc.value.getRoot, row.getDouble(lx1), row.getDouble(ly1),
+          row.getDouble(lx2), row.getDouble(ly2), row.getDouble(radO)) {
         it => out += it.getItem.asInstanceOf[Integer].intValue
       }
       out.result()
@@ -403,17 +403,18 @@ case class KnnJoinExec(
     // The loads also weigh the refine slots.
     val loads = l2.mapPartitions { rows =>
       val c = scala.collection.mutable.HashMap.empty[Int, Long]
-      rows.foreach(r => ballTiles(r, 0).foreach(t => c(t) = c.getOrElse(t, 0L) + 1))
+      rows.foreach(r => ballTiles(r).foreach(t => c(t) = c.getOrElse(t, 0L) + 1))
       Iterator.single(c.toMap)
     }.fold(Map.empty[Int, Long])((a, b) => b.foldLeft(a) { case (m, (t, n)) => m.updated(t, m.getOrElse(t, 0L) + n) })
-    val target = math.max(20000L, loads.valuesIterator.sum / (4L * sc.defaultParallelism))
+    val target = math.max(20000L, loads.valuesIterator.sum /
+      (SpatialJoin.TasksPerCore.toLong * sc.defaultParallelism))
     val sharded = index.withCounts(loads.collect { case (t, c) if c > target =>
       t -> math.min(TileIndex.MaxShards.toLong, (c + target - 1) / target).toInt
     }, loads)
     val shardBc = sc.broadcast(sharded)
     val l2Keys = (row: InternalRow) => {
       val h = row.hashCode.toLong
-      ballTiles(row, 0).iterator.map(shardBc.value.probeKey(_, h))
+      ballTiles(row).iterator.map(shardBc.value.probeKey(_, h))
     }
     val r2Keys = (row: InternalRow) => shardBc.value.buildKeys(row.getDouble(rEnv(0)),
       row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
@@ -593,10 +594,10 @@ case class KnnJoinExec(
   * candidates when the ring does (cap ≥ k), so the k-th probe distance
   * stays a true upper bound, and the probe relation stays bounded by the
   * tiling (tiles × cap), not the data. */
-final case class KnnStats(centres: Map[Int, (Long, Double)], occupied: Set[Int],
+private[graft] final case class KnnStats(centres: Map[Int, (Long, Double)], occupied: Set[Int],
                           candidates: Map[Int, Array[Double]])
 
-object KnnStats {
+private[graft] object KnnStats {
   private type Cand = (Int, Double, Double, Double, Double)
   private type Part = (Map[Int, (Long, Double)], Set[Int], Map[Int, Vector[Cand]])
   private val byHash: Ordering[Cand] = Ordering.Tuple5(Ordering.Int, Ordering.Double.TotalOrdering,

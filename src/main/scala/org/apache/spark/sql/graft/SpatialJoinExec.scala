@@ -26,7 +26,10 @@ import graft.operators.{SpatialJoin, TileIndex}
   * into [[SpatialJoinExec]], the tiled filter-refine engine, instead of
   * Catalyst's fallback BroadcastNestedLoopJoin. This makes
   * `SELECT ... FROM a JOIN b ON st_intersects(a.g, b.g)` scale the same as
-  * the programmatic API, because it is the same operator.
+  * the programmatic API, because it is the same operator. In the same way
+  * [[KnnJoinNode]], the logical kNN join `knnJoin`, `knnJoinExact` and
+  * `knnJoinBounded` build, and the SQL inner joins on `st_nearest` or
+  * `st_nearest2` both plan into [[KnnJoinExec]].
   *
   * st_disjoint is deliberately NOT matched: the tiled engine only tests
   * envelope-overlapping candidates within shared tiles (the reference's
