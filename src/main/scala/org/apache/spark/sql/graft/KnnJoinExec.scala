@@ -296,39 +296,26 @@ case class KnnJoinExec(
       rows.filter(r => r.getInt(p1Rank) > 0 && r.getDouble(p1Dist) < maxD).map(proj)
     }
 
-    // per-row search radius: the k-th local distance, or the space diagonal
-    // when the owner tile was starved — clamped to maxDistance for bounded
-    // kNN (a starved tile would otherwise replicate its probes to EVERY
-    // tile; with a bound, neighbors beyond d are dropped anyway)
-    val cap = math.min(diag, maxDistance)
-    val radA = AttributeReference("__rad", DoubleType, nullable = false)()
-    val uIn = lIn :+ radA
-    val unsafe = p1.mapPartitions[InternalRow] { rows =>
-      val proj = UnsafeProjection.create(uIn, p1In :+ radA)
-      val rad = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      rows.filter(_.getInt(p1Rank) == -1).map { r =>
-        val dk = r.getDouble(p1Dist)
-        rad.setDouble(0, if (dk < 0) cap else math.min(dk, cap))
-        proj(joined(r, rad))
-      }
-    }
-    val radO = uIn.length - 1
-
-    // the final radius: the local one, tightened by the row's ring bound
-    // and its k-th probe distance (pd, NaN when fewer than k candidates):
-    // per ROW, from its own envelope center c1 to its owner tile's ring set,
+    // each unsafe row's search radius: its k-th local distance, or the
+    // space diagonal when the owner tile was starved — clamped to
+    // maxDistance for bounded kNN (a starved tile would otherwise replicate
+    // its probes to EVERY tile; with a bound, neighbors beyond d are
+    // dropped anyway) — then tightened by the row's ring bound and its k-th
+    // probe distance (pd, NaN when fewer than k candidates): per ROW, from
+    // its own envelope center c1 to its owner tile's ring set,
     //   g1.distance(g2) ≤ hd1 + |c1 − c2| + hd2 ≤ hd1 + maxDist(c1, U.box) + mhd
     // for every right centered in ring tile U — ≥ k such rights exist, so
     // the max over the set bounds the row's k-th NN. Measuring from c1 (not
     // the owner tile's far corner) keeps the radius tight when the owner
     // tile is large and right-empty, the shape where a per-tile radius
     // degenerated pass 2 to a near-cartesian re-pair (SCALE.md knn2d).
+    val cap = math.min(diag, maxDistance)
     val planBc = sc.broadcast((ringSets, ringMhds))
-    val pdA = AttributeReference("__pd", DoubleType, nullable = false)()
-    val l2 = persisted(probe(unsafe, uIn, pdA, index, ringSets, stats.candidates).mapPartitions[InternalRow] { rows =>
-      val newRad = radA.newInstance()
-      val proj = UnsafeProjection.create(lIn :+ newRad, uIn :+ pdA :+ newRad)
+    val (pdA, radA) = (AttributeReference("__pd", DoubleType, nullable = false)(),
+      AttributeReference("__rad", DoubleType, nullable = false)())
+    val unsafe = p1.filter(_.getInt(p1Rank) == -1)
+    val l2 = persisted(probe(unsafe, p1In, pdA, index, ringSets, stats.candidates).mapPartitions[InternalRow] { rows =>
+      val proj = UnsafeProjection.create(lIn :+ radA, p1In :+ pdA :+ radA)
       val rad = new GenericInternalRow(1)
       val joined = new JoinedRow
       rows.map { row =>
@@ -337,7 +324,8 @@ case class KnnJoinExec(
         val (cx, cy) = ((x1 + x2) / 2, (y1 + y2) / 2)
         val (sets, mhds) = planBc.value
         val ot = bc.value.refTile(cx, cy)
-        var r = row.getDouble(radO)
+        val dk = row.getDouble(p1Dist)
+        var r = if (dk < 0) cap else math.min(dk, cap)
         if (ot >= 0 && ot < sets.length && sets(ot).nonEmpty) {
           var m = 0.0
           sets(ot).foreach { t =>
@@ -348,7 +336,7 @@ case class KnnJoinExec(
           }
           r = math.min(r, m + mhds(ot) + math.sqrt((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)) / 2)
         }
-        val pd = row.getDouble(radO + 1)
+        val pd = row.getDouble(p1In.length)
         if (!pd.isNaN) r = math.min(r, pd)
         // relative float slack: the probe radius is sqrt(dx²+dy²) but
         // pass-2 distances come from JTS (Math.hypot internally), which can
@@ -361,6 +349,8 @@ case class KnnJoinExec(
         proj(joined(row, rad)).copy()
       }
     })
+    val uIn = lIn :+ radA
+    val radO = uIn.length - 1
 
     // ---------------- pass 2: radius-bounded candidate pairs. Replicas go
     // only to tiles some right ENVELOPE touches (a pair's refpoint lies in
@@ -483,7 +473,7 @@ case class KnnJoinExec(
     safe.union(ranked)
   }
 
-  /** `rows` (laid out as `uIn`) with `pd` appended: each row's k-th probe
+  /** `rows` (laid out as `in`) with `pd` appended: each row's k-th probe
     * distance, which bounds its k-th NN (NaN when it met fewer than k
     * candidates). Each row meets the capped `candidates` of its owner
     * tile's ring set (3-D knnCore's probe, 2-D form), and the k-th
@@ -497,11 +487,11 @@ case class KnnJoinExec(
     * the refine slots, keyed by owner tile: one task holds a tile's rows
     * and its ring's candidates, so only the rows and the capped candidates
     * cross a shuffle, never a row per (left, candidate) pair. */
-  private def probe(rows: RDD[InternalRow], uIn: Seq[Attribute], pd: Attribute, index: TileIndex,
+  private def probe(rows: RDD[InternalRow], in: Seq[Attribute], pd: Attribute, index: TileIndex,
                     ringSets: Array[Array[Int]], candidates: Map[Int, Array[Double]]): RDD[InternalRow] = {
     val sc = sparkContext
     val kk = k
-    val Seq(x1, y1, x2, y2) = ords(uIn, leftEnv)
+    val Seq(x1, y1, x2, y2) = ords(in, leftEnv)
     // the k-th max distance from the envelope at offset o of `row` to the
     // packed (xmin, ymin, xmax, ymax) candidates
     def kth(row: InternalRow, o: Int, cands: Iterator[Array[Double]]): Double = {
@@ -520,10 +510,10 @@ case class KnnJoinExec(
       if (heap.n < kk) Double.NaN else heap.arr(0)
     }
     val bc = sc.broadcast(index)
-    def owner(row: InternalRow, o: Int) = bc.value.refTile(
-      (row.getDouble(x1 + o) + row.getDouble(x2 + o)) / 2, (row.getDouble(y1 + o) + row.getDouble(y2 + o)) / 2)
-    def withPd(in: Seq[Attribute]) = {
-      val proj = UnsafeProjection.create(uIn :+ pd, in :+ pd)
+    def owner(row: InternalRow) = bc.value.refTile(
+      (row.getDouble(x1) + row.getDouble(x2)) / 2, (row.getDouble(y1) + row.getDouble(y2)) / 2)
+    def withPd(rowIn: Seq[Attribute]) = {
+      val proj = UnsafeProjection.create(in :+ pd, rowIn :+ pd)
       val d = new GenericInternalRow(1)
       val joined = new JoinedRow
       (row: InternalRow, v: Double) => { d.setDouble(0, v); proj(joined(row, d)) }
@@ -534,9 +524,9 @@ case class KnnJoinExec(
       val plan = sc.broadcast((ringSets, probed))
       rows.mapPartitions[InternalRow] { it =>
         val (sets, cands) = plan.value
-        val out = withPd(uIn)
+        val out = withPd(in)
         it.map { row =>
-          val ot = owner(row, 0)
+          val ot = owner(row)
           val ring = if (ot < 0 || ot >= sets.length) Iterator.empty else sets(ot).iterator
           out(row, if (!ring.hasNext) Double.NaN else kth(row, 0, ring.flatMap(cands.get)))
         }
@@ -553,12 +543,13 @@ case class KnnJoinExec(
         a.grouped(4).map(c => InternalRow(t, c(0), c(1), c(2), c(3)))
       }
       SpatialJoin.slotCogroup(session, index.withCounts(Map.empty, index.tileWeights),
-          rows, uIn, row => Iterator.single(owner(row, 0).toLong * TileIndex.MaxShards),
+          rows, in, row => Iterator.single(owner(row).toLong * TileIndex.MaxShards),
           build, candIn, row => ringOf.value.getOrElse(row.getInt(0), Array.empty[Long]).iterator) {
         build => build.flatMap(r => Iterator(r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6))).toArray
       } { () =>
-        val out = withPd(keyed(uIn))
-        (cands: Array[Double], row: InternalRow) => Iterator.single[InternalRow](out(row, if (cands.isEmpty) Double.NaN else kth(row, 2, Iterator.single(cands))))
+        val out = withPd(keyed(in))
+        (cands: Array[Double], row: InternalRow) =>
+          Iterator.single[InternalRow](out(row, if (cands.isEmpty) Double.NaN else kth(row, 2, Iterator.single(cands))))
       }
     }
   }
