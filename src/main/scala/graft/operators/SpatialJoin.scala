@@ -42,6 +42,12 @@ import graft.partition.SpatialPartitioner
   * aggregate and the sample collect (the adaptive step the reference also
   * performs, with a forced single reducer, queryprocessor_2d.cpp:286-293);
   * they and the refine stage read one persisted copy of each side.
+  *
+  * The kNN joins ([[knnJoin]], [[knnJoinExact]], [[knnJoinBounded]]) have
+  * the same shape: each builds a logical node that
+  * [[org.apache.spark.sql.graft.KnnJoinExec]] runs, the operator SQL
+  * `st_nearest`/`st_nearest2` joins plan into too, on the same copies,
+  * tiles and refine slots.
   */
 object SpatialJoin {
 

@@ -619,7 +619,7 @@ private[graft] object KnnStats {
         counts(t) = (c + 1, math.max(h, hd))
         idx.tilesFor(x1, y1, x2, y2).foreach(occ += _)
         val v = cs.getOrElse(t, Vector.empty) :+
-          ((scala.util.hashing.MurmurHash3.productHash((x1, y1, x2, y2)), x1, y1, x2, y2))
+          (((x1, y1, x2, y2).##, x1, y1, x2, y2))
         cs(t) = if (v.length >= 2 * cap) top(v) else v
       }
       Iterator.single((counts.toMap, occ.toSet, cs.view.mapValues(top).toMap))

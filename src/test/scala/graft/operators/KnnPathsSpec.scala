@@ -17,7 +17,8 @@ import graft.functions.GeomKernels
 
 /** The three kNN paths — [[SpatialJoin.knnJoin]] (tile-local), the tiled
   * and the broadcast [[SpatialJoin.knnJoinExact]] — share one top-m kernel
-  * ([[SpatialJoin.KnnTile]]) and refine on [[SpatialJoin.join]]'s slots.
+  * ([[SpatialJoin.KnnTile]]) and refine on [[SpatialJoin.join]]'s slots,
+  * in the one operator SQL `st_nearest`/`st_nearest2` joins run too.
   * Each is checked against a driver-side brute force on inputs that starve
   * owner tiles, tie at the k boundary, carry unparseable, empty or
   * non-finite geometry, or hold fewer right rows than k. */
