@@ -93,9 +93,10 @@ object SpatialJoin {
       hotTileFactor: Int = 8,
       keepTile: Boolean = false,
       // max capped probe candidates the kNN probe phase will collect and
-      // broadcast as driver maps (the exchange-free probe); past this the
-      // relational WindowGroupLimit probe runs. Lowered only in specs to
-      // force the relational branch at test scale.
+      // broadcast as a driver map (the exchange-free probe); past this the
+      // candidates stay distributed and meet the unsafe lefts in one
+      // slotCogroup keyed by owner tile. Lowered only in specs to force
+      // the relational branch at test scale.
       probeCollectMax: Long = 1000000L)
 
   private val Tile = "__tile"

@@ -5,8 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
 
@@ -52,8 +54,8 @@ case class KnnJoinNode(
   * caller's SQL execution. The children carry the envelope columns and no
   * row without one, so left rows with a null or invalid geometry match
   * nothing and such right rows are never neighbours.
-  *   - A right side of at most `knnBroadcastThreshold` rows (the first
-  *     `threshold + 1` rows of its copy tell) is broadcast as one
+  *   - A right side of at most `knnBroadcastThreshold` rows (its first
+  *     `threshold + 1` rows tell) is broadcast as one
   *     [[KnnTile]], and one map over the left rows answers every row: no
   *     tiling, no shuffle.
   *   - Otherwise each side is copied once (the left after the id lane of
@@ -88,7 +90,7 @@ case class KnnJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
     copy(left = newLeft, right = newRight)
 
-  import SpatialJoinExec.{copied, mbbs, ords, persisted}
+  import SpatialJoinExec.{copied, mbbs, ords, release}
 
   private def lGeom(in: Seq[Attribute]) = ords(in, Seq(leftGeom)).head
   private def rGeom(in: Seq[Attribute]) = ords(in, Seq(rightGeom)).head
@@ -120,13 +122,13 @@ case class KnnJoinExec(
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val rRows = copied(right, withId = false)
     val t = cfg.knnBroadcastThreshold
-    val small = if (tileLocal || t <= 0) None else Some(rRows.take(t + 1)).filter(_.length <= t)
-    small.foreach(_ => rRows.unpersist(blocking = false))
+    val small = if (tileLocal || t <= 0) None else Some(right.executeTake(t + 1)).filter(_.length <= t)
     val out = small match {
       case Some(rs) => broadcast(rs)
-      case None => if (tileLocal) tileLocalKnn(rRows) else tiled(rRows)
+      case None =>
+        val rRows = copied(right, withId = false)
+        if (tileLocal) tileLocalKnn(rRows) else tiled(rRows)
     }
     extraCond.fold(out) { c =>
       out.mapPartitionsWithIndex { (i, rows) =>
@@ -140,6 +142,7 @@ case class KnnJoinExec(
     * task as one [[KnnTile]]: each left row takes every right row within
     * its k-th distance (ties at the boundary included) and ranks them. */
   private def broadcast(rs: Array[InternalRow]): RDD[InternalRow] = {
+    if (rs.isEmpty) return sparkContext.emptyRDD
     val bc = sparkContext.broadcast(rs)
     val (lIn, rIn) = (left.output, right.output)
     val (lg, rg) = (lGeom(lIn), rGeom(rIn))
@@ -151,21 +154,15 @@ case class KnnJoinExec(
       // shape (SCALE.md sf1 step)
       val items = bc.value.map(r => (GeometryCodec.fromWkb(r.getBinary(rg)), r))
       val tile = new KnnTile(items.map(_._1))
-      val tie = new InterpretedOrdering(ties, rIn)
-      val byDistTie: Ordering[(Double, InternalRow)] = (x, y) => {
-        val c = java.lang.Double.compare(x._1, y._1)
-        if (c != 0) c else tie.compare(x._2, y._2)
-      }
+      val byDistTie = Ordering.by[(Double, InternalRow), Double](_._1)(Ordering.Double.TotalOrdering)
+        .orElse(Ordering.by[(Double, InternalRow), InternalRow](_._2)(new InterpretedOrdering(ties, rIn)))
       val emit = emitter(lIn, rIn)
       rows.flatMap { lrow =>
-        if (items.isEmpty) Iterator.empty
-        else {
-          val near = tile.nearest(GeometryCodec.fromWkb(lrow.getBinary(lg)), kk)
-          val dk = near(math.min(kk, near.length) - 1)._1
-          near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
-            .toSeq.sorted(byDistTie).iterator.take(kk).zipWithIndex
-            .collect { case ((d, r), i) if d < maxD => emit(lrow, r, d, i + 1) }
-        }
+        val near = tile.nearest(GeometryCodec.fromWkb(lrow.getBinary(lg)), kk)
+        val dk = near(math.min(kk, near.length) - 1)._1
+        near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
+          .toSeq.sorted(byDistTie).iterator.take(kk).zipWithIndex
+          .collect { case ((d, r), i) if d < maxD => emit(lrow, r, d, i + 1) }
       }
     }
   }
@@ -220,8 +217,10 @@ case class KnnJoinExec(
   private def tileLocalKnn(rRows: RDD[InternalRow]): RDD[InternalRow] = {
     val lRows = copied(left, withId = false)
     val lIn = left.output
+    val index = planTiles(lRows, lIn, rRows)
+    release(lRows, rRows)
     val kk = k
-    ownerTileKnn(planTiles(lRows, lIn, rRows), lRows, lIn, rRows, k) { () =>
+    ownerTileKnn(index, lRows, lIn, rRows, k) { () =>
       val out = emitter(keyed(lIn), keyed(right.output))
       (lrow, _, near) =>
         near.iterator.take(kk).zipWithIndex.map { case ((d, r), i) => out(lrow, r, d, i + 1) }
@@ -230,8 +229,8 @@ case class KnnJoinExec(
 
   /** EXACT (global) kNN on the tiles — the improvement over the reference's
     * tile-local st_nearest2. Its jobs: the tile planning, one stats job
-    * over the right copy ([[KnnStats]]), the job that prices pass 2's
-    * tiles, and the caller's.
+    * over the right copy ([[KnnStats]]), the map probe's candidate job
+    * ([[probe]]), the job that prices pass 2's tiles, and the caller's.
     *
     *   1. Pass 1 is owner-tile kNN asked for k + 1 neighbours, so a tie at
     *      the k boundary shows. A left row is SAFE — its local top-k is
@@ -262,14 +261,14 @@ case class KnnJoinExec(
     val rEnv = ords(rIn, rightEnv)
     val (kk, maxD) = (k, maxDistance)
 
-    val stats = KnnStats.of(rRows, rEnv, index, math.max(k, 64))
+    val stats = KnnStats.of(rRows, rEnv, index)
     val (ringSets, ringMhds) = SpatialJoin.tileRingPlans(index.tiles, stats.centres, k)
 
     // ---------------- pass 1: owner-tile kNN + safety classification,
     // laid out as p1In: unsafe rows carry a null right row, rank -1 and the
     // k-th local distance (-1 when the owner tile holds fewer than k rights)
     val p1In = lIn ++ rIn.map(_.withNullability(true)) ++ Seq(distA, rankA)
-    val p1 = persisted(ownerTileKnn(index, lRows, lIn, rRows, k + 1) { () =>
+    val p1 = ownerTileKnn(index, lRows, lIn, rRows, k + 1) { () =>
       val row = emitter(keyed(lIn), keyed(rIn).map(_.withNullability(true)), p1In)
       val nulls = new GenericInternalRow(rIn.length + 2)
       def out(l: InternalRow, r: InternalRow, d: Double, rank: Int) =
@@ -289,7 +288,7 @@ case class KnnJoinExec(
             near.iterator.take(kk).zipWithIndex.map { case ((d, r), i) => out(lrow, r, d, i + 1) }
           else Iterator.single(out(lrow, null, dk, -1))
         }
-    })
+    }.persist(StorageLevel.MEMORY_AND_DISK)
     val (p1Dist, p1Rank) = (p1In.length - 2, p1In.length - 1)
     val safe = p1.mapPartitions[InternalRow] { rows =>
       val proj = UnsafeProjection.create(output, p1In)
@@ -314,7 +313,7 @@ case class KnnJoinExec(
     val (pdA, radA) = (AttributeReference("__pd", DoubleType, nullable = false)(),
       AttributeReference("__rad", DoubleType, nullable = false)())
     val unsafe = p1.filter(_.getInt(p1Rank) == -1)
-    val l2 = persisted(probe(unsafe, p1In, pdA, index, ringSets, stats.candidates).mapPartitions[InternalRow] { rows =>
+    val l2 = probe(unsafe, p1In, pdA, index, ringSets, rRows, rEnv).mapPartitions[InternalRow] { rows =>
       val proj = UnsafeProjection.create(lIn :+ radA, p1In :+ pdA :+ radA)
       val rad = new GenericInternalRow(1)
       val joined = new JoinedRow
@@ -348,7 +347,7 @@ case class KnnJoinExec(
         rad.setDouble(0, r + 1e-9 * (1.0 + math.abs(r)))
         proj(joined(row, rad)).copy()
       }
-    })
+    }.persist(StorageLevel.MEMORY_AND_DISK)
     val uIn = lIn :+ radA
     val radO = uIn.length - 1
 
@@ -396,6 +395,7 @@ case class KnnJoinExec(
       rows.foreach(r => ballTiles(r).foreach(t => c(t) = c.getOrElse(t, 0L) + 1))
       Iterator.single(c.toMap)
     }.fold(Map.empty[Int, Long])((a, b) => b.foldLeft(a) { case (m, (t, n)) => m.updated(t, m.getOrElse(t, 0L) + n) })
+    release(lRows, rRows, p1, l2)
     val target = math.max(20000L, loads.valuesIterator.sum /
       (SpatialJoin.TasksPerCore.toLong * sc.defaultParallelism))
     val sharded = index.withCounts(loads.collect { case (t, c) if c > target =>
@@ -475,20 +475,23 @@ case class KnnJoinExec(
 
   /** `rows` (laid out as `in`) with `pd` appended: each row's k-th probe
     * distance, which bounds its k-th NN (NaN when it met fewer than k
-    * candidates). Each row meets the capped `candidates` of its owner
-    * tile's ring set (3-D knnCore's probe, 2-D form), and the k-th
-    * smallest envelope MAX distance (far corners) over them upper-bounds
-    * its k-th NN: the set holds ≥ k real rights, and the k-th smallest of
-    * any ≥ k of them is a valid bound, so no sort or tie-break is needed.
+    * candidates). Each row meets the capped candidates
+    * ([[KnnStats.candidates]]) the right rows `rRows` (envelopes at `rEnv`)
+    * give its owner tile's ring set (3-D knnCore's probe, 2-D form), and
+    * the k-th smallest envelope MAX distance (far corners) over them
+    * upper-bounds its k-th NN: the set holds ≥ k real rights, and the k-th
+    * smallest of any ≥ k of them is a valid bound, so no sort or
+    * tie-break is needed.
     *
-    * Up to `probeCollectMax` candidates over the probe tiles, they ship to
-    * every task as one broadcast map and each row takes a k-bounded heap
-    * over its ring. Past that (the giant-tiling case) they meet the rows on
-    * the refine slots, keyed by owner tile: one task holds a tile's rows
-    * and its ring's candidates, so only the rows and the capped candidates
+    * Up to `probeCollectMax` candidates over the probe tiles, one job
+    * collects them, they ship to every task as one broadcast map and each
+    * row takes a k-bounded heap over its ring. Past that (the
+    * giant-tiling case) they stay distributed and meet the rows on the
+    * refine slots, keyed by owner tile: one task holds a tile's rows and
+    * its ring's candidates, so only the rows and the capped candidates
     * cross a shuffle, never a row per (left, candidate) pair. */
   private def probe(rows: RDD[InternalRow], in: Seq[Attribute], pd: Attribute, index: TileIndex,
-                    ringSets: Array[Array[Int]], candidates: Map[Int, Array[Double]]): RDD[InternalRow] = {
+                    ringSets: Array[Array[Int]], rRows: RDD[InternalRow], rEnv: Seq[Int]): RDD[InternalRow] = {
     val sc = sparkContext
     val kk = k
     val Seq(x1, y1, x2, y2) = ords(in, leftEnv)
@@ -519,37 +522,30 @@ case class KnnJoinExec(
       (row: InternalRow, v: Double) => { d.setDouble(0, v); proj(joined(row, d)) }
     }
     val probeTiles = ringSets.iterator.flatten.toSet
-    val probed = candidates.filter(c => probeTiles(c._1))
-    if (probeTiles.size.toLong * math.max(k, 64) <= cfg.probeCollectMax) {
-      val plan = sc.broadcast((ringSets, probed))
+    val cap = math.max(k, 64)
+    val candidates = KnnStats.candidates(rRows, rEnv, index, probeTiles, cap)
+    if (probeTiles.size.toLong * cap <= cfg.probeCollectMax) {
+      val plan = sc.broadcast((ringSets, candidates.collect().toMap))
       rows.mapPartitions[InternalRow] { it =>
-        val (sets, cands) = plan.value
-        val out = withPd(in)
-        it.map { row =>
-          val ot = owner(row)
-          val ring = if (ot < 0 || ot >= sets.length) Iterator.empty else sets(ot).iterator
-          out(row, if (!ring.hasNext) Double.NaN else kth(row, 0, ring.flatMap(cands.get)))
-        }
+        val ((sets, cands), out) = (plan.value, withPd(in))
+        it.map(row => out(row, kth(row, 0, sets.lift(owner(row)).iterator.flatten.flatMap(cands.get))))
       }
     } else {
-      // one row per candidate, keyed by every owner tile whose ring holds
-      // its tile
+      // one row per tile's candidates, keyed by every owner tile whose ring
+      // holds that tile
       val ringOf = sc.broadcast(ringSets.zipWithIndex
         .flatMap { case (ts, o) => ts.map(_ -> o.toLong * TileIndex.MaxShards) }.groupMap(_._1)(_._2))
-      val candIn = Seq("__t", "__x1", "__y1", "__x2", "__y2").zipWithIndex.map { case (n, i) =>
-        AttributeReference(n, if (i == 0) IntegerType else DoubleType, nullable = false)()
-      }
-      val build = sc.parallelize(probed.toSeq).flatMap { case (t, a) =>
-        a.grouped(4).map(c => InternalRow(t, c(0), c(1), c(2), c(3)))
-      }
+      val candIn = Seq(AttributeReference("__t", IntegerType, nullable = false)(),
+        AttributeReference("__cands", ArrayType(DoubleType, containsNull = false), nullable = false)())
       SpatialJoin.slotCogroup(session, index.withCounts(Map.empty, index.tileWeights),
           rows, in, row => Iterator.single(owner(row).toLong * TileIndex.MaxShards),
-          build, candIn, row => ringOf.value.getOrElse(row.getInt(0), Array.empty[Long]).iterator) {
-        build => build.flatMap(r => Iterator(r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6))).toArray
+          candidates.map { case (t, a) => InternalRow(t, new GenericArrayData(a)) }, candIn,
+          row => ringOf.value.getOrElse(row.getInt(0), Array.empty[Long]).iterator) {
+        build => build.flatMap(_.getArray(3).toDoubleArray()).toArray
       } { () =>
         val out = withPd(keyed(in))
         (cands: Array[Double], row: InternalRow) =>
-          Iterator.single[InternalRow](out(row, if (cands.isEmpty) Double.NaN else kth(row, 2, Iterator.single(cands))))
+          Iterator.single[InternalRow](out(row, kth(row, 2, Iterator.single(cands))))
       }
     }
   }
@@ -577,54 +573,58 @@ case class KnnJoinExec(
 }
 
 /** What the exact kNN plans from its right rows, in one job: per tile (by
-  * envelope center) the right count and largest half-diagonal, the tiles
-  * some right envelope touches, and per tile up to `cap` probe candidates
-  * as packed (xmin, ymin, xmax, ymax) runs — the ones with the smallest
-  * content hash, so the choice depends on neither scan order nor
-  * partitioning. Any ≥ min(cap, count) rights of each ring tile hold ≥ k
-  * candidates when the ring does (cap ≥ k), so the k-th probe distance
-  * stays a true upper bound, and the probe relation stays bounded by the
-  * tiling (tiles × cap), not the data. */
-private[graft] final case class KnnStats(centres: Map[Int, (Long, Double)], occupied: Set[Int],
-                          candidates: Map[Int, Array[Double]])
+  * envelope center) the right count and largest half-diagonal, and the
+  * tiles some right envelope touches. */
+private[graft] final case class KnnStats(centres: Map[Int, (Long, Double)], occupied: Set[Int])
 
 private[graft] object KnnStats {
+  import Ordering.Double.TotalOrdering
   private type Cand = (Int, Double, Double, Double, Double)
-  private type Part = (Map[Int, (Long, Double)], Set[Int], Map[Int, Vector[Cand]])
-  private val byHash: Ordering[Cand] = Ordering.Tuple5(Ordering.Int, Ordering.Double.TotalOrdering,
-    Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering)
 
   /** The stats of `rows`, whose envelopes are at ordinals `env`, on
-    * `index`'s tiles, with up to `cap` probe candidates per tile. */
-  def of(rows: RDD[InternalRow], env: Seq[Int], index: TileIndex, cap: Int): KnnStats = {
+    * `index`'s tiles. */
+  def of(rows: RDD[InternalRow], env: Seq[Int], index: TileIndex): KnnStats = {
     val bc = rows.sparkContext.broadcast(index)
-    def top(cs: Vector[Cand]) = if (cs.length <= cap) cs else cs.sorted(byHash).take(cap)
-    def merge(a: Part, b: Part): Part = (
-      b._1.foldLeft(a._1) { case (m, (t, (c, h))) =>
-        m.updated(t, m.get(t).fold((c, h)) { case (c0, h0) => (c0 + c, math.max(h0, h)) })
-      },
-      a._2 ++ b._2,
-      b._3.foldLeft(a._3) { case (m, (t, cs)) => m.updated(t, top(m.getOrElse(t, Vector.empty) ++ cs)) })
-    val (centres, occupied, cands) = rows.mapPartitions[Part] { it =>
-      val idx = bc.value
+    rows.mapPartitions { it =>
       val counts = scala.collection.mutable.HashMap.empty[Int, (Long, Double)]
       val occ = scala.collection.mutable.HashSet.empty[Int]
-      val cs = scala.collection.mutable.HashMap.empty[Int, Vector[Cand]]
       it.foreach { row =>
         val (x1, y1) = (row.getDouble(env(0)), row.getDouble(env(1)))
         val (x2, y2) = (row.getDouble(env(2)), row.getDouble(env(3)))
-        val t = idx.refTile((x1 + x2) / 2, (y1 + y2) / 2)
+        val t = bc.value.refTile((x1 + x2) / 2, (y1 + y2) / 2)
         val hd = math.sqrt((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)) / 2
         val (c, h) = counts.getOrElse(t, (0L, 0.0))
         counts(t) = (c + 1, math.max(h, hd))
-        idx.tilesFor(x1, y1, x2, y2).foreach(occ += _)
-        val v = cs.getOrElse(t, Vector.empty) :+
-          (((x1, y1, x2, y2).##, x1, y1, x2, y2))
-        cs(t) = if (v.length >= 2 * cap) top(v) else v
+        bc.value.tilesFor(x1, y1, x2, y2).foreach(occ += _)
       }
-      Iterator.single((counts.toMap, occ.toSet, cs.view.mapValues(top).toMap))
-    }.fold((Map.empty, Set.empty, Map.empty))(merge)
-    KnnStats(centres, occupied,
-      cands.view.mapValues(_.iterator.flatMap(c => Iterator(c._2, c._3, c._4, c._5)).toArray).toMap)
+      Iterator.single(KnnStats(counts.toMap, occ.toSet))
+    }.fold(KnnStats(Map.empty, Set.empty)) { (a, b) =>
+      KnnStats(b.centres.foldLeft(a.centres) { case (m, (t, (c, h))) =>
+        m.updated(t, m.get(t).fold((c, h)) { case (c0, h0) => (c0 + c, math.max(h0, h)) })
+      }, a.occupied ++ b.occupied)
+    }
+  }
+
+  /** Per tile of `tiles`, up to `cap` probe candidates: the envelopes of
+    * `rows` (at ordinals `env`) centred in it, as packed (xmin, ymin,
+    * xmax, ymax) runs — the ones with the smallest content hash, so the
+    * choice depends on neither scan order nor partitioning. Any ≥
+    * min(cap, count) rights of each ring tile hold ≥ k candidates when the
+    * ring does (cap ≥ k), so the k-th probe distance stays a true upper
+    * bound, and the candidates stay bounded by the tiling (tiles × cap),
+    * not the data. The merge combines map-side, so one record per
+    * (partition, tile) crosses its shuffle. */
+  def candidates(rows: RDD[InternalRow], env: Seq[Int], index: TileIndex, tiles: Set[Int],
+                 cap: Int): RDD[(Int, Array[Double])] = {
+    val bc = rows.sparkContext.broadcast((index, tiles))
+    def top(cs: Vector[Cand]) = if (cs.length <= cap) cs else cs.sorted.take(cap)
+    rows.flatMap { row =>
+      val (x1, y1) = (row.getDouble(env(0)), row.getDouble(env(1)))
+      val (x2, y2) = (row.getDouble(env(2)), row.getDouble(env(3)))
+      val t = bc.value._1.refTile((x1 + x2) / 2, (y1 + y2) / 2)
+      if (bc.value._2(t)) Some(t -> (((x1, y1, x2, y2).##, x1, y1, x2, y2))) else None
+    }.aggregateByKey(Vector.empty[Cand])((v, c) => if (v.length < 2 * cap) v :+ c else top(v :+ c),
+      (a, b) => top(a ++ b))
+      .mapValues(top(_).flatMap(c => Seq(c._2, c._3, c._4, c._5)).toArray)
   }
 }

@@ -251,7 +251,7 @@ case class SpatialJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    import SpatialJoinExec.{copied, mbbs, ords}
+    import SpatialJoinExec.{copied, mbbs, ords, release}
     val sc = sparkContext
     val semi = joinType != Inner
     val id = AttributeReference("__lid", LongType, nullable = false)()
@@ -263,6 +263,7 @@ case class SpatialJoinExec(
     val Seq(lx1, ly1, lx2, ly2) = ords(lIn, leftEnv)
     val rEnv = ords(rIn, rightEnv)
     val index = SpatialJoin.planTiles(session, mbbs(lRows, Seq(lx1, ly1, lx2, ly2)).union(mbbs(rRows, rEnv)), cfg)
+    release(lRows, rRows)
     val bc = sc.broadcast(index)
 
     // composite (tile, shard) keys: probe rows land on one shard per tile,
@@ -369,24 +370,24 @@ object SpatialJoinExec {
     else Some(Mbb(row.getDouble(e(0)), row.getDouble(e(1)), row.getDouble(e(2)), row.getDouble(e(3))))
   }
 
-  /** `plan`'s rows, copied once ([[persisted]]); with `withId`, after an id
-    * lane ([[withIds]]). */
+  /** `plan`'s rows, copied once into an RDD-level MEMORY_AND_DISK persist,
+    * which [[release]] ends (nothing registers in the session's
+    * CacheManager, which concurrent sibling queries share); with `withId`,
+    * after an id lane ([[withIds]]). */
   def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] = {
     val in = (if (withId) Seq(AttributeReference("__lid", LongType)()) else Nil) ++ plan.output
-    persisted((if (withId) withIds(plan.execute()) else plan.execute())
+    (if (withId) withIds(plan.execute()) else plan.execute())
       .mapPartitions[InternalRow] { rows =>
         val proj = UnsafeProjection.create(in, in)
         rows.map(proj(_).copy())
-      })
+      }.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** `rows`, which must not reuse row objects, in an RDD-level
-    * MEMORY_AND_DISK persist, released once the SQL execution (or job)
-    * that first reads them ends. Nothing registers in the session's
-    * CacheManager, which concurrent sibling queries share. */
-  def persisted(rows: RDD[InternalRow]): RDD[InternalRow] =
-    CacheHygiene.releaseAfterFirstJob(rows.sparkContext, rows.persist(StorageLevel.MEMORY_AND_DISK))(
-      rows.unpersist(blocking = false))
+  /** Unpersists each of `rdds` once the SQL execution (or job) that next
+    * reads it ends. Call after the operator's own eager jobs, which would
+    * otherwise count as that consumer outside a SQL execution. */
+  def release(rdds: RDD[_]*): Unit = rdds.foreach(c =>
+    CacheHygiene.releaseAfterFirstJob(c.sparkContext, c)(c.unpersist(blocking = false)))
 
   /** `rows` after a unique LongType id, (partition index << 36 | local
     * sequence): no counting job, and stable only while the input replays

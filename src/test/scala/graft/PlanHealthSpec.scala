@@ -86,15 +86,18 @@ class PlanHealthSpec extends SparkTestBase {
     // exploded relation starved the executor to death at the sf10 area
     // lane (r16: heartbeat timeout after ~10⁸ rows in 4 partitions). The
     // two probe forms shuffle the same rows everywhere else, so their
-    // difference is the probe's shuffle.
+    // difference is the probe's shuffle. The candidates stay distributed:
+    // the relational form runs no job to collect them, the map form one.
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     import graft.operators.SpatialJoin
     val custs = Queries.custPoints(spark, dir).select(col("id").as("cid"), col("geom").as("g1"))
     val supps = Queries.suppPoints(spark, dir).select(col("id").as("sid"), col("geom").as("g2"))
-    def run(probeCollectMax: Long): (Long, Long, Set[(Long, Long, Int)]) = {
+    def run(probeCollectMax: Long): (Long, Long, Long, Set[(Long, Long, Int)]) = {
       val (records, spilled) = (spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+      val jobs = spark.sparkContext.longAccumulator
       val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.add(1)
         override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (t.taskMetrics != null) {
             records.add(t.taskMetrics.shuffleReadMetrics.recordsRead)
@@ -111,11 +114,12 @@ class PlanHealthSpec extends SparkTestBase {
         org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
         got
       } finally spark.sparkContext.removeSparkListener(listener)
-      (records.sum, spilled.sum, got)
+      (records.sum, spilled.sum, jobs.sum, got)
     }
-    val (relational, spilled, got) = run(0L)
-    val (mapped, _, want) = run(SpatialJoin.Config().probeCollectMax)
+    val (relational, spilled, relationalJobs, got) = run(0L)
+    val (mapped, _, mappedJobs, want) = run(SpatialJoin.Config().probeCollectMax)
     assert(got == want && got.nonEmpty)
+    assert(relationalJobs == mappedJobs - 1, s"jobs: relational $relationalJobs, map $mappedJobs")
     // the bound: every left, plus Σ over owner tiles of ring tiles × cap
     val cfg = SpatialJoin.Config(bucket = 100)
     val (l, r) = SpatialJoin.enveloped(custs, "g1", supps, "g2", cfg)

@@ -199,8 +199,8 @@ class SpatialJoinSpec extends SparkTestBase {
   }
 
   // the third mode pins the RELATIONAL probe branch (probeCollectMax = 0):
-  // the giant-tiling form with the WindowGroupLimit probe + join-back that
-  // the collected-map default skips at spec scale
+  // the giant-tiling form, whose distributed candidates meet the unsafe
+  // lefts by owner tile, that the collected-map default skips at spec scale
   for ((mode, threshold, pcm) <- Seq(
       ("broadcast", 10000, 1000000L),
       ("tiled", 0, 1000000L),
