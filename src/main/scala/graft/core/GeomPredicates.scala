@@ -160,7 +160,7 @@ object GeomPredicates {
       // reject non-points instead of reproducing that trap. (The
       // reference's OTHER earth trap — expanding the probe envelope by
       // meters-as-degrees, which degenerates the tiled join to all-pairs —
-      // is fixed in SpatialJoin.withEnvEarthMeters; this refine always
+      // is fixed in SpatialJoinExec.copied's earth window; this refine always
       // receives the meter threshold.)
       if (earth) {
         require(isPoint(g1) && isPoint(g2),

@@ -18,15 +18,16 @@ import org.apache.spark.util.random.BernoulliCellSampler
 import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.index.strtree.{ItemBoundable, STRtree}
 
-import graft.core.{Geo, GeometryCodec, Mbb, TileBoundary}
-import graft.functions.{GeomKernels, st_envelope, withNonNull}
+import graft.core.{GeometryCodec, Mbb, TileBoundary}
+import graft.functions.GeomKernels
 import graft.partition.SpatialPartitioner
 
 /** Tile-partitioned spatial join — the Spark-native re-expression of the
   * reference's whole spjoin pipeline
   * (/root/reference/src/framework/query_spjoin.hpp:70-322):
   *
-  *   MBB-extract job      -> one min/max/count aggregate
+  *   MBB-extract job      -> the exec's copy step (one geometry decode and
+  *                           envelope per row) + one min/max/count aggregate
   *   sample+partition job -> driver-side partitioner over a seeded sample
   *   cache-file tile idx  -> broadcast [[TileIndex]] (padded to cover space)
   *   map-to-tile job      -> explode over broadcast index (1 row -> N tiles)
@@ -41,13 +42,16 @@ import graft.partition.SpatialPartitioner
   * execution, and the only materialization barriers are the stats
   * aggregate and the sample collect (the adaptive step the reference also
   * performs, with a forced single reducer, queryprocessor_2d.cpp:286-293);
-  * they and the refine stage read one persisted copy of each side.
+  * they and the refine stage read one persisted copy of each side, which
+  * also holds each row's envelope
+  * ([[org.apache.spark.sql.graft.SpatialJoinExec.copied]]).
   *
   * The kNN joins ([[knnJoin]], [[knnJoinExact]], [[knnJoinBounded]]) have
   * the same shape: each builds a logical node that
   * [[org.apache.spark.sql.graft.KnnJoinExec]] runs, the operator SQL
   * `st_nearest`/`st_nearest2` joins plan into too, on the same copies,
-  * tiles and refine slots.
+  * tiles and refine slots. No frontend projects an envelope: every node
+  * takes its raw inputs and the geometry columns.
   */
 object SpatialJoin {
 
@@ -75,7 +79,8 @@ object SpatialJoin {
     *                   meter threshold (the reference's behavior,
     *                   spjoin_2d.hpp:185-205). The probe envelope expands
     *                   by the conservative DEGREE equivalent of `distance`
-    *                   (per-row, latitude-aware — see withEnvEarthMeters),
+    *                   (per-row, latitude-aware — see
+    *                   [[org.apache.spark.sql.graft.SpatialJoinExec.copied]]),
     *                   NOT by meters-as-degrees like the reference, whose
     *                   expansion makes every probe cover the planet and
     *                   the join all-pairs; the exact haversine refine is
@@ -90,7 +95,6 @@ object SpatialJoin {
       knnBroadcastThreshold: Int = 10000,
       earth: Boolean = false,
       twoLevel: Boolean = false,
-      hotTileFactor: Int = 8,
       keepTile: Boolean = false,
       // max capped probe candidates the kNN probe phase will collect and
       // broadcast as a driver map (the exchange-free probe); past this the
@@ -109,81 +113,9 @@ object SpatialJoin {
   val TasksPerCore = 4
   /** Seed of the tile-planning sample: the same inputs plan the same tiles. */
   private val SampleSeed = 42L
-
-  /** Adds envelope columns derived from the WKB geometry column `geom`;
-    * drops rows with null/unparseable geometry (reference P3/P4 behavior).
-    * Non-finite and empty envelopes are ALSO null here: the check lives
-    * inside the st_envelope kernel (GeomKernels.envelope), where the four
-    * doubles are already in hand — a relational isnan/Inf filter on these
-    * columns measured 2.2x on every join gate (pushdown substitutes the
-    * st_envelope alias into each condition, re-parsing the WKB per
-    * condition). For the same reason the null drop is a generator
-    * ([[graft.functions.withNonNull]]): a `__env IS NOT NULL` filter was
-    * pushed below the projection as `isnotnull(st_envelope(geom))`, and
-    * through a text source's projection as a second WKT parse. */
-  private def withEnv(df: DataFrame, geom: String, expand: Double): DataFrame = {
-    val d = lit(expand)
-    withNonNull(df, "__env", st_envelope(col(geom)))
-      .withColumn(X1, col("__env.xmin") - d)
-      .withColumn(Y1, col("__env.ymin") - d)
-      .withColumn(X2, col("__env.xmax") + d)
-      .withColumn(Y2, col("__env.ymax") + d)
-      .drop("__env")
-  }
-
-  /** Earth-mode probe expansion (round-17): the reference expands the
-    * probe MBB by `distance` in COORDINATE UNITS even when the distance is
-    * in meters (earth mode) — 50 km becomes 50,000 DEGREES, every probe
-    * envelope covers the whole space, and the tiled join degenerates to an
-    * all-pairs haversine scan (measured at sf0.1: 20.6 s of refine CPU to
-    * emit 30 surviving pairs; at 100 TB it is a cross join). The exact
-    * haversine refine decides membership, so tightening the candidate
-    * window cannot change results — this variant expands by the provably
-    * conservative degree bounds instead ([[graft.core.Geo.latDegrees]] /
-    * [[Geo.lonDegrees]]'s formula as per-row codegen'd columns: the
-    * longitude window widens with the envelope's worst-case |latitude|,
-    * degenerating to the full 360° near the poles, where candidate
-    * windows legitimately wrap). A window that crosses ±180° covers
-    * every longitude, so pairs across the antimeridian stay candidates. */
-  private def withEnvEarthMeters(df: DataFrame, geom: String,
-                                 meters: Double): DataFrame = {
-    val dLat = Geo.latDegrees(meters)
-    withNonNull(df, "__env", st_envelope(col(geom)))
-      .withColumn("__phimax",
-        greatest(abs(col("__env.ymin")), abs(col("__env.ymax"))) + lit(dLat))
-      .withColumn("__s", sin(lit(meters / (2.0 * Geo.EarthRadiusMeters))) /
-        cos(radians(col("__phimax"))))
-      .withColumn("__dlon",
-        when(col("__phimax") >= 89.9 || col("__s") >= 1.0, lit(360.0))
-          .otherwise(least(lit(360.0),
-            degrees(asin(col("__s"))) * lit(2.0 * Geo.BoundSafety))))
-      .withColumn(X1, col("__env.xmin") - col("__dlon"))
-      .withColumn(Y1, col("__env.ymin") - lit(dLat))
-      .withColumn(X2, col("__env.xmax") + col("__dlon"))
-      .withColumn(Y2, col("__env.ymax") + lit(dLat))
-      // a window past ±180° wraps onto the other side of the antimeridian:
-      // widen it to every longitude
-      .withColumn("__wrap", col(X1) < -180.0 || col(X2) > 180.0)
-      .withColumn(X1, when(col("__wrap"), least(lit(-180.0), col(X1))).otherwise(col(X1)))
-      .withColumn(X2, when(col("__wrap"), greatest(lit(180.0), col(X2))).otherwise(col(X2)))
-      .drop("__env", "__phimax", "__s", "__dlon", "__wrap")
-  }
-
-  /** The two sides of [[join]] as it reads them: envelope columns appended,
-    * rows without one dropped, each geometry's envelope computed once.
-    * Probe-side MBB expansion (spjoin_2d.hpp:61-66); earth mode converts
-    * the meter distance to conservative per-row DEGREE windows instead of
-    * expanding by meters-as-degrees (see withEnvEarthMeters — the refine
-    * threshold stays in meters, so results are unchanged). */
-  private[graft] def enveloped(left: DataFrame, leftGeom: String,
-                               right: DataFrame, rightGeom: String,
-                               cfg: Config): (DataFrame, DataFrame) = {
-    val l =
-      if (cfg.predicate == "dwithin" && cfg.earth)
-        withEnvEarthMeters(left, leftGeom, cfg.distance)
-      else withEnv(left, leftGeom, if (cfg.predicate == "dwithin") cfg.distance else 0.0)
-    (l, withEnv(right, rightGeom, 0.0))
-  }
+  /** A tile holding more than this many buckets of rows is hot: its probe
+    * side is sharded across refine keys. */
+  private[graft] val HotTileFactor = 8
 
   /** Shared entry-point argument validation: a malformed config must fail
     * with a targeted message BEFORE any job runs, never distort results
@@ -258,12 +190,11 @@ object SpatialJoin {
     // refine tasks (TileIndex.refineSlots).
     if (cfg.partitioner == "fg" && !cfg.twoLevel) {
       val tiles = graft.partition.FixedGridPartitioner.partitionCount(n, space, bucket)
-      if (cfg.hotTileFactor <= 0) return new TileIndex(tiles, space)
       val (sx, sy) = graft.partition.FixedGridPartitioner.gridDims(n, space, bucket)
       val w = math.max(space.width, 1e-12); val h = math.max(space.height, 1e-12)
       def ax(c: Double, lo: Double, span: Double, s: Int) =
         math.max(0, math.min(s - 1, math.floor((c - lo) / span * s).toLong.toInt))
-      val hotAt = cfg.hotTileFactor.toLong * bucket
+      val hotAt = HotTileFactor.toLong * bucket
       val counts = mbbs
         .mapPartitions { ms =>
           val c = scala.collection.mutable.HashMap.empty[Int, Long]
@@ -317,16 +248,10 @@ object SpatialJoin {
       val t = covered.refTile(m.centerX, m.centerY)
       if (t >= 0) counts(t) = counts.getOrElse(t, 0L) + 1
     }
-    val shards: Map[Int, Int] =
-      if (cfg.hotTileFactor <= 0) Map.empty
-      else {
-        val hotAt = cfg.hotTileFactor.toLong * scaledBucket
-        counts.iterator.collect {
-          case (t, c) if c > hotAt =>
-            t -> math.min(TileIndex.MaxShards,
-              math.ceil(2.0 * c / hotAt).toInt)
-        }.toMap
-      }
+    val hotAt = HotTileFactor.toLong * scaledBucket
+    val shards = counts.iterator.collect { case (t, c) if c > hotAt =>
+      t -> math.min(TileIndex.MaxShards, math.ceil(2.0 * c / hotAt).toInt)
+    }.toMap
     covered.withCounts(shards, counts.toMap)
   }
 
@@ -350,41 +275,36 @@ object SpatialJoin {
     * must be disjoint between the two sides. Output = left columns ++ right
     * columns, one row per matched pair (deduped across tiles).
     *
-    * Lazy: the result is a logical [[SpatialJoinNode]] over the two
-    * [[enveloped]] sides (each envelope computed once per row), which
-    * [[SpatialJoinStrategy]] (added to the session's planner here) plans
-    * into [[org.apache.spark.sql.graft.SpatialJoinExec]], the operator SQL
-    * spatial joins run too. Its refine stage is [[slotCogroup]]: one task
-    * per (tile, shard) key, heaviest first by the per-tile counts planning
-    * took, up to 4 tasks per core (more keys pack onto one task per core),
-    * each holding one key's STRtree at a time. */
+    * Lazy: the result is a logical [[SpatialJoinNode]] over the two inputs,
+    * which [[SpatialJoinStrategy]] (added to the session's planner here)
+    * plans into [[org.apache.spark.sql.graft.SpatialJoinExec]], the
+    * operator SQL spatial joins run too. Its copy step decodes each row's
+    * geometry once and computes its envelope; rows without one match
+    * nothing. Its refine stage is [[slotCogroup]]: one task per (tile,
+    * shard) key, heaviest first by the per-tile counts planning took, up to
+    * 4 tasks per core (more keys pack onto one task per core), each holding
+    * one key's STRtree at a time.
+    *
+    * st_equals is a plain join on the st_equals condition, which the same
+    * strategy plans as the SQL one: a hash equi-join on the envelope (equal
+    * geometries have equal envelopes), refined exactly, with no tiles — so
+    * `keepTile` appends -1. */
   def join(left: DataFrame, leftGeom: String,
            right: DataFrame, rightGeom: String,
            cfg: Config = Config()): DataFrame = {
     val spark = left.sparkSession
     validate(cfg)
     requireDisjoint(left, right)
-    val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, cfg)
-
-    // st_equals implies envelope equality, so the complete candidate set is
-    // a plain hash EQUI-join on the four envelope coordinates — no tiling,
-    // no replication, no per-tile index; Catalyst shuffles (or broadcasts)
-    // by the envelope key and the exact equalsTopo test refines. Strictly
-    // better than the reference's tile plan at any scale, with identical
-    // results (envelope-equal pairs always share every tile).
+    SpatialJoinStrategy.install(spark)
     if (cfg.predicate == "equals") {
-      val keys = Seq(X1, Y1, X2, Y2)
-      val out = lEnv.join(rEnv, keys)
-        .where(graft.functions.st_equals(col(leftGeom), col(rightGeom)))
-        .select((left.columns ++ right.columns).map(col).toIndexedSeq: _*)
+      // strictly better than the reference's tile plan at any scale, with
+      // identical results: envelope-equal pairs always share every tile
+      val out = left.join(right, graft.functions.st_equals(col(leftGeom), col(rightGeom)))
       return if (cfg.keepTile) out.withColumn("tile_id", lit(-1)) else out
     }
-
-    SpatialJoinStrategy.install(spark)
-    val (lp, rp) = (lEnv.queryExecution.analyzed, rEnv.queryExecution.analyzed)
+    val (lp, rp) = (left.queryExecution.analyzed, right.queryExecution.analyzed)
     Bridge.ofPlan(spark, SpatialJoinNode(lp, rp, attrs(lp, leftGeom).head, attrs(rp, rightGeom).head,
-      attrs(lp, X1, Y1, X2, Y2), attrs(rp, X1, Y1, X2, Y2), cfg,
-      if (cfg.keepTile) Some(AttributeReference("tile_id", IntegerType, nullable = false)())
+      cfg, if (cfg.keepTile) Some(AttributeReference("tile_id", IntegerType, nullable = false)())
       else None))
   }
 
@@ -592,7 +512,7 @@ object SpatialJoin {
     Ordering.fromLessThan((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
 
   /** The logical kNN join every kNN entry point builds: a [[KnnJoinNode]]
-    * over the two [[enveloped]] sides, with `knn_dist` and, unless
+    * over the two inputs, with `knn_dist` and, unless
     * `tileLocal`, `knn_rank`, which [[SpatialJoinStrategy]] (added to the
     * session's planner here) plans into
     * [[org.apache.spark.sql.graft.KnnJoinExec]], the operator SQL kNN joins
@@ -608,13 +528,11 @@ object SpatialJoin {
     requireDisjoint(left, right)
     val spark = left.sparkSession
     SpatialJoinStrategy.install(spark)
-    val (lEnv, rEnv) = enveloped(left, leftGeom, right, rightGeom, Config())
-    val (lp, rp) = (lEnv.queryExecution.analyzed, rEnv.queryExecution.analyzed)
+    val (lp, rp) = (left.queryExecution.analyzed, right.queryExecution.analyzed)
     val knn = AttributeReference("knn_dist", DoubleType, nullable = false)() +:
       (if (tileLocal) Nil else Seq(AttributeReference("knn_rank", IntegerType, nullable = false)()))
     Bridge.ofPlan(spark, KnnJoinNode(lp, rp, attrs(lp, leftGeom).head, attrs(rp, rightGeom).head,
-      attrs(lp, X1, Y1, X2, Y2), attrs(rp, X1, Y1, X2, Y2), k, maxDistance, attrs(rp, tieBreak: _*),
-      cfg, tileLocal, knn))
+      k, maxDistance, attrs(rp, tieBreak: _*), cfg, tileLocal, knn))
   }
 
   /** Tile-local kNN join (reference st_nearest2, knn_2d.hpp:22-233): every

@@ -18,23 +18,18 @@ import graft.operators.{SpatialJoin, TileIndex}
 import graft.operators.SpatialJoin.{keyed, KnnTile}
 
 /** The logical kNN join [[graft.operators.SpatialJoin.knnJoin]],
-  * `knnJoinExact` and `knnJoinBounded` build: for each left row, its `k`
-  * nearest right rows. Its children are the two sides with the engine's
-  * envelope columns (`leftEnv`/`rightEnv`, dropped from the node's output)
-  * and without rows lacking one; `knn` holds the produced `knn_dist` (and,
+  * `knnJoinExact` and `knnJoinBounded` build over their two inputs: for
+  * each left row, its `k` nearest right rows by the geometry columns
+  * `leftGeom` and `rightGeom`; `knn` holds the produced `knn_dist` (and,
   * unless `tileLocal`, `knn_rank`) attributes. [[SpatialJoinStrategy]]
   * plans it as [[KnnJoinExec]]. */
 case class KnnJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftGeom: Attribute, rightGeom: Attribute,
-    leftEnv: Seq[Attribute], rightEnv: Seq[Attribute],
     k: Int, maxDistance: Double, tieBreak: Seq[Attribute],
     cfg: SpatialJoin.Config, tileLocal: Boolean, knn: Seq[Attribute]) extends BinaryNode {
 
-  override def output: Seq[Attribute] = {
-    val env = AttributeSet(leftEnv ++ rightEnv)
-    (left.output ++ right.output).filterNot(env.contains) ++ knn
-  }
+  override def output: Seq[Attribute] = left.output ++ right.output ++ knn
 
   override def producedAttributes: AttributeSet = AttributeSet(knn)
 
@@ -51,14 +46,16 @@ case class KnnJoinNode(
   * `-p st_nearest`/`st_nearest2` (knn_2d.hpp:22-233).
   *
   * `doExecute` runs the whole pipeline on its children's rows, in the
-  * caller's SQL execution. The children carry the envelope columns and no
-  * row without one, so left rows with a null or invalid geometry match
-  * nothing and such right rows are never neighbours.
+  * caller's SQL execution. Rows whose geometry is null, invalid or has no
+  * located envelope ([[graft.functions.GeomKernels.located]]) are skipped:
+  * such left rows match nothing and such right rows are never neighbours.
   *   - A right side of at most `knnBroadcastThreshold` rows (its first
-  *     `threshold + 1` rows tell) is broadcast as one
-  *     [[KnnTile]], and one map over the left rows answers every row: no
-  *     tiling, no shuffle.
-  *   - Otherwise each side is copied once (the left after the id lane of
+  *     `threshold + 1` raw rows tell, skipped ones included) is broadcast as
+  *     one [[KnnTile]], and one map over the left rows answers every row:
+  *     no tiling, no shuffle, no envelope. Both paths are exact, so where
+  *     the threshold falls changes no result.
+  *   - Otherwise each side is copied once with its envelope
+  *     ([[SpatialJoinExec.copied]]; the left after the id lane of
   *     [[SpatialJoinExec.withIds]]) and tiles are planned from the copies
   *     ([[graft.operators.SpatialJoin.planTiles]]). Tile-local mode
   *     (st_nearest2) then ranks each left row within its owner tile
@@ -74,7 +71,6 @@ case class KnnJoinNode(
 case class KnnJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftGeom: Attribute, rightGeom: Attribute,
-    leftEnv: Seq[Attribute], rightEnv: Seq[Attribute],
     k: Int, maxDistance: Double,
     tieBreak: Seq[Attribute],
     extraCond: Option[Expression],
@@ -90,7 +86,11 @@ case class KnnJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
     copy(left = newLeft, right = newRight)
 
-  import SpatialJoinExec.{copied, mbbs, ords, release}
+  import SpatialJoinExec.{copied, envelope, located, mbbs, ords, release}
+
+  // the envelope columns the copies append, and the right copy's layout
+  private lazy val (leftEnv, rightEnv) = (envelope(nullable = false), envelope(nullable = false))
+  private lazy val rIn = right.output ++ rightEnv
 
   private def lGeom(in: Seq[Attribute]) = ords(in, Seq(leftGeom)).head
   private def rGeom(in: Seq[Attribute]) = ords(in, Seq(rightGeom)).head
@@ -127,7 +127,7 @@ case class KnnJoinExec(
     val out = small match {
       case Some(rs) => broadcast(rs)
       case None =>
-        val rRows = copied(right, withId = false)
+        val rRows = copied(right, rightGeom, rightEnv, withId = false)
         if (tileLocal) tileLocalKnn(rRows) else tiled(rRows)
     }
     extraCond.fold(out) { c =>
@@ -138,9 +138,10 @@ case class KnnJoinExec(
     }
   }
 
-  /** The exact kNN over a small right side, whose rows `rs` ship to every
-    * task as one [[KnnTile]]: each left row takes every right row within
-    * its k-th distance (ties at the boundary included) and ranks them. */
+  /** The exact kNN over a small right side, whose raw rows `rs` ship to
+    * every task as one [[KnnTile]]: each left row takes every right row
+    * within its k-th distance (ties at the boundary included) and ranks
+    * them. */
   private def broadcast(rs: Array[InternalRow]): RDD[InternalRow] = {
     if (rs.isEmpty) return sparkContext.emptyRDD
     val bc = sparkContext.broadcast(rs)
@@ -152,17 +153,20 @@ case class KnnJoinExec(
       // one KnnTile per partition: O(L log R) instead of the O(L x R) scan
       // that cost 17.6x wall for 10x data at the threshold's 300k x 10k
       // shape (SCALE.md sf1 step)
-      val items = bc.value.map(r => (GeometryCodec.fromWkb(r.getBinary(rg)), r))
+      val items = bc.value.flatMap(r => located(r, rg).map((_, r)))
       val tile = new KnnTile(items.map(_._1))
       val byDistTie = Ordering.by[(Double, InternalRow), Double](_._1)(Ordering.Double.TotalOrdering)
         .orElse(Ordering.by[(Double, InternalRow), InternalRow](_._2)(new InterpretedOrdering(ties, rIn)))
       val emit = emitter(lIn, rIn)
-      rows.flatMap { lrow =>
-        val near = tile.nearest(GeometryCodec.fromWkb(lrow.getBinary(lg)), kk)
-        val dk = near(math.min(kk, near.length) - 1)._1
-        near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
-          .toSeq.sorted(byDistTie).iterator.take(kk).zipWithIndex
-          .collect { case ((d, r), i) if d < maxD => emit(lrow, r, d, i + 1) }
+      if (items.isEmpty) Iterator.empty
+      else rows.flatMap { lrow =>
+        located(lrow, lg).iterator.flatMap { g1 =>
+          val near = tile.nearest(g1, kk)
+          val dk = near(math.min(kk, near.length) - 1)._1
+          near.iterator.takeWhile(_._1 <= dk).map { case (d, p) => (d, items(p)._2) }
+            .toSeq.sorted(byDistTie).iterator.take(kk).zipWithIndex
+            .collect { case ((d, r), i) if d < maxD => emit(lrow, r, d, i + 1) }
+        }
       }
     }
   }
@@ -170,7 +174,7 @@ case class KnnJoinExec(
   /** The tiles for the copies `lRows` (laid out as `lIn`) and `rRows`. */
   private def planTiles(lRows: RDD[InternalRow], lIn: Seq[Attribute], rRows: RDD[InternalRow]) =
     SpatialJoin.planTiles(session,
-      mbbs(lRows, ords(lIn, leftEnv)).union(mbbs(rRows, ords(right.output, rightEnv))), cfg)
+      mbbs(lRows, ords(lIn, leftEnv)).union(mbbs(rRows, ords(rIn, rightEnv))), cfg)
 
   /** Owner-tile kNN, shared by tile-local mode and pass 1 of [[tiled]]:
     * every left row of `lRows` (laid out as `lIn`) goes to exactly ONE tile
@@ -186,7 +190,6 @@ case class KnnJoinExec(
                            rRows: RDD[InternalRow], m: Int)(
       emit: () => (InternalRow, Int, Array[(Double, InternalRow)]) => Iterator[InternalRow]
   ): RDD[InternalRow] = {
-    val rIn = right.output
     // one key per tile: owner tiles take no hot-tile shards
     val owners = index.withCounts(Map.empty, index.tileWeights)
     val bc = sparkContext.broadcast(owners)
@@ -215,13 +218,13 @@ case class KnnJoinExec(
     * nearest right rows within its owner tile, equal distances in arrival
     * order. */
   private def tileLocalKnn(rRows: RDD[InternalRow]): RDD[InternalRow] = {
-    val lRows = copied(left, withId = false)
-    val lIn = left.output
+    val lRows = copied(left, leftGeom, leftEnv, withId = false)
+    val lIn = left.output ++ leftEnv
     val index = planTiles(lRows, lIn, rRows)
     release(lRows, rRows)
     val kk = k
     ownerTileKnn(index, lRows, lIn, rRows, k) { () =>
-      val out = emitter(keyed(lIn), keyed(right.output))
+      val out = emitter(keyed(lIn), keyed(rIn))
       (lrow, _, near) =>
         near.iterator.take(kk).zipWithIndex.map { case ((d, r), i) => out(lrow, r, d, i + 1) }
     }
@@ -249,10 +252,9 @@ case class KnnJoinExec(
     *      point; one reduce by left id ranks each row's candidates. */
   private def tiled(rRows: RDD[InternalRow]): RDD[InternalRow] = {
     val sc = sparkContext
-    val lRows = copied(left, withId = true)
+    val lRows = copied(left, leftGeom, leftEnv, withId = true)
     val id = AttributeReference("__lid", LongType, nullable = false)()
-    val lIn = id +: left.output
-    val rIn = right.output
+    val lIn = (id +: left.output) ++ leftEnv
     val index = planTiles(lRows, lIn, rRows)
     val diag = math.sqrt(index.space.width * index.space.width +
                          index.space.height * index.space.height)

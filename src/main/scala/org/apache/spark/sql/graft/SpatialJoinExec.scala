@@ -6,18 +6,19 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{BinaryExecNode, ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.locationtech.jts.geom.{Envelope, Geometry}
 
-import graft.core.{CacheHygiene, GeometryCodec, GeomPredicates, Mbb}
-import graft.functions.{StDWithin, StEnvelope, StPredicate}
+import graft.core.{CacheHygiene, Geo, GeometryCodec, GeomPredicates, Mbb}
+import graft.functions.{GeomKernels, StDWithin, StEnvelope, StPredicate}
 import graft.operators.{SpatialJoin, TileIndex}
 
 /** Planner integration: [[SpatialJoinNode]], the logical join
@@ -43,8 +44,11 @@ import graft.operators.{SpatialJoin, TileIndex}
   * here as a LeftSemi/LeftAnti join after RewritePredicateSubquery, and is
   * planned as the same exec in its semi/anti mode.
   *
-  * st_equals plans, from both frontends, as a hash equi-join on the four
-  * envelope coordinates (equal geometries have equal envelopes).
+  * st_equals plans, from both frontends (`SpatialJoin.join` builds a plain
+  * st_equals join), as a hash equi-join on the envelope (equal geometries
+  * have equal envelopes). The other joins plan over the raw children: the
+  * execs' one copy step ([[SpatialJoinExec.copied]]) decodes each row's
+  * geometry and computes its envelope.
   *
   * Tuning is read here, once per planning, into the exec nodes'
   * [[graft.operators.SpatialJoin.Config]]: `graft.join.partitioner`
@@ -87,11 +91,11 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: KnnJoinNode =>
-      KnnJoinExec(planLater(n.left), planLater(n.right), n.leftGeom, n.rightGeom, n.leftEnv,
-        n.rightEnv, n.k, n.maxDistance, n.tieBreak, None, n.cfg, n.tileLocal, n.output) :: Nil
+      KnnJoinExec(planLater(n.left), planLater(n.right), n.leftGeom, n.rightGeom, n.k,
+        n.maxDistance, n.tieBreak, None, n.cfg, n.tileLocal, n.output) :: Nil
     case n: SpatialJoinNode =>
       SpatialJoinExec(planLater(n.left), planLater(n.right), n.leftGeom, n.rightGeom,
-        n.leftEnv, n.rightEnv, n.cfg, None, Inner, n.output) :: Nil
+        n.cfg, None, Inner, n.output) :: Nil
     case j @ Join(l, r, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), _) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val hit = conjuncts.iterator.map {
@@ -112,19 +116,22 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
         case Some((matched, lg, rg, pred, dist)) if ExtractEquiJoinKeys.unapply(j).isEmpty =>
           val cfg = tuning().copy(predicate = pred, distance = dist)
           SpatialJoin.validate(cfg)
-          // semi/anti keep left rows without an envelope: they match
-          // nothing, so ANTI emits them
-          val (le, lgA, lEnv) =
-            enveloped(l, lg, if (pred == "dwithin") dist else 0.0, dropNull = jt == Inner)
-          val (re, rgA, rEnv) = enveloped(r, rg, 0.0, dropNull = true)
-          if (pred == "equals")
-            ProjectExec(j.output, planLater(Join(le, re, jt,
-              Some(lEnv.zip(rEnv).map { case (a, b) => EqualTo(a, b) }.foldLeft(cond)(And)),
-              j.hint))) :: Nil
-          else {
+          if (pred == "equals") {
+            // equal geometries have equal envelopes: the envelope is a hash
+            // key. Rows without one have a null key and match nothing, so
+            // ANTI emits them
+            def keyed(p: LogicalPlan, g: Expression) = {
+              val key = Alias(StEnvelope(g), "__env")()
+              (Project(p.output :+ key, p), key.toAttribute)
+            }
+            val ((le, lk), (re, rk)) = (keyed(l, lg), keyed(r, rg))
+            // planned after the optimizer ran: normalize -0.0 as it would
+            val key = EqualTo(NormalizeFloatingNumbers.normalize(lk), NormalizeFloatingNumbers.normalize(rk))
+            ProjectExec(j.output, planLater(Join(le, re, jt, Some(And(key, cond)), j.hint))) :: Nil
+          } else {
+            val ((le, lgA), (re, rgA)) = (withGeom(l, lg), withGeom(r, rg))
             val rest = conjuncts.filterNot(_ fastEquals matched).reduceOption(And)
-            SpatialJoinExec(planLater(le), planLater(re), lgA, rgA, lEnv, rEnv, cfg, rest,
-              jt, j.output) :: Nil
+            SpatialJoinExec(planLater(le), planLater(re), lgA, rgA, cfg, rest, jt, j.output) :: Nil
           }
         case None if jt == Inner => planKnn(l, r, conjuncts)
         case _ => Nil
@@ -132,29 +139,13 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
     case _ => Nil
   }
 
-  /** `plan` with the engine's envelope columns appended, as
-    * [[graft.operators.SpatialJoin.join]]'s enveloped inputs carry them
-    * (planar): the geometry as a column, its envelope expanded by `expand`,
-    * and, with `dropNull`, no row without one. Returns the plan, the
-    * geometry column and the four envelope columns. */
-  private def enveloped(plan: LogicalPlan, geom: Expression, expand: Double,
-                        dropNull: Boolean): (LogicalPlan, Attribute, Seq[Attribute]) = {
-    val (input, g) = geom match {
-      case a: Attribute => (plan, a)
-      case e =>
-        val a = Alias(e, "__g")()
-        (Project(plan.output :+ a, plan), a.toAttribute)
-    }
-    val env = Alias(StEnvelope(g), "__env")()
-    val withEnv = Project(input.output :+ env, input)
-    val d = Literal(expand)
-    val bounds = Seq("__xmin", "__ymin", "__xmax", "__ymax").zipWithIndex.map { case (n, i) =>
-      val b = GetStructField(env.toAttribute, i)
-      Alias(if (i < 2) Subtract(b, d) else Add(b, d), n)()
-    }
-    (Project(input.output ++ bounds,
-        if (dropNull) Filter(IsNotNull(env.toAttribute), withEnv) else withEnv),
-      g, bounds.map(_.toAttribute))
+  /** `plan` and its geometry `geom` as a column: an attribute as it is,
+    * any other expression appended once, so each row evaluates it once. */
+  private def withGeom(plan: LogicalPlan, geom: Expression): (LogicalPlan, Attribute) = geom match {
+    case a: Attribute => (plan, a)
+    case e =>
+      val a = Alias(e, "__g")()
+      (Project(plan.output :+ a, plan), a.toAttribute)
   }
 
   /** `a JOIN b ON st_nearest(a.g, b.g, k[, d])` (or `st_nearest2`) →
@@ -184,10 +175,9 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
       case Some((matched, probe, pg, index, ig, k, d, tileLocal)) =>
         val cfg = tuning()
         SpatialJoin.validate(cfg)
-        val (pe, pgA, pEnv) = enveloped(probe, pg, 0.0, dropNull = true)
-        val (ie, igA, iEnv) = enveloped(index, ig, 0.0, dropNull = true)
+        val ((pe, pgA), (ie, igA)) = (withGeom(probe, pg), withGeom(index, ig))
         val tie = if (tileLocal) Nil else index.output.filter(a => RowOrdering.isOrderable(a.dataType))
-        KnnJoinExec(planLater(pe), planLater(ie), pgA, igA, pEnv, iEnv, k, d, tie,
+        KnnJoinExec(planLater(pe), planLater(ie), pgA, igA, k, d, tie,
           conjuncts.filterNot(_ fastEquals matched).reduceOption(And), cfg, tileLocal,
           l.output ++ r.output) :: Nil
       case None => Nil
@@ -195,20 +185,16 @@ object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
   }
 }
 
-/** The logical spatial join [[graft.operators.SpatialJoin.join]] builds.
-  * Its children are the two sides with the engine's envelope columns
-  * (`leftEnv`/`rightEnv`, dropped from the node's output); `tileId`, with
-  * `keepTile`, is the emitting tile. [[SpatialJoinStrategy]] plans it. */
+/** The logical spatial join [[graft.operators.SpatialJoin.join]] builds
+  * over its two inputs, joined on the geometry columns `leftGeom` and
+  * `rightGeom`; `tileId`, with `keepTile`, is the emitting tile.
+  * [[SpatialJoinStrategy]] plans it. */
 case class SpatialJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftGeom: Attribute, rightGeom: Attribute,
-    leftEnv: Seq[Attribute], rightEnv: Seq[Attribute],
     cfg: SpatialJoin.Config, tileId: Option[Attribute]) extends BinaryNode {
 
-  override def output: Seq[Attribute] = {
-    val env = AttributeSet(leftEnv ++ rightEnv)
-    (left.output ++ right.output).filterNot(env.contains) ++ tileId
-  }
+  override def output: Seq[Attribute] = left.output ++ right.output ++ tileId
 
   override def producedAttributes: AttributeSet = AttributeSet(tileId.toSeq)
 
@@ -219,28 +205,32 @@ case class SpatialJoinNode(
 
 /** Physical spatial join: the whole tiled pipeline of
   * [[graft.operators.SpatialJoin]] on its children's rows, in the caller's
-  * SQL execution. `doExecute` copies each side once (the left with a
-  * synthetic id in semi/anti mode), plans tiles from the copies'
-  * envelopes ([[graft.operators.SpatialJoin.planTiles]]), tags each row
-  * with its (tile, shard) keys, and runs the refine stage
+  * SQL execution. `doExecute` copies each side once ([[SpatialJoinExec.copied]]:
+  * each row's geometry decoded once, its envelope appended, the left with a
+  * synthetic id in semi/anti mode), plans tiles from the copies' envelopes
+  * ([[graft.operators.SpatialJoin.planTiles]]), tags each row with its
+  * (tile, shard) keys, and runs the refine stage
   * ([[graft.operators.SpatialJoin.slotCogroup]]): per key an STRtree over
-  * the right rows, probed by each left row, refined exactly.
+  * the right rows, probed by each left row, refined exactly. The left
+  * envelope of a dwithin join is the probe window: grown by the distance,
+  * or in earth mode by its conservative degree window.
   *
   * INNER: a pair is emitted by the owner tile of its refpoint (unless
   * `dedup = none`) when it satisfies the predicate and the residual
-  * `extraCond`, laid out as `output`.
+  * `extraCond`, laid out as `output`. Rows whose geometry is null, invalid
+  * or has no located envelope match nothing.
   *
   * LEFT SEMI/ANTI: a left row stops probing a tile at its first hit that
   * satisfies the predicate and the residual. Each tile reports a hit, and
   * the tile owning the row's envelope corner reports the row whatever it
   * found; one reduce by the left id resolves the verdict: SEMI emits a row
-  * once if some tile hit, ANTI if none did. Left rows with a null or
-  * invalid geometry never enter a tile, so they match nothing: ANTI emits
-  * them, SEMI drops them — SQL's null-predicate semantics. */
+  * once if some tile hit, ANTI if none did. Left rows without a located
+  * envelope are copied with a null one and never enter a tile, so they
+  * match nothing: ANTI emits them, SEMI drops them — SQL's null-predicate
+  * semantics. */
 case class SpatialJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftGeom: Attribute, rightGeom: Attribute,
-    leftEnv: Seq[Attribute], rightEnv: Seq[Attribute],
     cfg: SpatialJoin.Config,
     extraCond: Option[Expression],
     joinType: JoinType,
@@ -251,15 +241,18 @@ case class SpatialJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    import SpatialJoinExec.{copied, mbbs, ords, release}
+    import SpatialJoinExec.{copied, envelope, mbbs, ords, release}
     val sc = sparkContext
     val semi = joinType != Inner
     val id = AttributeReference("__lid", LongType, nullable = false)()
-    // the copies' layouts
-    val lIn = (if (semi) Seq(id) else Nil) ++ left.output
-    val rIn = right.output
-    val lRows = copied(left, withId = semi)
-    val rRows = copied(right, withId = false)
+    // the copies' layouts; semi/anti keep left rows without an envelope
+    val (leftEnv, rightEnv) = (envelope(nullable = semi), envelope(nullable = false))
+    val lIn = (if (semi) Seq(id) else Nil) ++ left.output ++ leftEnv
+    val rIn = right.output ++ rightEnv
+    val dwithin = cfg.predicate == "dwithin"
+    val lRows = copied(left, leftGeom, leftEnv, withId = semi,
+      grow = if (dwithin) cfg.distance else 0.0, earth = dwithin && cfg.earth)
+    val rRows = copied(right, rightGeom, rightEnv, withId = false)
     val Seq(lx1, ly1, lx2, ly2) = ords(lIn, leftEnv)
     val rEnv = ords(rIn, rightEnv)
     val index = SpatialJoin.planTiles(session, mbbs(lRows, Seq(lx1, ly1, lx2, ly2)).union(mbbs(rRows, rEnv)), cfg)
@@ -370,18 +363,73 @@ object SpatialJoinExec {
     else Some(Mbb(row.getDouble(e(0)), row.getDouble(e(1)), row.getDouble(e(2)), row.getDouble(e(3))))
   }
 
+  /** Four fresh envelope columns (xmin, ymin, xmax, ymax) for [[copied]]. */
+  def envelope(nullable: Boolean): Seq[Attribute] =
+    Seq("__xmin", "__ymin", "__xmax", "__ymax").map(AttributeReference(_, DoubleType, nullable)())
+
   /** `plan`'s rows, copied once into an RDD-level MEMORY_AND_DISK persist,
     * which [[release]] ends (nothing registers in the session's
-    * CacheManager, which concurrent sibling queries share); with `withId`,
-    * after an id lane ([[withIds]]). */
-  def copied(plan: SparkPlan, withId: Boolean): RDD[InternalRow] = {
+    * CacheManager, which concurrent sibling queries share), laid out as an
+    * id lane ([[withIds]], with `withId`), `plan.output`, then `env`: the
+    * envelope of the row's WKB geometry `geom`, decoded once here. A row
+    * whose geometry is null, invalid or has no located envelope
+    * ([[GeomKernels.located]]) is dropped, or kept with a null envelope when
+    * `env` is nullable.
+    *
+    * The stored envelope is the row's probe window: grown by `grow` on every
+    * side, or with `earth`, by the conservative DEGREE window of `grow`
+    * meters ([[Geo.latDegrees]], and [[Geo.lonDegrees]] at the envelope's
+    * largest |latitude|, the full 360° near the poles). The reference grows
+    * by meters-as-degrees, so every earth probe covers the planet and the
+    * tiled join degenerates to all-pairs (sf0.1: 20.6 s of refine CPU for
+    * 30 pairs); the exact haversine refine decides membership, so the
+    * tighter window changes no result. An earth window that crosses ±180°
+    * widens to every longitude, so pairs across the antimeridian stay
+    * candidates. */
+  def copied(plan: SparkPlan, geom: Attribute, env: Seq[Attribute], withId: Boolean,
+             grow: Double = 0.0, earth: Boolean = false): RDD[InternalRow] = {
     val in = (if (withId) Seq(AttributeReference("__lid", LongType)()) else Nil) ++ plan.output
+    val g = in.indexWhere(_.exprId == geom.exprId)
+    val out = in ++ env
+    val keep = env.head.nullable
     (if (withId) withIds(plan.execute()) else plan.execute())
       .mapPartitions[InternalRow] { rows =>
-        val proj = UnsafeProjection.create(in, in)
-        rows.map(proj(_).copy())
+        val bounds = new GenericInternalRow(4)
+        val joined = new JoinedRow(null, bounds)
+        val proj = UnsafeProjection.create(out, out)
+        rows.flatMap { row =>
+          val shape = located(row, g)
+          if (shape.isEmpty && !keep) None
+          else {
+            shape match {
+              case Some(s) => window(s.getEnvelopeInternal, grow, earth, bounds)
+              case None => (0 until 4).foreach(bounds.setNullAt)
+            }
+            Some(proj(joined.withLeft(row)).copy())
+          }
+        }
       }.persist(StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** The WKB geometry at ordinal `g` of `row`, if it decodes and has a
+    * located envelope. */
+  def located(row: InternalRow, g: Int): Option[Geometry] =
+    Option(GeometryCodec.fromWkb(if (row.isNullAt(g)) null else row.getBinary(g)))
+      .filter(s => GeomKernels.located(s.getEnvelopeInternal))
+
+  /** Sets `out` to the window of envelope `e` that [[copied]] stores. */
+  private def window(e: Envelope, grow: Double, earth: Boolean, out: InternalRow): Unit =
+    if (!earth) {
+      out.setDouble(0, e.getMinX - grow); out.setDouble(1, e.getMinY - grow)
+      out.setDouble(2, e.getMaxX + grow); out.setDouble(3, e.getMaxY + grow)
+    } else {
+      val dLat = Geo.latDegrees(grow)
+      val dLon = Geo.lonDegrees(grow, math.max(math.abs(e.getMinY), math.abs(e.getMaxY)))
+      val (x1, x2) = (e.getMinX - dLon, e.getMaxX + dLon)
+      val wrap = x1 < -180.0 || x2 > 180.0
+      out.setDouble(0, if (wrap) math.min(-180.0, x1) else x1); out.setDouble(1, e.getMinY - dLat)
+      out.setDouble(2, if (wrap) math.max(180.0, x2) else x2); out.setDouble(3, e.getMaxY + dLat)
+    }
 
   /** Unpersists each of `rdds` once the SQL execution (or job) that next
     * reads it ends. Call after the operator's own eager jobs, which would

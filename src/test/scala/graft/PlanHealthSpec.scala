@@ -68,6 +68,32 @@ class PlanHealthSpec extends SparkTestBase {
     }
   }
 
+  test("no envelope projection outside the execs' copy step, the stores and the st_equals key") {
+    // the spatial-join and kNN execs envelope each row in their one copy
+    // step (SpatialJoinExec.copied): a second envelope path must not regrow.
+    // The store write and the ingest hash their input columns into row ids,
+    // so they keep their own; the SQL registry names the function, and the
+    // gates and the tile plot are its callers
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val allowed = Seq("graft/functions/", "graft/sources/SpatialStore.scala",
+      "graft/streaming/SpatialIngest.scala", "graft/GraftExtensions.scala",
+      "graft/queries/Queries.scala", "graft/viz/PartitionVis.scala")
+    val call = "\\b(st_envelope|StEnvelope)\\(".r
+    val hits = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => (root.relativize(f).toString.replace('\\', '/'), f))
+      .filterNot { case (rel, _) => allowed.exists(rel.startsWith) }
+      .flatMap { case (rel, f) =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined => s"$rel:${i + 1}: ${line.trim}"
+        }
+      }.toSeq
+    val (key, rest) = hits.partition(_.startsWith("org/apache/spark/sql/graft/SpatialJoinExec.scala:"))
+    assert(key.size == 1, s"the strategy's st_equals key: ${key.mkString("; ")}")
+    assert(rest.isEmpty, s"envelope projections outside the copy step: ${rest.mkString("; ")}")
+  }
+
   test("broadcast kNN path runs with zero shuffles") {
     val df = Queries.qKnn(spark, dir)
     val shuffles = df.queryExecution.executedPlan.collect {
@@ -122,8 +148,8 @@ class PlanHealthSpec extends SparkTestBase {
     assert(relationalJobs == mappedJobs - 1, s"jobs: relational $relationalJobs, map $mappedJobs")
     // the bound: every left, plus Σ over owner tiles of ring tiles × cap
     val cfg = SpatialJoin.Config(bucket = 100)
-    val (l, r) = SpatialJoin.enveloped(custs, "g1", supps, "g2", cfg)
-    val index = SpatialJoin.planTiles(l, r, cfg)
+    val r = envelopes(supps, "g2")
+    val index = SpatialJoin.planTiles(envelopes(custs, "g1"), r, cfg)
     val centres = r.select("__xmin", "__ymin", "__xmax", "__ymax").as[(Double, Double, Double, Double)]
       .collect().groupBy { case (x1, y1, x2, y2) => index.refTile((x1 + x2) / 2, (y1 + y2) / 2) }
       .map { case (t, es) => t -> (es.length.toLong,

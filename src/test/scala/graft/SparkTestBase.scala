@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // keep the session for sibling suites
+
+  /** The envelopes of `df`'s WKB geometry column `geom` as the `__xmin`,
+    * `__ymin`, `__xmax`, `__ymax` columns `SpatialJoin.planTiles` reads,
+    * rows without one dropped: the MBBs a planar intersects join plans its
+    * tiles from. */
+  def envelopes(df: DataFrame, geom: String): DataFrame =
+    df.select(graft.functions.st_envelope(col(geom)).as("e")).where(col("e").isNotNull)
+      .select(col("e.xmin").as("__xmin"), col("e.ymin").as("__ymin"),
+        col("e.xmax").as("__xmax"), col("e.ymax").as("__ymax"))
 }
 
 object SparkTestBase {

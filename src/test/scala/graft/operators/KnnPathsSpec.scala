@@ -8,7 +8,7 @@ import scala.util.Random
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkTestBase
@@ -69,9 +69,7 @@ class KnnPathsSpec extends SparkTestBase {
 
   private def plan(a: Seq[(Long, Array[Byte])], b: Seq[(Long, Array[Byte])],
                    cfg: SpatialJoin.Config): TileIndex = {
-    val (l, r) =
-      SpatialJoin.enveloped(frame(a, "id1", "g1"), "g1", frame(b, "id2", "g2"), "g2", cfg)
-    SpatialJoin.planTiles(l, r, cfg)
+    SpatialJoin.planTiles(envelopes(frame(a, "id1", "g1"), "g1"), envelopes(frame(b, "id2", "g2"), "g2"), cfg)
   }
 
   override def beforeAll(): Unit = {
@@ -224,6 +222,26 @@ class KnnPathsSpec extends SparkTestBase {
     val out = SpatialJoin.knnJoin(l, "g1", r, "g2", 1)
     assert(out.schema == StructType(l.schema ++ r.schema :+
       StructField("knn_dist", DoubleType, nullable = false)))
+  }
+
+  test("join, selfJoin, st_equals and the exact kNN joins keep their inputs' column types and nullability") {
+    val l = frame(Seq(1L -> point(0, 0)), "id1", "g1")
+    val r = frame(Seq(2L -> point(1, 1)), "id2", "g2")
+    val pair = l.schema ++ r.schema
+    val tile = StructField("tile_id", IntegerType, nullable = false)
+    Seq("intersects", "equals").foreach { p =>
+      val cfg = SpatialJoin.Config(predicate = p)
+      assert(SpatialJoin.join(l, "g1", r, "g2", cfg).schema == StructType(pair), p)
+      assert(SpatialJoin.join(l, "g1", r, "g2", cfg.copy(keepTile = true)).schema ==
+        StructType(pair :+ tile), p)
+    }
+    assert(SpatialJoin.selfJoin(l, "g1", "id1").schema ==
+      StructType(l.schema.map(f => f.copy(name = "l_" + f.name)) ++
+        l.schema.map(f => f.copy(name = "r_" + f.name))))
+    val ranked = StructType(pair ++ Seq(StructField("knn_dist", DoubleType, nullable = false),
+      StructField("knn_rank", IntegerType, nullable = false)))
+    assert(SpatialJoin.knnJoinExact(l, "g1", r, "g2", 1).schema == ranked)
+    assert(SpatialJoin.knnJoinBounded(l, "g1", r, "g2", 1, 2.0).schema == ranked)
   }
 
   test("all three kNN paths: an empty right side, and k larger than the right side") {

@@ -127,8 +127,7 @@ class RefineSlotsSpec extends SparkTestBase {
         case d => shuffles(d.rdd)
       }
     val deps = shuffles(joins.head.execute())
-    val (l, r) = SpatialJoin.enveloped(a, "ga", b, "gb", cfg)
-    val idx = SpatialJoin.planTiles(l, r, cfg)
+    val idx = SpatialJoin.planTiles(envelopes(a, "ga"), envelopes(b, "gb"), cfg)
     val keys = idx.tiles.map(t => idx.shardsOf(t.tileId)).sum
     val cores = spark.sparkContext.defaultParallelism
     val (nSlots, _) = idx.refineSlots(if (keys <= 4 * cores) keys else cores)
@@ -161,13 +160,12 @@ class RefineSlotsSpec extends SparkTestBase {
 
   test("hot-tile sharded keys: SQL == DataFrame == brute force") {
     val bucket = 16
-    val hotRows = SpatialJoin.Config().hotTileFactor * bucket + 200
+    val hotRows = SpatialJoin.HotTileFactor * bucket + 200
     val la = randomBoxes(200, 7) ++ (0 until hotRows).map(i => (1000L + i, box(20, 20, 1)))
     val lb = randomBoxes(250, 8) ++ Seq((5000L, box(19.5, 19.5, 2)))
     val a = frame(la, "ida", "ga"); val b = frame(lb, "idb", "gb")
     val cfg = SpatialJoin.Config(bucket = bucket)
-    val (l, r) = SpatialJoin.enveloped(a, "ga", b, "gb", cfg)
-    val idx = SpatialJoin.planTiles(l, r, cfg)
+    val idx = SpatialJoin.planTiles(envelopes(a, "ga"), envelopes(b, "gb"), cfg)
     assert(idx.shardCounts.nonEmpty, "the hot tile was not sharded")
     val (nSlots, slots) = idx.refineSlots(4 * spark.sparkContext.defaultParallelism)
     assert(slots.size > idx.tiles.length && nSlots <= slots.size)
@@ -190,8 +188,7 @@ class RefineSlotsSpec extends SparkTestBase {
     val la = randomBoxes(300, 21); val lb = randomBoxes(300, 22, from = 10000L)
     val a = frame(la, "ida", "ga"); val b = frame(lb, "idb", "gb")
     val cfg = SpatialJoin.Config(bucket = 8)
-    val (l, r) = SpatialJoin.enveloped(a, "ga", b, "gb", cfg)
-    val idx = SpatialJoin.planTiles(l, r, cfg)
+    val idx = SpatialJoin.planTiles(envelopes(a, "ga"), envelopes(b, "gb"), cfg)
     val cap = 4 * spark.sparkContext.defaultParallelism
     val (nSlots, slots) = idx.refineSlots(cap)
     assert(nSlots == cap && slots.size > 2 * cap, s"${slots.size} keys on $nSlots slots")

@@ -131,20 +131,19 @@ class SpatialJoinSpec extends SparkTestBase {
 
   test("hotspot salting: sharded hot tiles keep results exact") {
     // 1500 boxes stacked at ONE coordinate (spatially unsplittable) + 300
-    // uniform; small bucket so the hot tile trips the hotTileFactor
+    // uniform; small bucket so the hot tile holds more than
+    // HotTileFactor × bucket rows
     val hot = (0 until 1500).map(i =>
       (i.toLong, "POLYGON((50 25,52 25,52 27,50 27,50 25))"))
     val uniform = boxes(300, seed = 41, "u").map { case (i, w) => (i + 1500L, w) }
     val all = hot ++ uniform
     val a = df(all, "id1", "g1")
     val b = df(all.map { case (i, w) => (i, w) }, "id2", "g2")
-    val cfg = SpatialJoin.Config(bucket = 50, hotTileFactor = 2)
+    val cfg = SpatialJoin.Config(bucket = 50)
+    assert(1500 > SpatialJoin.HotTileFactor * cfg.bucket)
 
     // the planner must actually shard something
-    val l = df(all, "idx", "gx")
-    val env = l.withColumn("__env", graft.functions.st_envelope(col("gx")))
-      .select(col("__env.xmin").as("__xmin"), col("__env.ymin").as("__ymin"),
-        col("__env.xmax").as("__xmax"), col("__env.ymax").as("__ymax"))
+    val env = envelopes(df(all, "idx", "gx"), "gx")
     val idx = SpatialJoin.planTiles(env, env.limit(0), cfg)
     assert(idx.shardCounts.nonEmpty, "hot tile was not sharded")
     assert(idx.shardCounts.values.forall(s => s > 1 && s <= 64))

@@ -225,10 +225,10 @@ class SpatialJoinStrategySpec extends SparkTestBase {
       SpatialJoin.join(a.groupBy("ida").agg(first("ga").as("ga")), "ga", b, "gb"),
       bruteInner(la, lb, _.intersects(_)))
 
-    // hot spot: more than hotTileFactor × bucket left rows at one point,
+    // hot spot: more than HotTileFactor × bucket left rows at one point,
     // which the tiled engine salts across shards
     val bucket = 16
-    val hotRows = SpatialJoin.Config().hotTileFactor * bucket + 100
+    val hotRows = SpatialJoin.HotTileFactor * bucket + 100
     val lh = la ++ (0 until hotRows).map(i => (2000L + i, "POINT (10 7)"))
     val h = geomFrame(lh, "ida", "ga")
     h.createOrReplaceTempView("dh")
@@ -450,6 +450,18 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     assert(persisted.size <= 2, s"persisted RDDs read: $persisted")
   }
 
+  test("st_equals pairs -0.0 with 0.0 coordinates from both frontends") {
+    import graft.operators.SpatialJoin
+    val a = geomFrame(Seq(1L -> "POINT (-0 0)", 2L -> "POLYGON ((-0 0, 1 0, 1 1, -0 1, -0 0))"), "ida", "ga")
+    val b = geomFrame(Seq(10L -> "POINT (0 0)", 20L -> "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"), "idb", "gb")
+    a.createOrReplaceTempView("nz_a"); b.createOrReplaceTempView("nz_b")
+    val want = Set((1L, 10L), (2L, 20L))
+    assert(spark.sql("SELECT ida, idb FROM nz_a JOIN nz_b ON st_equals(ga, gb)")
+      .as[(Long, Long)].collect().toSet == want)
+    assert(SpatialJoin.join(a, "ga", b, "gb", SpatialJoin.Config(predicate = "equals"))
+      .select("ida", "idb").as[(Long, Long)].collect().toSet == want)
+  }
+
   test("a SQL spatial join validates the planning-time tuning conf") {
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
@@ -482,6 +494,53 @@ class SpatialJoinStrategySpec extends SparkTestBase {
       Thread.sleep(100)
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"persisted RDDs left behind: ${left.flatMap(sc.getPersistentRDDs.get)}")
+  }
+
+  test("join and kNN execs consumed through Dataset.rdd evaluate each input row once and release their copies") {
+    import graft.operators.SpatialJoin
+    val sc = spark.sparkContext
+    // `rows` as a parquet scan (a local relation would let the optimizer
+    // evaluate filters while planning) behind an always-true filter that
+    // counts its evaluations: the number of times the input plan ran a row
+    def counted(rows: Seq[(Long, String)], id: String, g: String) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_rdd_release").toString + "/in"
+      rows.toDF(id, "w").write.parquet(dir)
+      val evals = sc.longAccumulator(dir)
+      val pass = udf { (_: Long) => evals.add(1); true }
+      (spark.read.parquet(dir).where(pass(col(id))).withColumn(g, st_geomfromwkt(col("w"))).drop("w"),
+        evals)
+    }
+    val la = boxes(240, 41); val lb = boxes(200, 42)
+    val cfg = SpatialJoin.Config(bucket = 16, knnBroadcastThreshold = 0)
+    def consume(what: String)(join: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+      val (a, ea) = counted(la, "ida", "ga"); val (b, eb) = counted(lb, "idb", "gb")
+      val before = sc.getPersistentRDDs.keySet
+      val rows = join(a, b).rdd.collect()
+      assert((ea.value.toLong, eb.value.toLong) == (la.size.toLong, lb.size.toLong),
+        s"$what: input rows evaluated (left, right) ${(ea.value, eb.value)}")
+      // releases run on the asynchronous listener bus: poll briefly
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while ((sc.getPersistentRDDs.keySet -- before).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$what: persisted RDDs left behind: ${left.flatMap(sc.getPersistentRDDs.get)}")
+      rows
+    }
+    val inner = bruteInner(la, lb, _.intersects(_))
+    val joined = consume("inner join")(SpatialJoin.join(_, "ga", _, "gb", cfg))
+    assert(joined.map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb"))).toSet == inner &&
+      joined.length == inner.size)
+    val anti = try {
+      spark.conf.set("graft.join.bucket", "16")
+      consume("LEFT ANTI") { (a, b) =>
+        a.createOrReplaceTempView("rr_a"); b.createOrReplaceTempView("rr_b")
+        spark.sql("SELECT ida FROM rr_a LEFT ANTI JOIN rr_b ON st_intersects(ga, gb)")
+      }
+    } finally spark.conf.unset("graft.join.bucket")
+    assert(anti.map(_.getLong(0)).toSet == la.map(_._1).toSet -- inner.map(_._1))
+    val knn = consume("tiled knnJoinExact")(SpatialJoin.knnJoinExact(_, "ga", _, "gb", 3, Seq("idb"), cfg))
+    assert(knn.length == 3 * la.size)
   }
 
   private def points(n: Int, seed: Long) = {

@@ -8,18 +8,27 @@ import java.util.zip.GZIPOutputStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.{Bridge, KnnJoinExec, SpatialJoinExec}
 
 import graft.SparkTestBase
 import graft.core.{Mbb, TileBoundary}
 import graft.functions.{StEnvelope, StGeomFromWkt}
 import graft.operators.SpatialJoin
 
-/** A TSV+WKT input is parsed once per row and enveloped once per row on its
-  * way into a spatial join, a store write or a streaming ingest, and
-  * `WktTsvSource.read` learns the field count without a Spark job. */
+/** A TSV+WKT input is parsed once per row on its way into a spatial or kNN
+  * join, whose exec envelopes each row in its own copy step, and parsed and
+  * enveloped once per row on its way into a store write or a streaming
+  * ingest; `WktTsvSource.read` learns the field count without a Spark job. */
 class ParseOnceSpec extends SparkTestBase {
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graft.functions.registerAll(spark)
+  }
 
   private def tsv(dir: Path, name: String, rows: Int, from: Int = 0): Path = {
     val f = dir.resolve(name)
@@ -30,12 +39,25 @@ class ParseOnceSpec extends SparkTestBase {
     f
   }
 
-  /** Occurrences of kernel `K` in `df`'s optimized plan. */
-  private def kernels[K <: Expression](df: DataFrame)(
+  /** Occurrences of kernel `K` in the expressions of `plan`'s nodes. */
+  private def kernels[K <: Expression](plan: QueryPlan[_])(
       implicit tag: scala.reflect.ClassTag[K]): Int =
-    df.queryExecution.optimizedPlan.collect { case p =>
+    plan.collect { case p: QueryPlan[_] =>
       p.expressions.map(_.collect { case e if tag.runtimeClass.isInstance(e) => e }.size).sum
     }.sum
+
+  /** Occurrences of kernel `K` in `df`'s optimized plan. */
+  private def kernels[K <: Expression](df: DataFrame)(
+      implicit tag: scala.reflect.ClassTag[K]): Int = kernels[K](df.queryExecution.optimizedPlan)
+
+  /** The children of the spatial-join and kNN execs in `df`'s executed plan. */
+  private def execChildren(df: DataFrame): Seq[SparkPlan] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case e: SpatialJoinExec => e.children; case e: KnnJoinExec => e.children }.flatten
+  }
 
   /** Jobs started while `body` runs. */
   private def jobsDuring(body: => Unit): Int = {
@@ -65,21 +87,35 @@ class ParseOnceSpec extends SparkTestBase {
     assert(df.count() == rows)
   }
 
-  test("WktTsvSource.read -> SpatialJoin.join: one WKT parse and one envelope per side") {
+  test("WktTsvSource.read -> join and kNN execs: one WKT parse per side, no envelope projection") {
     val dir = Files.createTempDirectory("graft_once_join")
     val f = tsv(dir, "a.tsv", 40).toString
     val a = WktTsvSource.read(spark, f, 2).select(col("f1").as("a_id"), col("geom").as("a_geom"))
     val b = WktTsvSource.read(spark, f, 2).select(col("f1").as("b_id"), col("geom").as("b_geom"))
+    a.createOrReplaceTempView("once_a"); b.createOrReplaceTempView("once_b")
+    // the execs decode and envelope each row in their own copy step: each
+    // child parses its WKT once and computes no envelope
+    def check(what: String, df: DataFrame): Unit = {
+      val children = execChildren(df)
+      assert(children.size == 2, s"$what: ${df.queryExecution.executedPlan}")
+      children.foreach { c =>
+        assert(kernels[StGeomFromWkt](c) == 1, s"$what: $c")
+        assert(kernels[StEnvelope](c) == 0, s"$what: $c")
+      }
+    }
     Seq(SpatialJoin.Config(),
         SpatialJoin.Config(predicate = "dwithin", distance = 1.0),
         SpatialJoin.Config(predicate = "dwithin", distance = 1000.0, earth = true))
       .foreach { cfg =>
-        val (l, r) = SpatialJoin.enveloped(a, "a_geom", b, "b_geom", cfg)
-        Seq(l, r).foreach { side =>
-          assert(kernels[StGeomFromWkt](side) == 1, side.queryExecution.optimizedPlan)
-          assert(kernels[StEnvelope](side) == 1, side.queryExecution.optimizedPlan)
+        check(s"join $cfg", SpatialJoin.join(a, "a_geom", b, "b_geom", cfg))
+        Seq(cfg.knnBroadcastThreshold, 0).foreach { t =>
+          check(s"knnJoinExact $cfg threshold $t", SpatialJoin.knnJoinExact(a, "a_geom", b, "b_geom",
+            3, cfg = cfg.copy(knnBroadcastThreshold = t)))
         }
       }
+    Seq("st_intersects(a_geom, b_geom)", "st_dwithin(a_geom, b_geom, 1.0)").foreach { on =>
+      check(on, spark.sql(s"SELECT a_id, b_id FROM once_a JOIN once_b ON $on"))
+    }
     val joined = SpatialJoin.join(a, "a_geom", b, "b_geom").count()
     assert(joined > 40)
   }
