@@ -2,13 +2,16 @@ package graft.operators
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkTestBase
 import graft.operators.SpatialJoin3d.Mbb3Cols
 
 /** 3-D MBB join: exactness vs brute force, dedup (each pair once),
-  * malformed tolerance, degenerate space, normalization. */
+  * malformed tolerance, degenerate space, normalization, and a
+  * differential property over every tiling and probe form. */
 class SpatialJoin3dSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -39,6 +42,111 @@ class SpatialJoin3dSpec extends SparkTestBase {
       }
       assert(got.length == got.distinct.length, s"dup pairs at cells=$cells")
       assert(got.toSet == want.toSet, s"cells=$cells")
+    }
+  }
+
+  private type Box = (Long, Double, Double, Double, Double, Double, Double)
+
+  /** MBB gap distance, the engine's arithmetic. */
+  private def gap(l: Box, r: Box): Double = {
+    def ax(lo1: Double, hi1: Double, lo2: Double, hi2: Double) =
+      math.max(math.max(lo1 - hi2, lo2 - hi1), 0.0)
+    val dx = ax(l._2, l._5, r._2, r._5)
+    val dy = ax(l._3, l._6, r._3, r._6)
+    val dz = ax(l._4, l._7, r._4, r._7)
+    math.sqrt(dx * dx + dy * dy + dz * dz)
+  }
+
+  /** Finite bounds with min <= max on every axis: the rows a 3-D join keeps. */
+  private def wellFormed(b: Box): Boolean =
+    Seq(b._2, b._3, b._4, b._5, b._6, b._7).forall(v => !v.isNaN && !v.isInfinite) &&
+      b._2 <= b._5 && b._3 <= b._6 && b._4 <= b._7
+
+  /** A box on a coarse lattice, so boxes touch and distances tie; `flat`
+    * pins the z axis to one value (a zero-span axis). */
+  private def boxGen(flat: Boolean): Gen[(Double, Double, Double, Double)] = for {
+    x <- Gen.choose(0, 20); y <- Gen.choose(0, 16); z <- Gen.choose(0, 12)
+    w <- Gen.oneOf(0.0, 0.0, 1.0, 3.0, 8.0)
+  } yield (x * 5.0, y * 5.0, if (flat) 7.0 else z * 5.0, w)
+
+  private def boxes(n: Gen[Int], flat: Boolean, from: Long): Gen[Seq[Box]] =
+    n.flatMap(Gen.listOfN(_, boxGen(flat))).map(_.zipWithIndex.map {
+      case ((x, y, z, w), i) => (from + i, x, y, z, x + w, y + w, if (flat) z else z + w)
+    })
+
+  /** The input shapes of the differential property: (lefts, rights, k). */
+  private val shapes: Seq[(String, Gen[(Seq[Box], Seq[Box], Int)])] = Seq(
+    "random boxes and points" -> (for {
+      k <- Gen.choose(1, 5)
+      a <- boxes(Gen.choose(1, 50), flat = false, 0L)
+      b <- boxes(Gen.choose(k, 60), flat = false, 1000L)
+    } yield (a, b, k)),
+    // every right box stacked more than k times under distinct ids: k cuts
+    // through a group of equidistant rows
+    "stacked duplicates" -> (for {
+      k <- Gen.choose(2, 5); copies <- Gen.choose(k + 1, k + 3)
+      a <- boxes(Gen.choose(1, 30), flat = false, 0L)
+      base <- boxes(Gen.choose(1, 12), flat = false, 0L)
+    } yield (a, base.flatMap(c => (0 until copies).map(cp =>
+      c.copy(_1 = 1000L + c._1 * 100 + cp))), k)),
+    "a zero-span axis" -> (for {
+      k <- Gen.choose(1, 4)
+      a <- boxes(Gen.choose(1, 40), flat = true, 0L)
+      b <- boxes(Gen.choose(k, 40), flat = true, 1000L)
+    } yield (a, b, k)),
+    // fewer right rows than k, down to none
+    "k above the right side" -> (for {
+      k <- Gen.choose(2, 6)
+      a <- boxes(Gen.choose(1, 20), flat = false, 0L)
+      b <- boxes(Gen.choose(0, k - 1), flat = false, 1000L)
+    } yield (a, b, k)))
+
+  test("property: joinMbb, knnJoinMbb and knnJoinMbbOc == brute force on every tiling and probe form") {
+    val lCols = Seq("aid", "ax0", "ay0", "az0", "ax1", "ay1", "az1")
+    val rCols = Seq("bid", "bx0", "by0", "bz0", "bx1", "by1", "bz1")
+    def knnVariants(k: Int): Seq[(String, (DataFrame, DataFrame) => DataFrame)] =
+      Seq(1, 4, 8).flatMap(cells => Seq(1000000L, 0L).map { pcm =>
+        s"grid cells=$cells probeCollectMax=$pcm" -> ((a: DataFrame, b: DataFrame) =>
+          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k, cellsPerAxis = cells,
+            bruteRightMax = 0, probeCollectMax = pcm))
+      }) ++ Seq(4, 64, 100000).flatMap(cap => Seq(1000000L, 0L).map { pcm =>
+        s"octree leafCap=$cap probeCollectMax=$pcm" -> ((a: DataFrame, b: DataFrame) =>
+          SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k, leafCap = cap,
+            sampleTarget = 200, probeCollectMax = pcm))
+      }) ++ Seq(
+        "grid brute" -> ((a: DataFrame, b: DataFrame) =>
+          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k)),
+        "grid shuffle-hash collapse" -> ((a: DataFrame, b: DataFrame) =>
+          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k, cellsPerAxis = 4,
+            bruteRightMax = 0, broadcastRightMax = 0L, dupCollapseMin = 0L)),
+        "octree collapse" -> ((a: DataFrame, b: DataFrame) =>
+          SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k, leafCap = 16,
+            sampleTarget = 200, dupCollapseMin = 0L)))
+    shapes.foreach { case (shape, gen) =>
+      val prop = Prop.forAllNoShrink(gen) { case (as, bs, k) =>
+        val a = as.toDF(lCols: _*); val b = bs.toDF(rCols: _*)
+        val (la, rb) = (as.filter(wellFormed), bs.filter(wellFormed))
+        val wantJoin = (for (l <- la; r <- rb if gap(l, r) == 0.0) yield (l._1, r._1)).sorted
+        Seq(1, 4, 8).foreach { cells =>
+          val got = SpatialJoin3d.joinMbb(a, lc, b, rc, cellsPerAxis = cells)
+            .select("aid", "bid").as[(Long, Long)].collect().toSeq.sorted
+          assert(got == wantJoin, s"$shape: joinMbb cells=$cells")
+        }
+        val wantKnn = la.flatMap { l =>
+          rb.map(r => (gap(l, r), r._1)).sorted.take(k).zipWithIndex
+            .map { case ((d, r), i) => (l._1, r, i + 1, d) }
+        }.sorted
+        // the octree kNN emits a pair from two leaves when an axis has zero
+        // span; that case lands with its fix
+        knnVariants(k).filterNot(v => shape == "a zero-span axis" && v._1.startsWith("octree")).foreach { case (name, run) =>
+          val got = run(a, b).select("aid", "bid", "knn_rank", "knn_dist")
+            .as[(Long, Long, Int, Double)].collect().toSeq.sorted
+          assert(got == wantKnn, s"$shape: $name, k=$k")
+        }
+        true
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2).withWorkers(1), prop)
+      assert(res.passed, s"$shape: $res")
     }
   }
 
