@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 testdata synthesis for the cross-SF correctness sidecar
@@ -31,13 +31,7 @@ object ScaleData {
     require(copies >= 1 && copies <= 100,
       s"copies must be in [1, 100], got $copies")
     val src = "/root/testdata/sf0.1"
-    val cpus = Sessions.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val Shift = 10000000L
 

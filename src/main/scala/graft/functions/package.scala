@@ -53,10 +53,6 @@ package object functions {
   def st_dice(a: Column, b: Column): Column = col(StOverlapMeasure(ex(a), ex(b), "dice"))
   def hilbert(x: Column, y: Column, order: Column): Column =
     col(HilbertValue(ex(x), ex(y), ex(order)))
-  /** Exact k-th smallest double per group, k-bounded heap state with
-    * map-side partial aggregation; null when fewer than k values. */
-  def kth_smallest(c: Column, k: Int): Column =
-    col(KthSmallest(ex(c), k).toAggregateExpression())
 
   def intervals_overlap(a: Column, b: Column): Column = col(IntervalsOverlap(ex(a), ex(b)))
   def intervals_contain(a: Column, b: Column): Column = col(IntervalsContain(ex(a), ex(b)))

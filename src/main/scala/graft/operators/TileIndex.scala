@@ -30,7 +30,7 @@ import graft.core.{Mbb, TileBoundary}
   *
   * `tileWeights` are the per-tile object counts planning already took (the
   * exact fg histogram, or sample counts); absent tiles weigh 0. They order
-  * the refine tasks ([[refineSlots]]).
+  * the refine tasks ([[refineKeys]]).
   *
   * The public constructor pads `rawTiles`; the private one (told apart by
   * its `covered` marker) takes tiles that already cover the space.
@@ -55,42 +55,18 @@ final class TileIndex private (val tiles: Array[TileBoundary], val space: Mbb,
   /** Shards for a tile (>1 only for spatially-unsplittable hotspots). */
   def shardsOf(tile: Int): Int = shardCounts.getOrElse(tile, 1)
 
-  /** Dense refine-task slots for the composite (tile, shard) keys of
-    * [[probeKeys]]/[[buildKeys]]: returns the slot count, min(keys,
-    * `maxSlots`), and each key's slot. A key weighs its tile's weight over
-    * the tile's shard count (the probe rows split across shards). Keys are
-    * packed longest-processing-time first: each, heaviest first (key id on
-    * ties), joins the least-loaded slot (on ties the one holding fewest
-    * keys, then the lowest). Up to `maxSlots` keys that gives every key its
-    * own slot in rank order, so the scheduler, which launches tasks in
-    * partition order, starts the heaviest first; weightless keys (tiles no
-    * count saw, or the uniform `*_dist` tilings) deal round-robin. Against
-    * round-robin dealing of the same ranking, packing cut the planned
-    * heaviest slot from 1.18-1.23x the mean load to 1.02-1.14x on the
-    * q_spjoin gates at sf0.1 (70-142 keys on 16 slots). */
-  def refineSlots(maxSlots: Int): (Int, Map[Long, Int]) = {
-    require(maxSlots >= 1, s"maxSlots must be >= 1, got $maxSlots")
-    val keys = tiles.flatMap { tb =>
-      val s = shardsOf(tb.tileId)
-      val w = tileWeights.getOrElse(tb.tileId, 0L).toDouble / s
-      (0 until s).map(sh => (tb.tileId.toLong * TileIndex.MaxShards + sh, w))
-    }.sortBy { case (k, w) => (-w, k) }
-    val n = math.min(keys.length, maxSlots)
-    val load = new Array[Double](n)
-    val held = new Array[Int](n)
-    val open = new java.util.PriorityQueue[Int](math.max(n, 1), (a: Int, b: Int) =>
-      if (load(a) != load(b)) java.lang.Double.compare(load(a), load(b))
-      else if (held(a) != held(b)) Integer.compare(held(a), held(b))
-      else Integer.compare(a, b))
-    (0 until n).foreach(i => open.add(i))
-    val slotOf = keys.map { case (k, w) =>
-      val slot = open.poll()
-      load(slot) += w; held(slot) += 1
-      open.add(slot)
-      k -> slot
-    }
-    (n, slotOf.toMap)
+  /** The composite (tile, shard) keys of [[probeKeys]]/[[buildKeys]], the
+    * refine keys of [[SpatialJoin.slotCogroup]]: each weighs its tile's
+    * weight over the tile's shard count (the probe rows split across
+    * shards). */
+  def refineKeys: Seq[(Long, Double)] = tiles.toSeq.flatMap { tb =>
+    val s = shardsOf(tb.tileId)
+    val w = tileWeights.getOrElse(tb.tileId, 0L).toDouble / s
+    (0 until s).map(sh => (tb.tileId.toLong * TileIndex.MaxShards + sh, w))
   }
+
+  /** The refine slots of [[refineKeys]] ([[SpatialJoin.planSlots]]). */
+  def refineSlots(maxSlots: Int): (Int, Map[Long, Int]) = SpatialJoin.planSlots(refineKeys, maxSlots)
 
   /** Composite cogroup keys for the PROBE side: one (tile, shard) per
     * intersecting tile, shard picked by the row's salt — hot tiles split

@@ -370,8 +370,8 @@ object Queries {
       | CAST(1 + p_size % 10 AS DOUBLE) AS w FROM part""".stripMargin
 
   /** 3-D MBB intersects self-join (the reference's resque3d/fg3d MBB path,
-    * src/README.md:5-15) — fully relational fg3d tiling + closed-envelope
-    * refine + column-arithmetic refpoint dedup in SpatialJoin3d. */
+    * src/README.md:5-15) — SpatialJoin3d.joinMbb: fg3d cells on the refine
+    * slots, closed-envelope refine, reference-point dedup. */
   def qSpjoin3d(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.SpatialJoin3d
     val b = partCubes(spark, dir)
@@ -394,8 +394,8 @@ object Queries {
        | AND a.z0 <= c.z0 + c.w AND c.z0 <= a.z0 + a.w""".stripMargin
 
   /** 3-D exact kNN: customer lattice points to their 3 nearest part cubes
-    * by MBB gap distance (SpatialJoin3d.knnJoinMbb — two-pass owner-cell,
-    * fully relational). Rank-only output: squared gap distances are exact
+    * by MBB gap distance (SpatialJoin3d.knnJoinMbb — per-row probe radius,
+    * then the per-cell kernel on the refine slots). Rank-only output: squared gap distances are exact
     * lattice integers, so the oracle ranks on dx²+dy²+dz² with the same
     * (distance, id) tie order and never compares a sqrt. */
   def qKnn3d(spark: SparkSession, dir: String): DataFrame = {
@@ -411,7 +411,7 @@ object Queries {
       (col("z0") + col("w")).as("sz1"))
     val lc = SpatialJoin3d.Mbb3Cols("cx", "cy", "cz", "cx", "cy", "cz")
     val rc = SpatialJoin3d.Mbb3Cols("sx0", "sy0", "sz0", "sx1", "sy1", "sz1")
-    SpatialJoin3d.knnJoinMbb(custs, lc, "cid", parts, rc, "sid", k = 3,
+    SpatialJoin3d.knnJoinMbb(custs, lc, parts, rc, "sid", k = 3,
         cellsPerAxis = 8)
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
   }
@@ -435,7 +435,7 @@ object Queries {
       (col("z0") + col("w")).as("sz1"))
     val lc = SpatialJoin3d.Mbb3Cols("cx", "cy", "cz", "cx", "cy", "cz")
     val rc = SpatialJoin3d.Mbb3Cols("sx0", "sy0", "sz0", "sx1", "sy1", "sz1")
-    SpatialJoin3d.knnJoinMbbOc(custs, lc, "cid", parts, rc, "sid", k = 3,
+    SpatialJoin3d.knnJoinMbbOc(custs, lc, parts, rc, "sid", k = 3,
         leafCap = 512)
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
   }
@@ -917,7 +917,8 @@ object Queries {
        | AND a.y0 <= c.y0 + c.w AND c.y0 <= a.y0 + a.w
        | AND a.z0 <= c.z0 + c.w AND c.z0 <= a.z0 + a.w""".stripMargin
 
-  /** q_knn_3d on area-growth geometry (uniform-grid MBB kNN engine). */
+  /** q_knn_3d on area-growth geometry (SpatialJoin3d.knnJoinMbb, the grid
+    * kNN; stacked copies may move it onto the octree). */
   def qKnn3dArea(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.SpatialJoin3d
     val custs = table(spark, dir, "customer").select(
@@ -934,7 +935,7 @@ object Queries {
       (col("z0") + col("w")).as("sz1"))
     val lc = SpatialJoin3d.Mbb3Cols("cx", "cy", "cz", "cx", "cy", "cz")
     val rc = SpatialJoin3d.Mbb3Cols("sx0", "sy0", "sz0", "sx1", "sy1", "sz1")
-    SpatialJoin3d.knnJoinMbb(custs, lc, "cid", parts, rc, "sid", k = 3,
+    SpatialJoin3d.knnJoinMbb(custs, lc, parts, rc, "sid", k = 3,
         cellsPerAxis = 8)
       .select(col("cid"), col("sid"), col("knn_rank").as("rk"))
   }

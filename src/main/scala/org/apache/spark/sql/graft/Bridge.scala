@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Expression <-> Column and RDD <-> DataFrame bridge. `ExpressionUtils`,
@@ -28,6 +29,10 @@ object Bridge {
     * operators built at run time take their context from. */
   def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
 
+  /** A DataFrame over the internal `rows`, laid out as `schema`. */
+  def ofRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    castToImpl(spark).internalCreateDataFrame(rows, schema)
+
   /** `df`'s rows copied into an RDD-level MEMORY_AND_DISK persist, exposed
     * as a DataFrame: every job over the returned frame reads the copy
     * instead of re-running `df`'s plan. Unlike `Dataset.persist`, nothing
@@ -36,7 +41,7 @@ object Bridge {
     * returned RDD is the handle to unpersist it by. */
   def persisted(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
     val rows = castToImpl(df).queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
-    (castToImpl(df.sparkSession).internalCreateDataFrame(rows, df.schema), rows)
+    (ofRows(df.sparkSession, rows, df.schema), rows)
   }
 
   /** A copy of `spark` with `confs` set: it keeps the caller's runtime

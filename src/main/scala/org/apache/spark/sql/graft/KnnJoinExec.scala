@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -201,7 +200,7 @@ case class KnnJoinExec(
     val tileKeys = (row: InternalRow) => bc.value.buildKeys(row.getDouble(rEnv(0)),
       row.getDouble(rEnv(1)), row.getDouble(rEnv(2)), row.getDouble(rEnv(3))).iterator
     val (lg, rg) = (lGeom(lIn) + 2, rGeom(rIn) + 2)
-    SpatialJoin.slotCogroup(session, owners, lRows, lIn, ownerKey, rRows, rIn, tileKeys) { build =>
+    SpatialJoin.slotCogroup(session, owners.refineKeys, lRows, lIn, ownerKey, rRows, rIn, tileKeys) { build =>
       val items = build.map(row => (GeometryCodec.fromWkb(row.getBinary(rg)), row.copy())).toArray
       (new KnnTile(items.map(_._1)), items.map(_._2))
     } { () =>
@@ -415,7 +414,7 @@ case class KnnJoinExec(
     val cIn = (id +: pairCols) :+ distA
     val (lK, rK) = (keyed(uIn), keyed(rIn))
     val (lg, rEnvK) = (lGeom(uIn) + 2, rEnv.map(_ + 2))
-    val cands = SpatialJoin.slotCogroup(session, sharded, l2, uIn, l2Keys, rRows, rIn, r2Keys)(
+    val cands = SpatialJoin.slotCogroup(session, sharded.refineKeys, l2, uIn, l2Keys, rRows, rIn, r2Keys)(
         SpatialJoin.rowTree(rGeom(rIn) + 2, rEnvK)) { () =>
       val proj = UnsafeProjection.create(cIn, lK ++ rK :+ distA)
       val dist = new GenericInternalRow(1)
@@ -457,21 +456,7 @@ case class KnnJoinExec(
     }
     // one reduce by left id ranks each row's candidates by (distance,
     // tie-break), the order the broadcast path ranks by
-    val ranked = SpatialJoin.clustered(session, cands, cIn,
-        HashPartitioning(Seq(id), sc.defaultParallelism),
-        Seq(SortOrder(id, Ascending), SortOrder(distA, Ascending)) ++ tieOrder(cIn))
-      .mapPartitions[InternalRow] { rows =>
-        val proj = UnsafeProjection.create(output, cIn :+ rankA)
-        val rank = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        var (last, n) = (-1L, 0)
-        rows.flatMap { row =>
-          if (row.getLong(0) != last) { last = row.getLong(0); n = 0 }
-          n += 1
-          if (n > kk || row.getDouble(cIn.length - 1) >= maxD) None
-          else { rank.setInt(0, n); Some(proj(joined(row, rank))) }
-        }
-      }
+    val ranked = SpatialJoin.ranked(session, cands, cIn, tieOrder(cIn), k, maxDistance, output, rankA)
     safe.union(ranked)
   }
 
@@ -539,7 +524,7 @@ case class KnnJoinExec(
         .flatMap { case (ts, o) => ts.map(_ -> o.toLong * TileIndex.MaxShards) }.groupMap(_._1)(_._2))
       val candIn = Seq(AttributeReference("__t", IntegerType, nullable = false)(),
         AttributeReference("__cands", ArrayType(DoubleType, containsNull = false), nullable = false)())
-      SpatialJoin.slotCogroup(session, index.withCounts(Map.empty, index.tileWeights),
+      SpatialJoin.slotCogroup(session, index.withCounts(Map.empty, index.tileWeights).refineKeys,
           rows, in, row => Iterator.single(owner(row).toLong * TileIndex.MaxShards),
           candidates.map { case (t, a) => InternalRow(t, new GenericArrayData(a)) }, candIn,
           row => ringOf.value.getOrElse(row.getInt(0), Array.empty[Long]).iterator) {

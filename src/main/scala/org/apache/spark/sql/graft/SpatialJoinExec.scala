@@ -289,7 +289,7 @@ case class SpatialJoinExec(
         else Cast(IntegralDivide(lK(1), Literal(TileIndex.MaxShards.toLong)), IntegerType)
       }, lK ++ rK)
 
-    val refined = SpatialJoin.slotCogroup(session, index, lRows, lIn, probeKeys, rRows, rIn, buildKeys)(
+    val refined = SpatialJoin.slotCogroup(session, index.refineKeys, lRows, lIn, probeKeys, rRows, rIn, buildKeys)(
         SpatialJoin.rowTree(rg, ords(rK, rightEnv))) { () =>
       val residual = cond.map { c =>
         val p = Predicate.create(c, lK ++ rK); p.initialize(0); p

@@ -517,6 +517,20 @@ class PlanHealthSpec extends SparkTestBase {
       .toSeq
     assert(defs.size == 1, s"slotCogroup definitions: $defs")
     assert(lines.exists(_.contains("ShufflePartitionIdPassThrough(")), "lint lost the slot shuffle")
+    // the 3-D operators refine on the same slots: no relational twin —
+    // window ranks, exploded cell ids, cross joins, broadcast-hinted or
+    // hinted joins — regrows in any 3-D operator file. A SparkContext
+    // broadcast variable (`sc.broadcast(...)`) is no join hint.
+    val twin = """Window|row_number|explode\(|crossJoin|(?<![.\w])broadcast\(|\.hint\(""".r
+    val threeD = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/operators"))
+      .iterator.asScala.filter(_.getFileName.toString.matches(".*3[dD].*\\.scala")).toSeq
+    assert(threeD.exists(_.getFileName.toString == "SpatialJoin3d.scala"), s"lint lost SpatialJoin3d: $threeD")
+    val twinHits = threeD.flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if twin.findFirstIn(line).isDefined => s"${p.getFileName}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(twinHits.isEmpty, s"relational 3-D twin: ${twinHits.mkString("; ")}")
   }
 
   test("span dedup reassembly never explodes the corpus into token rows") {

@@ -178,5 +178,31 @@ class AdversarialInputSpec extends SparkTestBase {
     val out = SpatialJoin3d.joinMbb(l, C, r, RC, cellsPerAxis = 4)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(out == (0 until 6).map(i => (i.toLong, i + 1000L)).toSet)
+
+    // the kNN on both tilings and both probe forms answers as if the
+    // malformed rows of either side were absent: an infinite right box is
+    // no neighbour and no bound of the space
+    val rDirty = r.union(Seq(
+      (2000L, 0.0, 0.0, 0.0, Double.PositiveInfinity, 1.0, 1.0),
+      (2001L, 2.0, Double.NaN, 0.0, 3.0, 1.0, 1.0),
+      (2002L, 9.0, 0.0, 0.0, 3.0, 1.0, 1.0)).toDF("rid", "rx0", "ry0", "rz0", "rx1", "ry1", "rz1"))
+    def gap(a: (Long, Double, Double, Double, Double, Double, Double), b: (Long, Double, Double, Double, Double, Double, Double)) = {
+      val dx = math.max(math.max(a._2 - b._5, b._2 - a._5), 0.0)
+      val dy = math.max(math.max(a._3 - b._6, b._3 - a._6), 0.0)
+      val dz = math.max(math.max(a._4 - b._7, b._4 - a._7), 0.0)
+      math.sqrt(dx * dx + dy * dy + dz * dz)
+    }
+    val want = clean.flatMap { a =>
+      clean.map(b => (gap(a, b), b._1 + 1000)).sorted.take(3).zipWithIndex
+        .map { case ((_, rid), i) => (a._1, rid, i + 1) }
+    }.toSet
+    Seq(1000000L, 0L).foreach { pcm =>
+      val grid = SpatialJoin3d.knnJoinMbb(l, C, rDirty, RC, "rid", k = 3, cellsPerAxis = 4, probeCollectMax = pcm)
+      val oc = SpatialJoin3d.knnJoinMbbOc(l, C, rDirty, RC, "rid", k = 3, leafCap = 2, probeCollectMax = pcm)
+      Seq("grid" -> grid, "octree" -> oc).foreach { case (name, df) =>
+        val got = df.select("lid", "rid", "knn_rank").as[(Long, Long, Int)].collect()
+        assert(got.length == want.size && got.toSet == want, s"$name kNN, probeCollectMax = $pcm")
+      }
+    }
   }
 }

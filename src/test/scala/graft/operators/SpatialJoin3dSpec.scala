@@ -9,8 +9,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkTestBase
 import graft.operators.SpatialJoin3d.Mbb3Cols
 
-/** 3-D MBB join: exactness vs brute force, dedup (each pair once),
-  * malformed tolerance, degenerate space, normalization, and a
+/** 3-D MBB join and kNN: exactness vs brute force, dedup (each pair
+  * once), malformed tolerance, degenerate space, normalization, and a
   * differential property over every tiling and probe form. */
 class SpatialJoin3dSpec extends SparkTestBase {
   import spark.implicits._
@@ -99,7 +99,32 @@ class SpatialJoin3dSpec extends SparkTestBase {
       k <- Gen.choose(2, 6)
       a <- boxes(Gen.choose(1, 20), flat = false, 0L)
       b <- boxes(Gen.choose(0, k - 1), flat = false, 1000L)
-    } yield (a, b, k)))
+    } yield (a, b, k)),
+    // a NaN or infinite bound, or min > max, on either side: such rows are
+    // neither answered nor neighbours, nor do they bound the space
+    "malformed rows on both sides" -> (for {
+      k <- Gen.choose(1, 4)
+      a <- boxes(Gen.choose(1, 30), flat = false, 0L)
+      b <- boxes(Gen.choose(k, 40), flat = false, 1000L)
+      bad <- Gen.listOfN(4, Gen.zip(Gen.choose(0, 5), Gen.oneOf(Double.NaN,
+        Double.PositiveInfinity, Double.NegativeInfinity, -1.0)))
+    } yield {
+      // the bound at index i of the box set to v; -1 swaps the axis' bounds
+      def broken(x: Box, i: Int, v: Double): Box = {
+        val bs = Array(x._2, x._3, x._4, x._5, x._6, x._7)
+        if (v == -1.0) { val a = i % 3; bs(a) = bs(a + 3) + 1 } else bs(i) = v
+        (x._1, bs(0), bs(1), bs(2), bs(3), bs(4), bs(5))
+      }
+      val (la, lb) = bad.splitAt(2)
+      (a ++ la.zipWithIndex.map { case ((i, v), j) => broken(a(j % a.length), i, v).copy(_1 = 500L + j) },
+       b ++ lb.zipWithIndex.map { case ((i, v), j) => broken(b(j % b.length), i, v).copy(_1 = 5000L + j) }, k)
+    }),
+    // left rows sharing an id are each answered on their own
+    "duplicated left ids" -> (for {
+      k <- Gen.choose(1, 4)
+      a <- boxes(Gen.choose(2, 30), flat = false, 0L)
+      b <- boxes(Gen.choose(k, 40), flat = false, 1000L)
+    } yield (a.map(x => x.copy(_1 = x._1 / 3)), b, k)))
 
   test("property: joinMbb, knnJoinMbb and knnJoinMbbOc == brute force on every tiling and probe form") {
     val lCols = Seq("aid", "ax0", "ay0", "az0", "ax1", "ay1", "az1")
@@ -107,21 +132,12 @@ class SpatialJoin3dSpec extends SparkTestBase {
     def knnVariants(k: Int): Seq[(String, (DataFrame, DataFrame) => DataFrame)] =
       Seq(1, 4, 8).flatMap(cells => Seq(1000000L, 0L).map { pcm =>
         s"grid cells=$cells probeCollectMax=$pcm" -> ((a: DataFrame, b: DataFrame) =>
-          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k, cellsPerAxis = cells,
-            bruteRightMax = 0, probeCollectMax = pcm))
+          SpatialJoin3d.knnJoinMbb(a, lc, b, rc, "bid", k, cellsPerAxis = cells, probeCollectMax = pcm))
       }) ++ Seq(4, 64, 100000).flatMap(cap => Seq(1000000L, 0L).map { pcm =>
         s"octree leafCap=$cap probeCollectMax=$pcm" -> ((a: DataFrame, b: DataFrame) =>
-          SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k, leafCap = cap,
+          SpatialJoin3d.knnJoinMbbOc(a, lc, b, rc, "bid", k, leafCap = cap,
             sampleTarget = 200, probeCollectMax = pcm))
-      }) ++ Seq(
-        "grid brute" -> ((a: DataFrame, b: DataFrame) =>
-          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k)),
-        "grid shuffle-hash collapse" -> ((a: DataFrame, b: DataFrame) =>
-          SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k, cellsPerAxis = 4,
-            bruteRightMax = 0, broadcastRightMax = 0L, dupCollapseMin = 0L)),
-        "octree collapse" -> ((a: DataFrame, b: DataFrame) =>
-          SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k, leafCap = 16,
-            sampleTarget = 200, dupCollapseMin = 0L)))
+      })
     shapes.foreach { case (shape, gen) =>
       val prop = Prop.forAllNoShrink(gen) { case (as, bs, k) =>
         val a = as.toDF(lCols: _*); val b = bs.toDF(rCols: _*)
@@ -136,9 +152,7 @@ class SpatialJoin3dSpec extends SparkTestBase {
           rb.map(r => (gap(l, r), r._1)).sorted.take(k).zipWithIndex
             .map { case ((d, r), i) => (l._1, r, i + 1, d) }
         }.sorted
-        // the octree kNN emits a pair from two leaves when an axis has zero
-        // span; that case lands with its fix
-        knnVariants(k).filterNot(v => shape == "a zero-span axis" && v._1.startsWith("octree")).foreach { case (name, run) =>
+        knnVariants(k).foreach { case (name, run) =>
           val got = run(a, b).select("aid", "bid", "knn_rank", "knn_dist")
             .as[(Long, Long, Int, Double)].collect().toSeq.sorted
           assert(got == wantKnn, s"$shape: $name, k=$k")
@@ -188,115 +202,32 @@ class SpatialJoin3dSpec extends SparkTestBase {
       }.sortBy { case (_, bid, d) => (d, bid) }.take(3)
         .zipWithIndex.map { case ((aid, bid, _), i) => (aid, bid, i + 1) }
     }.toSet
-    // bruteRightMax = 0 pins the cell machinery: spec-sized rights would
-    // otherwise take the tiny-right broadcast nested-loop shortcut
     Seq(1, 4, 8).foreach { cells =>
-      val got = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 3,
-          cellsPerAxis = cells, bruteRightMax = 0)
+      val got = SpatialJoin3d.knnJoinMbb(a, lc, b, rc, "bid", k = 3, cellsPerAxis = cells)
         .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
       assert(got.length == want.size, s"row count at cells=$cells")
       assert(got.toSet == want, s"kNN mismatch at cells=$cells")
     }
-    // the tiny-right brute branch (default bruteRightMax admits 300
-    // rights) answers identically
-    val gotBr = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 3)
-      .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
-    assert(gotBr.toSet == want, "brute branch kNN mismatch")
     // octree tiling: same exact answer at several leaf capacities,
     // including a cap so small the tree bottoms out at maxDepth and a cap
     // so large the tree is a single root leaf
     Seq(4, 64, 100000).foreach { cap =>
-      val got = SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k = 3,
+      val got = SpatialJoin3d.knnJoinMbbOc(a, lc, b, rc, "bid", k = 3,
           leafCap = cap, sampleTarget = 200)
         .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
       assert(got.length == want.size, s"row count at leafCap=$cap")
       assert(got.toSet == want, s"octree kNN mismatch at leafCap=$cap")
     }
-    // both join strategies answer identically: broadcastRightMax = 0
-    // forces the cell-partitioned shuffle-hash path (the 100 TB branch
-    // the default broadcast threshold would skip on spec-sized rights)
-    val gotSh = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 3,
-        cellsPerAxis = 4, broadcastRightMax = 0L, bruteRightMax = 0)
-      .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
-    assert(gotSh.toSet == want, "shuffle-hash branch kNN mismatch")
     // both PROBE forms answer identically: probeCollectMax = 0 forces the
-    // relational giant-tiling probe (plan/probe joins + kth_smallest
-    // aggregate) that the collected-map default skips at spec scale
-    val gotRel = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 3,
-        cellsPerAxis = 4, bruteRightMax = 0, probeCollectMax = 0L)
+    // probe on the refine slots that the collected map skips at spec scale
+    val gotRel = SpatialJoin3d.knnJoinMbb(a, lc, b, rc, "bid", k = 3,
+        cellsPerAxis = 4, probeCollectMax = 0L)
       .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
     assert(gotRel.toSet == want, "relational probe branch kNN mismatch")
-    val gotRelOc = SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid",
+    val gotRelOc = SpatialJoin3d.knnJoinMbbOc(a, lc, b, rc, "bid",
         k = 3, leafCap = 64, sampleTarget = 200, probeCollectMax = 0L)
       .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect()
     assert(gotRelOc.toSet == want, "octree relational probe kNN mismatch")
-  }
-
-  test("knnJoinMbb: multiplicity collapse == uncollapsed on stacked duplicates") {
-    // stacked-lattice shape: every right geometry appears 5x with distinct
-    // ids (the sf10 pathology in miniature). k = 7 deliberately cuts
-    // THROUGH a duplicate group (7 = 5 + 2), so correctness depends on the
-    // weighted rank arithmetic keeping boundary tie groups and the
-    // re-expansion re-ranking by (dist, id) exactly.
-    val base = cubes(60, 31, 6.0)
-    val stacked = base.flatMap { c =>
-      (0 until 5).map(cp => (c._1 + cp * 1000L, c._2, c._3, c._4, c._5, c._6, c._7))
-    }
-    val probes = cubes(40, 41, 0.0).map(p => (p._1, p._2, p._3, p._4))
-    val a = probes.toDF("aid", "ax0", "ay0", "az0")
-      .withColumn("ax1", col("ax0")).withColumn("ay1", col("ay0"))
-      .withColumn("az1", col("az0"))
-    val b = stacked.toDF("bid", "bx0", "by0", "bz0", "bx1", "by1", "bz1")
-    def gap(lo1: Double, hi1: Double, lo2: Double, hi2: Double) =
-      math.max(math.max(lo1 - hi2, lo2 - hi1), 0.0)
-    val want = probes.flatMap { p =>
-      stacked.map { q =>
-        val dx = gap(p._2, p._2, q._2, q._5)
-        val dy = gap(p._3, p._3, q._3, q._6)
-        val dz = gap(p._4, p._4, q._4, q._7)
-        (p._1, q._1, math.sqrt(dx * dx + dy * dy + dz * dz))
-      }.sortBy { case (_, bid, d) => (d, bid) }.take(7)
-        .zipWithIndex.map { case ((aid, bid, _), i) => (aid, bid, i + 1) }
-    }.toSet
-    def run(dupMin: Long, bMax: Long = SpatialJoin3d.BroadcastRightMax) =
-      SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 7,
-          cellsPerAxis = 4, bruteRightMax = 0, broadcastRightMax = bMax,
-          dupCollapseMin = dupMin)
-        .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect().toSet
-    val uncollapsed = run(Long.MaxValue)
-    assert(uncollapsed == want, "uncollapsed baseline mismatch vs brute force")
-    assert(run(0L) == want, "collapsed (broadcast bound join) mismatch")
-    assert(run(0L, bMax = 0L) == want, "collapsed (shuffle-hash bound join) mismatch")
-    val oc = SpatialJoin3d.knnJoinMbbOc(a, lc, "aid", b, rc, "bid", k = 7,
-        leafCap = 16, sampleTarget = 200, dupCollapseMin = 0L)
-      .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect().toSet
-    assert(oc == want, "collapsed octree mismatch")
-
-    // the sf10 shape proper: multiplicity (9) ≫ k (3), so the collapsed
-    // path's per-envelope top-k cut must discard the 6 larger ids of each
-    // group WITHOUT ever losing a row the global (dist, id) rank needs —
-    // including when the top-k straddles two equidistant groups
-    val stacked9 = base.flatMap { c =>
-      (0 until 9).map(cp => (c._1 + cp * 1000L, c._2, c._3, c._4, c._5, c._6, c._7))
-    }
-    val b9 = stacked9.toDF("bid", "bx0", "by0", "bz0", "bx1", "by1", "bz1")
-    val want9 = probes.flatMap { p =>
-      stacked9.map { q =>
-        val dx = gap(p._2, p._2, q._2, q._5)
-        val dy = gap(p._3, p._3, q._3, q._6)
-        val dz = gap(p._4, p._4, q._4, q._7)
-        (p._1, q._1, math.sqrt(dx * dx + dy * dy + dz * dz))
-      }.sortBy { case (_, bid, d) => (d, bid) }.take(3)
-        .zipWithIndex.map { case ((aid, bid, _), i) => (aid, bid, i + 1) }
-    }.toSet
-    def run9(bMax: Long) =
-      SpatialJoin3d.knnJoinMbb(a, lc, "aid", b9, rc, "bid", k = 3,
-          cellsPerAxis = 4, bruteRightMax = 0, broadcastRightMax = bMax,
-          dupCollapseMin = 0L)
-        .select("aid", "bid", "knn_rank").as[(Long, Long, Int)].collect().toSet
-    assert(run9(SpatialJoin3d.BroadcastRightMax) == want9,
-      "collapsed mult>k (broadcast) mismatch")
-    assert(run9(0L) == want9, "collapsed mult>k (shuffle-hash) mismatch")
   }
 
   test("Octree3d.build: inseparable duplicate points stop splitting") {
@@ -328,16 +259,11 @@ class SpatialJoin3dSpec extends SparkTestBase {
     val b = Seq((10L, 5.0, 0.0, 0.0, 6.0, 1.0, 1.0),
                 (11L, 9.0, 0.0, 0.0, 9.5, 1.0, 1.0))
       .toDF("bid", "bx0", "by0", "bz0", "bx1", "by1", "bz1")
-    // default params: the tiny-right brute branch handles rights < k
-    val got = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 5,
-        cellsPerAxis = 4)
-      .select("bid", "knn_rank").as[(Long, Int)].collect().toSet
-    assert(got == Set((10L, 1), (11L, 2)))
-    // the cell machinery's rights-smaller-than-k behavior is identical
-    val gotCell = SpatialJoin3d.knnJoinMbb(a, lc, "aid", b, rc, "bid", k = 5,
-        cellsPerAxis = 4, bruteRightMax = 0)
-      .select("bid", "knn_rank").as[(Long, Int)].collect().toSet
-    assert(gotCell == Set((10L, 1), (11L, 2)))
+    Seq(1, 4).foreach { cells =>
+      val got = SpatialJoin3d.knnJoinMbb(a, lc, b, rc, "bid", k = 5, cellsPerAxis = cells)
+        .select("bid", "knn_rank").as[(Long, Int)].collect().toSet
+      assert(got == Set((10L, 1), (11L, 2)), s"cells=$cells")
+    }
   }
 
   test("normalized maps the space envelope to the unit cube") {
