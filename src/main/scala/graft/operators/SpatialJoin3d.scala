@@ -47,10 +47,7 @@ object SpatialJoin3d {
 
   /** Column bundle naming the six MBB sides of a relation. */
   final case class Mbb3Cols(xmin: String, ymin: String, zmin: String,
-                            xmax: String, ymax: String, zmax: String) {
-    def cols: Seq[Column] = Seq(col(xmin), col(ymin), col(zmin),
-      col(xmax), col(ymax), col(zmax))
-  }
+                            xmax: String, ymax: String, zmax: String)
 
   /** MBB gap distance between the boxes at offset `i` of `a` and `j` of `b`
     * (six doubles each: the mins, then the maxes); 0 when they intersect.
