@@ -555,19 +555,19 @@ object SpatialJoin3d {
     * record per (partition, cell) crosses its shuffle. */
   private def candidates(r: Side, tiling: Broadcast[Tiling], cells: Set[Int],
                          cap: Int): RDD[(Int, Array[Double])] = {
-    import Ordering.Double.TotalOrdering
-    type Cand = (Int, Double, Double, Double, Double, Double, Double)
+    // by content hash, then the bounds: a total order on distinct boxes
+    val byHash: Ordering[(Int, Array[Double])] = (a, b) =>
+      if (a._1 != b._1) Integer.compare(a._1, b._1) else java.util.Arrays.compare(a._2, b._2)
+    def top(cs: Vector[(Int, Array[Double])]) = if (cs.length <= cap) cs else cs.sorted(byHash).take(cap)
     val rb = r.bounds
     val cellsBc = r.rows.sparkContext.broadcast(cells)
-    def top(cs: Vector[Cand]) = if (cs.length <= cap) cs else cs.sorted.take(cap)
     r.rows.flatMap { row =>
       val b = box(row, rb)
       val c = tiling.value.centre(b)
-      if (cellsBc.value(c)) Some(c -> ((b(0), b(1), b(2), b(3), b(4), b(5)).##, b(0), b(1), b(2), b(3), b(4), b(5)))
-      else None
-    }.aggregateByKey(Vector.empty[Cand])((v, c) => if (v.length < 2 * cap) v :+ c else top(v :+ c),
+      if (cellsBc.value(c)) Some(c -> (java.util.Arrays.hashCode(b), b)) else None
+    }.aggregateByKey(Vector.empty[(Int, Array[Double])])((v, c) => if (v.length < 2 * cap) v :+ c else top(v :+ c),
       (a, b) => top(a ++ b))
-      .mapValues(top(_).flatMap(c => Seq(c._2, c._3, c._4, c._5, c._6, c._7)).toArray)
+      .mapValues(top(_).flatMap(_._2).toArray)
   }
 
   /** The refine stage of both operators, on `keys` (cells, with their
