@@ -28,7 +28,7 @@ import graft.functions.KthHeap
   * Both operators run on the 2-D engine's refine slots
   * ([[SpatialJoin.slotCogroup]]): each side is copied once as internal
   * rows (rows with a null or non-finite bound, or min > max on an axis,
-  * dropped), the driver plans from one or two small jobs over the copies,
+  * dropped), planning runs one or two small jobs over the copies,
   * and one per-cell kernel ([[pairs]]) emits every (left, right) pair whose
   * MBB gap distance ([[gap]]) is within the left row's radius and whose
   * reference point — the nearest point of the right box to the left box,
@@ -373,7 +373,7 @@ object SpatialJoin3d {
                  right: DataFrame, rc: Mbb3Cols, rightId: String, k: Int,
                  cellsPerAxis: Int = 8,
                  probeCollectMax: Long = 1000000L): DataFrame = {
-    // 64³ = 262k cells bounds the driver-side count and plan tables
+    // 64³ = 262k cells bounds the planner's count and plan tables
     require(cellsPerAxis >= 1 && cellsPerAxis <= 64,
       "cellsPerAxis must be in [1,64]: the cell-plan table is cells^3")
     val (l, r, sp, nR) = prepare(left, lc, right, rc, rightId, k)
@@ -394,7 +394,7 @@ object SpatialJoin3d {
     * the reconstructed `oc` 3-D partitioner (reference ships it only as a
     * prebuilt binary, src/README.md:5-15; rebuilt as the quadtree's 8-way
     * analog, QuadtreeNode.hpp:46-133 — see [[Octree3d]]). The tree is
-    * planned on a seeded driver sample of about `sampleTarget` RIGHT
+    * planned on a seeded sample of about `sampleTarget` RIGHT
     * envelope centres, with `leafCap` scaled by the sample rate, so leaf
     * sizes track the right-side density: every occupied region splits to
     * ~`leafCap` rights per leaf and empty regions stay coarse, which keeps
